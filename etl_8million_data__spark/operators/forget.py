@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.operators.bucket_store import read_store
+from etl_8million_data__spark.operators.maintenance import swap_in
 
 
 def _ids_frame(ids: DataFrame, id_col: str) -> DataFrame:
@@ -248,10 +249,7 @@ def forget_unpartitioned(
     kept = idx.join(victims, id_col, "left_anti").localCheckpoint(eager=True)
     tmp = f"{index_path}.__tmp__{uuid.uuid4().hex[:8]}"
     kept.write.mode("overwrite").parquet(tmp)
-    old = f"{index_path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old)
+    swap_in(tmp, index_path)
     spark.catalog.refreshByPath(index_path)
     return n_hit
 

@@ -44,13 +44,12 @@ def _cell_frame(
     id_col: str,
     vec_col: str,
     batch_tag: str | None,
-    dim: int | None = None,
 ) -> DataFrame:
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return emb.select(
         F.col(id_col).alias("vec_id"),
         v.alias("embedding"),
-        norm2(F.col(vec_col), dim).alias("_n2"),
+        norm2(F.col(vec_col)).alias("_n2"),
         F.lit(batch_tag).cast("string").alias("_batch"),
         srp_cell(projections(F.col(vec_col), weights, n_bits), n_bits).alias("cell"),
     )
@@ -64,13 +63,11 @@ def build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     batch_tag: str | None = "seed",
-    dim: int | None = None,
 ) -> None:
     """Materialize the inverted file: one narrow map assigns every
     vector its SRP cell (no shuffle), then a cell-partitioned parquet
-    write. Overwrites any existing index. ``dim``: static vector length
-    for the unrolled codegen norm (None = length-generic HOF fold)."""
-    _cell_frame(emb, weights, n_bits, id_col, vec_col, batch_tag, dim).write.mode(
+    write. Overwrites any existing index."""
+    _cell_frame(emb, weights, n_bits, id_col, vec_col, batch_tag).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(index_path)
 
@@ -105,7 +102,6 @@ def append_vectors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     batch_tag: str | None = None,
-    dim: int | None = None,
 ) -> int:
     """Skip-existing incremental append: new vectors whose vec_id is
     already indexed are dropped (the id read is column-pruned to the
@@ -115,7 +111,7 @@ def append_vectors(
     spark = new_emb.sparkSession
     existing = _read_index(spark, index_path).select("vec_id")
     fresh = (
-        _cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag, dim)
+        _cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag)
         .join(existing, "vec_id", "left_anti")
         .localCheckpoint(eager=True)
     )
@@ -166,7 +162,6 @@ def probe_index(
     nprobe: int = 5,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors for each query against the
     persisted index: queries fan out to ``nprobe`` multiprobe cells,
@@ -186,7 +181,7 @@ def probe_index(
     qp = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("_qvec"),
-        norm2(F.col(query_vec_col), dim).alias("_qn2"),
+        norm2(F.col(query_vec_col)).alias("_qn2"),
         F.explode(
             srp_probe_cells(
                 projections(F.col(query_vec_col), weights, n_bits), n_bits, nprobe
@@ -205,7 +200,7 @@ def probe_index(
             "query_id",
             "vec_id",
             (
-                dot(F.col("_qvec"), F.col("embedding"), dim)
+                dot(F.col("_qvec"), F.col("embedding"))
                 / (F.sqrt("_qn2") * F.sqrt("_n2"))
             ).alias("cosine"),
         )

@@ -111,7 +111,7 @@ def fsck_bucket_purity(
     for other layouts, e.g. the financials fact::
 
         fsck_bucket_purity(spark, fact_path, "stock", bucket_col="stock_bucket",
-                           expected=stock_bucket(F.col("stock"), 64))
+                           expected=id_bucket(F.col("stock"), 64))
 
     A misplaced row — stored bucket != hash-bucket of its key — would
     be skipped by the computed-bucket forget path and by the upsert's

@@ -292,9 +292,9 @@ def stream_agg_view_upserts(
 
     Note the ORDER of (2) before (4): deltas must see the pre-upsert
     base, the same discipline as agg_view_delta's contract."""
-    import shutil
     import uuid
 
+    from etl_8million_data__spark.operators.maintenance import swap_in
     from etl_8million_data__spark.operators.upsert import (
         last_writer_wins,
         upsert_parquet,
@@ -322,10 +322,7 @@ def stream_agg_view_upserts(
             merged.coalesce(1).write.mode("overwrite").parquet(tmp)
             with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
                 fh.write(str(batch_id))
-            old = f"{view_path}.__old__{uuid.uuid4().hex[:8]}"
-            os.rename(view_path, old)
-            os.rename(tmp, view_path)
-            shutil.rmtree(old)
+            swap_in(tmp, view_path)
         upsert_parquet(spark, b, base_path, keys=[pk], order_col=order_col)
 
     return (

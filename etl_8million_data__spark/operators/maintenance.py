@@ -23,7 +23,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _swap_in(tmp: str, path: str) -> None:
+def swap_in(tmp: str, path: str) -> None:
+    """Atomically replace ``path`` with the fully written ``tmp``
+    directory: rename the live table aside, rename ``tmp`` into place,
+    then delete the old copy. Readers see the old snapshot or the new
+    one, never a partial write; sidecars written into ``tmp`` before
+    the call move with it. ``path`` need not exist yet."""
     old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, old)
@@ -58,7 +63,7 @@ def compact_parquet(
     # coalesce, not repartition: compaction must not pay a shuffle —
     # it only glues input splits together.
     df.coalesce(n).write.mode("overwrite").parquet(tmp)
-    _swap_in(tmp, path)
+    swap_in(tmp, path)
     return len(parquet_data_files(path))
 
 

@@ -43,13 +43,15 @@ def sql_hash_permille(key_sql: str) -> str:
 
 
 def id_bucket(id_col: Column, n_buckets: int = 16) -> Column:
-    """Stable hash bucket of an integer id — md5-derived (not Spark's
+    """Stable hash bucket of a key — md5-derived (not Spark's
     engine-specific hash) so a row's bucket is a pure portable function
-    of its id and never drifts across engines or versions: the same
-    contract as the financials fact's stock_bucket, applied to the
-    persisted index layouts (sign signatures, LSH bands, winnowing
-    fingerprints) so forget/compaction rewrite only touched buckets
-    instead of the whole index."""
+    of its key's string form and never drifts across engines or
+    versions: a key can never migrate between partitions, which is the
+    partitioned-upsert contract. It buckets the financials fact's
+    stock_bucket partitions and the persisted index layouts (sign
+    signatures, LSH bands, winnowing fingerprints), so upsert, forget
+    and compaction rewrite only touched buckets instead of the whole
+    table."""
     return F.pmod(
         F.conv(F.substring(F.md5(id_col.cast("string")), 1, 8), 16, 10).cast(
             "bigint"

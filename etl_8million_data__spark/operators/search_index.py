@@ -248,6 +248,8 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
     import shutil
     import uuid
 
+    from etl_8million_data__spark.operators.maintenance import swap_in
+
     t = f"{index_path}/_tombstones"
     if not os.path.isdir(t):
         return 0
@@ -279,10 +281,8 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
     tmp = f"{index_path}.__tmp__{uuid.uuid4().hex[:8]}"
     kept_postings.write.mode("overwrite").partitionBy("pfx").parquet(tmp)
     kept_doclen.write.mode("overwrite").parquet(f"{tmp}/_doclen")
-    old_root = f"{index_path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(index_path, old_root)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old_root)  # old postings + sidecar + applied _tombstones
+    # the old root takes the old postings, sidecar and applied _tombstones
+    swap_in(tmp, index_path)
     return n
 
 

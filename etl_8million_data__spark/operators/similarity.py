@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -81,52 +82,46 @@ def adaptive_n_bits(
     return b
 
 
+# Vector kernels: ONE contract in TWO forms.
+#
+# - HOF fold — :func:`dot`, :func:`norm2`, :func:`cosine`: an
+#   ``aggregate`` over ``zip_with``/``transform`` of the double casts,
+#   the expression the DuckDB oracle runs as ``list_reduce``. Use it on
+#   small frames (per-row norms, shortlist re-ranks, routing against a
+#   few centroids): it needs no Python worker, but higher-order
+#   functions are CodegenFallback — interpreted per element per row.
+# - Arrow sequential fold — :func:`dot_arrow_seqfold`,
+#   :func:`sqdist_arrow_seqfold`, :func:`cosine_arrow` and the codebook
+#   argmin/encode UDFs: numpy replays the SAME left-to-right float64
+#   fold ((0 + t0) + t1) + ... vectorized ACROSS the rows of an Arrow
+#   batch, so every value is bit-identical to the HOF form. Use it for
+#   high-volume pair scoring and corpus-sized codebook passes, where
+#   the interpreted fold dominates.
+#
+# Inputs, for both forms: a NULL vector yields NULL (the codebook UDFs,
+# whose output struct is non-nullable, raise a ValueError naming the
+# kernel instead). Vectors must have one length: the Arrow form raises
+# a ValueError naming both lengths (within a batch, between ``a`` and
+# ``b``, or against the codebook); the HOF fold yields NULL instead
+# (zip_with pads the shorter side with NULLs). Neither form returns a
+# truncated sum. :func:`_stack` owns the Arrow side of this contract.
+
+
 def _fold_sum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
 
 
-# Embeddings in this engine are fixed 64-dim (schemas.py); the hashed
-# BoW vectors are fixed 16-dim. When the caller knows the static length
-# it should pass ``dim`` so the fold unrolls into flat arithmetic:
-# higher-order functions (aggregate/zip_with/transform) are
-# CodegenFallback — interpreted per element per row — while the
-# unrolled expression whole-stage-codegens. Bit-identical by
-# construction: lit(0.0) + p0 + p1 + … replays exactly the
-# (…((0.0 + p0) + p1)…) sequence the fold executed (measured 4.6x on
-# the chunk-pair cosine of search_late_interaction_maxsim, r14).
-EMB_DIM = 64
+def dot(a: Column, b: Column) -> Column:
+    """HOF-fold dot product ((0.0 + a0*b0) + a1*b1) + ... over the
+    double casts."""
+    return _fold_sum(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+    )
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential-fold dot product.
-
-    CONTRACT on ``dim``: the unrolled form indexes a[0..dim) and
-    b[0..dim) STATICALLY — a caller passing ``dim`` asserts every array
-    is exactly that length. Longer arrays have their tail silently
-    ignored; shorter arrays yield NULL (out-of-range element_at), not a
-    partial sum like the fold would. Pass ``dim`` only where the vector
-    width is pinned by schema/construction (64-dim embeddings, 16-dim
-    hashed BoW); anywhere lengths can vary, leave it None."""
-    if dim is None:
-        return _fold_sum(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-        )
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + a[i].cast("double") * b[i].cast("double")
-    return out
-
-
-def norm2(a: Column, dim: int | None = None) -> Column:
-    """Sequential-fold squared norm. Same ``dim`` contract as
-    :func:`dot`: passing it asserts a static array length; a mismatch
-    returns NULL (short) or drops the tail (long) instead of erroring."""
-    if dim is None:
-        return _fold_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
-    out: Column = F.lit(0.0)
-    for i in range(dim):
-        out = out + a[i].cast("double") * a[i].cast("double")
-    return out
+def norm2(a: Column) -> Column:
+    """HOF-fold squared norm, the fold of :func:`dot` with itself."""
+    return _fold_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
 
 
 def cosine(
@@ -134,13 +129,99 @@ def cosine(
     b: Column,
     na: Column | None = None,
     nb: Column | None = None,
-    dim: int | None = None,
 ) -> Column:
     """dot/(sqrt(|a|)*sqrt(|b|)); pass precomputed squared norms to
     avoid recomputation in joins."""
-    na = norm2(a, dim) if na is None else na
-    nb = norm2(b, dim) if nb is None else nb
-    return dot(a, b, dim) / (F.sqrt(na) * F.sqrt(nb))
+    na = norm2(a) if na is None else na
+    nb = norm2(b) if nb is None else nb
+    return dot(a, b) / (F.sqrt(na) * F.sqrt(nb))
+
+
+def _stack(
+    kernel: str, *cols: pd.Series, width: int | None = None
+) -> tuple[np.ndarray, list[np.ndarray]]:
+    """The Arrow form's input contract. Returns the mask of rows where
+    every column is non-NULL and, per column, those rows stacked into a
+    float64 (rows x length) matrix. With a codebook ``width`` a NULL
+    vector raises instead (the codebook UDFs' output is non-nullable).
+    Raises a ValueError naming ``kernel`` and both lengths when vectors
+    differ in length within a column, between columns, or from
+    ``width``."""
+    keep = np.ones(len(cols[0]), dtype=bool)
+    for c in cols:
+        keep &= c.notna().to_numpy()
+    full = keep.all()
+    if width is not None and not full:
+        raise ValueError(f"{kernel}: NULL vector")
+    mats = []
+    for c in cols:
+        v = c.to_numpy() if full else c.to_numpy()[keep]
+        if len(v) == 0:
+            mats.append(np.empty((0, width or 0)))
+            continue
+        try:
+            mats.append(np.stack(v).astype(np.float64, copy=False))
+        except ValueError:
+            lens = sorted({len(x) for x in v})
+            raise ValueError(
+                f"{kernel}: vector lengths {lens[0]} and {lens[-1]} in one batch"
+            ) from None
+    want = width if width is not None else mats[0].shape[1]
+    for m in mats:
+        if len(m) and m.shape[1] != want:
+            raise ValueError(f"{kernel}: vector length {m.shape[1]} != {want}")
+    return keep, mats
+
+
+def _seqfold(x: np.ndarray, y: np.ndarray, term) -> np.ndarray:
+    """Per row of ``x``: ((0 + t0) + t1) + ... with t_i =
+    term(x[:, i], y[..., i]) — ``y`` is a matching matrix or one
+    vector broadcast to every row."""
+    acc = np.zeros(x.shape[0], dtype=np.float64)
+    for i in range(x.shape[1]):
+        acc = acc + term(x[:, i], y[..., i])
+    return acc
+
+
+def _sqdiff(p: np.ndarray, q: np.ndarray) -> np.ndarray:
+    d = p - q
+    return d * d
+
+
+def _codebooks(cb) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """Collected (sub, j, cm) codebook rows -> {sub: (j, cm / 1e6)},
+    j ascending — the argmin's tie-break order — with the same
+    bigint -> double divide the HOF fold runs."""
+    rows: dict[int, list] = {}
+    for s, j, c in sorted(cb, key=lambda r: r[:2]):
+        rows.setdefault(s, []).append((j, c))
+    return {
+        s: (
+            np.asarray([j for j, _ in r], dtype=np.int64),
+            np.asarray([list(c) for _, c in r], dtype=np.float64) / 1_000_000.0,
+        )
+        for s, r in rows.items()
+    }
+
+
+def _nearest(x: np.ndarray, mu: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index and squared distance of each row's nearest centroid row of
+    ``mu``, every distance the sequential fold; ``np.argmin`` takes the
+    FIRST minimum, so over a j-ascending codebook ties break to the
+    smallest j — array_min's (dist, j) order."""
+    dists = np.empty((x.shape[0], len(mu)), dtype=np.float64)
+    for kk in range(len(mu)):
+        dists[:, kk] = _seqfold(x, mu[kk], _sqdiff)
+    pick = np.argmin(dists, axis=1)
+    return pick, dists[np.arange(len(pick)), pick]
+
+
+def _pair_fold(kernel: str, a: pd.Series, b: pd.Series, term) -> pd.Series:
+    keep, (x, y) = _stack(kernel, a, b)
+    out = np.full(len(keep), np.nan)
+    out[keep] = _seqfold(x, y, term)
+    # NaN leaves the UDF as NULL (Arrow conversion masks it)
+    return pd.Series(out)
 
 
 # DataType instance, NOT a DDL string: the string form is parsed via
@@ -149,58 +230,26 @@ def cosine(
 # session-less tooling).
 @F.pandas_udf(DoubleType())
 def dot_arrow_seqfold(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batch dot product that replays the EXACT sequential fold order
-    of :func:`dot`'s HOF form — vectorized ACROSS pairs instead of
-    across dimensions: one float64 multiply-add per dimension over the
-    whole Arrow batch executes, for every pair, precisely
-    ((((0 + p0) + p1) + …) + p63). IEEE-754 ops are elementwise
-    deterministic, so the result is bit-identical to the interpreted
-    fold (and to DuckDB's list_reduce) — the guide-§4.2 escape from
-    the two measured traps of r14: the HOF fold is CodegenFallback
-    (interpreted per element per pair) and the 64-term unroll is a
-    planner/JIT bomb. Measured on the dedup_semantic_keepers verify
-    (252k candidate pairs at sf0.1): 1.29 -> 0.98 s best-of-5,
-    identical keep set. Lives at module level so reused Python workers
-    keep it cached across tasks (guide §4.5)."""
-    import numpy as np
-    import pandas as pd
-
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.stack(a.to_numpy()).astype(np.float64, copy=False)
-    B = np.stack(b.to_numpy()).astype(np.float64, copy=False)
-    acc = np.zeros(A.shape[0], dtype=np.float64)
-    for i in range(A.shape[1]):
-        acc = acc + A[:, i] * B[:, i]
-    return pd.Series(acc)
+    """Arrow form of :func:`dot`: per pair, precisely
+    ((((0 + p0) + p1) + …) + p63), bit-identical to the interpreted
+    fold and to DuckDB's list_reduce. Measured on the
+    dedup_semantic_keepers verify (252k candidate pairs at sf0.1):
+    1.29 -> 0.98 s best-of-5, identical keep set. Lives at module level
+    so reused Python workers keep it cached across tasks."""
+    return _pair_fold("dot_arrow_seqfold", a, b, np.multiply)
 
 
 @F.pandas_udf(DoubleType())
 def sqdist_arrow_seqfold(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batch squared Euclidean distance replaying the EXACT sequential
-    fold order of the ``aggregate(zip_with(u, v, (p-q)*(p-q)))`` HOF
-    form — the distance twin of :func:`dot_arrow_seqfold` (r15, guide
-    §4.2): per pair, float64 ops execute precisely
-    ((0 + d0^2) + d1^2) + ..., so the result is bit-identical to the
-    interpreted fold on both engines."""
-    import numpy as np
-
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    av = np.stack(a.to_numpy()).astype(np.float64, copy=False)
-    bv = np.stack(b.to_numpy()).astype(np.float64, copy=False)
-    acc = np.zeros(av.shape[0], dtype=np.float64)
-    for i in range(av.shape[1]):
-        d = av[:, i] - bv[:, i]
-        acc = acc + d * d
-    return pd.Series(acc)
+    """Arrow form of ``aggregate(zip_with(u, v, (p-q)*(p-q)))``: per
+    pair ((0 + d0^2) + d1^2) + ..., bit-identical on both engines."""
+    return _pair_fold("sqdist_arrow_seqfold", a, b, _sqdiff)
 
 
 def cosine_arrow(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """:func:`cosine` with the dot computed by the Arrow-vectorized
-    sequential fold — same values bit-for-bit; use on HIGH-VOLUME
-    candidate-pair verifies where the interpreted per-pair fold
-    dominates (requires precomputed squared norms)."""
+    """:func:`cosine` with the dot computed by the Arrow form — same
+    values bit-for-bit; use on HIGH-VOLUME candidate-pair verifies
+    (requires precomputed squared norms)."""
     return dot_arrow_seqfold(a, b) / (F.sqrt(na) * F.sqrt(nb))
 
 
@@ -212,35 +261,27 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (queries ≪ corpus); the corpus is
     scanned once; ranking is a per-query window over |Q|·k rows after
     a cheap per-partition candidate cut is handled by the window itself.
-    ``dim``: static vector length for the unrolled codegen dot (pass
-    None for variable-length vectors to fall back to the HOF fold)."""
+    The |Q| x |corpus| pair dot — the dominant cost — runs in the Arrow
+    form (:func:`dot_arrow_seqfold`), so every vector must have the
+    query vectors' length (a mismatch raises); a NULL vector scores
+    NULL and ranks last."""
     e = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("_vec"),
-        norm2(F.col(vec_col), dim).alias("_n2"),
+        norm2(F.col(vec_col)).alias("_n2"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("_qvec"),
-        norm2(F.col(query_vec_col), dim).alias("_qn2"),
+        norm2(F.col(query_vec_col)).alias("_qn2"),
     )
-    # |Q| x |corpus| pair scoring is the dominant cost: with no static
-    # dim the HOF dot is interpreted per element per pair — route it
-    # through the Arrow sequential fold instead (r15, guide §4.2;
-    # bit-identical, see dot_arrow_seqfold). A caller-passed dim keeps
-    # the r14-measured unrolled codegen form.
-    pair_dot = (
-        dot(F.col("_qvec"), F.col("_vec"), dim)
-        if dim is not None
-        else dot_arrow_seqfold(F.col("_qvec"), F.col("_vec"))
-    )
+    pair_dot = dot_arrow_seqfold(F.col("_qvec"), F.col("_vec"))
     scored = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "vec_id",
@@ -401,7 +442,6 @@ def knn_ivf(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     by_cols: list[str] | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k over an SRP inverted file: assign every corpus
     vector to one of 2^n_bits sign-bit cells (narrow map, no shuffle),
@@ -429,14 +469,14 @@ def knn_ivf(
         *by_cols,
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("_vec"),
-        norm2(F.col(vec_col), dim).alias("_n2"),
+        norm2(F.col(vec_col)).alias("_n2"),
         srp_cell(projections(F.col(vec_col), weights, n_bits), n_bits).alias("cell"),
     )
     qp = queries.select(
         *by_cols,
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("_qvec"),
-        norm2(F.col(query_vec_col), dim).alias("_qn2"),
+        norm2(F.col(query_vec_col)).alias("_qn2"),
         F.explode(
             srp_probe_cells(
                 projections(F.col(query_vec_col), weights, n_bits), n_bits, nprobe
@@ -457,7 +497,7 @@ def knn_ivf(
             "query_id",
             "vec_id",
             (
-                dot(F.col("_qvec"), F.col("_vec"), dim) / (F.sqrt("_qn2") * F.sqrt("_n2"))
+                dot(F.col("_qvec"), F.col("_vec")) / (F.sqrt("_qn2") * F.sqrt("_n2"))
             ).alias("cosine"),
         )
     )
@@ -498,61 +538,25 @@ _ARGMIN_STRUCT = StructType(
 
 
 def _argmin_assign_udf(cb: list[tuple[int, list[int]]]):
-    """Arrow-vectorized Lloyd assignment against a COLLECTED codebook
-    (optimization r15, guide §4.2): the in-row HOF argmin
-    (``array_min`` over ``transform``/``aggregate``/``zip_with``) is
-    CodegenFallback — interpreted per element per centroid, measured as
-    a 1.7 s single-task CPU whale in similarity_knn_ivf_pq's timed
-    region at sf0.1. This replays the IDENTICAL float64 operation
-    order, vectorized ACROSS rows: per centroid j, dist accumulates
-    ((0 + d0^2) + d1^2) + ... left-to-right with cm_i/1e6 the same
-    bigint->double divide, so every dist is bit-identical to the HOF
-    fold; ``np.argmin`` returns the FIRST minimum over the j-ascending
-    codebook — the same (dist, j) total order as array_min over
-    struct(dist, j). The codebook itself is an O(model) driver collect
-    (k or m*ksub rows — the 'literal' strategy incremental_ann already
-    uses, inside the bench.py timed-boundary contract), so assignment
-    becomes ONE narrow ArrowEvalPython pass: zero exchange, zero
-    broadcast join, no per-row codebook duplication through Arrow."""
-    import numpy as np
-
-    cb = sorted(cb)
-    jv = np.asarray([j for j, _ in cb], dtype=np.int64)
-    cm = np.asarray([list(c) for _, c in cb], dtype=np.float64)
+    """Arrow-vectorized Lloyd assignment against a COLLECTED codebook:
+    the in-row HOF argmin (``array_min`` over ``transform``/
+    ``aggregate``/``zip_with``) is CodegenFallback — interpreted per
+    element per centroid, measured as a 1.7 s single-task CPU whale in
+    similarity_knn_ivf_pq's timed region at sf0.1. :func:`_nearest`
+    replays the IDENTICAL float64 operation order, vectorized ACROSS
+    rows, so every (j, dist) is bit-identical to the HOF fold. The
+    codebook itself is an O(model) driver collect (k or m*ksub rows —
+    the 'literal' strategy incremental_ann already uses, inside the
+    bench.py timed-boundary contract), so assignment becomes ONE narrow
+    ArrowEvalPython pass: zero exchange, zero broadcast join, no
+    per-row codebook duplication through Arrow."""
+    jv, mu = _codebooks((0, j, c) for j, c in cb)[0]
 
     @F.pandas_udf(_ARGMIN_STRUCT)
     def argmin(xs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(xs) == 0:
-            return pd.DataFrame(
-                {
-                    "j": pd.array([], dtype="int32"),
-                    "dist": pd.array([], dtype="float64"),
-                }
-            )
-        x = np.stack(xs.to_numpy()).astype(np.float64, copy=False)
-        if x.shape[1] != cm.shape[1]:
-            raise ValueError(
-                f"codebook argmin: vector length {x.shape[1]} != "
-                f"centroid length {cm.shape[1]}"
-            )
-        n = x.shape[0]
-        dists = np.empty((n, len(jv)), dtype=np.float64)
-        for kk in range(len(jv)):
-            mu = cm[kk] / 1_000_000.0
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(cm.shape[1]):
-                d = x[:, i] - mu[i]
-                acc = acc + d * d
-            dists[:, kk] = acc
-        pick = np.argmin(dists, axis=1)
-        return pd.DataFrame(
-            {
-                "j": jv[pick].astype("int32"),
-                "dist": dists[np.arange(n), pick],
-            }
-        )
+        _, (x,) = _stack("codebook argmin", xs, width=mu.shape[1])
+        pick, dist = _nearest(x, mu)
+        return pd.DataFrame({"j": jv[pick].astype("int32"), "dist": dist})
 
     return argmin
 
@@ -562,53 +566,21 @@ def _pq_argmin_assign_udf(cb: list[tuple[int, int, list[int]]]):
     ``cb`` rows are (sub, j, cm); each (vec_id, sub) row's argmin runs
     against its own subspace codebook, same bit-identical fold replay
     and first-min/ascending-j tie-break."""
-    import numpy as np
-
-    by_sub: dict[int, tuple] = {}
-    subs = sorted({s for s, _, _ in cb})
-    for s in subs:
-        rows = sorted((j, c) for ss, j, c in cb if ss == s)
-        by_sub[s] = (
-            np.asarray([j for j, _ in rows], dtype=np.int64),
-            np.asarray([list(c) for _, c in rows], dtype=np.float64),
-        )
+    books = _codebooks(cb)
+    width = next(iter(books.values()))[1].shape[1]
 
     @F.pandas_udf(_ARGMIN_STRUCT)
     def argmin(sub: pd.Series, sxs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(sxs) == 0:
-            return pd.DataFrame(
-                {
-                    "j": pd.array([], dtype="int32"),
-                    "dist": pd.array([], dtype="float64"),
-                }
-            )
+        _, (x,) = _stack("pq codebook argmin", sxs, width=width)
         sv = sub.to_numpy()
-        x = np.stack(sxs.to_numpy()).astype(np.float64, copy=False)
         out_j = np.empty(len(sv), dtype="int32")
         out_d = np.empty(len(sv), dtype=np.float64)
         for s in np.unique(sv):
-            jv, cm = by_sub[int(s)]
+            jv, mu = books[int(s)]
             mask = sv == s
-            xs = x[mask]
-            if xs.shape[1] != cm.shape[1]:
-                raise ValueError(
-                    f"pq codebook argmin: subvector length {xs.shape[1]}"
-                    f" != centroid length {cm.shape[1]}"
-                )
-            n = xs.shape[0]
-            dists = np.empty((n, len(jv)), dtype=np.float64)
-            for kk in range(len(jv)):
-                mu = cm[kk] / 1_000_000.0
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(cm.shape[1]):
-                    d = xs[:, i] - mu[i]
-                    acc = acc + d * d
-                dists[:, kk] = acc
-            pick = np.argmin(dists, axis=1)
-            out_j[mask] = jv[pick].astype("int32")
-            out_d[mask] = dists[np.arange(n), pick]
+            pick, dist = _nearest(x[mask], mu)
+            out_j[mask] = jv[pick]
+            out_d[mask] = dist
         return pd.DataFrame({"j": out_j, "dist": out_d})
 
     return argmin
@@ -1114,32 +1086,17 @@ def _pq_encode_udf(
     sub_dim: int,
     km_cb: list[tuple[int, list[int]]] | None = None,
 ):
-    """Fused ENCODE pass (r15, VERDICT #9 / guide §4.2): one
-    ArrowEvalPython turns a raw vector into (cell, codes[m]) — the
-    coarse argmin, the residual subtraction and all m subspace argmins
-    in a single Python round trip, replacing a broadcast-join residual
-    (interpreted zip_with), an m-times crossJoin row blowup and a
-    second Arrow boundary on the corpus chain. Every step replays the
-    relational fold bit-for-bit: cm/1e6 is the same bigint->double
-    divide, the residual is the same elementwise a-b, distances
-    accumulate ((0 + d0^2) + d1^2) + ... per centroid, and argmin takes
-    the first minimum over the j-ascending codebook. With ``km_cb``
-    None the vector is encoded directly (knn_pq_adc's layout — no
-    coarse stage; cell returns -1, unused)."""
-    import numpy as np
-
-    if km_cb is not None:
-        km = sorted(km_cb)
-        kj = np.asarray([j for j, _ in km], dtype=np.int64)
-        kmu = np.asarray([list(c) for _, c in km], dtype=np.float64) / 1_000_000.0
-    by_sub: dict[int, tuple] = {}
-    for s in sorted({s for s, _, _ in pq_cb}):
-        rows = sorted((j, c) for ss, j, c in pq_cb if ss == s)
-        by_sub[s] = (
-            np.asarray([j for j, _ in rows], dtype=np.int64),
-            np.asarray([list(c) for _, c in rows], dtype=np.float64),
-        )
-
+    """Fused ENCODE pass: one ArrowEvalPython turns a raw vector into
+    (cell, codes[m]) — the coarse argmin, the residual subtraction and
+    all m subspace argmins in a single Python round trip, replacing a
+    broadcast-join residual (interpreted zip_with), an m-times
+    crossJoin row blowup and a second Arrow boundary on the corpus
+    chain. Every step replays the relational fold bit-for-bit (see
+    :func:`_nearest`); the residual is the same elementwise a - b as
+    zip_with. With ``km_cb`` None the vector is encoded directly
+    (knn_pq_adc's layout — no coarse stage; cell returns -1, unused)."""
+    books = _codebooks(pq_cb)
+    coarse = None if km_cb is None else _codebooks((0, j, c) for j, c in km_cb)[0]
     out_type = StructType(
         [
             StructField("cell", IntegerType(), nullable=False),
@@ -1149,39 +1106,19 @@ def _pq_encode_udf(
 
     @F.pandas_udf(out_type)
     def encode(xs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        if len(xs) == 0:
-            return pd.DataFrame({"cell": pd.array([], dtype="int32"), "codes": []})
-        x = np.stack(xs.to_numpy()).astype(np.float64, copy=False)
-        n = x.shape[0]
-        if km_cb is not None:
-            dists = np.empty((n, len(kj)), dtype=np.float64)
-            for kk in range(len(kj)):
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(kmu.shape[1]):
-                    d = x[:, i] - kmu[kk, i]
-                    acc = acc + d * d
-                dists[:, kk] = acc
-            pick = np.argmin(dists, axis=1)
-            cell = kj[pick].astype("int32")
-            r = x - kmu[pick]  # same elementwise a - b as zip_with
-        else:
-            cell = np.full(n, -1, dtype="int32")
+        _, (x,) = _stack("pq encode", xs, width=m * sub_dim)
+        if coarse is None:
+            cell = np.full(len(x), -1, dtype="int32")
             r = x
-        codes = np.empty((n, m), dtype="int32")
+        else:
+            kj, kmu = coarse
+            pick, _ = _nearest(x, kmu)
+            cell = kj[pick].astype("int32")
+            r = x - kmu[pick]
+        codes = np.empty((len(x), m), dtype="int32")
         for s in range(m):
-            jv, cm = by_sub[s]
-            rs = r[:, s * sub_dim : (s + 1) * sub_dim]
-            dd = np.empty((n, len(jv)), dtype=np.float64)
-            for kk in range(len(jv)):
-                mu = cm[kk] / 1_000_000.0
-                acc = np.zeros(n, dtype=np.float64)
-                for i in range(sub_dim):
-                    d = rs[:, i] - mu[i]
-                    acc = acc + d * d
-                dd[:, kk] = acc
-            codes[:, s] = jv[np.argmin(dd, axis=1)].astype("int32")
+            jv, mu = books[s]
+            codes[:, s] = jv[_nearest(r[:, s * sub_dim : (s + 1) * sub_dim], mu)[0]]
         return pd.DataFrame({"cell": cell, "codes": list(codes)})
 
     return encode

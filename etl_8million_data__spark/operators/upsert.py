@@ -28,11 +28,12 @@ Two write paths:
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from etl_8million_data__spark.operators.maintenance import swap_in
 
 
 def last_writer_wins(
@@ -140,10 +141,4 @@ def upsert_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-
-    old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    swap_in(tmp, path)

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.scalars import parse_date_prefix, period_code
+from etl_8million_data__spark.operators.maintenance import swap_in
+from etl_8million_data__spark.operators.partitioning import id_bucket
 from etl_8million_data__spark.operators.upsert import upsert_parquet
 from etl_8million_data__spark.schemas import (
     FINANCIALS_KEYS,
@@ -144,18 +146,6 @@ def unpivot_financials(
     )
 
 
-def stock_bucket(stock_col: Column, n_buckets: int = 64) -> Column:
-    """Stable hash bucket of the stock key — md5-derived (not Spark's
-    engine-specific hash) so the bucket of a symbol is a pure, portable
-    function of its string and never drifts across engines or versions:
-    a key can never migrate between partitions, which is the
-    partitioned-upsert contract."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(stock_col.cast("string")), 1, 8), 16, 10).cast("bigint"),
-        F.lit(n_buckets),
-    ).cast("int")
-
-
 def migrate_legacy_fact(spark, sink_path: str, n_buckets: int = 64) -> bool:
     """One-time layout migration: a fact written under the pre-round-8
     ``statement_type``-only layout has no ``stock_bucket`` column, so
@@ -167,7 +157,6 @@ def migrate_legacy_fact(spark, sink_path: str, n_buckets: int = 64) -> bool:
     function of the stock string, so the derived column on the existing
     snapshot is identical to what ingest would have written."""
     import os
-    import shutil
     import uuid
 
     if not os.path.isdir(sink_path):
@@ -176,7 +165,7 @@ def migrate_legacy_fact(spark, sink_path: str, n_buckets: int = 64) -> bool:
     if "stock_bucket" in snap.columns:
         return False
     migrated = (
-        snap.withColumn("stock_bucket", stock_bucket(F.col("stock"), n_buckets))
+        snap.withColumn("stock_bucket", id_bucket(F.col("stock"), n_buckets))
         .hint("rebalance", "statement_type", "stock_bucket")
         .localCheckpoint(eager=True)
     )
@@ -184,10 +173,7 @@ def migrate_legacy_fact(spark, sink_path: str, n_buckets: int = 64) -> bool:
     migrated.write.mode("overwrite").partitionBy(
         "statement_type", "stock_bucket"
     ).parquet(tmp)
-    old = f"{sink_path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(sink_path, old)
-    os.rename(tmp, sink_path)
-    shutil.rmtree(old)
+    swap_in(tmp, sink_path)
     return True
 
 
@@ -219,7 +205,7 @@ def build_financials_fact(
         if has_ts
         else fact.withColumn("_loaded_at", F.current_timestamp())
     )
-    fact = fact.withColumn("stock_bucket", stock_bucket(F.col("stock"), n_buckets))
+    fact = fact.withColumn("stock_bucket", id_bucket(F.col("stock"), n_buckets))
     migrate_legacy_fact(raw.sparkSession, sink_path, n_buckets)
     upsert_parquet(
         raw.sparkSession,

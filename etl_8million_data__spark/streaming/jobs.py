@@ -320,7 +320,6 @@ def stream_ann_index_increment(
     weights: list[list[int]],
     n_bits: int,
     checkpoint_dir: str,
-    dim: int | None = None,
 ):
     """Streaming vector ingest into the persisted cell-partitioned ANN
     inverted file (operators/incremental_ann.py): each micro-batch
@@ -334,9 +333,7 @@ def stream_ann_index_increment(
     from etl_8million_data__spark.operators.incremental_ann import append_vectors
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_vectors(
-            batch_df, index_path, weights, n_bits, batch_tag=str(batch_id), dim=dim
-        )
+        append_vectors(batch_df, index_path, weights, n_bits, batch_tag=str(batch_id))
 
     return (
         emb_stream.writeStream.foreachBatch(apply_batch)
@@ -727,11 +724,10 @@ def stream_quantile_sketch_increment(
     the batch twin. The empty-sketch schema is derived from the BATCH
     frame, not hardcoded, so a non-bigint key type round-trips without
     coercion."""
-    import os
-    import shutil
     import uuid
 
     from etl_8million_data__spark.operators.bucket_store import store_exists
+    from etl_8million_data__spark.operators.maintenance import swap_in
     from etl_8million_data__spark.operators.text import hex_prefix_int, md5_utf8
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -756,13 +752,7 @@ def stream_quantile_sketch_increment(
         )
         tmp = f"{sketch_path}.__tmp__{uuid.uuid4().hex[:8]}"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(sketch_path):
-            old = f"{sketch_path}.__old__{uuid.uuid4().hex[:8]}"
-            os.rename(sketch_path, old)
-            os.rename(tmp, sketch_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, sketch_path)
+        swap_in(tmp, sketch_path)
 
     return (
         rows.writeStream.foreachBatch(apply_batch)

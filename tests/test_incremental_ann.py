@@ -49,10 +49,10 @@ def test_probe_matches_fresh_ivf_build(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
     n_bits = adaptive_n_bits(emb.count())
     idx = str(tmp_path / "ann_index")
-    build_index(emb, idx, _W, n_bits, dim=_DIM)
+    build_index(emb, idx, _W, n_bits)
     q = _queries(emb)
-    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3, dim=_DIM)
-    want = knn_ivf(emb, q, _W, k=5, nprobe=3, n_bits=n_bits, dim=_DIM)
+    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3)
+    want = knn_ivf(emb, q, _W, k=5, nprobe=3, n_bits=n_bits)
     assert _rows(got) == _rows(want)
     # the index is genuinely partitioned by cell (DPP-prunable layout)
     assert any(d.startswith("cell=") for d in os.listdir(idx))
@@ -63,28 +63,28 @@ def test_append_is_skip_existing_and_probe_sees_new_vectors(spark, sf_dir, tmp_p
     n_bits = adaptive_n_bits(emb.count())
     idx = str(tmp_path / "ann_index")
     seed = emb.filter(F.col("vec_id") < 100)
-    build_index(seed, idx, _W, n_bits, dim=_DIM)
+    build_index(seed, idx, _W, n_bits)
 
     # re-presenting already-indexed vectors appends nothing
-    assert append_vectors(seed, idx, _W, n_bits, batch_tag="b1", dim=_DIM) == 0
+    assert append_vectors(seed, idx, _W, n_bits, batch_tag="b1") == 0
 
     # a batch mixing old and new appends only the new ones
     batch = emb.filter(F.col("vec_id") < 150)
     n_new = batch.join(seed.select("vec_id"), "vec_id", "left_anti").count()
-    assert append_vectors(batch, idx, _W, n_bits, batch_tag="b2", dim=_DIM) == n_new
+    assert append_vectors(batch, idx, _W, n_bits, batch_tag="b2") == n_new
 
     # after the append, a probe is identical to a fresh build over the
     # union — index persistence is an I/O optimization, not a semantic fork
     q = _queries(emb).limit(3)
-    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3, dim=_DIM)
-    want = knn_ivf(batch, q, _W, k=5, nprobe=3, n_bits=n_bits, dim=_DIM)
+    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3)
+    want = knn_ivf(batch, q, _W, k=5, nprobe=3, n_bits=n_bits)
     assert _rows(got) == _rows(want)
 
 
 def test_probe_empty_index_returns_no_rows(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
     q = _queries(emb)
-    got = probe_index(spark, str(tmp_path / "missing_index"), q, _W, 4, k=5, nprobe=2, dim=_DIM)
+    got = probe_index(spark, str(tmp_path / "missing_index"), q, _W, 4, k=5, nprobe=2)
     assert got.count() == 0
 
 
@@ -112,9 +112,7 @@ def test_stream_ann_index_matches_batch_build(spark, sf_dir, tmp_path):
             .parquet(stage)
             .select("vec_id", F.slice("embedding", 1, _DIM).alias("embedding"))
         )
-        q = stream_ann_index_increment(
-            stream, idx, _W, n_bits, str(tmp_path / ckpt), dim=_DIM
-        )
+        q = stream_ann_index_increment(stream, idx, _W, n_bits, str(tmp_path / ckpt))
         q.awaitTermination()
 
     run("ckpt1")
@@ -125,8 +123,8 @@ def test_stream_ann_index_matches_batch_build(spark, sf_dir, tmp_path):
     assert spark.read.parquet(idx).count() == n_indexed
 
     q = _queries(emb).limit(3)
-    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3, dim=_DIM)
-    want = knn_ivf(emb, q, _W, k=5, nprobe=3, n_bits=n_bits, dim=_DIM)
+    got = probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3)
+    want = knn_ivf(emb, q, _W, k=5, nprobe=3, n_bits=n_bits)
     assert _rows(got) == _rows(want)
 
 
@@ -707,10 +705,10 @@ def test_probe_plans_without_footer_pass_over_unprobed_cells(
     emb = _emb(spark, sf_dir)
     n_bits = adaptive_n_bits(emb.count())
     idx = str(tmp_path / "ann_index")
-    build_index(emb, idx, _W, n_bits, dim=_DIM)
+    build_index(emb, idx, _W, n_bits)
 
     q = _queries(emb).limit(2)
-    want = _rows(probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3, dim=_DIM))
+    want = _rows(probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3))
 
     # which cells does this probe touch?
     from etl_8million_data__spark.operators.similarity import (
@@ -746,5 +744,5 @@ def test_probe_plans_without_footer_pass_over_unprobed_cells(
         spark.read.option("mergeSchema", "true").parquet(idx).schema
 
     # the static-schema probe never opens the unprobed cell's footer
-    got = _rows(probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3, dim=_DIM))
+    got = _rows(probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3))
     assert got == want

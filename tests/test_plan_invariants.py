@@ -234,7 +234,7 @@ def test_ann_index_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         "vec_id", F.slice("embedding", 1, 8).alias("embedding")
     )
     idx = str(tmp_path / "annidx")
-    build_index(emb, idx, W, 4, dim=8)
+    build_index(emb, idx, W, 4)
     n_cells_total = (
         spark.read.parquet(idx).select("cell").distinct().count()
     )
@@ -245,7 +245,7 @@ def test_ann_index_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         )
         .limit(4)
     )
-    df = probe_index(spark, idx, q, W, 4, k=3, nprobe=2, dim=8)
+    df = probe_index(spark, idx, q, W, 4, k=3, nprobe=2)
     metrics = _scan_partition_metrics(df, "annidx")
     assert metrics, "no index scan found in executed plan"
     # 4 queries x nprobe=2 -> at most 8 distinct cells can be probed

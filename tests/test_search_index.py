@@ -420,15 +420,15 @@ def test_fsck_bucket_purity_stock_bucket_layout(spark, tmp_path):
     integer-id ``bucket`` index layouts — pass the layout's column and
     hash expression explicitly."""
     from etl_8million_data__spark.operators.index_fsck import fsck_bucket_purity
-    from etl_8million_data__spark.pipelines.financials import stock_bucket
+    from etl_8million_data__spark.operators.partitioning import id_bucket
 
     rows = spark.createDataFrame(
         [(f"SYM{i}", i * 10) for i in range(100)], "stock string, value long"
-    ).withColumn("stock_bucket", stock_bucket(F.col("stock"), 64))
+    ).withColumn("stock_bucket", id_bucket(F.col("stock"), 64))
     idx = str(tmp_path / "fact")
     rows.write.partitionBy("stock_bucket").parquet(idx)
 
-    exp = stock_bucket(F.col("stock"), 64)
+    exp = id_bucket(F.col("stock"), 64)
     r = fsck_bucket_purity(
         spark, idx, "stock", bucket_col="stock_bucket", expected=exp
     ).first()
@@ -437,7 +437,7 @@ def test_fsck_bucket_purity_stock_bucket_layout(spark, tmp_path):
     # plant a row one bucket over -> counted
     true_b = (
         spark.createDataFrame([("BAD",)], "stock string")
-        .select(stock_bucket(F.col("stock"), 64).alias("b"))
+        .select(id_bucket(F.col("stock"), 64).alias("b"))
         .first()["b"]
     )
     spark.createDataFrame([("BAD", 1)], "stock string, value long").withColumn(

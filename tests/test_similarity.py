@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import math
+import struct
+
+import pytest
+from pyspark.sql import functions as F
+
 from etl_8million_data__spark.plans import all_queries
 
 
@@ -303,11 +309,11 @@ def test_hashed_doc_vectors_route_through_ivf(spark, sf_dir):
     q = nz.filter(F.col("doc_id") % 25 == 0).select(
         F.col("doc_id").alias("query_id"), F.col("feats").alias("query_vec")
     )
-    bf = knn_bruteforce(nz, q, k=3, id_col="doc_id", vec_col="feats", dim=16).select(
+    bf = knn_bruteforce(nz, q, k=3, id_col="doc_id", vec_col="feats").select(
         "query_id", "vec_id"
     )
     ivf = knn_ivf(
-        nz, q, w, k=3, nprobe=5, n_bits=nb, id_col="doc_id", vec_col="feats", dim=16
+        nz, q, w, k=3, nprobe=5, n_bits=nb, id_col="doc_id", vec_col="feats"
     ).select("query_id", "vec_id")
     n_bf = bf.count()
     hits = bf.join(ivf, ["query_id", "vec_id"]).count()
@@ -721,11 +727,11 @@ def test_mmr_diversifies_on_planted_clusters(spark):
     q = spark.createDataFrame([(999, qv)], "query_id long, query_vec array<double>")
 
     cands = (
-        knn_bruteforce(emb, q, k=20, dim=8)
+        knn_bruteforce(emb, q, k=20)
         .select("query_id", "vec_id", F.col("cosine").alias("rel"))
         .localCheckpoint(eager=True)
     )
-    e = emb.select("vec_id", "embedding", norm2(F.col("embedding"), 8).alias("n2"))
+    e = emb.select("vec_id", "embedding", norm2(F.col("embedding")).alias("n2"))
     ce = cands.select("query_id", "vec_id").join(e, "vec_id")
     a = ce.select(
         "query_id", F.col("vec_id").alias("a"),
@@ -878,47 +884,30 @@ def test_pq_fit_rejects_indivisible_dim():
         pq_fit(None, m=7, dim=64)
 
 
-def test_arrow_argmin_bit_identical_to_hof_fold(spark):
-    """r15: kmeans_fit/pq_fit assignment moved from the interpreted
-    in-row HOF argmin to an Arrow-vectorized numpy replay
-    (_argmin_assign_udf / _pq_argmin_assign_udf). The replay must be
-    BIT-identical: per centroid the distance accumulates
-    ((0 + d0^2) + d1^2) + ... left-to-right with the same bigint/1e6
-    divide, and ties break to the smallest j. This pins the UDF against
-    the original HOF expression on an adversarial frame (duplicate
-    vectors => exact distance ties; irrational components => folds
-    whose order matters in float64)."""
-    import math
-    import struct
+# Adversarial fixture for the Arrow-vs-HOF pins: irrational components
+# make the float64 fold order matter, and duplicated vectors give exact
+# distance ties that must break to the smallest centroid id.
+_KDIM = 16
+_KROWS = [
+    (i, [math.sqrt(2 + ((i * 13 + d * 7) % 29)) * (-1 if d % 3 else 1) for d in range(_KDIM)])
+    for i in range(60)
+]
+_KROWS += [(100 + i, _KROWS[i][1]) for i in range(4)]
 
-    from pyspark.sql import functions as F
 
-    from etl_8million_data__spark.operators.similarity import _argmin_assign_udf
+def _micro(v):
+    return [int(round(x * 1_000_000)) for x in v]
 
-    rows = [
-        (i, [math.sqrt(2 + ((i * 13 + d * 7) % 29)) * (-1 if d % 3 else 1) for d in range(16)])
-        for i in range(60)
-    ]
-    # duplicate a vector so two centroids tie at distance 0 vs itself
-    rows += [(100 + i, rows[i][1]) for i in range(4)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = [
-        (j, [int(round(v * 1_000_000)) for v in rows[j][1]])
-        for j in (2, 0, 1, 3)  # unsorted on purpose: the factory must sort by j
-    ]
-    cbdf = spark.createDataFrame(
-        [(j, cm) for j, cm in cb], "j int, cm array<bigint>"
-    )
-    carr = cbdf.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("j", "cm"))).alias("_cs")
-    )
-    hof_best = F.array_min(
+
+def _hof_argmin(vec, cs):
+    """The relational in-row argmin the codebook UDFs replaced."""
+    return F.array_min(
         F.transform(
-            F.col("_cs"),
+            cs,
             lambda t: F.struct(
                 F.aggregate(
                     F.zip_with(
-                        F.col("embedding"),
+                        vec,
                         t["cm"],
                         lambda a, m: (a - m / 1_000_000) * (a - m / 1_000_000),
                     ),
@@ -929,20 +918,197 @@ def test_arrow_argmin_bit_identical_to_hof_fold(spark):
             ),
         )
     )
-    expected = {
-        r["vec_id"]: (r["_b"]["j"], r["_b"]["dist"])
-        for r in emb.crossJoin(F.broadcast(carr))
-        .select("vec_id", hof_best.alias("_b"))
-        .collect()
-    }
-    got = {
-        r["vec_id"]: (r["_b"]["j"], r["_b"]["dist"])
-        for r in emb.select(
-            "vec_id", _argmin_assign_udf(cb)(F.col("embedding")).alias("_b")
-        ).collect()
-    }
-    assert set(expected) == set(got)
-    for vid, (ej, ed) in expected.items():
-        gj, gd = got[vid]
-        assert gj == ej, (vid, gj, ej)
-        assert struct.pack("d", gd) == struct.pack("d", ed), (vid, gd, ed)
+
+
+def _carr(spark, cb, keys=()):
+    cols = ", ".join([f"{k} int" for k in keys] + ["j int", "cm array<bigint>"])
+    return (
+        spark.createDataFrame(cb, cols)
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("j", "cm"))).alias("_cs"))
+    )
+
+
+def _pairs(spark):
+    """(vec_id, a, b) pairs with a NULL vector on each side."""
+    rows = [(i, v, _KROWS[(i + 7) % 60][1]) for i, v in _KROWS[:60]]
+    rows += [(200, None, _KROWS[0][1]), (201, _KROWS[1][1], None), (202, None, None)]
+    return spark.createDataFrame(rows, "vec_id long, a array<double>, b array<double>")
+
+
+def _pin_dot(spark):
+    from etl_8million_data__spark.operators.similarity import dot, dot_arrow_seqfold
+
+    df = _pairs(spark)
+    return df.select("vec_id", dot(F.col("a"), F.col("b")).alias("v")), df.select(
+        "vec_id", dot_arrow_seqfold(F.col("a"), F.col("b")).alias("v")
+    )
+
+
+def _pin_sqdist(spark):
+    from etl_8million_data__spark.operators.similarity import sqdist_arrow_seqfold
+
+    df = _pairs(spark)
+    hof = F.aggregate(
+        F.zip_with("a", "b", lambda p, q: (p - q) * (p - q)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return df.select("vec_id", hof.alias("v")), df.select(
+        "vec_id", sqdist_arrow_seqfold(F.col("a"), F.col("b")).alias("v")
+    )
+
+
+_KM_CB = [(j, _micro(_KROWS[j][1])) for j in (2, 0, 1, 3)]  # unsorted: factories sort
+
+
+def _pin_argmin(spark):
+    from etl_8million_data__spark.operators.similarity import _argmin_assign_udf
+
+    emb = spark.createDataFrame(_KROWS, "vec_id long, embedding array<double>")
+    hof = emb.crossJoin(F.broadcast(_carr(spark, _KM_CB))).select(
+        "vec_id", _hof_argmin(F.col("embedding"), F.col("_cs")).alias("v")
+    )
+    udf = _argmin_assign_udf(_KM_CB)(F.col("embedding"))
+    return hof, emb.select("vec_id", F.struct(udf["dist"], udf["j"]).alias("v"))
+
+
+_PQ_M, _PQ_SUB = 4, _KDIM // 4
+# per sub s: centroid j is the s-th subvector of vector (j + s); j unsorted
+_PQ_CB = [
+    (s, j, _micro(_KROWS[(j + s) % 60][1][s * _PQ_SUB : (s + 1) * _PQ_SUB]))
+    for s in range(_PQ_M)
+    for j in (4, 1, 3, 0, 2)
+]
+
+
+def _subvectors(df, col):
+    """One (…, sub, sx) row per subspace slice of ``col``."""
+    subs = df.sparkSession.range(_PQ_M).select(F.col("id").cast("int").alias("sub"))
+    return df.crossJoin(subs).withColumn(
+        "sx", F.expr(f"slice({col}, sub * {_PQ_SUB} + 1, {_PQ_SUB})")
+    )
+
+
+def _pin_pq_argmin(spark):
+    from etl_8million_data__spark.operators.similarity import _pq_argmin_assign_udf
+
+    xs = _subvectors(spark.createDataFrame(_KROWS, "vec_id long, x array<double>"), "x")
+    hof = xs.join(F.broadcast(_carr(spark, _PQ_CB, ("sub",))), "sub").select(
+        "vec_id", "sub", _hof_argmin(F.col("sx"), F.col("_cs")).alias("v")
+    )
+    udf = _pq_argmin_assign_udf(_PQ_CB)(F.col("sub"), F.col("sx"))
+    return hof, xs.select("vec_id", "sub", F.struct(udf["dist"], udf["j"]).alias("v"))
+
+
+def _hof_codes(spark, res):
+    """Per-sub HOF argmin codes of the (vec_id, r) residual frame,
+    collected back into one codes array per vector."""
+    best = _subvectors(res, "r").join(F.broadcast(_carr(spark, _PQ_CB, ("sub",))), "sub")
+    best = best.select(
+        "vec_id",
+        "cell",
+        F.struct("sub", _hof_argmin(F.col("sx"), F.col("_cs"))["j"].alias("j")).alias("t"),
+    )
+    return best.groupBy("vec_id", "cell").agg(
+        F.transform(F.array_sort(F.collect_list("t")), lambda t: t["j"]).alias("codes")
+    ).select("vec_id", F.struct("cell", "codes").alias("v"))
+
+
+def _pin_pq_encode(spark, coarse):
+    from etl_8million_data__spark.operators.similarity import _pq_encode_udf
+
+    emb = spark.createDataFrame(_KROWS, "vec_id long, x array<double>")
+    if coarse:
+        km = spark.createDataFrame(_KM_CB, "cell int, cm array<bigint>")
+        cell = emb.crossJoin(F.broadcast(_carr(spark, _KM_CB))).select(
+            "vec_id", "x", _hof_argmin(F.col("x"), F.col("_cs"))["j"].alias("cell")
+        )
+        res = cell.join(F.broadcast(km), "cell").select(
+            "vec_id", "cell", F.zip_with("x", "cm", lambda a, m: a - m / 1_000_000).alias("r")
+        )
+    else:
+        res = emb.select("vec_id", F.lit(-1).alias("cell"), F.col("x").alias("r"))
+    enc = _pq_encode_udf(_PQ_CB, _PQ_M, _PQ_SUB, km_cb=_KM_CB if coarse else None)
+    return _hof_codes(spark, res), emb.select("vec_id", enc(F.col("x")).alias("v"))
+
+
+def _bits(v):
+    """Exact float64 bytes of every double in a (nested) result."""
+    if isinstance(v, float):
+        return struct.pack("d", v)
+    if isinstance(v, (list, tuple)):
+        return tuple(_bits(x) for x in v)
+    return v
+
+
+@pytest.mark.parametrize(
+    "pin",
+    [
+        _pin_dot,
+        _pin_sqdist,
+        _pin_argmin,
+        _pin_pq_argmin,
+        lambda spark: _pin_pq_encode(spark, coarse=False),
+        lambda spark: _pin_pq_encode(spark, coarse=True),
+    ],
+    ids=["dot", "sqdist", "argmin", "pq_argmin", "pq_encode", "pq_encode_coarse"],
+)
+def test_arrow_kernel_bit_identical_to_hof_fold(spark, pin):
+    """Every Arrow kernel replays its HOF fold BIT for bit: per row the
+    float64 ops run ((0 + t0) + t1) + ... left-to-right with the same
+    bigint/1e6 divide, and codebook ties break to the smallest j. The
+    pair kernels also carry the HOF NULL contract: a NULL vector on
+    either side scores NULL."""
+    hof, arrow = pin(spark)
+    keys = [c for c in hof.columns if c != "v"]
+    want = {tuple(r[:-1]): _bits(r["v"]) for r in hof.select(*keys, "v").collect()}
+    got = {tuple(r[:-1]): _bits(r["v"]) for r in arrow.select(*keys, "v").collect()}
+    assert want == got
+
+
+def _ragged(spark, a, b):
+    return spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(zip(a, b))],
+        "id long, a array<double>, b array<double>",
+    )
+
+
+@pytest.mark.parametrize(
+    "case, match",
+    [
+        ("within", r"dot_arrow_seqfold: vector lengths 2 and 3"),
+        ("between", r"sqdist_arrow_seqfold: vector length 3 != 2"),
+        ("codebook_length", r"codebook argmin: vector length 3 != 16"),
+        ("codebook_null", r"pq encode: NULL vector"),
+    ],
+    ids=["within", "between", "codebook_length", "codebook_null"],
+)
+def test_arrow_kernel_input_contract(spark, case, match):
+    """Ragged and NULL inputs fail LOUDLY instead of truncating the fold
+    or crashing inside numpy: the Arrow kernels raise a ValueError that
+    names the kernel and both lengths; the codebook UDFs (non-nullable
+    output) reject a NULL vector by name."""
+    from pyspark.errors import PythonException
+
+    from etl_8million_data__spark.operators.similarity import (
+        _argmin_assign_udf,
+        _pq_encode_udf,
+        dot_arrow_seqfold,
+        sqdist_arrow_seqfold,
+    )
+
+    if case == "within":
+        df = _ragged(spark, [[1.0, 2.0, 3.0], [1.0, 2.0]], [[1.0, 2.0, 3.0]] * 2)
+        col = dot_arrow_seqfold(F.col("a"), F.col("b"))
+    elif case == "between":
+        df = _ragged(spark, [[1.0, 2.0]] * 2, [[1.0, 2.0, 3.0]] * 2)
+        col = sqdist_arrow_seqfold(F.col("a"), F.col("b"))
+    elif case == "codebook_length":
+        df = _ragged(spark, [[1.0, 2.0, 3.0]], [None])
+        col = _argmin_assign_udf(_KM_CB)(F.col("a"))
+    else:
+        df = _ragged(spark, [_KROWS[0][1], None], [None, None])
+        col = _pq_encode_udf(_PQ_CB, _PQ_M, _PQ_SUB)(F.col("a"))
+    with pytest.raises(PythonException, match=f"ValueError: {match}"):
+        df.coalesce(1).select(col.alias("v")).collect()

@@ -1,20 +1,14 @@
-"""Isolation rerun for driver-flagged bench regressions.
+"""Isolated min-of-5 timing of named queries.
 
-VERDICT r8 flagged six queries whose driver-measured time grew >25% vs the
-previous round's committed BENCH_FULL. Five of the six are on plans untouched
-since round 7, so the working hypothesis is the documented ~15% boot variance
-(see memory: bench totals swing across boots with identical code). This tool
-closes the question with data: each flagged query runs in ISOLATION (fresh
-measurement loop, min-of-5 after a warmup pass) so the number is the query's
-steady-state cost on THIS boot, not its cost amid a 70-query sweep.
+Each query runs in ISOLATION (fresh measurement loop, min-of-5 after a
+warmup pass), so the number is the query's steady-state cost on this
+machine, not its cost amid a full sweep.
 
 Usage:
-    python tools/bench_isolation.py [query ...]
+    python tools/bench_isolation.py QUERY [QUERY ...]
 
-Defaults to the six r8-flagged queries plus similarity_margin_mining (whose
-committed 10.06 s spread vs a 1.27 s median the verdict asked to explain).
-Writes BENCH_ISOLATION_r9.json with min/median/max per query and the verdict
-comparison columns.
+Writes min/median/max per query to BENCH_ISOLATION.json (override with
+SPARK_GRAFT_ISOLATION_OUT), merged into any earlier record there.
 """
 
 from __future__ import annotations
@@ -32,22 +26,11 @@ from etl_8million_data__spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (query, driver r8 time, prior committed r7 time) from BENCH_r08.json's
-# regressions_vs_prev + the verdict's narrative.
-FLAGGED = {
-    "corpus_dsir_importance": (2.546, 1.83),
-    "similarity_knn_ivf_pq": (2.934, 2.28),
-    "search_hybrid_rank_fusion": (1.986, 1.50),
-    "dedup_semantic_keepers": (1.806, None),
-    "similarity_knn_ivf_pq_persisted": (0.57, 0.44),
-    "dedup_cluster_components": (0.16, 0.12),
-    "multimodal_audio_energy_trim": (0.42, 0.31),
-    "similarity_margin_mining": (None, 1.27),  # spread question, not regression
-}
-
 
 def main() -> None:
-    names = sys.argv[1:] or list(FLAGGED)
+    names = sys.argv[1:]
+    if not names:
+        sys.exit(__doc__)
     spark = get_spark("etl8m-bench-isolation")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
@@ -68,21 +51,17 @@ def main() -> None:
             t0 = time.time()
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
-        driver_r8, prev_r7 = FLAGGED.get(name, (None, None))
         out[name] = {
             "min": min(samples),
             "median": round(statistics.median(samples), 3),
             "max": max(samples),
             "samples": samples,
-            "driver_r8": driver_r8,
-            "committed_r7": prev_r7,
         }
         print(f"{name}: min={min(samples)} median={out[name]['median']} "
-              f"max={max(samples)} (driver r8: {driver_r8}, r7: {prev_r7})",
-              flush=True)
+              f"max={max(samples)}", flush=True)
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        os.environ.get("SPARK_GRAFT_ISOLATION_OUT", "BENCH_ISOLATION_r9.json"),
+        os.environ.get("SPARK_GRAFT_ISOLATION_OUT", "BENCH_ISOLATION.json"),
     )
     # merge-preserve: later targeted reruns must not erase earlier
     # queries' evidence
