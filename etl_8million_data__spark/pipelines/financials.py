@@ -189,11 +189,15 @@ def build_financials_fact(
     (stock, statement_type, metric, date), partitioned by
     (statement_type, stock_bucket) — statement_type is the
     low-cardinality query-aligned axis (SURVEY.md §4) and the md5
-    stock bucket bounds the incremental-upsert blast radius: a
-    d-symbol delta rewrites at most 3*min(d, n_buckets) of the
-    3*n_buckets partition directories instead of the whole fact
-    (measured 21 s -> ~3 s for a 10-symbol delta at the full
-    5,510-symbol scale, tools/reference_scale_run.py --resume). Raw
+    stock bucket bounds the incremental-upsert blast radius.
+
+    ``raw`` is the batch to merge, not necessarily the whole bronze
+    store: ``pipelines.run.run_all`` passes only the payloads loaded
+    after its watermark (``fresh_rows``), so a d-symbol delta rewrites
+    at most 3*min(d, n_buckets) of the 3*n_buckets partition
+    directories instead of the whole fact (REFERENCE_SCALE.md: 21 s ->
+    7.3 s for a 10-symbol delta at the full 5,510-symbol scale, run by
+    tools/reference_scale_run.py --resume on the same watermark). Raw
     stock is deliberately NOT a partition key: millions of tiny
     directories at scale."""
     has_ts = loaded_at_col in raw.columns

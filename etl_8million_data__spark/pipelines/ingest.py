@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.sources.fetch import fetch_payloads
@@ -37,7 +37,8 @@ def ingest(
     loaded_csv_path: str | None = None,
 ) -> int:
     """Run one incremental ingest; returns the number of newly-loaded
-    symbols. Append-only bronze store (details.py:207-227); the
+    symbols, counted from the appended batch rather than by scanning
+    the store. Append-only bronze store (details.py:207-227); the
     dedup-on-read happens downstream via last-writer-wins."""
     symbols = clean_symbols(read_symbols_csv(spark, symbols_csv))
     store = spark.read.parquet(store_path) if os.path.exists(store_path) else None
@@ -51,13 +52,17 @@ def ingest(
     fetched = fetch_payloads(todo, fetch_fn, rate_limit_sleep).withColumn(
         "loaded_at", F.current_timestamp()
     )
-    fetched.write.mode("append").parquet(store_path)
+    # the batch is one row per new symbol (todo is distinct and not in
+    # the store; quarantined {"_error": ...} payloads are rows too), so
+    # its row count, observed during the append, is the new-symbol count
+    batch = Observation()
+    fetched.observe(batch, F.count(F.lit(1)).alias("rows")).write.mode("append").parquet(
+        store_path
+    )
     if loaded_csv_path:
         # CSV sink parity (symbols_loaded.csv, details.py:300-303);
         # coalesce(1) mirrors the single-file output
         spark.read.parquet(store_path).select("symbol").distinct().coalesce(1).write.mode(
             "overwrite"
         ).csv(loaded_csv_path, header=True)
-    return spark.read.parquet(store_path).select("symbol").distinct().count() - (
-        store.select("symbol").distinct().count() if store is not None else 0
-    )
+    return batch.get["rows"]

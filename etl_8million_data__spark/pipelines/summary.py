@@ -45,6 +45,8 @@ def normalize_summary(
     - symbol fallback (Summary.py:68-89,153-154): when the table lacks a
       symbol column (or the value is NULL), derive it from info.symbol /
       info.ticker inside the payload
+    - ``updated_at``: the current timestamp, stamped on every row of
+      ``raw`` (Summary.py:220)
     """
     sym_hint = (
         F.col(symbol_col) if symbol_col in raw.columns else F.lit(None).cast("string")
@@ -92,6 +94,12 @@ def build_summary_dim(
     symbol_col: str = "symbol",
     payload_col: str = "payload",
 ) -> None:
-    """Upsert on PK(stock) (Summary.py:223-249 ON DUPLICATE KEY)."""
+    """Upsert on PK(stock) (Summary.py:223-249 ON DUPLICATE KEY).
+
+    ``pipelines.run.run_all`` passes only the payloads loaded after its
+    watermark, so only those symbols are re-derived and get a new
+    ``updated_at``. Deviation: the reference re-reads every payload on
+    each run and re-stamps every symbol (Summary.py:220,279-303;
+    SURVEY.md §3.4)."""
     dim = normalize_summary(raw, symbol_col, payload_col)
     upsert_parquet(raw.sparkSession, dim, sink_path, keys=["stock"], order_col="updated_at")

@@ -278,10 +278,14 @@ def test_ingest_incremental_skip_existing(spark):
         assert json.loads(snap["AAA"])["info"]["longName"] == "AAA Inc"
 
         # second run: anti-join skips everything (details.py:277-281) —
-        # the store must be unchanged (no new rows appended)
-        n2 = ingest(spark, csv, store, fetch)
+        # the store must be unchanged (no new rows appended); the
+        # symbols_loaded.csv sink still lists the whole store
+        loaded = f"{d}/symbols_loaded"
+        n2 = ingest(spark, csv, store, fetch, loaded_csv_path=loaded)
         assert n2 == 0
         assert spark.read.parquet(store).count() == 2
+        got = spark.read.csv(loaded, header=True).collect()
+        assert sorted(r.symbol for r in got) == ["AAA", "BBB"]
 
 
 def test_quote_price_coalesce_priority_property(spark):

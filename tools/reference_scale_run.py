@@ -87,22 +87,22 @@ def run_resume(
 
       stage 1/2: universe CSV -> clean -> anti-join vs the bronze store
                  -> fetch ONLY the missing symbols -> append
-      stage 3:   unpivot + upsert ONLY bronze rows newer than the fact's
-                 watermark (persisted in the workdir); zero new rows ->
-                 the upsert is skipped outright (no fact read, no write)
+      stage 3:   unpivot + upsert ONLY bronze rows newer than the
+                 workdir's loaded_at watermark (``pipelines.run``'s
+                 ``fresh_rows`` / ``advance_watermark``, the one
+                 ``run_all`` uses); zero new rows -> the upsert is
+                 skipped outright (no fact read, no write)
 
     A second invocation over the same workdir is therefore a provable
     no-op end-to-end; ``delta`` extra symbols simulate universe growth
     between runs (only the delta is fetched and only its fact rows are
     upserted). Returns the pass's metrics."""
-    import pyspark.sql.functions as F
-
     from etl_8million_data__spark.pipelines.ingest import ingest
+    from etl_8million_data__spark.pipelines.run import advance_watermark, fresh_rows
 
     os.makedirs(workdir, exist_ok=True)
     bronze_path = os.path.join(workdir, "bronze")
     fact_path = os.path.join(workdir, "financials")
-    wm_path = os.path.join(workdir, "fact_watermark.txt")
     csv_path = os.path.join(workdir, "universe.csv")
 
     # universe CSV: the base symbols plus `delta` newcomers
@@ -117,20 +117,11 @@ def run_resume(
     n_new = ingest(spark, csv_path, bronze_path, _payload_dict)
     t_ingest = time.time() - t0
 
-    wm = None
-    if os.path.exists(wm_path):
-        with open(wm_path) as f:
-            wm = f.read().strip()
-
-    bronze = spark.read.parquet(bronze_path)
-    fresh = bronze.filter(F.col("loaded_at") > F.lit(wm).cast("timestamp")) if wm else bronze
-    n_fresh = fresh.count()
+    fresh, n_fresh, until = fresh_rows(spark.read.parquet(bronze_path), workdir)
     t0 = time.time()
     if n_fresh:
         build_financials_fact(fresh, fact_path)
-        new_wm = bronze.agg(F.max("loaded_at")).first()[0]
-        with open(wm_path, "w") as f:
-            f.write(str(new_wm))
+        advance_watermark(workdir, until)
     t_fact = time.time() - t0
 
     n_fact = spark.read.parquet(fact_path).count() if os.path.exists(fact_path) else 0
