@@ -14,14 +14,15 @@ import json
 import os
 import re
 import sys
-import time
+from dataclasses import dataclass, field
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from etl_8million_data__spark import profile  # noqa: E402
+from etl_8million_data__spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from etl_8million_data__spark.plans import all_queries  # noqa: E402
 from etl_8million_data__spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Sentinel queries: plans untouched since round 1, used to normalize out
 # cross-boot host variance. Measured totals swing ~15% between machine boots
@@ -225,272 +226,234 @@ def tail_rotation(
     return sorted(tail[(start + i) % len(tail)] for i in range(k))
 
 
-def main() -> None:
-    spark = get_spark("etl8m-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    # Warm up JVM/codegen/parquet-footer paths so q1 isn't charged for it,
-    # and the Python/Arrow worker pool so the one pandas-UDF query isn't
-    # charged ~2 s of interpreter startup.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(100).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    queries["group_agg_pricing_summary"].build(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    for name in HEADLINE + BASELINE_LANE:
-        if name not in queries:
-            continue
-        # best-of-3: a single sample conflates the query's cost with
-        # transient host contention / first-touch planning / JIT warmup
-        # (measured: cold first samples run 2-6x the converged time;
-        # by sample 3 every query is steady-state). The min is the
-        # reproducible number. The per-query SPREAD (max - min) is
-        # reported alongside so a swing in a round-over-round
-        # comparison is attributable to plan vs host noise at a glance:
-        # spread ~ delta means noise, spread << delta means a real
-        # plan change.
-        # TIMED-BOUNDARY CONTRACT: the clock starts AFTER build(), so
-        # anything build() eagerly materializes (localCheckpoint(eager=
-        # True)) runs untimed. The rule for query authors: no NEW eager
-        # materialization may be added to a build path unless the
-        # materialized frame is provably O(model) — k centroids, a
-        # codebook, a band signature — never O(data). Data-sized staging
-        # must be lazy (eager=False) so it computes inside the timed
-        # region. tests/test_plan_invariants.py::test_fit_checkpoints_
-        # are_model_sized pins the fit lane's side of this contract.
-        samples = []
-        for _ in range(3):
-            df = queries[name].build(spark, SF_DIR)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        timings[name] = round(min(samples), 3)
-        spreads[name] = round(max(samples) - min(samples), 3)
-    total = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
-    baseline_total = round(
-        sum(timings[n] for n in BASELINE_LANE if n in timings), 3
-    )
-    m = re.search(r"sf([0-9.]+)", SF_DIR)
-    sf = float(m.group(1).rstrip(".")) if m else None
-    # The driver captures only the last ~2000 chars of stdout and parses the
-    # final JSON line. 47 queries x (timing + spread) is ~3.4 kB, which cut the
-    # line start off in round 4 (BENCH_r04.json parsed: null). So: the full
-    # per-query timings + spreads go to BENCH_FULL.json (committed alongside),
-    # and stdout carries a compact summary -- total + the 10 slowest queries --
-    # guaranteed well under the capture window.
-    # Round-over-round honesty check: compare against the committed
-    # BENCH_FULL.json from the previous run and flag any query whose
-    # warm time grew > 25% beyond its measured noise spread — the
-    # regression list rides in both the full file and the stdout line
-    # so a slow creep is visible at a glance, not buried in a diff.
-    bench_full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    # Sentinel normalization: this boot's sentinel total vs the committed
-    # run's sentinel total gives a host-speed factor; a query only counts as
-    # regressed if its time grew >25% beyond noise AFTER dividing out that
-    # factor. This stops boot variance masquerading as regression (round 8
-    # lost a verdict round-trip to exactly that).
-    sentinel_total = sum(timings.get(s, 0.0) for s in SENTINELS)
-    candidates: dict[str, str] = {}
-    prev_q: dict[str, float] = {}
-    prev_spread: dict[str, float] = {}
-    boot_factor = 1.0
-    try:
-        with open(bench_full_path) as f:
-            prev = json.load(f)
-        prev_q = prev.get("queries", {})
-        prev_spread = prev.get("spread", {})
-        prev_sentinel = prev.get("sentinel_total") or sum(
-            prev_q.get(s, 0.0) for s in SENTINELS
-        )
-        boot_factor = (
-            sentinel_total / prev_sentinel
-            if sentinel_total > 0 and prev_sentinel > 0
-            else 1.0
-        )
-        for name, t in timings.items():
-            p = prev_q.get(name)
-            # absolute floor alongside the relative rule: a 10 ms query
-            # drifting to 25 ms is timer/JIT jitter, not a plan change —
-            # sub-0.15 s deltas can never be a meaningful regression on
-            # this fixture scale
-            noise = max(spreads.get(name, 0.0), prev_spread.get(name, 0.0), 0.15)
-            if regressed(t, p, noise, boot_factor):
-                # print the same clamped normalization regressed() gates
-                # on — on fast boots (factor < 1) the unclamped division
-                # would report a number the rule never used
-                bf = max(boot_factor, 1.0)
-                candidates[name] = (
-                    f"{p:.2f}s -> {t:.2f}s raw, {t / bf:.2f}s"
-                    f" boot-normalized (factor {boot_factor:.2f})"
-                )
-    except (OSError, ValueError):
-        pass
-    # SELF-ADJUDICATION (round-10): within-run interference from the fixed
-    # query order (JVM/GC/page-cache state inherited from preceding queries)
-    # repeatedly flagged queries that measure clean alone — r8 flagged six,
-    # r9 eight, and isolated min-of-5 reruns put every one at/below its
-    # prior time. So a first-pass flag is only a CANDIDATE: each flagged
-    # query is re-run at the END of the bench (different ordering context,
-    # caches cleared, min-of-3), and a regression is confirmed only if the
-    # isolated min, boot-normalized, still exceeds the 25%+noise budget.
-    # Both numbers are reported so the adjudication is auditable.
-    regressions: dict[str, str] = {}
-    isolated: dict[str, float] = {}
-    if candidates:
-        spark.catalog.clearCache()
-        for name in candidates:
-            samples = []
-            for _ in range(3):
-                df = queries[name].build(spark, SF_DIR)
-                t0 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-            iso = round(min(samples), 3)
-            isolated[name] = iso
-            noise = max(spreads.get(name, 0.0), prev_spread.get(name, 0.0), 0.15)
-            if regressed(iso, prev_q.get(name), noise, boot_factor):
-                regressions[name] = (
-                    candidates[name]
+@dataclass
+class Lane:
+    """One lane's round: per-query first-pass min and spread, the
+    boot factor both passes normalized by, the first-pass regression
+    candidates, their isolated reruns and the confirmed regressions."""
+
+    first_pass: dict[str, float]
+    spread: dict[str, float]
+    boot_factor: float
+    candidates: dict[str, str] = field(default_factory=dict)
+    isolated: dict[str, float] = field(default_factory=dict)
+    regressions: dict[str, str] = field(default_factory=dict)
+
+
+def run_lane(
+    measure: Callable[[str, int], list[float]],
+    isolate: Callable[[], None],
+    names: list[str],
+    n: int,
+    prior: dict[str, dict],
+    boot_factor: Callable[[dict[str, float]], float],
+) -> Lane:
+    """Time ``names`` min-of-``n`` with ``measure(name, n)``, then
+    adjudicate against ``prior`` ({name: {"t", "spread"[, "round"]}}).
+
+    The min is the reproducible number: a single sample conflates the
+    query's cost with transient host contention / first-touch planning /
+    JIT warmup (measured: cold first samples run 2-6x the converged
+    time). The spread (max - min) rides alongside, so a swing in a
+    round-over-round comparison is attributable to plan vs host noise
+    at a glance.
+
+    SELF-ADJUDICATION: within-run interference from the fixed query
+    order (JVM/GC/page-cache state inherited from preceding queries)
+    repeatedly flagged queries that measure clean alone — r8 flagged
+    six, r9 eight, and isolated min-of-5 reruns put every one at/below
+    its prior time. So a first-pass flag is only a CANDIDATE: after
+    ``isolate()`` (clear caches) each candidate is re-run at the END of
+    its lane (different ordering context, min-of-3), and a regression
+    is confirmed only if the isolated min, boot-normalized by
+    ``boot_factor(first_pass)``, still exceeds the 25%+noise budget.
+    Both numbers are reported so the adjudication is auditable."""
+    first, spread = {}, {}
+    for name in names:
+        samples = measure(name, n)
+        first[name] = round(min(samples), 3)
+        spread[name] = round(max(samples) - min(samples), 3)
+    lane = Lane(first, spread, boot_factor(first))
+    bf = lane.boot_factor
+
+    def noise(name: str) -> float:
+        # absolute floor alongside the relative rule: a 10 ms query
+        # drifting to 25 ms is timer/JIT jitter, not a plan change —
+        # sub-0.15 s deltas can never be a meaningful regression on
+        # this fixture scale
+        return max(spread.get(name, 0.0), prior.get(name, {}).get("spread", 0.0), 0.15)
+
+    for name, t in first.items():
+        p = prior.get(name, {})
+        if regressed(t, p.get("t"), noise(name), bf):
+            # print the same clamped normalization regressed() gates
+            # on — on fast boots (factor < 1) the unclamped division
+            # would report a number the rule never used
+            was = f"{p['t']:.2f}s" + (f" (round {p['round']})" if "round" in p else "")
+            lane.candidates[name] = (
+                f"{was} -> {t:.2f}s raw, {t / max(bf, 1.0):.2f}s"
+                f" boot-normalized (factor {bf:.2f})"
+            )
+    if lane.candidates:
+        isolate()
+        for name in lane.candidates:
+            iso = round(min(measure(name, 3)), 3)
+            lane.isolated[name] = iso
+            if regressed(iso, prior[name]["t"], noise(name), bf):
+                lane.regressions[name] = (
+                    lane.candidates[name]
                     + f"; isolated rerun {iso:.2f}s"
-                    f" ({iso / max(boot_factor, 1.0):.2f}s normalized) CONFIRMED"
+                    f" ({iso / max(bf, 1.0):.2f}s normalized) CONFIRMED"
                 )
-    # ---- rotating TAIL lane: the registered queries outside the
+    return lane
+
+
+def sentinel_total(timings: dict[str, float]) -> float:
+    return sum(timings.get(s, 0.0) for s in SENTINELS)
+
+
+def run_bench(
+    prev: dict,
+    all_names: list[str],
+    measure: Callable[[str, int], list[float]],
+    isolate: Callable[[], None],
+) -> dict:
+    """One benchmark round against ``prev``, the committed
+    BENCH_FULL.json record (``{}`` when there is none): the headline
+    lane (min-of-3), then the rotating tail lane (min-of-2). Returns the
+    next BENCH_FULL.json record, without ``sf``."""
+    prev_q = prev.get("queries", {})
+    prev_spread = prev.get("spread", {})
+    prev_sentinel = prev.get("sentinel_total") or sentinel_total(prev_q)
+
+    # Sentinel normalization: this boot's sentinel total vs the committed
+    # run's sentinel total gives a host-speed factor; a query only counts
+    # as regressed if its time grew >25% beyond noise AFTER dividing out
+    # that factor. This stops boot variance masquerading as regression
+    # (round 8 lost a verdict round-trip to exactly that).
+    def boot(first: dict[str, float]) -> float:
+        total = sentinel_total(first)
+        return total / prev_sentinel if total > 0 and prev_sentinel > 0 else 1.0
+
+    head = run_lane(
+        measure,
+        isolate,
+        [n for n in HEADLINE + BASELINE_LANE if n in all_names],
+        3,
+        {n: {"t": t, "spread": prev_spread.get(n, 0.0)} for n, t in prev_q.items()},
+        boot,
+    )
+    # Rotating TAIL lane: the registered queries outside the
     # headline/baseline lanes, a deterministic 30-per-round window so
     # every query is re-timed within a few rounds. Each tail query
-    # compares against the LAST round it was sampled (tail_history in
-    # the committed BENCH_FULL.json), boot-normalized by the same
-    # sentinel factor, with the same isolated-rerun adjudication; the
-    # committed history carries the reproducible min forward.
-    prev_tail_round = int(prev.get("tail_round", 0)) if prev_q else 0
-    tail_history: dict[str, dict] = (
-        dict(prev.get("tail_history", {})) if prev_q else {}
+    # compares against the LAST round it was sampled (tail_history),
+    # boot-normalized by the headline's sentinel factor.
+    tail_round = int(prev.get("tail_round", 0)) + 1
+    tail_sampled = tail_rotation(all_names, HEADLINE + BASELINE_LANE + SENTINELS, tail_round)
+    tail_history: dict[str, dict] = dict(prev.get("tail_history", {}))
+    tail = run_lane(
+        measure, isolate, tail_sampled, 2, tail_history, lambda _: head.boot_factor
     )
-    tail_round = prev_tail_round + 1
-    tail_sampled = tail_rotation(
-        queries.keys(), HEADLINE + BASELINE_LANE + SENTINELS, tail_round
-    )
-    tail_timings: dict[str, float] = {}
-    tail_spreads: dict[str, float] = {}
-    for name in tail_sampled:
-        samples = []
-        for _ in range(2):
-            df = queries[name].build(spark, SF_DIR)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        tail_timings[name] = round(min(samples), 3)
-        tail_spreads[name] = round(max(samples) - min(samples), 3)
-    tail_candidates: dict[str, str] = {}
-    for name, t in tail_timings.items():
-        h = tail_history.get(name) or {}
-        noise = max(tail_spreads.get(name, 0.0), h.get("spread", 0.0), 0.15)
-        if regressed(t, h.get("t"), noise, boot_factor):
-            bf = max(boot_factor, 1.0)
-            tail_candidates[name] = (
-                f"{h.get('t'):.2f}s (round {h.get('round')}) -> {t:.2f}s raw,"
-                f" {t / bf:.2f}s boot-normalized (factor {boot_factor:.2f})"
-            )
-    tail_regressions: dict[str, str] = {}
-    tail_isolated: dict[str, float] = {}
-    if tail_candidates:
-        spark.catalog.clearCache()
-        for name in tail_candidates:
-            samples = []
-            for _ in range(3):
-                df = queries[name].build(spark, SF_DIR)
-                t0 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-            iso = round(min(samples), 3)
-            tail_isolated[name] = iso
-            h = tail_history.get(name) or {}
-            noise = max(
-                tail_spreads.get(name, 0.0), h.get("spread", 0.0), 0.15
-            )
-            if regressed(iso, h.get("t"), noise, boot_factor):
-                tail_regressions[name] = (
-                    tail_candidates[name]
-                    + f"; isolated rerun {iso:.2f}s"
-                    f" ({iso / max(boot_factor, 1.0):.2f}s normalized)"
-                    " CONFIRMED"
-                )
-    committed_tail = commit_baseline(tail_timings, tail_isolated)
+    # the committed baselines carry the isolated min forward (see
+    # commit_baseline), and the totals follow the committed values so
+    # BENCH_FULL stays internally consistent
+    timings = commit_baseline(head.first_pass, head.isolated)
+    committed_tail = commit_baseline(tail.first_pass, tail.isolated)
     for name, t in committed_tail.items():
         tail_history[name] = {
             "t": t,
-            "spread": tail_spreads.get(name, 0.0),
+            "spread": tail.spread.get(name, 0.0),
             "round": tail_round,
         }
-    tail_total = round(sum(committed_tail.values()), 3)
-
-    # the committed per-query baseline carries the isolated min forward
-    # (see commit_baseline) — the headline total follows the committed
-    # values so BENCH_FULL stays internally consistent
-    first_pass = dict(timings)
-    timings = commit_baseline(timings, isolated)
-    total = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
-    baseline_total = round(
-        sum(timings[n] for n in BASELINE_LANE if n in timings), 3
-    )
-    full = {
+    return {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings[n] for n in HEADLINE if n in timings), 3),
         "unit": "sec",
         "queries": timings,
-        "first_pass": first_pass,
-        "spread": spreads,
-        "sentinel_total": round(sentinel_total, 3),
+        "first_pass": head.first_pass,
+        "spread": head.spread,
+        "sentinel_total": round(sentinel_total(head.first_pass), 3),
         "sentinels": SENTINELS,
         "baseline_lane": BASELINE_LANE,
-        "baseline_lane_total": baseline_total,
-        "regression_candidates": candidates,
-        "isolated_rerun": isolated,
-        "regressions_vs_prev": regressions,
-        "sf": sf,
+        "baseline_lane_total": round(
+            sum(timings[n] for n in BASELINE_LANE if n in timings), 3
+        ),
+        "regression_candidates": head.candidates,
+        "isolated_rerun": head.isolated,
+        "regressions_vs_prev": head.regressions,
         "n_queries": len(timings),
         "tail_round": tail_round,
         "tail_sampled": tail_sampled,
         "tail_queries": committed_tail,
-        "tail_first_pass": tail_timings,
-        "tail_spread": tail_spreads,
-        "tail_total": tail_total,
-        "tail_candidates": tail_candidates,
-        "tail_isolated_rerun": tail_isolated,
-        "tail_regressions_vs_last_sample": tail_regressions,
+        "tail_first_pass": tail.first_pass,
+        "tail_spread": tail.spread,
+        "tail_total": round(sum(committed_tail.values()), 3),
+        "tail_candidates": tail.candidates,
+        "tail_isolated_rerun": tail.isolated,
+        "tail_regressions_vs_last_sample": tail.regressions,
         "tail_history": tail_history,
     }
-    with open(bench_full_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    headline_only = {n: t for n, t in timings.items() if n in HEADLINE}
+
+
+def summary_line(full: dict) -> str:
+    """The stdout line. The driver captures only the last ~2000 chars of
+    stdout and parses the final JSON line; 47 queries x (timing +
+    spread) is ~3.4 kB, which cut the line start off in round 4
+    (BENCH_r04.json parsed: null). So the full record goes to
+    BENCH_FULL.json, and stdout carries a compact summary — total, the
+    10 slowest headline queries and the regression counts (so a slow
+    creep is visible at a glance, not buried in a diff)."""
+    headline_only = {n: t for n, t in full["queries"].items() if n in HEADLINE}
     top10 = dict(sorted(headline_only.items(), key=lambda kv: -kv[1])[:10])
     line = json.dumps(
         {
             "metric": "headline_queries_total",
-            "value": total,
+            "value": full["value"],
             "unit": "sec",
             "queries": top10,
-            "sf": sf,
-            "n_queries": len(timings),
-            "baseline_lane_total": baseline_total,
-            "sentinel_total": round(sentinel_total, 3),
-            "regressions": len(regressions),
+            "sf": full["sf"],
+            "n_queries": full["n_queries"],
+            "baseline_lane_total": full["baseline_lane_total"],
+            "sentinel_total": full["sentinel_total"],
+            "regressions": len(full["regressions_vs_prev"]),
             "tail": {
-                "round": tail_round,
-                "n": len(tail_sampled),
-                "total": tail_total,
-                "regressions": len(tail_regressions),
+                "round": full["tail_round"],
+                "n": len(full["tail_sampled"]),
+                "total": full["tail_total"],
+                "regressions": len(full["tail_regressions_vs_last_sample"]),
             },
             "full": "BENCH_FULL.json",
         }
     )
     assert len(line) < 1500, f"summary line {len(line)} chars; must stay < 1500"
-    print(line)
+    return line
+
+
+def main() -> None:
+    spark = get_spark("etl8m-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = all_queries()
+    profile.warm_session(spark)
+    profile.noop_write(queries["group_agg_pricing_summary"].build(spark, DEFAULT_SF_DIR))
+    bench_full_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+    )
+    try:
+        with open(bench_full_path) as f:
+            prev = json.load(f)
+    except (OSError, ValueError):
+        prev = {}
+    full = run_bench(
+        prev,
+        list(queries),
+        lambda name, n: profile.time_query(spark, queries[name], DEFAULT_SF_DIR, n),
+        spark.catalog.clearCache,
+    )
+    m = re.search(r"sf([0-9.]+)", DEFAULT_SF_DIR)
+    full["sf"] = float(m.group(1).rstrip(".")) if m else None
+    with open(bench_full_path, "w") as f:
+        json.dump(full, f, indent=1, sort_keys=True)
+    print(summary_line(full))
     spark.stop()
 
 

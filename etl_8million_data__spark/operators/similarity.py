@@ -547,7 +547,7 @@ def _argmin_assign_udf(cb: list[tuple[int, list[int]]]):
     rows, so every (j, dist) is bit-identical to the HOF fold. The
     codebook itself is an O(model) driver collect (k or m*ksub rows —
     the 'literal' strategy incremental_ann already uses, inside the
-    bench.py timed-boundary contract), so assignment becomes ONE narrow
+    profile.time_query timed-boundary contract), so assignment becomes ONE narrow
     ArrowEvalPython pass: zero exchange, zero broadcast join, no
     per-row codebook duplication through Arrow."""
     jv, mu = _codebooks((0, j, c) for j, c in cb)[0]
@@ -686,7 +686,7 @@ def kmeans_fit(
     # interpreted HOF per (row x centroid x dim) — see
     # _argmin_assign_udf. iter 0 runs the seed chain once at build;
     # later iterations read the eagerly checkpointed refit row, so the
-    # collect is always O(k) rows within the bench.py timed-boundary
+    # collect is always O(k) rows within the profile.time_query timed-boundary
     # contract.
     cb = [(r["j"], list(r["cm"])) for r in cents.collect()]
     for it in range(iters):

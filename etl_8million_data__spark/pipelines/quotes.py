@@ -10,11 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.scalars import epoch_to_date
-from etl_8million_data__spark.pipelines.financials import parse_payload
-
-
-def _info(p: Column, key: str) -> Column:
-    return F.try_element_at(p["info"], F.lit(key))
+from etl_8million_data__spark.pipelines.financials import _info, parse_payload
 
 
 def _num(p: Column, *keys: str) -> Column:

@@ -9,7 +9,7 @@ coalesce cascade is JVM-side (SURVEY.md §2.8 rows 2-5).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.scalars import (
@@ -21,11 +21,7 @@ from etl_8million_data__spark.functions.scalars import (
     headquarters_parts,
 )
 from etl_8million_data__spark.operators.upsert import upsert_parquet
-from etl_8million_data__spark.pipelines.financials import parse_payload
-
-
-def _info(p: Column, key: str) -> Column:
-    return F.try_element_at(p["info"], F.lit(key))
+from etl_8million_data__spark.pipelines.financials import _info, parse_payload
 
 
 def normalize_summary(

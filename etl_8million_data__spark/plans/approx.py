@@ -1799,7 +1799,7 @@ def advisor_layout_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # co-partitioned rank), so the un-staged plan re-scanned lineitem
     # six times. The checkpoint is LAZY (eager=False) on purpose — the
     # 4-column projection is O(data), so it must materialize inside the
-    # timed region (bench.py's timed-boundary contract), where it is
+    # timed region (the timed-boundary contract on profile.time_query), where it is
     # computed once and read six times.
     li = li.localCheckpoint(eager=False)
     layouts = [

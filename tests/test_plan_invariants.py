@@ -351,8 +351,8 @@ def test_linkage_candidate_stage_is_blocked_equi_join(spark):
 
 def test_fit_checkpoints_are_model_sized(spark, monkeypatch):
     """The bench's timed region starts AFTER build(), so an EAGER
-    localCheckpoint inside a build path materializes UNTIMED (bench.py
-    documents the contract). The fit operators lean on this for their
+    localCheckpoint inside a build path materializes UNTIMED (the
+    contract is documented on profile.time_query). The fit operators lean on this for their
     refit artifacts — legitimate only while every eagerly materialized
     frame stays O(model) (centroid/codebook rows), never O(data). This
     spy pins that: every eager checkpoint taken during kmeans_fit and

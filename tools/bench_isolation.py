@@ -17,14 +17,13 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_8million_data__spark import profile  # noqa: E402
+from etl_8million_data__spark.catalog import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 from etl_8million_data__spark.plans import all_queries  # noqa: E402
 from etl_8million_data__spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
@@ -34,23 +33,13 @@ def main() -> None:
     spark = get_spark("etl8m-bench-isolation")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    # Same warmup as bench.py so the first query isn't charged for JVM /
-    # Arrow-worker startup.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(100).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    profile.warm_session(spark)
     out: dict[str, dict] = {}
     for name in names:
-        q = queries[name]
-        # one discarded warmup, then 5 measured samples
-        q.build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(5):
-            df = q.build(spark, SF_DIR)
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
+        samples = [
+            round(t, 3)
+            for t in profile.time_query(spark, queries[name], SF_DIR, 5, warm=1)
+        ]
         out[name] = {
             "min": min(samples),
             "median": round(statistics.median(samples), 3),

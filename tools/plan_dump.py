@@ -18,10 +18,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_8million_data__spark.catalog import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 from etl_8million_data__spark.plans import all_queries  # noqa: E402
 from etl_8million_data__spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:

@@ -21,11 +21,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from etl_8million_data__spark import profile
 from etl_8million_data__spark.pipelines.financials import build_financials_fact
 from etl_8million_data__spark.session import get_spark
 
@@ -113,16 +113,15 @@ def run_resume(
         for i in range(delta):
             f.write(f"NEW{i:04d}\n")
 
-    t0 = time.time()
-    n_new = ingest(spark, csv_path, bronze_path, _payload_dict)
-    t_ingest = time.time() - t0
+    (t_ingest,), n_new = profile.sample(
+        lambda: ingest(spark, csv_path, bronze_path, _payload_dict), 1
+    )
 
     fresh, n_fresh, until = fresh_rows(spark.read.parquet(bronze_path), workdir)
-    t0 = time.time()
+    t_fact = 0.0
     if n_fresh:
-        build_financials_fact(fresh, fact_path)
+        (t_fact,), _ = profile.sample(lambda: build_financials_fact(fresh, fact_path), 1)
         advance_watermark(workdir, until)
-    t_fact = time.time() - t0
 
     n_fact = spark.read.parquet(fact_path).count() if os.path.exists(fact_path) else 0
     return {
@@ -149,15 +148,13 @@ def main() -> None:
     out = tempfile.mkdtemp(prefix="ref_scale_")
     try:
         bronze_path = os.path.join(out, "bronze")
-        t0 = time.time()
-        bronze.write.mode("overwrite").parquet(bronze_path)
-        t_bronze = time.time() - t0
+        (t_bronze,), _ = profile.sample(
+            lambda: bronze.write.mode("overwrite").parquet(bronze_path), 1
+        )
 
         fact_path = os.path.join(out, "financials")
         raw = spark.read.parquet(bronze_path)
-        t0 = time.time()
-        build_financials_fact(raw, fact_path)
-        t_fact = time.time() - t0
+        (t_fact,), _ = profile.sample(lambda: build_financials_fact(raw, fact_path), 1)
 
         n = spark.read.parquet(fact_path).count()
         n_syms = (

@@ -12,11 +12,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from etl_8million_data__spark import profile
 from etl_8million_data__spark.plans import all_queries
 from etl_8million_data__spark.session import get_spark
 
@@ -173,14 +173,9 @@ def skew_probe() -> str:
         & (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     )
-    t0 = time.time()
-    pid = (
-        joined.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
+    (dt,), pid = profile.sample(
+        joined.select(F.spark_partition_id().alias("pid")).groupBy("pid").count().collect, 1
     )
-    dt = time.time() - t0
     counts = sorted(r["count"] for r in pid)
     total, mx = sum(counts), max(counts)
     med = statistics.median(counts)
@@ -279,11 +274,9 @@ def interval_hot_user_probe() -> str:
     )
     ev = ev.unionByName(path)
     df = concurrent_sessions_frame(ev)
-    t0 = time.time()
-    pid = (
-        df.select(F.spark_partition_id().alias("pid")).groupBy("pid").count().collect()
+    (dt,), pid = profile.sample(
+        df.select(F.spark_partition_id().alias("pid")).groupBy("pid").count().collect, 1
     )
-    dt = time.time() - t0
     counts = sorted(r["count"] for r in pid)
     total, mx = sum(counts), max(counts)
     med = statistics.median(counts) if counts else 0
@@ -329,9 +322,9 @@ def mega_basket_probe() -> str:
     mega = spark.range(5_000).select(
         F.lit(999_999).alias("ok"), F.col("id").alias("pk")
     )
-    t0 = time.time()
-    with_mega = market_basket_rules(normal.unionByName(mega)).collect()
-    dt = time.time() - t0
+    (dt,), with_mega = profile.sample(
+        lambda: market_basket_rules(normal.unionByName(mega)).collect(), 1
+    )
     without = market_basket_rules(normal).collect()
     same = sorted(map(tuple, with_mega)) == sorted(map(tuple, without))
     line = (
@@ -406,12 +399,8 @@ def vocab_growth_probe() -> list[str]:
         times, pair_counts = [], []
         for n in (2_000, 20_000):
             docs = corpus(n).localCheckpoint(eager=True)
-            op(docs).count()  # warm
-            samples = []
-            for _ in range(2):  # best-of-2: damp host-contention noise
-                t0 = time.time()
-                pairs = op(docs).count()
-                samples.append(time.time() - t0)
+            # one warm call, then best-of-2: damp host-contention noise
+            samples, pairs = profile.sample(lambda: op(docs).count(), 2, warm=1)
             times.append(min(samples))
             pair_counts.append(pairs)
         ratio = times[1] / times[0] if times[0] > 0 else float("nan")
@@ -443,10 +432,7 @@ def main() -> None:
         times = []
         for sf in SFS:
             df = qs[name].build(spark, sf)
-            df.write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
+            times += profile.sample(lambda: profile.noop_write(df), 1, warm=1)[0]
         ratio = times[2] / times[1] if times[1] > 0 else float("nan")
         rows.append((name, *times, ratio))
         print(f"{name}: " + " ".join(f"{t:.2f}s" for t in times) + f" ratio10x={ratio:.1f}")
@@ -455,10 +441,7 @@ def main() -> None:
         times = []
         for sf in SFS[1:]:
             df = qs[name].build(spark, sf)
-            df.write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
+            times += profile.sample(lambda: profile.noop_write(df), 1, warm=1)[0]
         ratio = times[1] / times[0] if times[0] > 0 else float("nan")
         corpus_rows.append((name, *times, data_ratio, ratio))
         print(
@@ -675,16 +658,15 @@ def winnow_boilerplate_probe() -> str:
     rare = docfp.join(fpdf.filter(F.col("df") <= 20), "fp")
     a = rare.select(F.col("doc_id").alias("doc_a"), "fp")
     b = rare.select(F.col("doc_id").alias("doc_b"), "fp")
-    t0 = time.time()
-    pairs = (
+    (dt,), pairs = profile.sample(
         a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 3)
-        .collect()
+        .collect,
+        1,
     )
-    dt = time.time() - t0
     planted = {(h * 100 + 1, h * 100 + 2) for h in range(n // 100)
                if (h * 100 + 1) % 5 != 0 and (h * 100 + 2) % 5 != 0}
     got = {(r.doc_a, r.doc_b) for r in pairs}
@@ -750,15 +732,14 @@ def ivf_hot_cell_probe() -> str:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     w = hyperplane_weights(16, 64)
-    t0 = time.time()
-    scored = knn_ivf(emb, q, w, k=10, nprobe=3, n_bits=4)
-    pid = (
-        scored.select(F.spark_partition_id().alias("pid"))
+    (dt,), pid = profile.sample(
+        lambda: knn_ivf(emb, q, w, k=10, nprobe=3, n_bits=4)
+        .select(F.spark_partition_id().alias("pid"))
         .groupBy("pid")
         .count()
-        .collect()
+        .collect(),
+        1,
     )
-    dt = time.time() - t0
     counts = sorted(r["count"] for r in pid)
     total, mx = sum(counts), max(counts)
     med = statistics.median(counts) if counts else 0
@@ -818,11 +799,12 @@ def pq_adc_sweep_probe() -> list[str]:
         )
         # flat ADC scan: every code row meets the LUT
         flat_cand = 20 * (n - 1)
-        t0 = time.time()
-        knn_pq_adc(emb, m=16, ksub=16, iters=2, k=10, query_mod=qmod).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        flat_t = time.time() - t0
+        (flat_t,), _ = profile.sample(
+            lambda: profile.noop_write(
+                knn_pq_adc(emb, m=16, ksub=16, iters=2, k=10, query_mod=qmod)
+            ),
+            1,
+        )
         # IVF-PQ candidate volume: vectors inside each query's 2 probed
         # cells (the rows that actually stream through the LUT join),
         # measured from the same deterministic routing the operator uses.
@@ -850,12 +832,15 @@ def pq_adc_sweep_probe() -> list[str]:
             .agg(F.sum("count"))
             .collect()[0][0]
         )
-        t0 = time.time()
-        knn_ivf_pq(
-            emb, k_cells=8, km_iters=2, m=16, ksub=16, pq_iters=2, k=10,
-            nprobe=2, query_mod=qmod,
-        ).write.format("noop").mode("overwrite").save()
-        ivf_t = time.time() - t0
+        (ivf_t,), _ = profile.sample(
+            lambda: profile.noop_write(
+                knn_ivf_pq(
+                    emb, k_cells=8, km_iters=2, m=16, ksub=16, pq_iters=2, k=10,
+                    nprobe=2, query_mod=qmod,
+                )
+            ),
+            1,
+        )
         frac = ivf_cand / flat_cand
         results[n] = (flat_cand, flat_t, ivf_cand, ivf_t, frac)
         print(
@@ -918,10 +903,7 @@ def gemm_vs_bruteforce_probe() -> list[str]:
     )
 
     def warm_time(build):
-        build().write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        return profile.sample(lambda: profile.noop_write(build()), 1, warm=1)[0][0]
 
     tb = warm_time(lambda: knn_bruteforce(df, q, k=10))
     tg = warm_time(lambda: knn_block_gemm(df, k=10, query_mod=qmod))
@@ -997,12 +979,9 @@ def snm_sweep_probe() -> list[str]:
         cand_counts.append(
             sorted_neighborhood_frames(docs, window=window)["cands"].count()
         )
-        sorted_neighborhood_pairs(docs, window=window).count()  # warm
-        samples = []
-        for _ in range(2):
-            t0 = time.time()
-            pairs = sorted_neighborhood_pairs(docs, window=window).count()
-            samples.append(time.time() - t0)
+        samples, pairs = profile.sample(
+            lambda: sorted_neighborhood_pairs(docs, window=window).count(), 2, warm=1
+        )
         times.append(min(samples))
         pair_counts.append(pairs)
     spark.stop()
@@ -1106,11 +1085,9 @@ def contamination_sweep_probe() -> list[str]:
         nex = doc_shingle_frame(docs).select("doc_id", F.explode("shingles").alias("g"))
         cand_counts.append(nex.join(bex, "g").count())
         run().count()  # warm
-        samples = []
-        for _ in range(2):
-            t0 = time.time()
-            flagged = run().select("doc_id").distinct().count()
-            samples.append(time.time() - t0)
+        samples, flagged = profile.sample(
+            lambda: run().select("doc_id").distinct().count(), 2
+        )
         times.append(min(samples))
         flagged_counts.append(flagged)
     spark.stop()
@@ -1447,12 +1424,13 @@ def ivm_refresh_probe() -> list[str]:
         try:
             view = f"{wd}/view"
             refresh_join_view(spark, view, seed, c, o.limit(0), c.limit(0), ["custkey"])
-            t0 = time.time()
-            n = refresh_join_view(spark, view, seed, c, delta, c.limit(0), ["custkey"])
-            t_delta = time.time() - t0
-            t0 = time.time()
-            o.join(c, "custkey").write.mode("overwrite").parquet(f"{wd}/full")
-            t_full = time.time() - t0
+            (t_delta,), n = profile.sample(
+                lambda: refresh_join_view(spark, view, seed, c, delta, c.limit(0), ["custkey"]),
+                1,
+            )
+            (t_full,), _ = profile.sample(
+                lambda: o.join(c, "custkey").write.mode("overwrite").parquet(f"{wd}/full"), 1
+            )
         finally:
             shutil.rmtree(wd, ignore_errors=True)
         r = t_delta / t_full if t_full > 0 else float("nan")
@@ -1534,19 +1512,18 @@ def retraction_probe() -> list[str]:
                 .write.partitionBy("bucket")
                 .parquet(view)
             )
-            t0 = time.time()
-            n = retract_join_view(spark, view, victims, "custkey")
-            t_retract = time.time() - t0
+            (t_retract,), n = profile.sample(
+                lambda: retract_join_view(spark, view, victims, "custkey"), 1
+            )
             # the naive alternative: filtered recompute + full rewrite
-            t0 = time.time()
-            (
-                o.filter(~F.col("custkey").isin(vkeys))
+            (t_full,), _ = profile.sample(
+                lambda: o.filter(~F.col("custkey").isin(vkeys))
                 .join(c.filter(~F.col("custkey").isin(vkeys)), "custkey")
                 .withColumn("bucket", id_bucket(F.col("custkey"), 16))
                 .write.mode("overwrite").partitionBy("bucket")
-                .parquet(f"{wd}/full")
+                .parquet(f"{wd}/full"),
+                1,
             )
-            t_full = time.time() - t0
         finally:
             shutil.rmtree(wd, ignore_errors=True)
         r = t_retract / t_full if t_full > 0 else float("nan")
@@ -1637,15 +1614,13 @@ def linkage_store_probe() -> list[str]:
             store.write.parquet(flat)
 
             def measure(path, frag):
-                cnt, best, rows = 0, float("inf"), 0
+                times = []
                 for _ in range(2):
                     df = probe_store_candidates(spark, path, batch, prefix_len=15)
-                    t0 = time.time()
-                    cnt = df.count()
-                    best = min(best, time.time() - t0)
-                    m = _scan_partition_metrics(df, frag)
-                    rows = sum(x.get("numOutputRows", 0) for x in m)
-                return cnt, best, rows
+                    t, cnt = profile.sample(df.count, 1)
+                    times += t
+                m = _scan_partition_metrics(df, frag)
+                return cnt, min(times), sum(x.get("numOutputRows", 0) for x in m)
 
             c_part, t_part, r_part = measure(part, "part")
             c_flat, t_flat, r_flat = measure(flat, "flat")
@@ -1768,20 +1743,16 @@ def golden_increment_probe() -> list[str]:
                 edges.join(delta_edges, ["a_key", "b_key"], "left_anti"),
                 nb=256,
             )
-            sc = spark.sparkContext
-            grp = f"golden-inc-{n}"
-            sc.setJobGroup(grp, grp)
-            t0 = time.time()
-            golden_increment(spark, state, delta_rec, delta_edges)
-            t_inc = time.time() - t0
-            n_jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
-            sc.setJobGroup("rest", "rest")
-            t0 = time.time()
-            golden_forget(spark, state, delta_rec.select("rid"))
-            t_fgt = time.time() - t0
-            t0 = time.time()
-            golden_init(spark, f"{wd}/full", records, edges, nb=256)
-            t_full = time.time() - t0
+            with profile.count_jobs(spark.sparkContext, f"golden-inc-{n}") as jobs:
+                (t_inc,), _ = profile.sample(
+                    lambda: golden_increment(spark, state, delta_rec, delta_edges), 1
+                )
+            (t_fgt,), _ = profile.sample(
+                lambda: golden_forget(spark, state, delta_rec.select("rid")), 1
+            )
+            (t_full,), _ = profile.sample(
+                lambda: golden_init(spark, f"{wd}/full", records, edges, nb=256), 1
+            )
         finally:
             shutil.rmtree(wd, ignore_errors=True)
         ri, rf = t_inc / t_full, t_fgt / t_full
@@ -1791,12 +1762,12 @@ def golden_increment_probe() -> list[str]:
         fgt_ratios.append(rf)
         lines.append(
             f"| golden state, {n:,} store records, {n_delta}-record delta | "
-            f"increment {t_inc:.2f}s ({n_jobs} jobs) | erase {t_fgt:.2f}s | "
+            f"increment {t_inc:.2f}s ({jobs.n} jobs) | erase {t_fgt:.2f}s | "
             f"full re-link {t_full:.2f}s | ratios {ri:.2f}/{rf:.2f} |"
         )
         print(lines[-1])
-        assert n_jobs <= 60, (
-            f"golden_increment ran {n_jobs} jobs for a 10-record delta — "
+        assert jobs.n <= 60, (
+            f"golden_increment ran {jobs.n} jobs for a 10-record delta — "
             "the fused fixed chain is <= 60 on this fixture (observe-fused "
             "overwrites + literal-pruned delta neighborhood); an eager "
             "checkpoint+action pair or a broadcast build crept back in"
@@ -1884,19 +1855,14 @@ def scd2_probe() -> list[str]:
         try:
             root = f"{wd}/scd2"
             scd2_init(hist, root, nb=256)
-            sc = spark.sparkContext
-            grp = f"scd2-apply-{n}"
-            sc.setJobGroup(grp, grp)
-            t0 = time.time()
-            scd2_apply(spark, root, batch)
-            t_apply = time.time() - t0
-            n_jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
-            sc.setJobGroup("rest", "rest")
-            t0 = time.time()
-            build_intervals(hist.unionByName(batch)).write.mode(
-                "overwrite"
-            ).parquet(f"{wd}/full")
-            t_full = time.time() - t0
+            with profile.count_jobs(spark.sparkContext, f"scd2-apply-{n}") as jobs:
+                (t_apply,), _ = profile.sample(lambda: scd2_apply(spark, root, batch), 1)
+            (t_full,), _ = profile.sample(
+                lambda: build_intervals(hist.unionByName(batch))
+                .write.mode("overwrite")
+                .parquet(f"{wd}/full"),
+                1,
+            )
         finally:
             shutil.rmtree(wd, ignore_errors=True)
         r = t_apply / t_full if t_full > 0 else float("nan")
@@ -1904,12 +1870,12 @@ def scd2_probe() -> list[str]:
         ratios.append(r)
         lines.append(
             f"| scd2 maintenance, {n:,} changes, 10-change batch | "
-            f"apply {t_apply:.2f}s ({n_jobs} jobs) | "
+            f"apply {t_apply:.2f}s ({jobs.n} jobs) | "
             f"full rebuild {t_full:.2f}s | ratio {r:.2f} |"
         )
         print(lines[-1])
-        assert n_jobs <= 12, (
-            f"scd2_apply ran {n_jobs} jobs for a 10-change batch — the "
+        assert jobs.n <= 12, (
+            f"scd2_apply ran {jobs.n} jobs for a 10-change batch — the "
             "fused fixed chain is <= 12 on this fixture; an eager "
             "checkpoint+action pair crept back in"
         )
@@ -1981,14 +1947,13 @@ def ivfpq_probe_crossover_probe() -> list[str]:
             build_index_ivfpq(emb, idx)  # fit excluded from the timing
 
             def warm(nprobe):
-                best = float("inf")
-                for _ in range(3):
-                    t0 = time.time()
-                    probe_index_ivfpq(
-                        spark, idx, q, k=10, nprobe=nprobe
-                    ).write.format("noop").mode("overwrite").save()
-                    best = min(best, time.time() - t0)
-                return best
+                samples, _ = profile.sample(
+                    lambda: profile.noop_write(
+                        probe_index_ivfpq(spark, idx, q, k=10, nprobe=nprobe)
+                    ),
+                    3,
+                )
+                return min(samples)
 
             t_routed = warm(2)
             t_flat = warm(8)
