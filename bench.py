@@ -430,11 +430,8 @@ def summary_line(full: dict) -> str:
 
 
 def main() -> None:
-    spark = get_spark("etl8m-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-    profile.warm_session(spark)
-    profile.noop_write(queries["group_agg_pricing_summary"].build(spark, DEFAULT_SF_DIR))
+    m = re.search(r"sf([0-9.]+)", DEFAULT_SF_DIR)
+    sf = float(m.group(1).rstrip(".")) if m else None
     bench_full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
     )
@@ -443,14 +440,25 @@ def main() -> None:
             prev = json.load(f)
     except (OSError, ValueError):
         prev = {}
+    # priors of another scale factor would judge this run against the
+    # wrong times, and overwriting them would lose that scale's record
+    if prev and prev.get("sf") != sf:
+        raise SystemExit(
+            f"bench: {bench_full_path} holds sf={prev.get('sf')} but this run "
+            f"is sf={sf} ({DEFAULT_SF_DIR}); neither compared nor overwritten"
+        )
+    spark = get_spark("etl8m-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = all_queries()
+    profile.warm_session(spark)
+    profile.noop_write(queries["group_agg_pricing_summary"].build(spark, DEFAULT_SF_DIR))
     full = run_bench(
         prev,
         list(queries),
         lambda name, n: profile.time_query(spark, queries[name], DEFAULT_SF_DIR, n),
         spark.catalog.clearCache,
     )
-    m = re.search(r"sf([0-9.]+)", DEFAULT_SF_DIR)
-    full["sf"] = float(m.group(1).rstrip(".")) if m else None
+    full["sf"] = sf
     with open(bench_full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(summary_line(full))

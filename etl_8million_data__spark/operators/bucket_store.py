@@ -293,19 +293,49 @@ def write_table_bucketed(df: DataFrame, path: str, part_col: str) -> None:
     ).parquet(resolve_root(path))
 
 
+def partition_filter(cols: list[str], keys: list[tuple]):
+    """Null-safe literal filter for the rows whose ``cols`` equal one of
+    the value tuples in ``keys`` (non-empty). On a partitioned read it
+    is a LITERAL partition filter, so only those directories are listed
+    and read (Spark degraded the broadcast semi-join form's
+    dynamicpruning filter to `true` at runtime and read every
+    partition). Null-safe equality keeps null partition values
+    (__HIVE_DEFAULT_PARTITION__) addressable."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    def match(key):
+        eqs = (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, key))
+        return reduce(lambda a, b: a & b, eqs)
+
+    return reduce(lambda a, b: a | b, map(match, keys))
+
+
 def overwrite_buckets(
     spark: SparkSession,
     path: str,
-    part_col: str,
+    part_cols: list[str],
     new_content: DataFrame,
-    affected: list[int],
+    affected: list[tuple],
 ) -> None:
-    """Replace exactly the ``affected`` bucket partitions of ``path``
-    with ``new_content`` (which must hold those buckets' FULL new
-    rows): dynamic partition overwrite rewrites the buckets that
-    receive rows; a bucket emptied outright keeps a ghost directory
-    dynamic overwrite cannot touch, so it is dropped explicitly (the
-    forget_partitioned discipline)."""
+    """Partition-subset commit, the one dynamic partition overwrite in
+    the package: replace exactly the ``affected`` partitions of
+    ``path`` (value tuples of ``part_cols``) with ``new_content``, which
+    must hold those partitions' FULL new rows and may read ``path``
+    itself. Partitions that receive rows are rewritten by a dynamic
+    partition overwrite, set as a writer option so the session conf is
+    never touched; an affected partition left with no rows keeps a
+    ghost directory dynamic overwrite cannot touch, so it is dropped
+    explicitly. Untouched partitions are never written.
+
+    Rows are clustered by ``part_cols`` before the write: without it
+    every reducer holds rows of many partitions and opens a file in
+    each directory it touches (measured 5,814 files, 65 s vs 29 s, for
+    the 7.9M-row financials fact at 192 partitions). AQE's REBALANCE,
+    not a plain repartition, splits oversized clusters back to advisory
+    size, so a 3-value partition key does not serialize the write into
+    3 tasks."""
     import os
     import shutil
 
@@ -314,17 +344,19 @@ def overwrite_buckets(
 
     path = resolve_root(path)
     # ONE job for materialize + surviving-set + write: the content is
-    # lazily checkpointed, and the surviving bucket set (<= nb values)
-    # is OBSERVED during the write itself instead of a separate
+    # lazily checkpointed (Spark refuses to overwrite a location its
+    # own input still reads lazily), and the surviving partition set is
+    # OBSERVED during the write itself instead of a separate
     # distinct-collect job — the round-13 notch of the job-fusion
     # discipline (this door runs 4x per golden apply, 1x per scd2/
     # sync/CDC apply, so the saved job multiplies)
     new_content = new_content.localCheckpoint(eager=False)
     obs = Observation()
     observed = new_content.observe(
-        obs, F.collect_set(F.col(part_col)).alias("_surv")
+        obs, F.collect_set(F.struct(*part_cols)).alias("_surv")
     )
-    has_summary = part_col == "kb" and os.path.isfile(
+    kbs = [k[0] for k in affected]
+    has_summary = part_cols == ["kb"] and os.path.isfile(
         os.path.join(path, "_checksums", "_meta.json")
     )
     if has_summary:
@@ -348,33 +380,28 @@ def overwrite_buckets(
         # marker, which makes the possibly-stale summary UNTRUSTED
         # (diff falls back to full-scan phase 1) until the next door
         # call re-derives exactly these buckets' rows
-        write_pending(path, None, list(affected))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        write_pending(path, None, kbs)
+    (
+        observed.hint("rebalance", *part_cols)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
     try:
-        observed.repartition(F.col(part_col)).write.mode(
-            "overwrite"
-        ).partitionBy(part_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    try:
-        surviving = set(obs.get["_surv"])
+        surviving = {tuple(r) for r in obs.get["_surv"]}
     except Exception:
-        # degenerate empty write (a fully-emptied bucket set plans zero
+        # degenerate empty write (an emptied partition set plans zero
         # tasks, so the observe node never fires and the metrics row is
         # unreadable): the content is checkpoint-backed by the write —
-        # the fallback distinct-collect is on the <= nb bucket column
+        # the fallback distinct-collect is on the partition columns
         surviving = {
-            r["_b"]
-            for r in new_content.select(
-                F.col(part_col).alias("_b")
-            ).distinct().collect()
+            tuple(r) for r in new_content.select(*part_cols).distinct().collect()
         }
-    for b in affected:
-        if b not in surviving:
-            d = os.path.join(path, f"{part_col}={b}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+    for key in affected:
+        d = os.path.join(path, *(f"{c}={v}" for c, v in zip(part_cols, key)))
+        if tuple(key) not in surviving and os.path.isdir(d):
+            shutil.rmtree(d)
     spark.catalog.refreshByPath(path)
     if has_summary:
         # the table carries a diff/sync checksum summary: keep it
@@ -383,7 +410,7 @@ def overwrite_buckets(
         # (diff_tables' summarized phase 1) never re-scans the table
         from etl_8million_data__spark.operators.diff import update_checksums
 
-        update_checksums(spark, path, affected, new_content)
+        update_checksums(spark, path, kbs, new_content)
         clear_pending(path)
 
 
@@ -452,7 +479,7 @@ def compact_buckets(
     content = read_store_pinned(spark, path).filter(
         F.col(part_col).isin(todo)
     )
-    overwrite_buckets(spark, path, part_col, content, todo)
+    overwrite_buckets(spark, path, [part_col], content, [(b,) for b in todo])
     return len(todo)
 
 

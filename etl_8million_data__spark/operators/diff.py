@@ -410,7 +410,7 @@ def sync_tables(
     content = keep.unionByName(take_from_b)
     from etl_8million_data__spark.operators.bucket_store import overwrite_buckets
 
-    overwrite_buckets(spark, path_a, "kb", content, kbs)
+    overwrite_buckets(spark, path_a, ["kb"], content, [(k,) for k in kbs])
     return n
 
 
@@ -611,7 +611,7 @@ def delete_keys_bucketed(
     n_deleted = relevant.count() - kept.count()
     if not n_deleted:
         return 0
-    overwrite_buckets(spark, path, "kb", kept, kbs)
+    overwrite_buckets(spark, path, ["kb"], kept, [(k,) for k in kbs])
     from etl_8million_data__spark.operators.bucket_store import (
         record_door_stats,
     )
@@ -659,7 +659,7 @@ def delete_where_bucketed(
     ).localCheckpoint(eager=False)
     victims = old.filter(hit).count()
     keep = old.filter(~hit)
-    overwrite_buckets(spark, path, "kb", keep, kbs)
+    overwrite_buckets(spark, path, ["kb"], keep, [(k,) for k in kbs])
     from etl_8million_data__spark.operators.bucket_store import (
         record_door_stats,
     )
@@ -833,7 +833,7 @@ def apply_changes(
         .drop("_change_type")
         .withColumn("kb", id_bucket(F.col(key), nb))
     )
-    overwrite_buckets(spark, path, "kb", keep.unionByName(post), kbs)
+    overwrite_buckets(spark, path, ["kb"], keep.unionByName(post), [(k,) for k in kbs])
     from etl_8million_data__spark.operators.bucket_store import (
         record_door_stats,
     )
@@ -986,7 +986,9 @@ def apply_changes_versioned(
     )
 
     keep = old.join(bounded_broadcast(elig.select(key), n), key, "left_anti")
-    overwrite_buckets(spark, path, "kb", keep.unionByName(winners), kbs)
+    overwrite_buckets(
+        spark, path, ["kb"], keep.unionByName(winners), [(k,) for k in kbs]
+    )
     from etl_8million_data__spark.operators.bucket_store import (
         record_door_stats,
     )
@@ -1156,7 +1158,7 @@ def vacuum_tombstones(
     ).localCheckpoint(eager=False)
     victims = old.filter(cond).count()
     keep = old.filter(~cond)
-    overwrite_buckets(spark, path, "kb", keep, kbs)
+    overwrite_buckets(spark, path, ["kb"], keep, [(k,) for k in kbs])
     return victims
 
 

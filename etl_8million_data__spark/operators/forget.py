@@ -9,10 +9,9 @@ the minimum rewrite the layout allows:
 
 - **Cell-partitioned indexes** (SRP/int8/kmeans ``cell=``-partitioned
   vectors, IVF-PQ ``codes/``): a column-pruned (id, cell) lookup finds
-  the touched cells, ONLY those partitions rewrite via dynamic
-  partition overwrite, and a cell whose every row is deleted has its
-  directory dropped explicitly (dynamic overwrite cannot rewrite a
-  partition it receives no rows for). Untouched cells' files are never
+  the touched cells, and ONLY those partitions rewrite, committed by
+  ``bucket_store.overwrite_buckets`` (which also drops the directory of
+  a cell whose every row is deleted). Untouched cells' files are never
   read past the id column and never written — byte-identity asserted in
   tests. O(touched cells) per forget batch, the same blast-radius
   contract as the partitioned upsert.
@@ -21,12 +20,13 @@ the minimum rewrite the layout allows:
   ``bucket=`` layouts since round 9, exactly the financials fact's
   stock_bucket pattern): the id→bucket map is a pure function, so the
   victims' buckets are computable WITHOUT scanning the index, and only
-  those partitions rewrite; untouched buckets stay byte-identical
-  (asserted in tests). :func:`forget_auto` dispatches on the on-disk
-  layout, so callers need not know whether an index predates the
-  bucketed layout.
-- **Legacy unpartitioned indexes**: filter + atomic tmp-dir swap — no
-  partition key to prune on, full rewrite is the honest cost.
+  those partitions rewrite through the same door; untouched buckets
+  stay byte-identical (asserted in tests). :func:`forget_auto`
+  dispatches on the on-disk layout, so callers need not know whether
+  an index predates the bucketed layout.
+- **Legacy unpartitioned indexes**: filter + full rewrite committed by
+  ``maintenance.swap_in`` — no partition key to prune on, full rewrite
+  is the honest cost.
 
 ``compact_cells`` is the companion maintenance op: per-batch appends
 leave one small file per cell per batch; compaction rewrites each
@@ -38,13 +38,15 @@ file-listing cost flat as append batches accumulate.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_8million_data__spark.operators.bucket_store import read_store
+from etl_8million_data__spark.operators.bucket_store import (
+    overwrite_buckets,
+    partition_filter,
+    read_store,
+)
 from etl_8million_data__spark.operators.maintenance import swap_in
 
 
@@ -62,57 +64,27 @@ def forget_partitioned(
 ) -> int:
     """Delete ``ids`` from a Hive-partitioned table, rewriting only the
     partitions that contain them: a column-pruned (id + partition cols)
-    lookup finds the touched partition tuples, those partitions filter
-    + rewrite via dynamic partition overwrite, and a partition whose
-    every row is deleted has its directory dropped explicitly (dynamic
-    overwrite cannot rewrite a partition it receives no rows for).
-    Returns rows removed (0 on a miss — re-forget is a no-op). Works
-    for any layout whose partition columns are stable attributes of the
-    id (the same contract as the partitioned upsert): ANN ``cell=``
-    indexes, the financials fact's (statement_type, stock_bucket), …"""
+    lookup finds the touched partition tuples and counts the victims'
+    rows, and those partitions are filtered and rewritten through
+    ``bucket_store.overwrite_buckets``. Returns rows removed (0 on a
+    miss — re-forget is a no-op). Works for any layout whose partition
+    columns are stable attributes of the id (the same contract as the
+    partitioned upsert): ANN ``cell=`` indexes, the financials fact's
+    (statement_type, stock_bucket), …"""
     victims = _ids_frame(ids, id_col)
     _rd = lambda: read_store(spark, path, schema)  # noqa: E731
     located = _rd().select(id_col, *partition_by).join(victims, id_col)
-    touched = located.select(*partition_by).distinct().collect()
+    touched = located.groupBy(*partition_by).count().collect()
     if not touched:
         return 0
-
-    def tuple_cond(rows):
-        cond = None
-        for r in rows:
-            c = None
-            for col in partition_by:
-                eq = F.col(col).eqNullSafe(F.lit(r[col]))
-                c = eq if c is None else (c & eq)
-            cond = c if cond is None else (cond | c)
-        return cond
-
-    relevant = _rd().filter(tuple_cond(touched))
-    kept = relevant.join(victims, id_col, "left_anti").localCheckpoint(eager=True)
-    n_deleted = relevant.count() - kept.count()
-    surviving = {
-        tuple(r[c] for c in partition_by)
-        for r in kept.select(*partition_by).distinct().collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if surviving:
-            kept.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # partitions emptied outright keep their ghost directories under
-    # dynamic overwrite — drop them explicitly
-    for r in touched:
-        key = tuple(r[c] for c in partition_by)
-        if key not in surviving:
-            d = os.path.join(path, *[f"{c}={v}" for c, v in zip(partition_by, key)])
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    # same-session readers must not hit the stale cached file listing
-    # (FAILED_READ_FILE on the removed files)
-    spark.catalog.refreshByPath(path)
-    return n_deleted
+    keys = [r[: len(partition_by)] for r in touched]
+    kept = (
+        _rd()
+        .filter(partition_filter(partition_by, keys))
+        .join(victims, id_col, "left_anti")
+    )
+    overwrite_buckets(spark, path, partition_by, kept, keys)
+    return sum(r["count"] for r in touched)
 
 
 def forget_cell_partitioned(
@@ -170,9 +142,10 @@ def forget_bucketed(
     pure function of the id, so the touched partitions are computed from
     the VICTIM list alone — no index scan to locate them (one better
     than :func:`forget_partitioned`'s column-pruned lookup); only those
-    partitions are read, filtered, and rewritten via dynamic partition
-    overwrite. A miss (no victim present) never rewrites. On-disk bucket
-    values >= n_buckets fail loudly instead of silently missing."""
+    partitions are read, filtered, and rewritten through
+    ``bucket_store.overwrite_buckets``. A miss (no victim present)
+    never rewrites. On-disk bucket values >= n_buckets fail loudly
+    instead of silently missing."""
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
     _check_bucket_range(index_path, n_buckets)
@@ -184,24 +157,11 @@ def forget_bucketed(
     relevant = read_store(spark, index_path, schema).filter(
         F.col("bucket").isin(touched)
     )
-    kept = relevant.join(victims, id_col, "left_anti").localCheckpoint(eager=True)
-    n_deleted = relevant.count() - kept.count()
-    if not n_deleted:
-        return 0
-    surviving = {r["bucket"] for r in kept.select("bucket").distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if surviving:
-            kept.write.mode("overwrite").partitionBy("bucket").parquet(index_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for b in touched:
-        if b not in surviving:
-            d = os.path.join(index_path, f"bucket={b}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    spark.catalog.refreshByPath(index_path)
+    n_deleted = relevant.select(id_col).join(victims, id_col).count()
+    if n_deleted:
+        kept = relevant.join(victims, id_col, "left_anti")
+        affected = [(b,) for b in touched]
+        overwrite_buckets(spark, index_path, ["bucket"], kept, affected)
     return n_deleted
 
 
@@ -239,17 +199,15 @@ def forget_unpartitioned(
     schema: str | None = None,
 ) -> int:
     """Delete ``ids`` from an unpartitioned index by filter + atomic
-    swap (same swap discipline as the unpartitioned upsert). Returns
+    swap (``maintenance.swap_in``, as the unpartitioned upsert). Returns
     rows removed; a miss is a no-op that never rewrites."""
     victims = _ids_frame(ids, id_col)
     idx = read_store(spark, index_path, schema)
     n_hit = idx.select(id_col).join(victims, id_col).count()
     if not n_hit:
         return 0
-    kept = idx.join(victims, id_col, "left_anti").localCheckpoint(eager=True)
-    tmp = f"{index_path}.__tmp__{uuid.uuid4().hex[:8]}"
-    kept.write.mode("overwrite").parquet(tmp)
-    swap_in(tmp, index_path)
+    with swap_in(index_path) as tmp:
+        idx.join(victims, id_col, "left_anti").write.parquet(tmp)
     spark.catalog.refreshByPath(index_path)
     return n_hit
 
@@ -337,17 +295,10 @@ def compact_partitions(
         return n
 
     before = _count_files()
-    full = (
-        read_store(spark, index_path, schema)
-        .hint("rebalance", partition_col)
-        .localCheckpoint(eager=True)
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        full.write.mode("overwrite").partitionBy(partition_col).parquet(index_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # every populated partition receives its own rows back, so none is
+    # emptied and the affected list is empty
+    full = read_store(spark, index_path, schema)
+    overwrite_buckets(spark, index_path, [partition_col], full, [])
     return before, _count_files()
 
 

@@ -319,7 +319,9 @@ def _apply_delta(
         content = old_keep.unionByName(
             new_rows.withColumn("cb", id_bucket(F.col("component"), nb))
         )
-        _overwrite_buckets(spark, os.path.join(root, path), "cb", content, cbs)
+        _overwrite_buckets(
+            spark, os.path.join(root, path), ["cb"], content, [(b,) for b in cbs]
+        )
 
     replace("members", new_members.select(*_MEMBER_COLS, "component"))
     replace("edges", new_edges.select("a_key", "b_key", "component"))
@@ -353,7 +355,9 @@ def _apply_delta(
             "rb", id_bucket(F.col("rid"), nb)
         )
     )
-    _overwrite_buckets(spark, os.path.join(root, "ridmap"), "rb", rm_content, rbs)
+    _overwrite_buckets(
+        spark, os.path.join(root, "ridmap"), ["rb"], rm_content, [(b,) for b in rbs]
+    )
 
 
 def golden_increment(

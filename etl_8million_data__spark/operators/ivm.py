@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.bucket_store import partition_filter
+
 # Above this many distinct delta keys, skip the collect and bound the
 # old-side scan with a broadcast semi-join instead. MEASURED tradeoff
 # (sf0.1, 1,420 keys): a 1,420-value literal IN costs 1.8 s against the
@@ -54,14 +56,7 @@ def _bounded(old: DataFrame, delta: DataFrame, on: list[str]) -> DataFrame:
         if len(on) == 1:
             vals = [r[on[0]] for r in head]
             return old.filter(F.col(on[0]).isin(vals))
-        cond = None
-        for r in head:
-            c = None
-            for col in on:
-                eq = F.col(col).eqNullSafe(F.lit(r[col]))
-                c = eq if c is None else (c & eq)
-            cond = c if cond is None else (cond | c)
-        return old.filter(cond)
+        return old.filter(partition_filter(on, head))
     # above the literal cap the key-set size is UNKNOWN — no forced
     # broadcast (a bulk delta would OOM a hinted build side at scale);
     # AQE broadcasts at runtime iff the frame is actually small
@@ -292,8 +287,6 @@ def stream_agg_view_upserts(
 
     Note the ORDER of (2) before (4): deltas must see the pre-upsert
     base, the same discipline as agg_view_delta's contract."""
-    import uuid
-
     from etl_8million_data__spark.operators.maintenance import swap_in
     from etl_8million_data__spark.operators.upsert import (
         last_writer_wins,
@@ -314,15 +307,12 @@ def stream_agg_view_upserts(
             delta = agg_view_delta(base, b, pk, group_cols, sum_cols).localCheckpoint(
                 eager=True
             )
-            view = spark.read.parquet(view_path)
-            merged = apply_agg_delta(view, delta, group_cols, sum_cols).localCheckpoint(
-                eager=True
-            )
-            tmp = f"{view_path}.__tmp__{uuid.uuid4().hex[:8]}"
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
-                fh.write(str(batch_id))
-            swap_in(tmp, view_path)
+            with swap_in(view_path) as tmp:
+                view = spark.read.parquet(view_path)
+                merged = apply_agg_delta(view, delta, group_cols, sum_cols)
+                merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+                with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
+                    fh.write(str(batch_id))
         upsert_parquet(spark, b, base_path, keys=[pk], order_col=order_col)
 
     return (

@@ -9,26 +9,55 @@ prunes nothing. ``compact_parquet`` fixes (a) by rewriting to
 size-targeted files; ``clustered_write`` fixes (b) by range-partitioning
 plus sorting within partitions so every file/row-group covers a tight,
 disjoint slice of the clustering key (the poor man's Z-order for a
-single key prefix). Both use the same rewrite-then-atomic-swap pattern
-as the keyed upsert (operators/upsert.py).
+single key prefix). Every whole-table rewrite in the package commits
+through :func:`swap_in`; every partition-subset rewrite through
+``bucket_store.overwrite_buckets``.
 """
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import shutil
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def swap_in(tmp: str, path: str) -> None:
-    """Atomically replace ``path`` with the fully written ``tmp``
-    directory: rename the live table aside, rename ``tmp`` into place,
-    then delete the old copy. Readers see the old snapshot or the new
-    one, never a partial write; sidecars written into ``tmp`` before
-    the call move with it. ``path`` need not exist yet."""
+def restore_swapped(path: str) -> None:
+    """Undo a swap that crashed between its two renames: with no table
+    at ``path`` and exactly one ``path.__old__*`` left, rename that
+    snapshot back. More than one candidate raises rather than guess
+    which is newer. Without this a rerun sees no table and rewrites it
+    from the fresh rows alone."""
+    if os.path.exists(path):
+        return
+    old = glob.glob(f"{glob.escape(path)}.__old__*")
+    if len(old) > 1:
+        raise RuntimeError(f"{path} is missing; more than one swapped-out copy: {old}")
+    if old:
+        os.rename(old[0], path)
+
+
+@contextmanager
+def swap_in(path: str) -> Iterator[str]:
+    """Whole-table commit: yield a fresh staging directory; when the
+    block exits normally, rename the live table aside, rename the
+    staging directory into place, then delete the old copy. Readers see
+    the old snapshot or the new one, never a partial write; sidecars
+    written into the staging directory move with it. A block that
+    raises leaves the live table untouched and the staging directory
+    deleted. ``path`` need not exist yet."""
+    restore_swapped(path)
+    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, old)
@@ -58,12 +87,10 @@ def compact_parquet(
     files = parquet_data_files(path)
     total = sum(os.path.getsize(f) for f in files)
     n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
     # coalesce, not repartition: compaction must not pay a shuffle —
     # it only glues input splits together.
-    df.coalesce(n).write.mode("overwrite").parquet(tmp)
-    swap_in(tmp, path)
+    with swap_in(path) as tmp:
+        spark.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(tmp)
     return len(parquet_data_files(path))
 
 

@@ -298,7 +298,7 @@ def scd2_apply_late(spark: SparkSession, root: str, batch: DataFrame) -> None:
     content = old.join(
         bounded_broadcast(keys, n_keys), "key", "left_anti"
     ).unionByName(merged.withColumn("kb", id_bucket(F.col("key"), nb)))
-    _overwrite_buckets(spark, path, "kb", content, kbs)
+    _overwrite_buckets(spark, path, ["kb"], content, [(k,) for k in kbs])
 
 
 def scd2_apply(spark: SparkSession, root: str, batch: DataFrame) -> None:
@@ -396,7 +396,7 @@ def scd2_apply(spark: SparkSession, root: str, batch: DataFrame) -> None:
         )
         .unionByName(merged.withColumn("kb", id_bucket(F.col("key"), nb)))
     )
-    _overwrite_buckets(spark, path, "kb", content, kbs)
+    _overwrite_buckets(spark, path, ["kb"], content, [(k,) for k in kbs])
 
 
 def stream_scd2_changes(

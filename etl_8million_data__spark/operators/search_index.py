@@ -246,7 +246,6 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
     before and after (asserted in tests). Returns docs removed."""
     import os
     import shutil
-    import uuid
 
     from etl_8million_data__spark.operators.maintenance import swap_in
 
@@ -278,11 +277,10 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
         .join(dead, "doc_id", "left_anti")
         .localCheckpoint(eager=True)
     )
-    tmp = f"{index_path}.__tmp__{uuid.uuid4().hex[:8]}"
-    kept_postings.write.mode("overwrite").partitionBy("pfx").parquet(tmp)
-    kept_doclen.write.mode("overwrite").parquet(f"{tmp}/_doclen")
     # the old root takes the old postings, sidecar and applied _tombstones
-    swap_in(tmp, index_path)
+    with swap_in(index_path) as tmp:
+        kept_postings.write.mode("overwrite").partitionBy("pfx").parquet(tmp)
+        kept_doclen.write.mode("overwrite").parquet(f"{tmp}/_doclen")
     return n
 
 

@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.scalars import parse_date_prefix, period_code
-from etl_8million_data__spark.operators.maintenance import swap_in
 from etl_8million_data__spark.operators.partitioning import id_bucket
 from etl_8million_data__spark.operators.upsert import upsert_parquet
 from etl_8million_data__spark.schemas import (
@@ -146,37 +145,6 @@ def unpivot_financials(
     )
 
 
-def migrate_legacy_fact(spark, sink_path: str, n_buckets: int = 64) -> bool:
-    """One-time layout migration: a fact written under the pre-round-8
-    ``statement_type``-only layout has no ``stock_bucket`` column, so
-    the pruned partition upsert would fail on the unresolved column (or
-    strand old directories). Detect that on read and rebuild the
-    snapshot ONCE into the (statement_type, stock_bucket) layout via
-    the atomic tmp+swap; subsequent upserts take the pruned path.
-    Returns True when a migration ran. The bucket is the pure md5
-    function of the stock string, so the derived column on the existing
-    snapshot is identical to what ingest would have written."""
-    import os
-    import uuid
-
-    if not os.path.isdir(sink_path):
-        return False
-    snap = spark.read.parquet(sink_path)
-    if "stock_bucket" in snap.columns:
-        return False
-    migrated = (
-        snap.withColumn("stock_bucket", id_bucket(F.col("stock"), n_buckets))
-        .hint("rebalance", "statement_type", "stock_bucket")
-        .localCheckpoint(eager=True)
-    )
-    tmp = f"{sink_path}.__tmp__{uuid.uuid4().hex[:8]}"
-    migrated.write.mode("overwrite").partitionBy(
-        "statement_type", "stock_bucket"
-    ).parquet(tmp)
-    swap_in(tmp, sink_path)
-    return True
-
-
 def build_financials_fact(
     raw: DataFrame,
     sink_path: str,
@@ -210,7 +178,6 @@ def build_financials_fact(
         else fact.withColumn("_loaded_at", F.current_timestamp())
     )
     fact = fact.withColumn("stock_bucket", id_bucket(F.col("stock"), n_buckets))
-    migrate_legacy_fact(raw.sparkSession, sink_path, n_buckets)
     upsert_parquet(
         raw.sparkSession,
         fact,

@@ -68,13 +68,7 @@ def register(
 
 def _load() -> None:
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"etl_8million_data__spark.plans.{mod}")
-        except ModuleNotFoundError as e:
-            # Allow partially-built library during development; only swallow
-            # the *registry submodule itself* being absent.
-            if f"plans.{mod}" not in str(e):
-                raise
+        importlib.import_module(f"etl_8million_data__spark.plans.{mod}")
 
 
 # Drivers that gate correctness only sample a prefix of the registered

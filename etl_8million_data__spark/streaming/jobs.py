@@ -724,8 +724,6 @@ def stream_quantile_sketch_increment(
     the batch twin. The empty-sketch schema is derived from the BATCH
     frame, not hardcoded, so a non-bigint key type round-trips without
     coercion."""
-    import uuid
-
     from etl_8million_data__spark.operators.bucket_store import store_exists
     from etl_8million_data__spark.operators.maintenance import swap_in
     from etl_8million_data__spark.operators.text import hex_prefix_int, md5_utf8
@@ -737,22 +735,20 @@ def stream_quantile_sketch_increment(
             F.col(value_col).cast("bigint").alias("v"),
             hex_prefix_int(md5_utf8(F.col(key_col).cast("string")), 8).alias("h"),
         )
-        # first batch decided driver-side (bucket_store.store_exists)
-        if store_exists(sketch_path):
-            existing = spark.read.parquet(sketch_path)
-        else:
-            existing = spark.createDataFrame([], b.schema)
-        merged = (
-            existing.unionByName(b)
-            .groupBy("key")
-            .agg(F.min("v").alias("v"), F.min("h").alias("h"))
-            .orderBy("h", "key")
-            .limit(k)
-            .localCheckpoint(eager=True)
-        )
-        tmp = f"{sketch_path}.__tmp__{uuid.uuid4().hex[:8]}"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_in(tmp, sketch_path)
+        with swap_in(sketch_path) as tmp:
+            # first batch decided driver-side (bucket_store.store_exists)
+            if store_exists(sketch_path):
+                existing = spark.read.parquet(sketch_path)
+            else:
+                existing = spark.createDataFrame([], b.schema)
+            merged = (
+                existing.unionByName(b)
+                .groupBy("key")
+                .agg(F.min("v").alias("v"), F.min("h").alias("h"))
+                .orderBy("h", "key")
+                .limit(k)
+            )
+            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
 
     return (
         rows.writeStream.foreachBatch(apply_batch)

@@ -8,7 +8,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from types import SimpleNamespace
 
+import pytest
+
+import bench
 from bench import (
     SENTINELS,
     commit_baseline,
@@ -159,3 +164,43 @@ def test_bench_round_records_tail_history_and_keeps_the_record_shape():
         "baseline_lane_total", "sentinel_total", "regressions", "tail", "full",
     }
     assert json.loads(line)["tail"] == {"round": 5, "n": 2, "total": 2.3, "regressions": 1}
+
+
+def _stub_main(monkeypatch, tmp_path, sf_dir):
+    """Point ``bench.main`` at a copy of the committed BENCH_FULL.json
+    in ``tmp_path`` and at Spark-free stand-ins; returns the copy."""
+    record = tmp_path / "BENCH_FULL.json"
+    shutil.copy(os.path.join(os.path.dirname(__file__), "..", "BENCH_FULL.json"), record)
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+        catalog=SimpleNamespace(clearCache=lambda: None),
+        stop=lambda: None,
+    )
+    names = SENTINELS + ["tail_x"]
+    query = SimpleNamespace(build=lambda spark, sf_dir: None)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(bench, "DEFAULT_SF_DIR", sf_dir)
+    monkeypatch.setattr(bench, "get_spark", lambda app: spark)
+    monkeypatch.setattr(bench, "all_queries", lambda: dict.fromkeys(names, query))
+    monkeypatch.setattr(bench.profile, "warm_session", lambda spark: None)
+    monkeypatch.setattr(bench.profile, "noop_write", lambda df: None)
+    monkeypatch.setattr(
+        bench.profile, "time_query", lambda spark, q, sf_dir, n: [0.5] * n
+    )
+    return record
+
+
+def test_main_refuses_priors_of_another_scale_factor(monkeypatch, tmp_path, capsys):
+    # the found case: an sf0.01 run against the committed sf0.1 record
+    record = _stub_main(monkeypatch, tmp_path, "/data/sf0.01")
+    committed = record.read_bytes()
+    assert json.loads(committed)["sf"] == 0.1
+    with pytest.raises(SystemExit, match="sf=0.1 but this run is sf=0.01"):
+        bench.main()
+    assert record.read_bytes() == committed
+
+    # a run at the record's own scale factor compares and rewrites it
+    _stub_main(monkeypatch, tmp_path, "/data/sf0.1")
+    bench.main()
+    assert json.loads(record.read_text())["sf"] == 0.1
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["sf"] == 0.1

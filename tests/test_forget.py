@@ -390,6 +390,34 @@ def test_forget_symbol_from_bucketed_fact(spark, tmp_path):
         == 0
     )
 
+    # forgetting every stock of one bucket empties its three
+    # (statement_type, stock_bucket) partitions: their directories go,
+    # and every other file stays as it was
+    left = spark.read.parquet(fact)
+    bucket = left.filter(F.col("stock") == "SYM0011").first().stock_bucket
+    in_bucket = left.filter(F.col("stock_bucket") == bucket)
+    stocks = in_bucket.select("stock").distinct()
+    n_rows = in_bucket.count()
+    dirs = [
+        os.path.join(fact, st, f"stock_bucket={bucket}")
+        for st in os.listdir(fact)
+        if st.startswith("statement_type=")
+    ]
+    assert len(dirs) == 3 and all(os.path.isdir(d) for d in dirs)
+    pre = _file_state(fact)
+    n = forget_partitioned(
+        spark, fact, stocks, "stock", ["statement_type", "stock_bucket"]
+    )
+    assert n == n_rows
+    assert not any(os.path.exists(d) for d in dirs)
+    post = _file_state(fact)
+    gone = {
+        rel for rel in pre if rel.split(os.sep)[1:2] == [f"stock_bucket={bucket}"]
+    }
+    assert gone and set(post) == set(pre) - gone
+    # the commit marker at the root is rewritten by every write
+    assert {r for r in post if post[r] != pre[r]} <= {"_SUCCESS"}
+
 
 def test_stream_forget_requests_propagates_everywhere(spark, sf_dir, tmp_path):
     """A stream of deletion requests must erase the ids from BOTH a

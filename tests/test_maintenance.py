@@ -1,10 +1,18 @@
 """Compaction and clustered-write maintenance operators: prove the
 file-count reduction, the value preservation, and — via the parquet
-footers — that clustering really produces prunable statistics."""
+footers — that clustering really produces prunable statistics. Also
+the whole-table commit door: a failed or crashed swap loses no rows,
+and no other module stages or overwrites partitions by hand."""
 
 from __future__ import annotations
 
+import ast
+import json
+import os
+from pathlib import Path
+
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.catalog import load_table
@@ -13,7 +21,10 @@ from etl_8million_data__spark.operators.maintenance import (
     clustered_write,
     compact_parquet,
     parquet_data_files,
+    swap_in,
 )
+
+PKG = Path(__file__).resolve().parents[1] / "etl_8million_data__spark"
 
 
 def _sig(df):
@@ -99,3 +110,83 @@ def test_zorder_write_skips_on_both_dimensions(spark, sf_dir, tmp_path):
     assert zp < 0.5 and zs < 0.5, (zp, zs)
     # and values survive the rewrite
     assert _sig(spark.read.parquet(zpath)) == _sig(src)
+
+
+def _file_state(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_swap_in_failed_block_leaves_live_table_and_no_staging(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    before = _file_state(path)
+    failing = spark.range(5).select(F.assert_true(F.col("id") < 3).alias("id"))
+    with pytest.raises(Exception, match="id < 3"):
+        with swap_in(path) as tmp:
+            failing.write.parquet(tmp)
+    assert os.listdir(tmp_path) == ["t"]
+    assert _file_state(path) == before
+
+
+def test_swap_crash_between_renames_loses_no_rows(spark, tmp_path, monkeypatch):
+    """A crash between the swap's two renames leaves no table, only
+    ``path.__old__*``. The rerun must restore that snapshot and merge
+    into it, not rebuild the summary dimension from the fresh rows."""
+    from etl_8million_data__spark.pipelines.summary import build_summary_dim
+
+    def raw(*symbols):
+        return spark.createDataFrame(
+            [(s, json.dumps({"info": {"longName": f"{s} Inc"}})) for s in symbols],
+            "symbol string, payload string",
+        )
+
+    path = str(tmp_path / "summary")
+    build_summary_dim(raw("A", "B"), path)
+    rename, calls = os.rename, []
+
+    def crash_on_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("crash between the swap's renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="crash"):
+        build_summary_dim(raw("C"), path)
+    monkeypatch.setattr(os, "rename", rename)
+    assert not os.path.exists(path)
+
+    build_summary_dim(raw("C"), path)
+    assert sorted(r.stock for r in spark.read.parquet(path).collect()) == ["A", "B", "C"]
+
+
+def test_only_the_two_commit_doors_stage_or_overwrite_partitions():
+    """Every table rewrite commits through ``maintenance.swap_in`` or
+    ``bucket_store.overwrite_buckets``: no other package module names a
+    staging directory or a partition overwrite mode, and no code sets
+    that mode on the session."""
+    door = next(
+        n
+        for n in ast.parse((PKG / "operators/bucket_store.py").read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "overwrite_buckets"
+    )
+    offenders = []
+    for f in sorted(PKG.rglob("*.py")):
+        rel = f.relative_to(PKG).as_posix()
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if "spark.sql.sources.partitionOverwriteMode" in line:
+                offenders.append(f"{rel}:{i} sets the session's overwrite mode")
+            elif "partitionOverwriteMode" in line and not (
+                rel == "operators/bucket_store.py"
+                and door.lineno <= i <= door.end_lineno
+            ):
+                offenders.append(f"{rel}:{i} overwrites partitions outside the door")
+            if ("__tmp__" in line or "__old__" in line) and (
+                rel != "operators/maintenance.py"
+            ):
+                offenders.append(f"{rel}:{i} names a swap staging directory")
+    assert not offenders

@@ -129,66 +129,6 @@ def test_financials_upsert_last_writer_wins(spark, raw_payloads):
         assert v2.count() == 5
 
 
-def test_financials_legacy_layout_migrates_once(spark, raw_payloads):
-    """A fact written under the pre-bucketing statement_type-only
-    layout must migrate to (statement_type, stock_bucket) on the next
-    build_financials_fact call — and the merged result must equal a
-    fresh build (no stranded rows, no unresolved-column failure)."""
-    import os
-
-    from etl_8million_data__spark.operators.upsert import upsert_parquet
-    from etl_8million_data__spark.pipelines.financials import unpivot_financials
-    from etl_8million_data__spark.schemas import FINANCIALS_KEYS
-
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/financials"
-        # simulate the legacy layout: no stock_bucket column/partition
-        legacy = unpivot_financials(
-            raw_payloads, passthrough=["loaded_at"]
-        ).withColumnRenamed("loaded_at", "_loaded_at")
-        upsert_parquet(
-            spark, legacy, path, keys=FINANCIALS_KEYS, order_col="_loaded_at",
-            partition_by=["statement_type"],
-        )
-        assert not any(
-            "stock_bucket=" in e
-            for st in os.listdir(path)
-            if st.startswith("statement_type=")
-            for e in os.listdir(os.path.join(path, st))
-        )
-
-        upd = dict(GOOD_PAYLOAD)
-        upd["cashflow"] = {
-            "yearly": {"2024-12-31": {"Free Cash Flow": 99.0}}, "quarterly": {}
-        }
-        raw2 = spark.createDataFrame(
-            [("ACME", json.dumps(upd), "2025-02-01 00:00:00")],
-            "symbol string, payload string, loaded_at string",
-        ).withColumn("loaded_at", F.to_timestamp("loaded_at"))
-        build_financials_fact(raw2, path)
-
-        v2 = spark.read.parquet(path)
-        assert "stock_bucket" in v2.columns
-        # layout is now bucketed on disk
-        assert any(
-            e.startswith("stock_bucket=")
-            for st in os.listdir(path)
-            if st.startswith("statement_type=")
-            for e in os.listdir(os.path.join(path, st))
-        )
-        got = {
-            (r.stock, r.statement_type, r.metric, str(r.date)): r.value
-            for r in v2.collect()
-        }
-        assert got[("ACME", "CF", "Free Cash Flow", "2024-12-31")] == 99.0
-        assert got[("ACME", "BS", "Total Assets", "2024-12-31")] == 100.0
-        assert v2.count() == 5
-        # second call: migration is a no-op (idempotent)
-        from etl_8million_data__spark.pipelines.financials import migrate_legacy_fact
-
-        assert migrate_legacy_fact(spark, path) is False
-
-
 def test_normalize_summary_enrichment(spark, raw_payloads):
     dim = {r.stock: r for r in normalize_summary(raw_payloads).collect()}
     a = dim["ACME"]
