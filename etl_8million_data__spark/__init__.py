@@ -17,3 +17,12 @@ Subpackages
 """
 
 __version__ = "0.1.0"
+
+import sys
+
+from pyspark import cloudpickle
+
+# UDFs, mapInPandas bodies and the module-level helpers they call are
+# shipped to Python workers by value, so a worker needs no import path
+# to the package: it runs whatever the driver's cwd or PYTHONPATH is.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -1,8 +1,10 @@
 """Shared plumbing for the persisted bucket/cell-partitioned stores
 (ANN indexes, dedup band/fingerprint indexes, SCD2/golden/IVM/diff
-state tables). Starts with the read discipline; the marker-file and
-bucket-overwrite helpers the door operators triplicate migrate here as
-they consolidate.
+state tables): the read discipline, the layout markers, and
+:func:`overwrite_buckets`, the partition-subset form of the package's
+one commit door (``maintenance.swap_in``). Every read resolves the
+store's root through :func:`resolve_root`, which first finishes any
+swap of it that crashed.
 
 READ DISCIPLINE (the 100 TB reason this module exists): every store
 has a DECLARED schema — reading it back with
@@ -23,7 +25,19 @@ unknown layouts, generic compaction of arbitrary stores).
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from etl_8million_data__spark.operators.maintenance import (
+    recover_swap,
+    swap_in,
+    write_durable,
+)
 
 
 def read_store(
@@ -61,15 +75,22 @@ def resolve_root(path: str) -> str:
     door operators built on it) resolves first, so a reader either sees
     the complete old generation or the complete new one — never a
     half-swapped directory, on POSIX or an object store. Stores that
-    never migrated have no pointer and resolve to themselves."""
-    import os
+    never migrated have no pointer and resolve to themselves.
 
+    Every store read and door resolves through here, so this is where a
+    crashed swap of the store is finished first
+    (``maintenance.recover_swap``)."""
+    recover_swap(path)
     try:
         with open(os.path.join(path, _CURRENT)) as fh:
             gen = fh.read().strip()
     except OSError:
         return path
-    return os.path.join(path, gen) if gen else path
+    if not gen:
+        return path
+    root = os.path.join(path, gen)
+    recover_swap(root)
+    return root
 
 
 def store_exists(path: str) -> bool:
@@ -79,12 +100,9 @@ def store_exists(path: str) -> bool:
     AnalysisException — an expected missing path must never reach the
     JVM as a failing query: a caught PATH_NOT_FOUND still flows
     through the execution-listener bus, and with any observation
-    listener registered in the session (the overwrite door's fused
-    surviving-set observe) it lands an ERROR line in every
+    listener registered in the session it lands an ERROR line in every
     clean-environment sweep log — triage noise that reads as a
     failure. One stat call, no Spark job."""
-    import os
-
     return os.path.isdir(resolve_root(path))
 
 
@@ -101,8 +119,6 @@ def bounded_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
     driver/executor OOM at the 100 TB design point, and a bulk backfill
     that violates a door's micro-batch contract used to violate it
     SILENTLY — this gate makes it degrade to a shuffle join instead."""
-    from pyspark.sql import functions as F
-
     if n_rows is not None and n_rows <= MAX_BROADCAST_ROWS:
         return F.broadcast(df)
     return df
@@ -113,8 +129,6 @@ def read_nb(root: str) -> int:
     once at init): the layout's true bucket count, which every pruned
     delta must hash with (a wrong modulus prunes to directories the
     keys don't live in and silently misses them)."""
-    import os
-
     with open(os.path.join(resolve_root(root), "_nb")) as fh:
         return int(fh.read().strip())
 
@@ -136,9 +150,6 @@ def resolve_nb(root: str, nb: int | None, default: int) -> int:
     buckets, both silent corruption); for legacy stores without the
     marker, falls back to the ``_checksums/_meta.json`` pin, then to
     the caller's ``nb``/``default``."""
-    import json
-    import os
-
     persisted = try_read_nb(root)
     if persisted is None:
         mp = os.path.join(resolve_root(root), "_checksums", "_meta.json")
@@ -168,21 +179,13 @@ def write_schema(root: str, schema) -> None:
     missing newer columns surface them as NULL — the read discipline
     this module exists for, made durable so door code never has to
     guess a schema or footer-merge."""
-    import os
-
     root = resolve_root(root)
     os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, _SCHEMA_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        fh.write(schema.json())
-    os.replace(tmp, os.path.join(root, _SCHEMA_FILE))
+    write_durable(os.path.join(root, _SCHEMA_FILE), schema.json())
 
 
 def read_pinned_schema(root: str):
     """The pinned StructType, or None for legacy stores without one."""
-    import json
-    import os
-
     p = os.path.join(resolve_root(root), _SCHEMA_FILE)
     if not os.path.isfile(p):
         return None
@@ -205,12 +208,9 @@ def read_store_pinned(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_nb(root: str, nb: int) -> None:
-    import os
-
     root = resolve_root(root)
     os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, "_nb"), "w") as fh:
-        fh.write(str(nb))
+    write_durable(os.path.join(root, "_nb"), str(nb))
 
 
 def applied_batch(root: str) -> int | None:
@@ -218,8 +218,6 @@ def applied_batch(root: str) -> int | None:
     last micro-batch a non-idempotent door absorbed (scd2/golden/IVM
     streaming twins), or None when absent/garbled — at-least-once
     foreachBatch redelivery skips a batch whose id matches."""
-    import os
-
     try:
         with open(os.path.join(resolve_root(root), "_applied_batch")) as fh:
             return int(fh.read().strip())
@@ -228,18 +226,13 @@ def applied_batch(root: str) -> int | None:
 
 
 def mark_applied(root: str, batch_id: int) -> None:
-    import os
-
-    with open(os.path.join(resolve_root(root), "_applied_batch"), "w") as fh:
-        fh.write(str(batch_id))
+    write_durable(os.path.join(resolve_root(root), "_applied_batch"), str(batch_id))
 
 
 def bucket_values(df: DataFrame, col: str, nb: int):
     """Distinct id_bucket values of ``col`` — a <= nb-element driver
     list (the literal-prune discipline: bucket count is bounded by the
     layout, never by data size)."""
-    from pyspark.sql import functions as F
-
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
     return [
@@ -262,8 +255,6 @@ def pruned_read(
     table (zero parquet files after a full erase) reads back as an
     empty frame of that schema; an empty bucket list short-circuits to
     a read-nothing filter."""
-    from pyspark.sql import functions as F
-
     # first-build fallback decided DRIVER-SIDE (store_exists), never by
     # catching a JVM PATH_NOT_FOUND — see store_exists for why
     if schema is not None and not store_exists(path):
@@ -286,8 +277,6 @@ def write_table_bucketed(df: DataFrame, path: str, part_col: str) -> None:
     file per bucket (repartition on the partition column), so a pruned
     read schedules |touched buckets| tasks, not |buckets| x |write
     tasks| tiny files."""
-    from pyspark.sql import functions as F
-
     df.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
         part_col
     ).parquet(resolve_root(path))
@@ -303,8 +292,6 @@ def partition_filter(cols: list[str], keys: list[tuple]):
     (__HIVE_DEFAULT_PARTITION__) addressable."""
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
     def match(key):
         eqs = (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, key))
         return reduce(lambda a, b: a & b, eqs)
@@ -319,15 +306,13 @@ def overwrite_buckets(
     new_content: DataFrame,
     affected: list[tuple],
 ) -> None:
-    """Partition-subset commit, the one dynamic partition overwrite in
-    the package: replace exactly the ``affected`` partitions of
-    ``path`` (value tuples of ``part_cols``) with ``new_content``, which
-    must hold those partitions' FULL new rows and may read ``path``
-    itself. Partitions that receive rows are rewritten by a dynamic
-    partition overwrite, set as a writer option so the session conf is
-    never touched; an affected partition left with no rows keeps a
-    ghost directory dynamic overwrite cannot touch, so it is dropped
-    explicitly. Untouched partitions are never written.
+    """Partition-subset commit: replace exactly the ``affected``
+    partitions of ``path`` (value tuples of ``part_cols``) with
+    ``new_content``, which must hold those partitions' FULL new rows
+    and may read ``path`` itself. The rows are written into the staging
+    directory of ``maintenance.swap_in``, which swaps in each partition
+    the write produced and removes each affected partition it left
+    empty. Untouched partitions are never written.
 
     Rows are clustered by ``part_cols`` before the write: without it
     every reducer holds rows of many partitions and opens a file in
@@ -336,25 +321,7 @@ def overwrite_buckets(
     not a plain repartition, splits oversized clusters back to advisory
     size, so a 3-value partition key does not serialize the write into
     3 tasks."""
-    import os
-    import shutil
-
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     path = resolve_root(path)
-    # ONE job for materialize + surviving-set + write: the content is
-    # lazily checkpointed (Spark refuses to overwrite a location its
-    # own input still reads lazily), and the surviving partition set is
-    # OBSERVED during the write itself instead of a separate
-    # distinct-collect job — the round-13 notch of the job-fusion
-    # discipline (this door runs 4x per golden apply, 1x per scd2/
-    # sync/CDC apply, so the saved job multiplies)
-    new_content = new_content.localCheckpoint(eager=False)
-    obs = Observation()
-    observed = new_content.observe(
-        obs, F.collect_set(F.struct(*part_cols)).alias("_surv")
-    )
     kbs = [k[0] for k in affected]
     has_summary = part_cols == ["kb"] and os.path.isfile(
         os.path.join(path, "_checksums", "_meta.json")
@@ -381,36 +348,20 @@ def overwrite_buckets(
         # (diff falls back to full-scan phase 1) until the next door
         # call re-derives exactly these buckets' rows
         write_pending(path, None, kbs)
-    (
-        observed.hint("rebalance", *part_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(path)
-    )
-    try:
-        surviving = {tuple(r) for r in obs.get["_surv"]}
-    except Exception:
-        # degenerate empty write (an emptied partition set plans zero
-        # tasks, so the observe node never fires and the metrics row is
-        # unreadable): the content is checkpoint-backed by the write —
-        # the fallback distinct-collect is on the partition columns
-        surviving = {
-            tuple(r) for r in new_content.select(*part_cols).distinct().collect()
-        }
-    for key in affected:
-        d = os.path.join(path, *(f"{c}={v}" for c, v in zip(part_cols, key)))
-        if tuple(key) not in surviving and os.path.isdir(d):
-            shutil.rmtree(d)
+    with swap_in(path, part_cols, affected) as tmp:
+        new_content.hint("rebalance", *part_cols).write.partitionBy(
+            *part_cols
+        ).parquet(tmp)
     spark.catalog.refreshByPath(path)
     if has_summary:
         # the table carries a diff/sync checksum summary: keep it
-        # honest from the rows already in hand — the affected buckets'
-        # full new content — so the routine replica audit
-        # (diff_tables' summarized phase 1) never re-scans the table
+        # honest by re-deriving the affected buckets' rows from a
+        # literal-pruned re-read of just those partitions, so the
+        # routine replica audit (diff_tables' summarized phase 1) never
+        # re-scans the table
         from etl_8million_data__spark.operators.diff import update_checksums
 
-        update_checksums(spark, path, kbs, new_content)
+        update_checksums(spark, path, kbs)
         clear_pending(path)
 
 
@@ -420,8 +371,6 @@ def bucket_file_counts(root: str, part_col: str) -> dict[int, int]:
     layout's bucket count (on a cluster store this is one FileSystem
     listing per bucket directory, the same metadata compaction must
     touch anyway)."""
-    import os
-
     root = resolve_root(root)
     out: dict[int, int] = {}
     try:
@@ -466,8 +415,6 @@ def compact_buckets(
     Scale shape: cost is one read+write of the compacted buckets only —
     the analog of forget.compact_cells for the kb= stores; run it on a
     file-count trigger, not a schedule."""
-    from pyspark.sql import functions as F
-
     counts = bucket_file_counts(path, part_col)
     todo = (
         [b for b in buckets if counts.get(b, 0) > 0]
@@ -490,9 +437,6 @@ def _sweep_stale_generations(path: str) -> None:
     other than the current one are unreachable — resolution never
     looks at them — so a crash between the flip and its cleanup costs
     only disk, reclaimed here (every rebucket sweeps on entry)."""
-    import os
-    import shutil
-
     cur = resolve_root(path)
     if cur == path:
         return
@@ -584,12 +528,6 @@ def rebucket(
     resolution, so no new reader ever sees it — until the next
     migration's entry sweep or an explicit
     :func:`vacuum_generations`."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
     _sweep_stale_generations(path)
@@ -662,10 +600,7 @@ def rebucket(
 
     # MANIFEST FLIP: the staged generation is complete — one atomic
     # pointer replace commits it
-    ptmp = os.path.join(path, _CURRENT + ".tmp")
-    with open(ptmp, "w") as fh:
-        fh.write(gen)
-    os.replace(ptmp, os.path.join(path, _CURRENT))
+    write_durable(os.path.join(path, _CURRENT), gen)
 
     # cleanup of the superseded generation (best-effort: a crash here
     # leaves only unreachable data, swept on the next migration);
@@ -683,8 +618,6 @@ def vacuum_generations(path: str) -> int:
     drained. A store that never migrated (no ``_current`` pointer) is
     a no-op. Returns the number of stale generation dirs removed
     (the pre-migration flat layout counts as one)."""
-    import os
-
     cur = resolve_root(path)
     if cur == path:
         return 0
@@ -714,9 +647,6 @@ def evolve_add_columns(
     no metadata shortcut). ``compare=False`` leaves the comparison pin
     untouched: diffs keep ignoring the new columns and the summary
     survives as-is — the zero-cost evolution for bookkeeping columns."""
-    import json
-    import os
-
     from pyspark.sql.types import StructType
 
     pinned = read_pinned_schema(path)
@@ -790,8 +720,6 @@ def recommend_nb(
     round to the smallest power and change nothing. Pure integer
     arithmetic (comparison ladders over the 17 powers, no log/pow
     floats), so a DuckDB oracle reproduces it bit-for-bit."""
-    from pyspark.sql import functions as F
-
     raw = F.lit(target_inverse) * churn_col
     up = F.lit(NB_LADDER[-1])
     for p in reversed(NB_LADDER):
@@ -846,8 +774,6 @@ def store_bytes(root: str) -> int:
     the measured input for :func:`recommend_nb`'s byte arm. Driver-side
     walk bounded by the layout's bucket/file count (the same listing a
     compaction census pays)."""
-    import os
-
     total = 0
     for dirpath, _dirs, files in os.walk(resolve_root(root)):
         for f in files:
@@ -873,10 +799,6 @@ def record_door_stats(root: str, op: str, n_keys: int, n_buckets: int) -> None:
     the advice tracks RECENT churn — drifting workloads age out, the
     advisor_layout_drift discipline). Best-effort: telemetry never
     fails a door."""
-    import contextlib
-    import json
-    import os
-
     p = os.path.join(resolve_root(root), _STATS_FILE)
     with contextlib.suppress(OSError):
         with open(p, "a") as fh:
@@ -890,16 +812,10 @@ def record_door_stats(root: str, op: str, n_keys: int, n_buckets: int) -> None:
             with open(p) as fh:
                 lines = fh.readlines()
             if len(lines) > 2 * _STATS_KEEP:
-                tmp = p + ".tmp"
-                with open(tmp, "w") as fh:
-                    fh.writelines(lines[-_STATS_KEEP:])
-                os.replace(tmp, p)
+                write_durable(p, "".join(lines[-_STATS_KEEP:]))
 
 
 def read_door_stats(root: str) -> list[dict]:
-    import json
-    import os
-
     out = []
     try:
         with open(os.path.join(resolve_root(root), _STATS_FILE)) as fh:
@@ -924,8 +840,6 @@ def advise_rebucket(spark: SparkSession, path: str) -> dict:
     enough evidence (>= 5 recorded applies). The execution door is
     :func:`rebucket`; the advisor itself reads one count off the store
     and a driver-side sidecar — it never rewrites data."""
-    from pyspark.sql import functions as F
-
     stats = [s for s in read_door_stats(path) if s.get("n_keys")]
     nb_cur = try_read_nb(path)
     n_rows = read_store_pinned(spark, path).count()
@@ -973,21 +887,15 @@ def write_pending(root: str, batch_id, kbs: list[int]) -> None:
     see a predecessor died between the two and re-derive exactly the
     touched buckets' summary rows from the table (the half-applied
     window the skip-existing replay can never repair on its own)."""
-    import json
-    import os
-
     root = resolve_root(root)
     os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, _PENDING_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"batch_id": batch_id, "kbs": list(kbs)}, fh)
-    os.replace(tmp, os.path.join(root, _PENDING_FILE))
+    write_durable(
+        os.path.join(root, _PENDING_FILE),
+        json.dumps({"batch_id": batch_id, "kbs": list(kbs)}),
+    )
 
 
 def read_pending(root: str) -> dict | None:
-    import json
-    import os
-
     p = os.path.join(resolve_root(root), _PENDING_FILE)
     if not os.path.isfile(p):
         return None
@@ -999,8 +907,5 @@ def read_pending(root: str) -> dict | None:
 
 
 def clear_pending(root: str) -> None:
-    import contextlib
-    import os
-
     with contextlib.suppress(OSError):
         os.remove(os.path.join(resolve_root(root), _PENDING_FILE))

@@ -58,6 +58,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_8million_data__spark.operators.maintenance import write_durable
+
 _WATERMARK = "_published.json"
 _LOG_SCHEMA = "_schema.json"
 
@@ -74,10 +76,10 @@ def _read_state(log_dir: str) -> dict:
 
 def _write_state(log_dir: str, upto: int, horizon: int) -> None:
     os.makedirs(log_dir, exist_ok=True)
-    tmp = os.path.join(log_dir, _WATERMARK + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"upto": upto, "horizon": horizon}, fh)
-    os.replace(tmp, os.path.join(log_dir, _WATERMARK))
+    write_durable(
+        os.path.join(log_dir, _WATERMARK),
+        json.dumps({"upto": upto, "horizon": horizon}),
+    )
 
 
 def replay_horizon(log_dir: str) -> int:
@@ -103,10 +105,7 @@ def read_log_schema(log_dir: str):
 
 def _write_log_schema(log_dir: str, schema) -> None:
     os.makedirs(log_dir, exist_ok=True)
-    tmp = os.path.join(log_dir, _LOG_SCHEMA + ".tmp")
-    with open(tmp, "w") as fh:
-        fh.write(schema.json())
-    os.replace(tmp, os.path.join(log_dir, _LOG_SCHEMA))
+    write_durable(os.path.join(log_dir, _LOG_SCHEMA), schema.json())
 
 
 def _pin_schema(log_dir: str, frame_schema):
@@ -212,7 +211,7 @@ def publish_changes(
         for i, f in enumerate(
             sorted(x for x in os.listdir(stage) if x.endswith(".parquet"))
         ):
-            os.replace(
+            os.rename(
                 os.path.join(stage, f),
                 os.path.join(
                     data_dir, f"v{v:012d}-{uuid.uuid4().hex[:8]}-{i}.parquet"

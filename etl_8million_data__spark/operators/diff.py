@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.maintenance import write_durable
 from etl_8million_data__spark.operators.partitioning import (
     id_bucket,
     is_hive_partitioned,
@@ -126,8 +127,7 @@ def _write_summary(
     spark.createDataFrame(summ_rows, CK_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(d)
-    with open(_ck_meta_path(path), "w") as fh:
-        json.dump(meta, fh)
+    write_durable(_ck_meta_path(path), json.dumps(meta))
     spark.catalog.refreshByPath(d)
 
 
@@ -167,27 +167,19 @@ def update_checksums(
     spark: SparkSession,
     path: str,
     affected: list[int],
-    new_content: DataFrame | None = None,
 ) -> None:
     """Incremental summary maintenance: re-derive ONLY the ``affected``
-    buckets' (cs, n) rows — from ``new_content`` (those buckets' full
-    new rows, already in hand at every door's rewrite) when given,
-    else from a literal-pruned re-read — and splice them into the
-    persisted summary. A table without a summary is a no-op; a bucket
-    emptied outright drops its row (matching what a fresh full-scan
-    summary would produce)."""
+    buckets' (cs, n) rows from a literal-pruned re-read and splice them
+    into the persisted summary. A table without a summary is a no-op; a
+    bucket emptied outright drops its row (matching what a fresh
+    full-scan summary would produce)."""
     meta, cur = read_checksums(spark, path)
     if meta is None:
         return
     keys, cols, nb = meta["keys"], meta["cols"], meta["nb"]
-    if new_content is not None:
-        src = new_content.select(*keys, *cols, "kb").filter(
-            F.col("kb").isin(affected) if affected else F.lit(False)
-        )
-    else:
-        src = _prep(spark, path, keys, cols, nb).filter(
-            F.col("kb").isin(affected) if affected else F.lit(False)
-        )
+    src = _prep(spark, path, keys, cols, nb).filter(
+        F.col("kb").isin(affected) if affected else F.lit(False)
+    )
     fresh = {r["kb"]: r for r in _bucket_sums(src, keys, cols).collect()}
     kept = [
         (r["kb"], r["cs"], r["n"])

@@ -9,9 +9,12 @@ the minimum rewrite the layout allows:
 
 - **Cell-partitioned indexes** (SRP/int8/kmeans ``cell=``-partitioned
   vectors, IVF-PQ ``codes/``): a column-pruned (id, cell) lookup finds
-  the touched cells, and ONLY those partitions rewrite, committed by
-  ``bucket_store.overwrite_buckets`` (which also drops the directory of
-  a cell whose every row is deleted). Untouched cells' files are never
+  the touched cells, and ONLY those partitions rewrite, staged in full
+  and committed by ``bucket_store.overwrite_buckets`` — the partition
+  form of the one commit door, ``maintenance.swap_in``, which swaps
+  only those cell directories and removes a cell whose every row is
+  deleted (a crashed commit is rolled forward on the next read, so a
+  forgotten row never comes back). Untouched cells' files are never
   read past the id column and never written — byte-identity asserted in
   tests. O(touched cells) per forget batch, the same blast-radius
   contract as the partitioned upsert.
@@ -25,8 +28,8 @@ the minimum rewrite the layout allows:
   dispatches on the on-disk layout, so callers need not know whether
   an index predates the bucketed layout.
 - **Legacy unpartitioned indexes**: filter + full rewrite committed by
-  ``maintenance.swap_in`` — no partition key to prune on, full rewrite
-  is the honest cost.
+  the whole-table form of ``maintenance.swap_in`` — no partition key to
+  prune on, full rewrite is the honest cost.
 
 ``compact_cells`` is the companion maintenance op: per-batch appends
 leave one small file per cell per batch; compaction rewrites each

@@ -300,6 +300,7 @@ def stream_agg_view_upserts(
             return
         from etl_8million_data__spark.operators.bucket_store import (
             applied_batch,
+            mark_applied,
         )
 
         if applied_batch(view_path) != batch_id:
@@ -311,8 +312,7 @@ def stream_agg_view_upserts(
                 view = spark.read.parquet(view_path)
                 merged = apply_agg_delta(view, delta, group_cols, sum_cols)
                 merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-                with open(os.path.join(tmp, "_applied_batch"), "w") as fh:
-                    fh.write(str(batch_id))
+                mark_applied(tmp, batch_id)
         upsert_parquet(spark, b, base_path, keys=[pk], order_col=order_col)
 
     return (

@@ -37,6 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.maintenance import write_durable
 from etl_8million_data__spark.operators.upsert import last_writer_wins
 
 _MANIFEST = "_manifest.json"
@@ -55,10 +56,7 @@ def _load_manifest(path: str) -> dict:
 
 
 def _store_manifest(path: str, manifest: dict) -> None:
-    tmp = _manifest_path(path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(path))  # atomic on POSIX
+    write_durable(_manifest_path(path), json.dumps(manifest, indent=1, sort_keys=True))
 
 
 def commit(

@@ -9,7 +9,8 @@ partitions those symbols hash to — the reference's batch upsert of
 new symbols only (Financilas.py:175-182). A warehouse without the
 watermark (a cold run, or one written before it existed) derives
 everything. The quote snapshot is a head-N slice of the whole store
-and is rewritten every pass.
+and is rewritten every pass; like both sinks it commits through
+``maintenance.swap_in``, so a failed pass keeps the previous one.
 
 This is the only driver-side control flow the rebuild keeps: stage
 ordering. Everything inside a stage is a declarative plan; re-running
@@ -27,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.maintenance import swap_in, write_durable
 from etl_8million_data__spark.pipelines.financials import build_financials_fact
 from etl_8million_data__spark.pipelines.ingest import ingest
 from etl_8million_data__spark.pipelines.quotes import quote_snapshot
@@ -53,16 +55,9 @@ def fresh_rows(raw: DataFrame, warehouse: str) -> tuple[DataFrame, int, int | No
 
 
 def advance_watermark(warehouse: str, micros: int) -> None:
-    """Durably replace ``warehouse``'s watermark (write, fsync, rename).
-    Call it only after every sink derived from the fresh rows has
-    committed."""
-    path = os.path.join(warehouse, WATERMARK_FILE)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(micros))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    """Durably replace ``warehouse``'s watermark. Call it only after
+    every sink derived from the fresh rows has committed."""
+    write_durable(os.path.join(warehouse, WATERMARK_FILE), str(micros))
 
 
 def run_all(
@@ -91,9 +86,8 @@ def run_all(
         advance_watermark(warehouse, until)
 
     q_src = raw.orderBy("symbol").limit(quote_head) if quote_head else raw
-    quote_snapshot(q_src).coalesce(1).write.mode("overwrite").csv(
-        quotes_path, header=True
-    )
+    with swap_in(quotes_path) as tmp:
+        quote_snapshot(q_src).coalesce(1).write.csv(tmp, header=True)
 
     return {
         "new_symbols": n_new,

@@ -164,29 +164,91 @@ def test_swap_crash_between_renames_loses_no_rows(spark, tmp_path, monkeypatch):
     assert sorted(r.stock for r in spark.read.parquet(path).collect()) == ["A", "B", "C"]
 
 
-def test_only_the_two_commit_doors_stage_or_overwrite_partitions():
-    """Every table rewrite commits through ``maintenance.swap_in`` or
-    ``bucket_store.overwrite_buckets``: no other package module names a
-    staging directory or a partition overwrite mode, and no code sets
-    that mode on the session."""
-    door = next(
+def test_recovery_refuses_to_guess_between_two_pending_commits(tmp_path):
+    from etl_8million_data__spark.operators.maintenance import recover_swap
+
+    path = tmp_path / "t"
+    path.mkdir()
+    for txn in ("a", "b"):
+        (tmp_path / f"t.__commit__{txn}.json").write_text(
+            json.dumps({"txn": txn, "parts": [""], "new": [""]})
+        )
+    with pytest.raises(RuntimeError, match="more than one pending commit"):
+        recover_swap(str(path))
+
+
+def test_failed_record_write_keeps_the_previous_record(tmp_path, monkeypatch):
+    """A small record is replaced, never truncated in place: a write
+    that fails (here: a full disk) leaves the previous
+    ``_applied_batch`` readable."""
+    import builtins
+
+    from etl_8million_data__spark.operators.bucket_store import (
+        applied_batch,
+        mark_applied,
+    )
+
+    root = str(tmp_path / "store")
+    os.makedirs(root)
+    mark_applied(root, 5)
+    real_open = builtins.open
+
+    class FullDisk:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, text):
+            raise OSError(28, "No space left on device")
+
+    def open_on_full_disk(file, mode="r", *args, **kwargs):
+        fh = real_open(file, mode, *args, **kwargs)
+        return FullDisk(fh) if "w" in mode else fh
+
+    monkeypatch.setattr(builtins, "open", open_on_full_disk)
+    with pytest.raises(OSError, match="No space"):
+        mark_applied(root, 6)
+    monkeypatch.undo()
+    assert applied_batch(root) == 5
+
+
+def test_swap_in_is_the_only_commit_door():
+    """Every table rewrite commits through ``maintenance.swap_in`` and
+    every small record through ``maintenance.write_durable``: no module
+    names Spark's partition overwrite mode, only ``maintenance.py``
+    names a staging, swapped-out or commit-record tree, and the only
+    ``os.replace`` call is the durable writer's."""
+    writer = next(
         n
-        for n in ast.parse((PKG / "operators/bucket_store.py").read_text()).body
-        if isinstance(n, ast.FunctionDef) and n.name == "overwrite_buckets"
+        for n in ast.parse((PKG / "operators/maintenance.py").read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "write_durable"
     )
     offenders = []
     for f in sorted(PKG.rglob("*.py")):
         rel = f.relative_to(PKG).as_posix()
-        for i, line in enumerate(f.read_text().splitlines(), 1):
-            if "spark.sql.sources.partitionOverwriteMode" in line:
-                offenders.append(f"{rel}:{i} sets the session's overwrite mode")
-            elif "partitionOverwriteMode" in line and not (
-                rel == "operators/bucket_store.py"
-                and door.lineno <= i <= door.end_lineno
-            ):
-                offenders.append(f"{rel}:{i} overwrites partitions outside the door")
-            if ("__tmp__" in line or "__old__" in line) and (
+        text = f.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
+            if "partitionOverwriteMode" in line:
+                offenders.append(f"{rel}:{i} names the partition overwrite mode")
+            if any(t in line for t in ("__tmp__", "__old__", "__commit__")) and (
                 rel != "operators/maintenance.py"
             ):
-                offenders.append(f"{rel}:{i} names a swap staging directory")
+                offenders.append(f"{rel}:{i} names a commit door's tree")
+        for node in ast.walk(ast.parse(text)):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "replace"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+                and not (
+                    rel == "operators/maintenance.py"
+                    and writer.lineno <= node.lineno <= writer.end_lineno
+                )
+            ):
+                offenders.append(f"{rel}:{node.lineno} calls os.replace")
     assert not offenders

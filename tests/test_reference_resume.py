@@ -62,7 +62,7 @@ def test_resume_noop_then_exact_delta(spark, tmp_path):
 
     # blast radius: the bucketed layout leaves most partition
     # directories' files byte-identical (only touched (statement,
-    # bucket) dirs were rewritten by the dynamic overwrite)
+    # bucket) dirs were swapped in by the commit door)
     after = _file_state(fact_dir)
     untouched = sum(
         1 for k, v in before.items() if after.get(k) == v and k.endswith(".parquet")

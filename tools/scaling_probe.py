@@ -20,6 +20,25 @@ from etl_8million_data__spark import profile
 from etl_8million_data__spark.plans import all_queries
 from etl_8million_data__spark.session import get_spark
 
+def probe_session(app: str, conf: dict[str, str]):
+    """A local[8] session for one probe: its app name and SQL confs,
+    the UI off, logs at ERROR, and the driver heap from
+    ``SPARK_DRIVER_MEMORY`` (8g by default, as ``session.get_spark``)."""
+    from pyspark.sql import SparkSession
+
+    builder = (
+        SparkSession.builder.master("local[8]")
+        .appName(app)
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+    )
+    for key, value in conf.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 # Queries over sf-scaled TPC-H-ish tables (10x rows per sf step)
@@ -119,24 +138,20 @@ def skew_probe() -> str:
     i.e. "AQE splits the hot bucket" is measured, not assumed."""
     import statistics
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("lsh-skew-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-        .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "lsh-skew-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32k",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k",
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 
     from etl_8million_data__spark.operators.dedup import (
@@ -213,24 +228,21 @@ def interval_hot_user_probe() -> str:
     could not."""
     import statistics
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("interval-hot-user-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        # keep the 32 shuffle partitions visible: coalescing would fold
-        # the (small) output into one partition and make the balance
-        # gate vacuous — at scale the output is not small
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "interval-hot-user-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.adaptive.enabled": "true",
+            # keep the 32 shuffle partitions visible: coalescing would fold
+            # the (small) output into one partition and make the balance
+            # gate vacuous — at scale the output is not small
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.session.timeZone": "UTC",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.plans.timeseries import concurrent_sessions_frame
 
     n = 50_000
@@ -299,17 +311,14 @@ def mega_basket_probe() -> str:
     C(5000, 2) = 12.5M pairs; the cap excludes it, so the probe
     asserts the rule output is IDENTICAL to the same corpus without
     the mega basket, and the runtime stays flat."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("mega-basket-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "mega-basket-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.plans.analytics import market_basket_rules
 
     normal = spark.range(20_000 * 4).select(
@@ -353,17 +362,14 @@ def vocab_growth_probe() -> list[str]:
     candidate volume per doc is bounded, so the 10x-data time ratio
     must stay near-linear — gated at <= 4x, against the 8.3x / 9.9x the
     fixed-vocab fixtures show."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("vocab-growth-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "vocab-growth-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.dedup import (
         containment_pairs,
         prefix_filter_pairs,
@@ -614,17 +620,14 @@ def winnow_boilerplate_probe() -> str:
     (each passage shared by exactly 2 docs) must still be found.
     Gates: all planted pairs found, zero boilerplate pairs, wall-clock
     flat (the join input simply does not contain the hot keys)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("winnow-boilerplate-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "winnow-boilerplate-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.dedup import winnowing_fingerprints
 
     n = 10_000
@@ -701,25 +704,22 @@ def ivf_hot_cell_probe() -> str:
     transient worst case.)"""
     import statistics
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ivf-hot-cell-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-        .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-        .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "ivf-hot-cell-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32k",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16k",
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.similarity import (
         hyperplane_weights,
         knn_ivf,
@@ -767,17 +767,15 @@ def pq_adc_sweep_probe() -> list[str]:
     under nprobe/k_cells + slack (<= 0.45) of the flat scan's at BOTH
     sizes, i.e. the routed plan reads a bounded fraction of the codes
     however large the corpus grows."""
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("pq-adc-sweep-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "pq-adc-sweep-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.similarity import (
         kmeans_fit,
         knn_ivf_pq,
@@ -871,17 +869,14 @@ def gemm_vs_bruteforce_probe() -> list[str]:
     semantics); the gate asserts the blocked int64 GEMM beats the
     per-pair codegen fold by >= 2x warm-vs-warm."""
     import numpy as np
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("gemm-vs-bruteforce-probe")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "gemm-vs-bruteforce-probe",
+        {
+            "spark.sql.shuffle.partitions": "16",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.similarity import (
         knn_block_gemm,
         knn_bruteforce,
@@ -935,17 +930,14 @@ def snm_sweep_probe() -> list[str]:
     near 10x — in contrast to any quadratic blowup a sort-key collapse
     would produce. Times reported alongside (same best-of-2 damping as
     vocab_growth_probe)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("snm-sweep-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "snm-sweep-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.dedup import (
         sorted_neighborhood_frames,
         sorted_neighborhood_pairs,
@@ -1011,17 +1003,14 @@ def contamination_sweep_probe() -> list[str]:
     <= 12x on 10x docs) while the benchmark side stays constant. 5% of
     train docs embed a full benchmark doc so the sweep has real
     contamination to find at both sizes."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("contamination-sweep-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "contamination-sweep-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.dedup import doc_shingle_frame
 
     n_bench = 50
@@ -1139,17 +1128,14 @@ def heaps_vocab_probe() -> list[str]:
     recall would pass a volume gate vacuously)."""
     import math
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("heaps-vocab-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "heaps-vocab-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.dedup import (
         minhash_lsh_candidate_pairs,
         prefix_filter_frames,
@@ -1381,17 +1367,14 @@ def ivm_refresh_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ivm-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "ivm-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.ivm import refresh_join_view
 
     sf = "/root/testdata/sf0.1"
@@ -1464,17 +1447,14 @@ def retraction_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("retract-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "retract-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.ivm import retract_join_view
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
@@ -1566,17 +1546,14 @@ def linkage_store_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("linkage-store-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "linkage-store-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.linkage import (
         probe_store_candidates,
         write_clean_store,
@@ -1666,26 +1643,23 @@ def golden_increment_probe() -> list[str]:
     Round-12 addition: jobs-per-increment counted via a per-size job
     group; the lazy-checkpoint fusion (incl. the 1-job-per-CC-round
     loop) cut it 91 -> 75 on this fixture. Round 13 cut it 75 -> 50:
-    overwrite_buckets observes its surviving-bucket set DURING the
-    write (one job instead of collect+write) and the bounded
-    delta-neighborhood component/victim lists become pushed literal
-    IN/NOT-IN filters instead of per-consumer broadcast builds
-    (25 -> 17 broadcast-exchange jobs). Gated <= 60 against
+    the bounded delta-neighborhood component/victim lists became pushed
+    literal IN/NOT-IN filters instead of per-consumer broadcast builds
+    (25 -> 17 broadcast-exchange jobs). overwrite_buckets writes each
+    state table in one job into the commit door's staging directory,
+    so it needs no surviving-bucket collect. Gated <= 60 against
     regression."""
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("golden-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "golden-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.golden import (
         golden_forget,
         golden_increment,
@@ -1768,7 +1742,7 @@ def golden_increment_probe() -> list[str]:
         print(lines[-1])
         assert jobs.n <= 60, (
             f"golden_increment ran {jobs.n} jobs for a 10-record delta — "
-            "the fused fixed chain is <= 60 on this fixture (observe-fused "
+            "the fused fixed chain is <= 60 on this fixture (one-job "
             "overwrites + literal-pruned delta neighborhood); an eager "
             "checkpoint+action pair or a broadcast build crept back in"
         )
@@ -1807,23 +1781,20 @@ def scd2_probe() -> list[str]:
     verdict flagged); the lazy-checkpoint fusion (checkpoint
     materialization rides the first full action instead of paying its
     own job) cut it 17 -> 14 on this fixture (26 -> 22 on an
-    8-partition calibration), gated <= 12 (round 13: 14 -> 11 via the
-    observe-fused overwrite + pinned-schema reads) so a regression back to
+    8-partition calibration), gated <= 12 (round 13: 14 -> 11 via a
+    one-job overwrite + pinned-schema reads) so a regression back to
     eager checkpoint+action pairs fails loudly."""
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("scd2-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "scd2-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.scd2 import (
         build_intervals,
         scd2_apply,
@@ -1909,17 +1880,14 @@ def ivfpq_probe_crossover_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("ivfpq-crossover-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "ivfpq-crossover-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.incremental_ann import (
         build_index_ivfpq,
         probe_index_ivfpq,
@@ -2001,17 +1969,14 @@ def diff_summary_probe() -> list[str]:
     import tempfile
     import time as _t
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("diff-summary-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "diff-summary-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.diff import (
         DIFF_NB,
         _bucket_sums,
@@ -2135,17 +2100,14 @@ def cdc_apply_probe() -> list[str]:
     import tempfile
     import time as _t
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("cdc-apply-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "cdc-apply-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.diff import (
         DIFF_NB,
         apply_changes,
@@ -2310,17 +2272,14 @@ def compaction_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("compaction-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "compaction-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.bucket_store import (
         bucket_file_counts,
         compact_buckets,
@@ -2400,17 +2359,14 @@ def rebucket_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("rebucket-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "rebucket-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.bucket_store import (
         rebucket,
         recommend_nb,
@@ -2506,17 +2462,14 @@ def cdc_bulk_probe() -> list[str]:
     import tempfile
     import time as _t
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("cdc-bulk-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "cdc-bulk-probe",
+        {
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     from etl_8million_data__spark.operators.bucket_store import (
         MAX_BROADCAST_ROWS,
         bounded_broadcast,
@@ -2645,17 +2598,14 @@ def cdc_retention_probe() -> list[str]:
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("cdc-retention-probe")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = probe_session(
+        "cdc-retention-probe",
+        {
+            "spark.sql.shuffle.partitions": "8",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     import os as _os
 
     from etl_8million_data__spark.operators import versioned as V
