@@ -2,9 +2,11 @@
 (ANN indexes, dedup band/fingerprint indexes, SCD2/golden/IVM/diff
 state tables): the read discipline, the layout markers, and
 :func:`overwrite_buckets`, the partition-subset form of the package's
-one commit door (``maintenance.swap_in``). Every read resolves the
-store's root through :func:`resolve_root`, which first finishes any
-swap of it that crashed.
+one commit door (``maintenance.swap_in``), which commits a ``kb``
+store's checksum summary under the same record as the rows it
+fingerprints. Every read resolves the store's root through
+:func:`resolve_root`, which first finishes any commit of it that
+crashed.
 
 READ DISCIPLINE (the 100 TB reason this module exists): every store
 has a DECLARED schema — reading it back with
@@ -312,7 +314,10 @@ def overwrite_buckets(
     and may read ``path`` itself. The rows are written into the staging
     directory of ``maintenance.swap_in``, which swaps in each partition
     the write produced and removes each affected partition it left
-    empty. Untouched partitions are never written.
+    empty. Untouched partitions are never written. A ``kb`` store with
+    a checksum summary gets the affected buckets' summary rows
+    re-derived from the staged rows and staged beside them, so the rows
+    and the summary commit under one record.
 
     Rows are clustered by ``part_cols`` before the write: without it
     every reducer holds rows of many partitions and opens a file in
@@ -321,48 +326,20 @@ def overwrite_buckets(
     not a plain repartition, splits oversized clusters back to advisory
     size, so a 3-value partition key does not serialize the write into
     3 tasks."""
-    path = resolve_root(path)
-    kbs = [k[0] for k in affected]
-    has_summary = part_cols == ["kb"] and os.path.isfile(
-        os.path.join(path, "_checksums", "_meta.json")
+    from etl_8million_data__spark.operators.diff import (
+        has_checksums,
+        stage_checksums,
     )
-    if has_summary:
-        # a predecessor's crash record must survive this door: blindly
-        # replacing an existing _pending_summary marker with our own
-        # bucket list would erase the evidence that a predecessor died
-        # between its data write and its summary update — its stale
-        # buckets would never be re-derived and diff would trust a
-        # silently stale summary. Repair it NOW (re-derive its touched
-        # buckets from the table, which is the pre-rewrite truth
-        # whether or not the predecessor's write landed), then write
-        # our own marker.
-        if read_pending(path) is not None:
-            from etl_8million_data__spark.operators.diff import (
-                repair_pending_summary,
-            )
 
-            repair_pending_summary(spark, path)
-        # marker BEFORE the rewrite (the append doors' discipline): a
-        # crash anywhere between here and the summary splice leaves the
-        # marker, which makes the possibly-stale summary UNTRUSTED
-        # (diff falls back to full-scan phase 1) until the next door
-        # call re-derives exactly these buckets' rows
-        write_pending(path, None, kbs)
+    path = resolve_root(path)
     with swap_in(path, part_cols, affected) as tmp:
         new_content.hint("rebalance", *part_cols).write.partitionBy(
             *part_cols
         ).parquet(tmp)
+        if part_cols == ["kb"] and has_checksums(path):
+            staged = spark.read.schema(new_content.schema).parquet(tmp)
+            stage_checksums(spark, path, tmp, staged, [k[0] for k in affected])
     spark.catalog.refreshByPath(path)
-    if has_summary:
-        # the table carries a diff/sync checksum summary: keep it
-        # honest by re-deriving the affected buckets' rows from a
-        # literal-pruned re-read of just those partitions, so the
-        # routine replica audit (diff_tables' summarized phase 1) never
-        # re-scans the table
-        from etl_8million_data__spark.operators.diff import update_checksums
-
-        update_checksums(spark, path, kbs)
-        clear_pending(path)
 
 
 def bucket_file_counts(root: str, part_col: str) -> dict[int, int]:
@@ -447,8 +424,7 @@ def _sweep_stale_generations(path: str) -> None:
             shutil.rmtree(full, ignore_errors=True)
         elif e.startswith("kb=") and os.path.isdir(full):
             shutil.rmtree(full, ignore_errors=True)
-        elif e in ("_nb", _SCHEMA_FILE, _PENDING_FILE, _STATS_FILE,
-                   "_applied_batch") or (
+        elif e in ("_nb", _SCHEMA_FILE, _STATS_FILE, "_applied_batch") or (
             e == "_checksums" and os.path.isdir(full)
         ):
             # stale flat-layout sidecars (the live ones are inside the
@@ -582,12 +558,13 @@ def rebucket(
         )
 
     # summary re-seed at the new modulus (same keys/cols pin)
-    meta_path = os.path.join(live, "_checksums", "_meta.json")
-    if os.path.isfile(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        from etl_8million_data__spark.operators.diff import checksums_init
+    from etl_8million_data__spark.operators.diff import (
+        checksums_init,
+        read_checksums,
+    )
 
+    meta, _ = read_checksums(spark, live)
+    if meta is not None:
         checksums_init(spark, tmp, meta["keys"], meta["cols"], nb_new)
 
     # carry the layout-independent sidecars into the staged generation:
@@ -666,12 +643,13 @@ def evolve_add_columns(
     new_schema = StructType(fields + list(add.fields) + kb)
     write_schema(path, new_schema)
 
-    meta_path = os.path.join(path, "_checksums", "_meta.json")
-    if compare and os.path.isfile(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        from etl_8million_data__spark.operators.diff import checksums_init
+    from etl_8million_data__spark.operators.diff import (
+        checksums_init,
+        read_checksums,
+    )
 
+    meta, _ = read_checksums(spark, path)
+    if compare and meta is not None:
         checksums_init(
             spark,
             path,
@@ -876,36 +854,3 @@ def advise_rebucket(spark: SparkSession, path: str) -> dict:
         "nb_recommended": rec,
         "action": "rebucket" if rec != nb_cur else "keep",
     }
-
-
-_PENDING_FILE = "_pending_summary.json"
-
-
-def write_pending(root: str, batch_id, kbs: list[int]) -> None:
-    """Crash-recovery marker for the append doors: written BEFORE the
-    data append, cleared after the summary update, so a successor can
-    see a predecessor died between the two and re-derive exactly the
-    touched buckets' summary rows from the table (the half-applied
-    window the skip-existing replay can never repair on its own)."""
-    root = resolve_root(root)
-    os.makedirs(root, exist_ok=True)
-    write_durable(
-        os.path.join(root, _PENDING_FILE),
-        json.dumps({"batch_id": batch_id, "kbs": list(kbs)}),
-    )
-
-
-def read_pending(root: str) -> dict | None:
-    p = os.path.join(resolve_root(root), _PENDING_FILE)
-    if not os.path.isfile(p):
-        return None
-    try:
-        with open(p) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return None
-
-
-def clear_pending(root: str) -> None:
-    with contextlib.suppress(OSError):
-        os.remove(os.path.join(resolve_root(root), _PENDING_FILE))

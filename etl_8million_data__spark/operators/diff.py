@@ -34,15 +34,21 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_8million_data__spark.operators.maintenance import write_durable
+from etl_8million_data__spark.operators.maintenance import (
+    append_in,
+    swap_in,
+    write_durable,
+)
 from etl_8million_data__spark.operators.partitioning import (
     id_bucket,
     is_hive_partitioned,
 )
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 DIFF_NB = 16
 
@@ -52,11 +58,13 @@ DIFF_NB = 16
 # every bucket-writing door already knows exactly which buckets it
 # touched, so the summary lives as a `_checksums/` sidecar inside the
 # table root (underscore prefix: invisible to parquet readers of the
-# table) and is re-derived ONLY for touched buckets on each rewrite
-# (bucket_store.overwrite_buckets hooks it automatically; the sidecar's
-# _meta.json pins the fingerprinted keys/cols/nb so a diff over a
-# DIFFERENT column set falls back to the full scan instead of trusting
-# a mismatched summary).
+# table). Every door stages the updated summary (:func:`stage_checksums`)
+# in the staging directory of the commit that carries its rows, so rows
+# and summary commit under ONE record (maintenance.swap_in / append_in);
+# a crash leaves the old pair or the new one, never one without the
+# other. The sidecar's _meta.json pins the fingerprinted keys/cols/nb so
+# a diff over a DIFFERENT column set falls back to the full scan
+# instead of trusting a mismatched summary.
 CK_DIR = "_checksums"
 CK_SCHEMA = "kb int, cs decimal(38,0), n bigint"
 
@@ -108,27 +116,30 @@ def _bucket_sums(
     )
 
 
-def _ck_meta_path(path: str) -> str:
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    return os.path.join(resolve_root(path), CK_DIR, "_meta.json")
-
-
 def _write_summary(
-    spark: SparkSession, summ_rows, path: str, meta: dict
+    spark: SparkSession, summ_rows, staging: str, meta: dict
 ) -> None:
-    """Persist the <= nb summary rows + the meta pin. The rows arrive
-    COLLECTED (the summary is bounded by the layout's bucket count,
-    never by data size) so the overwrite never reads the directory it
-    replaces."""
+    """Write the <= nb summary rows + the meta pin as
+    ``staging/_checksums``, inside the staging directory of the commit
+    that swaps the sidecar in whole. The rows arrive COLLECTED (the
+    summary is bounded by the layout's bucket count, never by data
+    size)."""
+    d = os.path.join(staging, CK_DIR)
+    spark.createDataFrame(summ_rows, CK_SCHEMA).coalesce(1).write.parquet(d)
+    write_durable(os.path.join(d, "_meta.json"), json.dumps(meta))
+
+
+def _commit_summary(
+    spark: SparkSession, path: str, stage: Callable[[str], None]
+) -> None:
+    """Commit a summary-only change through the door: ``stage(tmp)``
+    writes the new ``_checksums/`` into the staging directory."""
     from etl_8million_data__spark.operators.bucket_store import resolve_root
 
-    d = os.path.join(resolve_root(path), CK_DIR)
-    spark.createDataFrame(summ_rows, CK_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    write_durable(_ck_meta_path(path), json.dumps(meta))
-    spark.catalog.refreshByPath(d)
+    root = resolve_root(path)
+    with swap_in(root, ["kb"]) as tmp:
+        stage(tmp)
+    spark.catalog.refreshByPath(os.path.join(root, CK_DIR))
 
 
 def checksums_init(
@@ -138,28 +149,64 @@ def checksums_init(
     cols: list[str],
     nb: int = DIFF_NB,
 ) -> None:
-    """One full pass over the table to seed the persisted summary;
-    thereafter every rewrite through bucket_store.overwrite_buckets
-    (sync/scd2/golden/IVM doors) re-derives ONLY its touched buckets'
-    rows, so the routine replica audit reads 2 x nb summary rows
-    instead of two full tables."""
+    """One full pass over the table to seed the persisted summary,
+    committed through the door; thereafter every door stages ONLY its
+    touched buckets' rows (rewrites re-derive them, appends add to
+    them) under the same record as its rows, so the routine replica
+    audit reads 2 x nb summary rows instead of two full tables."""
     meta = {"keys": list(keys), "cols": sorted(cols), "nb": nb}
-    summ = _bucket_sums(_prep(spark, path, keys, cols, nb), keys, cols)
-    _write_summary(spark, summ.collect(), path, meta)
+    rows = _bucket_sums(_prep(spark, path, keys, cols, nb), keys, cols).collect()
+    _commit_summary(spark, path, lambda tmp: _write_summary(spark, rows, tmp, meta))
+
+
+def _ck_dir(path: str) -> str:
+    from etl_8million_data__spark.operators.bucket_store import resolve_root
+
+    return os.path.join(resolve_root(path), CK_DIR)
+
+
+def has_checksums(path: str) -> bool:
+    """True when the table at ``path`` carries a summary sidecar."""
+    return os.path.isfile(os.path.join(_ck_dir(path), "_meta.json"))
 
 
 def read_checksums(spark: SparkSession, path: str):
     """(meta, summary DataFrame) — or (None, None) when the table has
     no summary sidecar."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    mp = _ck_meta_path(path)
-    if not os.path.isfile(mp):
+    if not has_checksums(path):
         return None, None
-    with open(mp) as fh:
+    d = _ck_dir(path)
+    with open(os.path.join(d, "_meta.json")) as fh:
         meta = json.load(fh)
-    return meta, spark.read.schema(CK_SCHEMA).parquet(
-        os.path.join(resolve_root(path), CK_DIR)
+    return meta, spark.read.schema(CK_SCHEMA).parquet(d)
+
+
+def stage_checksums(
+    spark: SparkSession,
+    path: str,
+    staging: str,
+    fresh: DataFrame,
+    replace: Sequence[int] = (),
+) -> None:
+    """Stage ``path``'s summary, updated for one commit, in that
+    commit's ``staging`` directory: the rows of the ``replace`` buckets
+    drop, then ``fresh``'s per-bucket sums add in. The checksum is a SUM
+    of row hashes, so an append passes only its new rows (never a
+    re-read of the table), and a rewrite passes its buckets' full new
+    rows with ``replace``; a bucket left empty loses its row, matching
+    a fresh full-scan summary. A table without a summary is a no-op."""
+    meta, cur = read_checksums(spark, path)
+    if meta is None:
+        return
+    keys, cols = meta["keys"], meta["cols"]
+    rows = {
+        r["kb"]: (r["cs"], r["n"]) for r in cur.collect() if r["kb"] not in replace
+    }
+    for r in _bucket_sums(fresh.select(*keys, *cols, "kb"), keys, cols).collect():
+        cs, n = rows.get(r["kb"], (0, 0))
+        rows[r["kb"]] = (cs + r["cs"], n + r["n"])
+    _write_summary(
+        spark, [(kb, cs, n) for kb, (cs, n) in rows.items()], staging, meta
     )
 
 
@@ -168,38 +215,24 @@ def update_checksums(
     path: str,
     affected: list[int],
 ) -> None:
-    """Incremental summary maintenance: re-derive ONLY the ``affected``
-    buckets' (cs, n) rows from a literal-pruned re-read and splice them
-    into the persisted summary. A table without a summary is a no-op; a
-    bucket emptied outright drops its row (matching what a fresh
-    full-scan summary would produce)."""
-    meta, cur = read_checksums(spark, path)
+    """Re-derive ONLY the ``affected`` buckets' summary rows from a
+    literal-pruned re-read of the table and commit them through the
+    door. A table without a summary is a no-op."""
+    meta, _ = read_checksums(spark, path)
     if meta is None:
         return
     keys, cols, nb = meta["keys"], meta["cols"], meta["nb"]
     src = _prep(spark, path, keys, cols, nb).filter(
         F.col("kb").isin(affected) if affected else F.lit(False)
     )
-    fresh = {r["kb"]: r for r in _bucket_sums(src, keys, cols).collect()}
-    kept = [
-        (r["kb"], r["cs"], r["n"])
-        for r in cur.collect()
-        if r["kb"] not in set(affected)
-    ]
-    rows = kept + [(r["kb"], r["cs"], r["n"]) for r in fresh.values()]
-    _write_summary(spark, rows, path, meta)
+    _commit_summary(
+        spark, path, lambda tmp: stage_checksums(spark, path, tmp, src, affected)
+    )
 
 
 def _summary_if_match(
     spark: SparkSession, path: str, keys: list[str], cols: list[str], nb: int
 ):
-    from etl_8million_data__spark.operators.bucket_store import read_pending
-
-    if read_pending(path) is not None:
-        # a door died between its data write and its summary update:
-        # the summary is possibly stale — fall back to the full-scan
-        # phase 1 (never a wrong answer) until a door call repairs it
-        return None
     meta, df = read_checksums(spark, path)
     if meta is None:
         return None
@@ -440,54 +473,18 @@ def write_bucketed(
         )
 
 
-def append_checksums(
-    spark: SparkSession, path: str, appended: DataFrame
-) -> None:
-    """ADDITIVE summary maintenance for append doors: the per-bucket
-    checksum is a SUM of row hashes, so an append's effect on the
-    summary is pure addition — one map-side aggregate over the batch
-    (never a re-read of the table), added driver-side to the stored
-    rows. A table without a summary is a no-op."""
-    meta, cur = read_checksums(spark, path)
-    if meta is None:
-        return
-    keys, cols = meta["keys"], meta["cols"]
-    delta = {
-        r["kb"]: (r["cs"], r["n"])
-        for r in _bucket_sums(
-            appended.select(*keys, *cols, "kb"), keys, cols
-        ).collect()
-    }
-    rows = {r["kb"]: (r["cs"], r["n"]) for r in cur.collect()}
-    for kb, (cs, n) in delta.items():
-        ocs, on = rows.get(kb, (0, 0))
-        rows[kb] = (ocs + cs, on + n)
-    _write_summary(
-        spark, [(kb, cs, n) for kb, (cs, n) in rows.items()], path, meta
-    )
+def _append_commit(spark: SparkSession, path: str, rows: DataFrame) -> None:
+    """Commit ``rows`` (``kb``-tagged, clustered by ``kb``) as an append
+    to the store at ``path`` through ``maintenance.append_in``, with the
+    store's summary, when it has one, added to from the rows alone and
+    committed under the same record."""
+    from etl_8million_data__spark.operators.bucket_store import resolve_root
 
-
-def repair_pending_summary(spark: SparkSession, path: str) -> bool:
-    """Recover from a door that died between its data append and its
-    summary update (the one window the skip-existing replay cannot
-    repair: the rows exist, so redelivery appends nothing and the
-    ADDITIVE delta is never re-applied — a silently stale summary).
-    The doors write a ``_pending_summary`` marker BEFORE the append and
-    clear it AFTER the summary update; if a marker is found here, the
-    touched buckets' summary rows are re-derived from the TABLE
-    (pruned read — correct whether or not the predecessor's append
-    landed) and the marker cleared. Returns True when a repair ran."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        clear_pending,
-        read_pending,
-    )
-
-    pending = read_pending(path)
-    if pending is None:
-        return False
-    update_checksums(spark, path, pending.get("kbs", []))
-    clear_pending(path)
-    return True
+    root = resolve_root(path)
+    with append_in(root, ["kb"]) as tmp:
+        rows.write.partitionBy("kb").parquet(tmp)
+        stage_checksums(spark, root, tmp, rows)
+    spark.catalog.refreshByPath(root)
 
 
 def append_bucketed(
@@ -496,19 +493,14 @@ def append_bucketed(
     """Append door for the diffable layout: rows land in their ``kb=``
     bucket partitions (one file per touched bucket per batch — the
     write_clean_store discipline) and a summary, when present, updates
-    ADDITIVELY from the batch alone. The modulus comes from the store's
-    persisted ``_nb`` marker (an explicit contradicting ``nb`` raises);
-    a ``_pending_summary`` marker brackets the append + summary pair so
-    a crash between them is repaired by the next door call
-    (:func:`repair_pending_summary`) instead of silently drifting the
-    summary. With :func:`write_bucketed`, :func:`delete_keys_bucketed`,
+    ADDITIVELY from the batch alone. The new files and the updated
+    summary commit under one record (``maintenance.append_in``), so a
+    crash leaves both old or both new. The modulus comes from the
+    store's persisted ``_nb`` marker (an explicit contradicting ``nb``
+    raises). With :func:`write_bucketed`, :func:`delete_keys_bucketed`,
     and the overwrite doors, every write path keeps the summary honest,
     so the flat-cost replica audit never needs a rescan."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        clear_pending,
-        resolve_root,
-        write_pending,
-    )
+    from etl_8million_data__spark.operators.bucket_store import resolve_root
 
     droot = resolve_root(path)
     if os.path.isdir(droot) and not is_hive_partitioned(path, "kb"):
@@ -520,7 +512,6 @@ def append_bucketed(
         )
     spark = df.sparkSession
     nb = _store_nb(path, nb)
-    repair_pending_summary(spark, path)
     from etl_8million_data__spark.operators.bucket_store import (
         read_pinned_schema,
     )
@@ -546,19 +537,7 @@ def append_bucketed(
     per_kb = staged.groupBy("kb").agg(F.count(F.lit(1)).alias("n")).collect()
     kbs = [r["kb"] for r in per_kb]
     n_rows = sum(r["n"] for r in per_kb)
-    # the _pending_summary marker protects ONLY the checksum summary —
-    # on a store without one (including a store this very call is
-    # creating) it must not be written: a crash after the marker but
-    # before any data would leave a marker-only directory every later
-    # append rejects as "not a kb=-bucketed layout" (a bricked store)
-    has_summary = os.path.isfile(_ck_meta_path(path))
-    if has_summary:
-        write_pending(path, None, kbs)
-    staged.write.mode("append").partitionBy("kb").parquet(droot)
-    spark.catalog.refreshByPath(droot)
-    append_checksums(spark, path, staged)
-    if has_summary:
-        clear_pending(path)
+    _append_commit(spark, path, staged)
     from etl_8million_data__spark.operators.bucket_store import (
         record_door_stats,
     )
@@ -588,7 +567,6 @@ def delete_keys_bucketed(
     )
 
     nb = _store_nb(path, nb)
-    repair_pending_summary(spark, path)
     v = victims.select(F.col(victims.columns[0]).alias(key)).distinct()
     kbs = [
         r["_b"]
@@ -634,7 +612,6 @@ def delete_where_bucketed(
     )
 
     _store_nb(path, nb)  # modulus validation only; buckets come from data
-    repair_pending_summary(spark, path)
     hit = F.coalesce(predicate, F.lit(False))
     kbs = [
         r["kb"]
@@ -674,20 +651,16 @@ def stream_append_bucketed(
     the summary even if readers dedup. So the append is SKIP-EXISTING
     by key: the existence read is pruned to the batch keys' buckets and
     column-pruned to the key, fresh rows append and feed the additive
-    summary update, replayed rows do neither. The skip-existing check
-    cannot repair a predecessor that died BETWEEN its data append and
-    its summary update (the rows exist, so the redelivery appends
-    nothing and the summary delta is lost forever) — hence the
-    ``_pending_summary`` marker written before the append and cleared
-    after the summary: batch entry re-derives a dead predecessor's
-    touched buckets from the table (:func:`repair_pending_summary`).
-    Keys are assumed append-once (the dedup-upstream contract every
+    summary update, replayed rows do neither. The fresh rows and the
+    summary commit under one record (``maintenance.append_in``), so a
+    batch that crashed left both old (its redelivery appends them) or
+    both new (its redelivery finds the rows and adds nothing): the
+    replay never meets rows whose summary delta is missing. Keys are
+    assumed append-once (the dedup-upstream contract every
     skip-existing door carries); updates to existing keys are the
     delete+append or sync paths."""
     from etl_8million_data__spark.operators.bucket_store import (
-        clear_pending,
         read_store_pinned,
-        write_pending,
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -698,8 +671,6 @@ def stream_append_bucketed(
         spark = batch_df.sparkSession
         droot = resolve_root(path)
         nb_eff = _store_nb(path, nb) if os.path.isdir(droot) else (nb or DIFF_NB)
-        if os.path.isdir(droot):
-            repair_pending_summary(spark, path)
         b = batch_df.withColumn(
             "kb", id_bucket(F.col(key), nb_eff)
         ).localCheckpoint(eager=False)
@@ -725,24 +696,13 @@ def stream_append_bucketed(
         ).collect()
         if not per_kb:
             return
-        fresh_kbs = [r["kb"] for r in per_kb]
-        # marker only when there is a summary to protect — a marker
-        # written before the store's first data would brick it on crash
-        # (see append_bucketed)
-        has_summary = os.path.isfile(_ck_meta_path(path))
-        if has_summary:
-            write_pending(path, batch_id, fresh_kbs)
-        fresh.write.mode("append").partitionBy("kb").parquet(droot)
-        spark.catalog.refreshByPath(droot)
-        append_checksums(spark, path, fresh)
-        if has_summary:
-            clear_pending(path)
+        _append_commit(spark, path, fresh)
         from etl_8million_data__spark.operators.bucket_store import (
             record_door_stats,
         )
 
         record_door_stats(
-            path, "stream_append", sum(r["n"] for r in per_kb), len(fresh_kbs)
+            path, "stream_append", sum(r["n"] for r in per_kb), len(per_kb)
         )
         from etl_8million_data__spark.operators.bucket_store import (
             read_pinned_schema,
@@ -758,12 +718,7 @@ def stream_append_bucketed(
         if read_pinned_schema(path) is None:
             write_schema(path, fresh.schema)
 
-    return (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(updates, apply_batch, checkpoint_dir)
 
 
 def apply_changes(
@@ -803,7 +758,6 @@ def apply_changes(
     )
 
     nb = _store_nb(path, nb)
-    repair_pending_summary(spark, path)
     ch = changes.localCheckpoint(eager=False)
     n = ch.count()
     if not n:
@@ -919,7 +873,6 @@ def apply_changes_versioned(
     )
 
     nb = _store_nb(path, nb)
-    repair_pending_summary(spark, path)
     # within the batch: one row per key, the newest version
     # (deterministic tiebreak on change type for pathological frames
     # carrying two rows of the same key+version)
@@ -1035,7 +988,6 @@ def repair_replica(
             f"repair_replica: replica nb={nb} but expected table nb={nbe} "
             "— rebucket one side first (bucket_store.rebucket)"
         )
-    repair_pending_summary(spark, path)
     exp_cols = [
         c
         for c in read_store_pinned(spark, expected_path).columns
@@ -1133,7 +1085,6 @@ def vacuum_tombstones(
                 "would resurrect vacuumed keys; truncate_published first"
             )
     nb = _store_nb(path, nb)
-    repair_pending_summary(spark, path)
     cond = (F.col("_gone") == 1) & (F.col("_v") < below_version)
     kbs = [
         r["kb"]
@@ -1179,9 +1130,4 @@ def stream_apply_changes(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_changes(batch_df.sparkSession, path, batch_df, key, nb)
 
-    return (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(changes_stream, apply_batch, checkpoint_dir)

@@ -51,6 +51,7 @@ from etl_8million_data__spark.operators.bucket_store import (
     read_store,
 )
 from etl_8million_data__spark.operators.maintenance import swap_in
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 
 def _ids_frame(ids: DataFrame, id_col: str) -> DataFrame:
@@ -264,12 +265,7 @@ def stream_forget_requests(
             else:
                 forget_auto(spark, path, ids, id_col)
 
-    return (
-        requests.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(requests, apply_batch, checkpoint_dir)
 
 
 def compact_partitions(

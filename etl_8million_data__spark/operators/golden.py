@@ -66,6 +66,7 @@ from etl_8million_data__spark.operators.bucket_store import (
 from etl_8million_data__spark.operators.graph import connected_components
 from etl_8million_data__spark.operators.ivm import MAX_LITERAL_KEYS
 from etl_8million_data__spark.operators.partitioning import id_bucket, id_bucket_py
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 GOLDEN_NB = 16
 
@@ -560,12 +561,7 @@ def stream_golden_forget(
         )
         golden_forget(spark, root, ids)
 
-    return (
-        requests.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(requests, apply_batch, checkpoint_dir)
 
 
 def stream_golden_ingest(
@@ -614,9 +610,4 @@ def stream_golden_ingest(
         )
         mark_applied(root, batch_id)
 
-    return (
-        batch_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(batch_stream, apply_batch, checkpoint_dir)

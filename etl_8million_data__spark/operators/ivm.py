@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.operators.bucket_store import partition_filter
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 # Above this many distinct delta keys, skip the collect and bound the
 # old-side scan with a broadcast semi-join instead. MEASURED tradeoff
@@ -315,12 +316,7 @@ def stream_agg_view_upserts(
                 mark_applied(tmp, batch_id)
         upsert_parquet(spark, b, base_path, keys=[pk], order_col=order_col)
 
-    return (
-        updates_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(updates_stream, apply_batch, checkpoint_dir)
 
 
 def stream_join_view_increment(
@@ -357,9 +353,4 @@ def stream_join_view_increment(
         if delta.count():
             delta.write.mode("append").parquet(view_path)
 
-    return (
-        a_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(a_stream, apply_batch, checkpoint_dir)

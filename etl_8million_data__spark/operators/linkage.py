@@ -51,6 +51,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
+
 LINKAGE_PREFIX_LEN = 17
 
 
@@ -323,9 +325,4 @@ def stream_linkage_matches(
             batch_df, batch_id, store_path, matches_path, u, threshold, scope
         )
 
-    return (
-        batch_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(batch_stream, apply_batch, checkpoint_dir)

@@ -12,13 +12,17 @@ plus sorting within partitions so every file/row-group covers a tight,
 disjoint slice of the clustering key (the poor man's Z-order for a
 single key prefix).
 
-Every table rewrite in the package commits through :func:`swap_in`:
-the whole table, or a subset of its partition directories
-(``bucket_store.overwrite_buckets``). The new content is staged in full
-in a sibling directory, a durable commit record names the directories
-to swap, and only then do the renames start, so a crash at any step is
-rolled forward by :func:`recover_swap` on the next entry. Every small
-record or marker file is replaced through :func:`write_durable`.
+Every table write in the package commits through one commit record:
+:func:`swap_in` replaces the whole table or a subset of its partition
+directories (``bucket_store.overwrite_buckets``), and :func:`append_in`
+moves an append's new files into their partitions. Either one also
+swaps in, whole, any sidecar directory staged at the table root (the
+``_checksums/`` summary of the ``kb`` stores), so a table and its
+summary commit together. The new content is staged in full in a
+sibling directory, a durable commit record names what to move, and
+only then do the renames start, so a crash at any step is rolled
+forward by :func:`recover_swap` on the next entry. Every small record
+or marker file is replaced through :func:`write_durable`.
 """
 
 from __future__ import annotations
@@ -29,8 +33,8 @@ import math
 import os
 import shutil
 import uuid
-from collections.abc import Iterator, Sequence
-from contextlib import contextmanager
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import AbstractContextManager, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -76,9 +80,10 @@ def _roll_forward(path: str, txn: str, parts: list[str], new: list[str]) -> None
     """Carry out the commit record of swap ``txn``: move each of
     ``parts`` (paths relative to ``path``; ``""`` is the whole table)
     aside, move the staged copies of ``new`` in, then delete the
-    swapped-out tree, the staging leftovers and the record. Every step
-    first checks where the data is, so rerunning it after a crash at
-    any step finishes the same commit."""
+    swapped-out tree, the staging leftovers and the record. A part may
+    be a directory or a single file. Every step first checks where the
+    data is, so rerunning it after a crash at any step finishes the
+    same commit."""
     tmp, old, record = _swap_names(path, txn)
 
     def at(root: str, rel: str) -> str:
@@ -123,38 +128,34 @@ def recover_swap(path: str) -> None:
             os.remove(p)
 
 
+def _staged(tmp: str, part_cols: Sequence[str], leaf: str = "") -> list[str]:
+    """What a partitioned staging tree holds, relative to ``tmp``: each
+    partition directory (or, with ``leaf``, each entry inside one that
+    matches ``leaf``), plus each sidecar directory at the root."""
+    leaves = os.path.join(*["*=*"] * len(part_cols), leaf)
+    found = glob.glob(os.path.join(glob.escape(tmp), leaves))
+    found += glob.glob(os.path.join(glob.escape(tmp), "_*", ""))
+    return [os.path.relpath(p, tmp) for p in found]
+
+
 @contextmanager
-def swap_in(
-    path: str, part_cols: Sequence[str] = (), affected: Sequence[Sequence] = ()
+def _commit(
+    path: str, plan: Callable[[str], tuple[list[str], list[str]]] | None
 ) -> Iterator[str]:
-    """The commit door: yield a fresh staging directory for the new
-    content and swap it in when the block exits normally.
-
-    - Without ``part_cols`` (or while ``path`` does not exist yet) the
-      whole table is swapped.
-    - With ``part_cols`` the staging directory holds a partitioned
-      write, and only partition directories are swapped: every one the
-      write produced, plus each of the ``affected`` value tuples. An
-      affected partition the write left empty is removed. Untouched
-      partition directories and the root's sidecars stay as they are.
-
-    A block that raises leaves the live table untouched and the staging
-    directory deleted. A crash after the block is rolled forward by the
-    next :func:`recover_swap`. A reader during the renames may see some
-    partitions new and others old."""
+    """Yield a fresh staging directory; when the block exits normally,
+    write the commit record and roll it forward. ``plan(tmp)`` gives
+    the record's ``(parts, new)`` for an existing table; without it, or
+    while ``path`` does not exist yet, the whole table is swapped."""
     recover_swap(path)
     txn = uuid.uuid4().hex[:8]
     tmp, _, record = _swap_names(path, txn)
     _ACTIVE.add(tmp)
     try:
         yield tmp
-        if part_cols and os.path.isdir(path):
-            leaves = os.path.join(glob.escape(tmp), *["*=*"] * len(part_cols))
-            new = [os.path.relpath(p, tmp) for p in glob.glob(leaves)]
-            parts = sorted({_partition_dir(part_cols, k) for k in affected} | set(new))
+        if plan and os.path.isdir(path):
+            parts, new = plan(tmp)
         else:
-            new = [""] if os.path.exists(tmp) else []
-            parts = [""]
+            parts, new = [""], [""] if os.path.exists(tmp) else []
         write_durable(record, json.dumps({"txn": txn, "parts": parts, "new": new}))
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -162,6 +163,52 @@ def swap_in(
     finally:
         _ACTIVE.discard(tmp)
     _roll_forward(path, txn, parts, new)
+
+
+def swap_in(
+    path: str, part_cols: Sequence[str] = (), affected: Sequence[Sequence] = ()
+) -> AbstractContextManager[str]:
+    """The commit door: a context manager that yields a fresh staging
+    directory for the new content and swaps it in when the block exits
+    normally.
+
+    - Without ``part_cols`` (or while ``path`` does not exist yet) the
+      whole table is swapped.
+    - With ``part_cols`` the staging directory holds a partitioned
+      write, and only partition directories are swapped: every one the
+      write produced, plus each of the ``affected`` value tuples. An
+      affected partition the write left empty is removed. Untouched
+      partition directories and the root's sidecars stay as they are,
+      except a sidecar directory staged at the root, which replaces
+      its live copy whole.
+
+    A block that raises leaves the live table untouched and the staging
+    directory deleted. A crash after the block is rolled forward by the
+    next :func:`recover_swap`. A reader during the renames may see some
+    partitions new and others old."""
+
+    def plan(tmp: str) -> tuple[list[str], list[str]]:
+        new = _staged(tmp, part_cols)
+        return sorted({_partition_dir(part_cols, k) for k in affected} | set(new)), new
+
+    return _commit(path, plan if part_cols else None)
+
+
+def append_in(path: str, part_cols: Sequence[str]) -> AbstractContextManager[str]:
+    """The append form of :func:`swap_in`, under the same commit record:
+    the staging directory holds a partitioned write of the new rows
+    only, and each of its data files moves into its live partition
+    directory. Spark's part-file names are unique per write job, so a
+    move never replaces a live file, and a rerun after a crash skips
+    the files already moved. A sidecar directory staged at the root
+    replaces its live copy whole. While ``path`` does not exist yet the
+    staged tree becomes the table."""
+
+    def plan(tmp: str) -> tuple[list[str], list[str]]:
+        new = _staged(tmp, part_cols, "[!._]*")
+        return new, new
+
+    return _commit(path, plan)
 
 
 def parquet_data_files(path: str) -> list[str]:

@@ -60,6 +60,7 @@ from etl_8million_data__spark.operators.bucket_store import (
     write_schema,
 )
 from etl_8million_data__spark.operators.partitioning import id_bucket
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 SCD2_NB = 16
 
@@ -430,9 +431,4 @@ def stream_scd2_changes(
                 scd2_apply_late(spark, root, bd)
         mark_applied(root, batch_id)
 
-    return (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(changes_stream, apply_batch, checkpoint_dir)

@@ -79,45 +79,46 @@ def _load() -> None:
 # registration order after the prioritized block; stale names in the
 # list are ignored.
 _PRIORITY: tuple[str, ...] = (
-    # NEW/changed in round 14 (first external evidence / oracle
-    # changed): the compaction advisor arm; the bucket-count advisor's
-    # byte-budget third arm (+100TB projection row); the queries whose
-    # doors changed shape (manifest-flip rebucket, pinned/retained CDC
-    # log, un-forced eligibility broadcast)
+    # builds reach the commit door or the checksum summary, both
+    # changed when the summary began committing under its rows'
+    # record (re-verify first)
     "advisor_compaction",
     "ops_cdc_retention",
     "ops_cdc_stream_evolution",
-    "ops_cdc_log_fsck",
     "ops_replica_repair",
     "advisor_bucket_count",
     "ops_rebucket_migration",
     "ops_cdc_producer_stream",
     "ops_cdc_apply_versioned",
-    # NEW in round 13 (first external evidence; the rest of the r13
-    # block moved into the round-14 block above)
     "ops_retention_sweep",
     "advisor_rebucket_telemetry",
     "ops_store_compaction_audit",
     "ops_schema_evolution",
-    # NEW in round 12 (first external evidence)
     "ops_replica_audit",
+    "ops_store_lifecycle_audit",
+    "ops_cdc_apply",
+    "linkage_golden_records_increment",
+    "linkage_forget_golden",
+    "events_scd2_incremental",
+    "ops_table_diff",
+    "linkage_golden_fsck",
+    "ivm_join_view_retract",
+    # NEW/changed in round 14 (first external evidence / oracle
+    # changed): the compaction advisor arm; the bucket-count advisor's
+    # byte-budget third arm (+100TB projection row); the queries whose
+    # doors changed shape (manifest-flip rebucket, pinned/retained CDC
+    # log, un-forced eligibility broadcast)
+    "ops_cdc_log_fsck",
+    # NEW in round 12 (first external evidence)
     "advisor_layout_exec",
     "ops_version_cdc",
     "advisor_layout_drift",
-    "ops_store_lifecycle_audit",
-    "ops_cdc_apply",
     # NEW in round 11 (first external evidence)
-    "linkage_golden_records_increment",
-    "linkage_forget_golden",
     "advisor_salted_join_exec",
-    "events_scd2_incremental",
     "advisor_layout_zonemap",
     "corpus_incremental_curation",
-    "ops_table_diff",
-    "linkage_golden_fsck",
     # NEW in round 10 (first external evidence)
     "linkage_e2e_golden_records",
-    "ivm_join_view_retract",
     "advisor_join_strategy",
     "privacy_t_closeness",
     "linkage_blocking_quality",
@@ -246,7 +247,6 @@ _PRIORITY: tuple[str, ...] = (
     "events_concurrent_sessions",
     "dedup_graph_triangles",
     "customer_rfm_segments",
-    "corpus_bpe_token_counts",
     "events_value_outliers_mad",
     "events_type_pagerank",
     "orders_market_basket",
@@ -293,29 +293,6 @@ _PRIORITY: tuple[str, ...] = (
     "embedding_label_centroids",
     "range_bounds_sampled_orders",
     "sketch_hll_sharded_union",
-    "approx_distinct_users_hll",
-    "approx_percentile_prices",
-    "skew_salted_event_type_totals",
-    "json_quarantine_split",
-    "data_quality_expectations",
-    "sketch_kmv_distinct_customers",
-    "sketch_count_min_heavy_hitters",
-    "winsorized_value_stats_per_type",
-    "funnel_signup_click_purchase",
-    "cohort_weekly_retention",
-    "events_markov_transitions",
-    "events_value_outliers_zscore",
-    "corpus_term_frequencies",
-    "text_repetition_ratio",
-    "corpus_token_first_positions",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_price_part_per_type_size",
-    "tpch_q7_nation_pair_volume",
-    "tpch_q8_nation_market_share",
-    "tpch_q11_nation_balance_concentration",
-    "tpch_q12_late_lines_priority_counts",
-    "tpch_q15_top_supplier_by_quarter_revenue",
-    "tpch_q16_supplier_count_by_part_attrs",
     "dedup_ngram_jaccard_pairs",
     # already driver-green in earlier rounds, rotate behind
     "json_variant_semistructured",

@@ -1,6 +1,8 @@
 """One measurement core: the session warm-up, the one timing loop
-(``sample``), the query bench's timed boundary (``time_query``) and a
-job-group counter (``count_jobs``), for ``bench.py`` and ``tools/``.
+(``sample``), the query bench's timed boundary (``time_query``), a
+job-group counter (``count_jobs``) and the executed-plan scan metrics
+(``scan_partition_metrics``), for ``bench.py``, ``tools/`` and the
+tests.
 """
 
 from __future__ import annotations
@@ -87,3 +89,53 @@ def count_jobs(sc: SparkContext, group: str) -> Iterator[SimpleNamespace]:
         jobs.n = len(set(job_ids(group)) - before)
         for k, v in prev.items():
             sc.setLocalProperty(k, v)
+
+
+def scan_partition_metrics(df: DataFrame, path_fragment: str) -> list[dict]:
+    """Execute ``df`` and return the {numFiles, numPartitions} metrics
+    of every FileSourceScan whose location contains ``path_fragment`` —
+    the ground truth for partition-pruning claims (plan text can carry
+    a dynamicpruning filter that degrades to `true` at runtime; these
+    metrics cannot lie)."""
+    df.collect()
+    found: list[dict] = []
+    seen: set[str] = set()
+
+    def matches(node) -> bool:
+        # node.toString() TRUNCATES long locations — when pytest's
+        # numbered temp directory gained a digit, the index dir name
+        # fell off the truncated string and this helper silently found
+        # no scans. The file index's rootPaths are never truncated;
+        # toString stays as fallback.
+        try:
+            roots = node.relation().location().rootPaths().mkString(",")
+            if path_fragment in roots:
+                return True
+        except Exception:
+            pass
+        return path_fragment in node.toString()
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if "FileSourceScan" in name and matches(node):
+            key = node.toString().splitlines()[0]
+            if key not in seen:
+                seen.add(key)
+                m = node.metrics()
+                it = m.keys().iterator()
+                vals = {}
+                while it.hasNext():
+                    k = it.next()
+                    vals[k] = m.get(k).get().value()
+                found.append(vals)
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+        for attr in ("executedPlan", "finalPhysicalPlan", "plan"):
+            try:
+                walk(getattr(node, attr)())
+            except Exception:
+                pass
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found

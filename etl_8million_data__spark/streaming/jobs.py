@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.exact import cents
 from etl_8million_data__spark.operators.upsert import upsert_parquet
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,12 +146,7 @@ def stream_upsert_to_parquet(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(batch_df.sparkSession, batch_df, path, keys, order_col)
 
-    return (
-        df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(df, apply_batch, checkpoint_dir)
 
 
 def click_purchase_pairs_stream(
@@ -225,12 +221,7 @@ def stream_upsert_versioned(
             query_id=scope,
         )
 
-    return (
-        df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(df, apply_batch, checkpoint_dir)
 
 
 def doc_quality_profile_stream(docs_stream: DataFrame) -> DataFrame:
@@ -306,12 +297,7 @@ def stream_dedup_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         dedup_ingest_batch(batch_df, batch_id, index_path, out_path, scope)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(docs_stream, apply_batch, checkpoint_dir)
 
 
 def stream_ann_index_increment(
@@ -335,12 +321,7 @@ def stream_ann_index_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_vectors(batch_df, index_path, weights, n_bits, batch_tag=str(batch_id))
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def stream_ivfpq_index_increment(
@@ -367,12 +348,7 @@ def stream_ivfpq_index_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_vectors_ivfpq(batch_df, index_path, batch_tag=str(batch_id))
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def media_ingest_batch(
@@ -421,12 +397,7 @@ def stream_media_dedup_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         media_ingest_batch(batch_df, batch_id, index_path, out_path, scope)
 
-    return (
-        media_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(media_stream, apply_batch, checkpoint_dir)
 
 
 def winnow_ingest_batch(
@@ -472,12 +443,7 @@ def stream_winnowing_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         winnow_ingest_batch(batch_df, batch_id, index_path, out_path, scope)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(docs_stream, apply_batch, checkpoint_dir)
 
 
 def stream_sign_index_increment(
@@ -502,12 +468,7 @@ def stream_sign_index_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_vectors_sign(batch_df, index_path, batch_tag=str(batch_id))
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def stream_kmeans_index_increment(
@@ -535,12 +496,7 @@ def stream_kmeans_index_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_vectors_kmeans(batch_df, index_path, batch_tag=str(batch_id))
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def stream_int8_index_increment(
@@ -566,12 +522,7 @@ def stream_int8_index_increment(
             batch_df, index_path, weights, n_bits, batch_tag=str(batch_id)
         )
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def stream_probe_score_increment(
@@ -595,12 +546,7 @@ def stream_probe_score_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         score_new_vectors(batch_df, weights_path, out_path, batch_tag=str(batch_id))
 
-    return (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(emb_stream, apply_batch, checkpoint_dir)
 
 
 def contamination_ingest_batch(
@@ -666,12 +612,7 @@ def stream_contamination_guard(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         contamination_ingest_batch(batch_df, batch_id, index_path, out_path, scope)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(docs_stream, apply_batch, checkpoint_dir)
 
 
 def stream_postings_increment(
@@ -691,12 +632,7 @@ def stream_postings_increment(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         append_documents(batch_df, index_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(docs_stream, apply_batch, checkpoint_dir)
 
 
 def stream_quantile_sketch_increment(
@@ -750,9 +686,4 @@ def stream_quantile_sketch_increment(
             )
             merged.coalesce(1).write.mode("overwrite").parquet(tmp)
 
-    return (
-        rows.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch_available_now(rows, apply_batch, checkpoint_dir)

@@ -28,6 +28,7 @@ from etl_8million_data__spark.streaming.stateful import (
     OUTPUT_SCHEMA,
     STATE_SCHEMA,
 )
+from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -248,10 +249,6 @@ def run_contamination_guard_tws(
         if kept.count():
             kept.write.mode("append").parquet(out_path)
 
-    return (
-        emit_once_tws_stream(docs_stream)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch_available_now(
+        emit_once_tws_stream(docs_stream), apply_batch, checkpoint_dir
     )

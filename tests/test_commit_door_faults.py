@@ -1,10 +1,14 @@
-"""Crash safety of the one commit door (``maintenance.swap_in``).
+"""Crash safety of the one commit record (``maintenance.swap_in`` and
+its append form ``append_in``).
 
 Each case first counts the ``os.rename``/``os.replace``/``shutil.rmtree``
 calls of a clean run, then for every k up to that count makes the k-th
 call raise, as a crash there would. After the crash a rerun of the same
 operation must give the clean run's rows and leave no staging,
-swapped-out or commit-record tree behind."""
+swapped-out or commit-record tree behind. For the ``kb`` stores the
+checksum summary must commit with its rows: right after the crash the
+summarized diff agrees with the full scan, and the summary audits
+clean before and after the rerun."""
 
 from __future__ import annotations
 
@@ -14,7 +18,24 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from etl_8million_data__spark.operators.bucket_store import read_store
+from pyspark.errors import StreamingQueryException
+
+from etl_8million_data__spark.operators.bucket_store import (
+    bucket_file_counts,
+    compact_buckets,
+    read_store,
+    read_store_pinned,
+    store_exists,
+)
+from etl_8million_data__spark.operators.diff import (
+    append_bucketed,
+    checksums_fsck,
+    delete_keys_bucketed,
+    diff_tables,
+    read_checksums,
+    stream_append_bucketed,
+    write_bucketed,
+)
 from etl_8million_data__spark.operators.forget import forget_partitioned
 from etl_8million_data__spark.operators.partitioning import id_bucket_py
 from etl_8million_data__spark.operators.upsert import upsert_parquet
@@ -62,10 +83,11 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
-def _sweep(monkeypatch, tmp_path, setup, op, read, peek=True):
+def _sweep(monkeypatch, tmp_path, setup, op, read, peek=True, check=None):
     """Run ``op`` on a fresh ``setup`` clean, then crashed at every k;
     returns the clean rows, the rows before ``op``, and (with ``peek``)
-    what a reader saw right after each crash."""
+    what a reader saw right after each crash. ``check(d)`` runs right
+    after each crash, before any other call."""
     clean_dir = tmp_path / "clean"
     setup(clean_dir)
     before = read(clean_dir)
@@ -82,6 +104,8 @@ def _sweep(monkeypatch, tmp_path, setup, op, read, peek=True):
             Faults(m, k)
             with pytest.raises(Crash):
                 op(d)
+        if check:
+            check(d)
         if peek:
             seen.append(read(d))
         op(d)
@@ -205,3 +229,215 @@ def test_failed_quote_write_keeps_the_previous_snapshot(spark, tmp_path, monkeyp
         run_all(spark, str(csv), wh, _fetch_one)
     assert read() == before
     assert not _leftovers(tmp_path)
+
+
+# ------------------------------------------------ the kb stores' doors
+
+KV = "k long, v long"
+
+
+def _kv(spark, rows: dict):
+    return spark.createDataFrame(sorted(rows.items()), KV)
+
+
+def _kv_rows(spark, t: str) -> list[tuple]:
+    if not store_exists(t):
+        return []
+    return sorted(tuple(r) for r in read_store_pinned(spark, t).select("k", "v").collect())
+
+
+def _audited(spark, t: str) -> tuple[list[tuple], int]:
+    """The store's rows and its summary audit's mismatch count."""
+    return _kv_rows(spark, t), checksums_fsck(spark, t).first()["n_mismatched"]
+
+
+def _diff_agrees(spark, t: str, ref: str) -> None:
+    """The summary is present and the diff read through it agrees with
+    the full-scan diff."""
+    assert read_checksums(spark, t)[0] is not None, "summary lost"
+
+    def diff(use_summary):
+        d = diff_tables(spark, t, ref, ["k"], ["v"], use_summary=use_summary)
+        return sorted(tuple(r) for r in d.collect())
+
+    assert diff(True) == diff(False)
+
+
+BASE = {k: k * 10 for k in range(30)}
+BATCH = {100: 1000, 101: 1010}
+
+
+def _template(spark, tmp_path, ref_rows, appends=()):
+    """A summarized store of BASE (plus ``appends``, one door call
+    each) to copy per case, and a summarized reference table of
+    ``ref_rows`` to diff against."""
+    template = str(tmp_path / "template")
+    write_bucketed(_kv(spark, BASE), template, "k", checksums=True)
+    for rows in appends:
+        append_bucketed(_kv(spark, rows), template, "k")
+    ref = str(tmp_path / "ref")
+    write_bucketed(_kv(spark, ref_rows), ref, "k", checksums=True)
+    return template, ref
+
+
+def _append_once(spark, t: str, rows: dict) -> None:
+    """Rerun of an append: the commit is all or nothing, so append the
+    batch unless it landed."""
+    first = min(rows)
+    if not any(k == first for k, _ in _kv_rows(spark, t)):
+        append_bucketed(_kv(spark, rows), t, "k")
+
+
+def test_summarized_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    template, ref = _template(spark, tmp_path, {**BASE, **BATCH})
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: _append_once(spark, str(d / "t"), BATCH),
+        lambda d: _audited(spark, str(d / "t")),
+        check=lambda d: _diff_agrees(spark, str(d / "t"), ref),
+    )
+    assert clean == (sorted({**BASE, **BATCH}.items()), 0)
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_stream_append_batch_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    template, ref = _template(spark, tmp_path, {**BASE, **BATCH})
+    src = str(tmp_path / "src")
+    _kv(spark, BATCH).write.parquet(src)
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    def op(d):
+        stream = spark.readStream.schema(KV).parquet(src)
+        q = stream_append_bucketed(stream, str(d / "t"), "k", str(d / "ckpt"))
+        try:
+            q.awaitTermination()
+        except StreamingQueryException as e:
+            if "crash at call" in str(e):
+                raise Crash(str(e)) from e
+            raise
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        op,
+        lambda d: _audited(spark, str(d / "t")),
+        check=lambda d: _diff_agrees(spark, str(d / "t"), ref),
+    )
+    assert clean == (sorted({**BASE, **BATCH}.items()), 0)
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_keyed_delete_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    victims = [0, 7]
+    template, ref = _template(
+        spark, tmp_path, {k: v for k, v in BASE.items() if k not in victims}
+    )
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    def op(d):
+        ids = spark.createDataFrame([(k,) for k in victims], "k long")
+        delete_keys_bucketed(spark, str(d / "t"), ids, "k")
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        op,
+        lambda d: _audited(spark, str(d / "t")),
+        check=lambda d: _diff_agrees(spark, str(d / "t"), ref),
+    )
+    assert [k for k, _ in clean[0]] == [k for k in sorted(BASE) if k not in victims]
+    assert clean[1] == 0
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_bucket_compaction_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    more = {102: 1020, 103: 1030}
+    template, ref = _template(
+        spark, tmp_path, {**BASE, **BATCH, **more}, appends=(BATCH, more)
+    )
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    def read(d):
+        t = str(d / "t")
+        return *_audited(spark, t), sorted(bucket_file_counts(t, "kb").items())
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: compact_buckets(spark, str(d / "t"), "kb"),
+        read,
+        check=lambda d: _diff_agrees(spark, str(d / "t"), ref),
+    )
+    assert clean[:2] == before[:2] and clean[1] == 0
+    assert max(n for _, n in clean[2]) == 1
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_first_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    def setup(d):
+        d.mkdir()
+
+    def check(d):
+        t = str(d / "t")
+        if store_exists(t):
+            ref = str(tmp_path / "ref")
+            full = diff_tables(spark, t, ref, ["k"], ["v"], use_summary=False)
+            assert sorted(map(tuple, diff_tables(spark, t, ref, ["k"], ["v"]).collect())) == (
+                sorted(map(tuple, full.collect()))
+            )
+
+    write_bucketed(_kv(spark, BATCH), str(tmp_path / "ref"), "k")
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: _append_once(spark, str(d / "t"), BATCH),
+        lambda d: _kv_rows(spark, str(d / "t")),
+        check=check,
+    )
+    assert before == [] and clean == sorted(BATCH.items())
+    assert all(s in (before, clean) for s in seen)
+    # the store each crash left behind takes the next append
+    for d in sorted(tmp_path.glob("k*")):
+        append_bucketed(_kv(spark, {200: 2000}), str(d / "t"), "k")
+        assert _kv_rows(spark, str(d / "t")) == sorted({**BATCH, 200: 2000}.items())
+
+
+def test_crash_between_summary_rows_and_meta_keeps_the_summary(spark, tmp_path, monkeypatch):
+    """A crash after an append's new summary rows are written but before
+    their ``_meta.json`` is must not cost the store its summary: the
+    next append still finds it, the audit is clean and the diff reads
+    through it."""
+    template, ref = _template(spark, tmp_path, {**BASE, **BATCH, 200: 2000})
+    t = str(tmp_path / "t")
+    shutil.copytree(template, t)
+    real = os.replace
+
+    def replace(src, dst, *args, **kwargs):
+        if str(dst).endswith("_meta.json"):
+            raise Crash(f"crash before {dst}")
+        return real(src, dst, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", replace)
+        with pytest.raises(Crash):
+            append_bucketed(_kv(spark, BATCH), t, "k")
+    _append_once(spark, t, BATCH)
+    append_bucketed(_kv(spark, {200: 2000}), t, "k")
+    assert _audited(spark, t) == (sorted({**BASE, **BATCH, 200: 2000}.items()), 0)
+    _diff_agrees(spark, t, ref)

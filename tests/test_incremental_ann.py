@@ -273,7 +273,7 @@ def test_ivfpq_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         build_index_ivfpq,
         probe_index_ivfpq,
     )
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = str(tmp_path / "ivfpq_dpp")
@@ -291,7 +291,7 @@ def test_ivfpq_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
     df = probe_index_ivfpq(spark, idx, q, k=3, nprobe=2)
     # match the scan by its unique output column (FileSourceScan's
     # toString truncates long tmp paths)
-    metrics = _scan_partition_metrics(df, "codes_packed")
+    metrics = scan_partition_metrics(df, "codes_packed")
     assert metrics, "no codes scan found in executed plan"
     # 2 queries x nprobe=2 -> at most 4 of the 8 cells can be probed
     for m in metrics:
@@ -664,7 +664,7 @@ def test_kmeans_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         build_index_kmeans,
         probe_index_kmeans,
     )
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     emb = _full_emb(spark, sf_dir)
     idx = str(tmp_path / "km_dpp")
@@ -680,7 +680,7 @@ def test_kmeans_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         .limit(2)
     )
     df = probe_index_kmeans(spark, idx, q, k=3, nprobe=2)
-    metrics = _scan_partition_metrics(df, "km_dpp/vectors")
+    metrics = scan_partition_metrics(df, "km_dpp/vectors")
     assert metrics, "no vectors scan found in executed plan"
     # 2 queries x nprobe=2 -> at most 4 of the 8 cells can be probed
     for m in metrics:

@@ -31,7 +31,7 @@ def _li(spark, sf_dir):
 def test_predicted_skip_materializes_on_rewritten_table(
     spark, sf_dir, tmp_path
 ):
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     li = _li(spark, sf_dir).localCheckpoint(eager=True)
     total = li.count()
@@ -69,7 +69,7 @@ def test_predicted_skip_materializes_on_rewritten_table(
             (F.col("ship_d") >= F.lit(LO)) & (F.col("ship_d") <= F.lit(HI))
         )
         n_match = df.count()
-        metrics = _scan_partition_metrics(df, path)
+        metrics = scan_partition_metrics(df, path)
         assert metrics, f"no scan found for {path}"
         return n_match, max(m.get("numOutputRows", 0) for m in metrics)
 
@@ -125,7 +125,7 @@ def test_drift_degrades_real_scans_and_recompaction_recovers(
     recompacting through apply_layout restores it. Measured on
     executed scan numOutputRows, mirroring the advisor's simulated
     read-amplification."""
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     li = _li(spark, sf_dir).localCheckpoint(eager=True)
     base = li.filter(F.col("l_orderkey") % 4 != 0)
@@ -138,7 +138,7 @@ def test_drift_degrades_real_scans_and_recompaction_recovers(
             (F.col("ship_d") >= F.lit(LO)) & (F.col("ship_d") <= F.lit(HI))
         )
         n = df.count()
-        m = _scan_partition_metrics(df, p)
+        m = scan_partition_metrics(df, p)
         return n, max(x.get("numOutputRows", 0) for x in m)
 
     n0, read0 = read_rows()
@@ -163,7 +163,7 @@ def test_drift_degrades_real_scans_and_recompaction_recovers(
     )
     n2 = df2.count()
     read2 = max(
-        x.get("numOutputRows", 0) for x in _scan_partition_metrics(df2, p2)
+        x.get("numOutputRows", 0) for x in scan_partition_metrics(df2, p2)
     )
     assert n2 == n1, "recompaction changed the answer"
     total = li.count()

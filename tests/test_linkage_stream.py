@@ -113,7 +113,7 @@ def test_probe_prunes_to_batch_blocks_and_matches_flat(spark, sf_dir, tmp_path):
     incremental_ann literal-prune contract: plan-text dynamicpruning
     was measured degrading to `true`; the literal filter prunes at
     file-listing time)."""
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     store, incoming = _split(spark, sf_dir)
     store_path = str(tmp_path / "blkstore")
@@ -130,7 +130,7 @@ def test_probe_prunes_to_batch_blocks_and_matches_flat(spark, sf_dir, tmp_path):
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
     assert as_set(got) == as_set(want)
 
-    metrics = _scan_partition_metrics(got, "blkstore")
+    metrics = scan_partition_metrics(got, "blkstore")
     assert metrics, "no store scan found in executed plan"
     for m in metrics:
         assert m["numPartitions"] <= 3, m

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from etl_8million_data__spark.plans import all_queries
+from etl_8million_data__spark.profile import scan_partition_metrics
 
 SF = "/root/testdata/sf0.001"
 
@@ -164,56 +165,6 @@ def test_split_leakage_gram_join_is_unhinted(spark):
     assert _broadcast_hint_sides(df) == []
 
 
-def _scan_partition_metrics(df, path_fragment: str) -> list[dict]:
-    """Execute ``df`` and return the {numFiles, numPartitions} metrics
-    of every FileSourceScan whose location contains ``path_fragment`` —
-    the ground truth for partition-pruning claims (plan text can carry
-    a dynamicpruning filter that degrades to `true` at runtime; these
-    metrics cannot lie)."""
-    df.collect()
-    found: list[dict] = []
-    seen: set[str] = set()
-
-    def matches(node) -> bool:
-        # node.toString() TRUNCATES long locations — when pytest's
-        # incrementing /tmp/pytest-of-root/pytest-NNN counter gained a
-        # digit, the index dir name fell off the truncated string and
-        # this helper silently found no scans. The file index's
-        # rootPaths are never truncated; toString stays as fallback.
-        try:
-            roots = node.relation().location().rootPaths().mkString(",")
-            if path_fragment in roots:
-                return True
-        except Exception:
-            pass
-        return path_fragment in node.toString()
-
-    def walk(node):
-        name = node.getClass().getSimpleName()
-        if "FileSourceScan" in name and matches(node):
-            key = node.toString().splitlines()[0]
-            if key not in seen:
-                seen.add(key)
-                m = node.metrics()
-                it = m.keys().iterator()
-                vals = {}
-                while it.hasNext():
-                    k = it.next()
-                    vals[k] = m.get(k).get().value()
-                found.append(vals)
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-        for attr in ("executedPlan", "finalPhysicalPlan", "plan"):
-            try:
-                walk(getattr(node, attr)())
-            except Exception:
-                pass
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return found
-
-
 def test_ann_index_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
     """probe_index must READ only the probed cells' files — asserted on
     the executed scan's numPartitions metric, not on plan text (the
@@ -246,7 +197,7 @@ def test_ann_index_probe_reads_only_probed_partitions(spark, sf_dir, tmp_path):
         .limit(4)
     )
     df = probe_index(spark, idx, q, W, 4, k=3, nprobe=2)
-    metrics = _scan_partition_metrics(df, "annidx")
+    metrics = scan_partition_metrics(df, "annidx")
     assert metrics, "no index scan found in executed plan"
     # 4 queries x nprobe=2 -> at most 8 distinct cells can be probed
     for m in metrics:

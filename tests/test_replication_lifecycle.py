@@ -5,9 +5,8 @@ evolution THROUGH the stream (no silent column drop); log retention
 bounds the file count and gives vacuum_tombstones a validated replay
 horizon instead of a docstring promise; the rebucket migration commits
 via an atomic manifest flip (a crash on either side of the flip leaves
-a fully-consistent store); the overwrite door preserves a predecessor's
-crash marker instead of clobbering it; and a fresh store's first append
-never writes the marker that could brick it."""
+a fully-consistent store); and the log fsck/repair pair finds
+planted faults without touching data."""
 
 from __future__ import annotations
 
@@ -20,12 +19,10 @@ from etl_8million_data__spark.operators.bucket_store import (
     advise_compaction,
     bucket_file_counts,
     compact_buckets,
-    read_pending,
     read_store_pinned,
     rebucket,
     resolve_root,
     store_bytes,
-    write_pending,
 )
 from etl_8million_data__spark.operators.diff import (
     append_bucketed,
@@ -363,82 +360,6 @@ def test_rebucket_flip_then_doors_and_second_migration(spark, tmp_path):
         r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
     } == ref
     assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-
-
-# ------------------------------------------------- crash-marker hygiene
-
-
-def test_overwrite_door_preserves_predecessor_crash_record(
-    spark, tmp_path
-):
-    """A door that died between its data write and its summary update
-    leaves a _pending_summary marker; a LATER door that goes through
-    overwrite_buckets (compaction here) must repair that record first —
-    round 13 clobbered it, leaving the summary silently stale."""
-    from etl_8million_data__spark.operators.partitioning import id_bucket
-
-    pa = str(tmp_path / "t")
-    ref = {k: k * 10 for k in range(30)}
-    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
-    # build compactable debt honestly through the door
-    batch = {k: k * 10 for k in range(30, 60)}
-    append_bucketed(_frame(spark, batch), pa, "k")
-    ref.update(batch)
-
-    # crash simulation: data landed, summary didn't, marker left behind
-    crash = {100: 1000, 101: 1010}
-    staged = _frame(spark, crash).withColumn("kb", id_bucket(F.col("k"), 16))
-    kbs = [r["kb"] for r in staged.select("kb").distinct().collect()]
-    write_pending(pa, 7, kbs)
-    staged.repartition(F.col("kb")).write.mode("append").partitionBy(
-        "kb"
-    ).parquet(pa)
-    spark.catalog.refreshByPath(pa)
-    ref.update(crash)
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] > 0
-
-    # compaction (an overwrite_buckets door with no repair of its own)
-    # must repair the predecessor's buckets, not clobber the marker
-    compact_buckets(spark, pa, "kb")
-    assert read_pending(pa) is None
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-    assert {
-        r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
-    } == ref
-
-
-def test_fresh_store_first_append_writes_no_marker(spark, tmp_path):
-    """The marker protects only the checksum summary; writing it before
-    a fresh store's first data ever lands would brick the store if the
-    door crashed in between (a marker-only directory fails the layout
-    check forever). The append doors must skip it when no summary
-    exists — observed directly via the marker author."""
-    import etl_8million_data__spark.operators.bucket_store as BS
-
-    calls = []
-    real = BS.write_pending
-
-    def spying_write_pending(root, batch_id, kbs):
-        calls.append(root)
-        return real(root, batch_id, kbs)
-
-    # the doors import write_pending from bucket_store at call time
-    BS.write_pending = spying_write_pending
-    try:
-        pa = str(tmp_path / "fresh")
-        # append-creates-store: no summary -> no marker, ever
-        append_bucketed(_frame(spark, {1: 10, 2: 20}), pa, "k")
-        assert calls == []
-        assert read_pending(pa) is None
-
-        # a summarized store keeps the marker discipline
-        pb = str(tmp_path / "summarized")
-        write_bucketed(_frame(spark, {1: 10}), pb, "k", checksums=True)
-        append_bucketed(_frame(spark, {2: 20}), pb, "k")
-        assert calls == [pb]
-        assert read_pending(pb) is None  # cleared after the splice
-    finally:
-        BS.write_pending = real
 
 
 def test_log_fsck_finds_plants_and_repair_never_touches_data(

@@ -248,14 +248,14 @@ def test_dynamic_partition_pruning(spark, sf_dir):
         # The robust form: the dim's key set is bounded -> collect it
         # and push a literal partition filter; the executed scan must
         # read exactly 1 of the 5 priority partitions.
-        from tests.test_plan_invariants import _scan_partition_metrics
+        from etl_8million_data__spark.profile import scan_partition_metrics
 
         keys = [
             r.prio for r in dim.filter(F.col("label") == "rush").collect()
         ]
         lit_q = fact.filter(F.col("o_orderpriority").isin(keys))
         assert lit_q.count() == expected
-        metrics = _scan_partition_metrics(lit_q, "o_orderkey")
+        metrics = scan_partition_metrics(lit_q, "o_orderkey")
         assert metrics, "no fact scan found"
         assert all(m["numPartitions"] == 1 for m in metrics), metrics
 

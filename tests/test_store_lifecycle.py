@@ -1,8 +1,7 @@
 """Round-13 lifecycle doors for the kb=-bucketed stores
 (operators/bucket_store.py + operators/diff.py + operators/cdc_log.py):
 per-bucket compaction pays off append small-files debt with the
-checksum summary kept honest; the pending-summary marker repairs a
-door that died between its data append and its summary update; a
+checksum summary kept honest; a
 wrong bucket modulus raises instead of silently pruning to the wrong
 buckets; the versioned CDC apply converges under arbitrarily shuffled
 / redelivered batches; rebucket migrates the modulus with a content
@@ -21,10 +20,8 @@ from etl_8million_data__spark.operators.bucket_store import (
     bucket_file_counts,
     compact_buckets,
     evolve_add_columns,
-    read_pending,
     read_store_pinned,
     rebucket,
-    write_pending,
 )
 from etl_8million_data__spark.operators.diff import (
     append_bucketed,
@@ -90,40 +87,6 @@ def test_compact_buckets_pays_off_append_debt(spark, tmp_path):
 
     # second compaction is a no-op
     assert compact_buckets(spark, pa, "kb") == 0
-
-
-def test_pending_marker_repairs_half_applied_append(spark, tmp_path):
-    """Simulated crash between the data append and the summary update:
-    rows exist but their additive hash-sum delta was never applied —
-    the one state skip-existing replay can't repair. The next door
-    call must see the pending marker, re-derive the touched buckets'
-    summary rows from the table, and clear the marker."""
-    from etl_8million_data__spark.operators.partitioning import id_bucket
-
-    pa = str(tmp_path / "t")
-    ref = {k: k * 10 for k in range(0, 30)}
-    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
-
-    # crash simulation: append the data WITHOUT the summary update,
-    # leaving the marker a real door would have written first
-    batch = {100: 1000, 101: 1010}
-    staged = _frame(spark, batch).withColumn("kb", id_bucket(F.col("k"), 16))
-    kbs = [r["kb"] for r in staged.select("kb").distinct().collect()]
-    write_pending(pa, 7, kbs)
-    staged.repartition(F.col("kb")).write.mode("append").partitionBy(
-        "kb"
-    ).parquet(pa)
-    spark.catalog.refreshByPath(pa)
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] > 0, (
-        "fixture must start from a genuinely stale summary"
-    )
-
-    # the next door call repairs before doing its own work
-    append_bucketed(_frame(spark, {200: 2000}), pa, "k")
-    assert read_pending(pa) is None
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-    got = {r["k"]: r["v"] for r in spark.read.parquet(pa).collect()}
-    assert got == {**ref, **batch, 200: 2000}
 
 
 def test_wrong_bucket_modulus_raises_loudly(spark, tmp_path):
@@ -575,64 +538,6 @@ def test_door_telemetry_feeds_the_rebucket_advisor(spark, tmp_path):
     assert adv2["action"] == "keep"  # telemetry survived the swap
     assert adv2["n_applies"] == adv["n_applies"]
     assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-
-
-def test_pending_marker_makes_summary_untrusted_until_repaired(
-    spark, tmp_path
-):
-    """The overwrite doors share the append doors' crash window (data
-    rewrite lands, summary splice dies). The marker written BEFORE the
-    rewrite makes the possibly-stale summary UNTRUSTED: diff falls back
-    to the full-scan phase 1 (proven physically — with a garbage file
-    in an untouched bucket, the fallback read fails where the
-    summarized path succeeded), and repair_pending_summary re-derives
-    exactly the marker's buckets, restoring the flat-cost audit."""
-    from etl_8million_data__spark.operators.diff import (
-        repair_pending_summary,
-    )
-    from etl_8million_data__spark.operators.partitioning import id_bucket_py
-
-    ref = {k: k * 10 for k in range(60)}
-    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
-    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
-    write_bucketed(_frame(spark, {**ref, 1: 11}), pb, "k", checksums=True)
-
-    # garbage in a bucket NEITHER differing NOR the marker's
-    edited_kb = id_bucket_py(1, 16)
-    garbage_kb = next(
-        b for b in range(16) if b != edited_kb and os.path.isdir(
-            os.path.join(pa, f"kb={b}")
-        )
-    )
-    with open(os.path.join(pa, f"kb={garbage_kb}", "junk.parquet"), "wb") as fh:
-        fh.write(b"garbage")
-    spark.catalog.refreshByPath(pa)
-
-    # trusted summary: phase 1 never opens the table
-    assert {
-        (r["k"], r["change"])
-        for r in diff_tables(spark, pa, pb, ["k"], ["v"]).collect()
-    } == {(1, "changed")}
-
-    # simulated crash: marker present -> summary untrusted -> the
-    # full-scan phase 1 provably runs (it hits the garbage file)
-    marker_kb = next(
-        b for b in range(16)
-        if b not in (edited_kb, garbage_kb)
-        and os.path.isdir(os.path.join(pa, f"kb={b}"))
-    )
-    write_pending(pa, None, [marker_kb])
-    with pytest.raises(Exception):
-        diff_tables(spark, pa, pb, ["k"], ["v"]).collect()
-
-    # repair re-derives the marker's buckets (pinned-schema pruned read
-    # — the garbage bucket is never opened) and restores the fast path
-    assert repair_pending_summary(spark, pa) is True
-    assert read_pending(pa) is None
-    assert {
-        (r["k"], r["change"])
-        for r in diff_tables(spark, pa, pb, ["k"], ["v"]).collect()
-    } == {(1, "changed")}
 
 
 def test_versioned_apply_property_random_histories(spark, tmp_path):

@@ -44,7 +44,7 @@ def _naive(a, b):
 
 
 def test_diff_prunes_to_differing_buckets(spark, sf_dir, tmp_path):
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     o = _versions(spark, sf_dir)
     # B changes exactly ONE key -> exactly one bucket differs
@@ -61,7 +61,7 @@ def test_diff_prunes_to_differing_buckets(spark, sf_dir, tmp_path):
     assert rows == {(victim, "changed")}
     # phase-2 scans read exactly the one differing bucket's files
     for frag in ("a", "b"):
-        metrics = _scan_partition_metrics(df, f"{tmp_path}/{frag}")
+        metrics = scan_partition_metrics(df, f"{tmp_path}/{frag}")
         assert metrics, f"no {frag} scan found"
         for m in metrics:
             assert m["numPartitions"] == 1, (frag, m)

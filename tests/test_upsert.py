@@ -143,7 +143,7 @@ def test_upsert_pruned_read_scans_only_touched_partitions(spark, tmp_path):
     full-table read per batch at 100 TB.)"""
     from pyspark.sql import functions as F
 
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     path = str(tmp_path / "t")
     base = spark.range(1000).select(
@@ -163,7 +163,7 @@ def test_upsert_pruned_read_scans_only_touched_partitions(spark, tmp_path):
         eq = F.col("p").eqNullSafe(F.lit(r["p"]))
         cond = eq if cond is None else (cond | eq)
     relevant = spark.read.parquet(path).filter(cond)
-    metrics = _scan_partition_metrics(relevant, "parquet")
+    metrics = scan_partition_metrics(relevant, "parquet")
     assert metrics, "no scan found"
     for m in metrics:
         assert m["numPartitions"] == 1, m

@@ -1558,7 +1558,7 @@ def linkage_store_probe() -> list[str]:
         probe_store_candidates,
         write_clean_store,
     )
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     def store_frame(n):
         return spark.range(n).select(
@@ -1596,7 +1596,7 @@ def linkage_store_probe() -> list[str]:
                     df = probe_store_candidates(spark, path, batch, prefix_len=15)
                     t, cnt = profile.sample(df.count, 1)
                     times += t
-                m = _scan_partition_metrics(df, frag)
+                m = scan_partition_metrics(df, frag)
                 return cnt, min(times), sum(x.get("numOutputRows", 0) for x in m)
 
             c_part, t_part, r_part = measure(part, "part")
@@ -1985,7 +1985,7 @@ def diff_summary_probe() -> list[str]:
         diff_tables,
         write_bucketed,
     )
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     keys, cols = ["k"], ["v", "w"]
 
@@ -2034,7 +2034,7 @@ def diff_summary_probe() -> list[str]:
                 _summary_if_match(spark, tb, keys, cols, DIFF_NB),
             )
             kbs_sum = sorted(r["kb"] for r in bs.collect())
-            ms = _scan_partition_metrics(bs, ta)
+            ms = scan_partition_metrics(bs, ta)
             assert ms, "no summarized phase-1 scan found"
             got = max(m.get("numOutputRows", 0) for m in ms)
             assert got <= DIFF_NB, (n, got)
@@ -2047,7 +2047,7 @@ def diff_summary_probe() -> list[str]:
             )
             kbs_full = sorted(r["kb"] for r in bf.collect())
             assert kbs_sum == kbs_full, (kbs_sum, kbs_full)
-            mf = _scan_partition_metrics(bf, ta)
+            mf = scan_partition_metrics(bf, ta)
             rows_full[n] = max(m.get("numOutputRows", 0) for m in mf)
 
             # end-to-end wall (reported, not gated) + decision equality
@@ -2115,7 +2115,7 @@ def cdc_apply_probe() -> list[str]:
         write_bucketed,
     )
     from etl_8million_data__spark.operators.partitioning import id_bucket
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     NB = 256
 
@@ -2149,7 +2149,7 @@ def cdc_apply_probe() -> list[str]:
             probe_read = spark.read.parquet(replica).filter(
                 F.col("kb").isin(kbs)
             )
-            ms = _scan_partition_metrics(probe_read, replica)
+            ms = scan_partition_metrics(probe_read, replica)
             rows_read = max(m.get("numOutputRows", 0) for m in ms)
             reads[n] = rows_read
             assert rows_read <= n * len(kbs) / NB * 1.2, (n, rows_read, kbs)
@@ -2215,7 +2215,7 @@ def cdc_apply_probe() -> list[str]:
             .collect()
         ]
         probe_read = spark.read.parquet(vrep).filter(F.col("kb").isin(kbs))
-        ms = _scan_partition_metrics(probe_read, vrep)
+        ms = scan_partition_metrics(probe_read, vrep)
         vrows = max(m.get("numOutputRows", 0) for m in ms)
         assert vrows <= n * len(kbs) / NB * 1.2, (vrows, kbs)
         # out-of-order: a stale v2 frame AFTER the v3 apply lands nothing
@@ -2377,7 +2377,7 @@ def rebucket_probe() -> list[str]:
         write_bucketed,
     )
     from etl_8million_data__spark.operators.partitioning import id_bucket
-    from tests.test_plan_invariants import _scan_partition_metrics
+    from etl_8million_data__spark.profile import scan_partition_metrics
 
     out = []
     work = tempfile.mkdtemp(prefix="rebucket_probe_")
@@ -2403,7 +2403,7 @@ def rebucket_probe() -> list[str]:
             probe = spark.read.parquet(resolve_root(pa)).filter(
                 F.col("kb").isin(kbs)
             )
-            ms = _scan_partition_metrics(probe, pa)
+            ms = scan_partition_metrics(probe, pa)
             return max(m.get("numOutputRows", 0) for m in ms), len(kbs)
 
         r16, b16 = rows_read(16)
