@@ -4,9 +4,10 @@ state tables): the read discipline, the layout markers, and
 :func:`overwrite_buckets`, the partition-subset form of the package's
 one commit door (``maintenance.swap_in``), which commits a ``kb``
 store's checksum summary under the same record as the rows it
-fingerprints. Every read resolves the store's root through
-:func:`resolve_root`, which first finishes any commit of it that
-crashed.
+fingerprints. :func:`rebucket` commits through the whole-table form of
+the same door, so a store always has one flat layout at its path.
+Every read first finishes any commit of the store that crashed
+(``maintenance.recover_swap``).
 
 READ DISCIPLINE (the 100 TB reason this module exists): every store
 has a DECLARED schema — reading it back with
@@ -61,38 +62,8 @@ def read_store(
         if schema
         else reader.option("mergeSchema", "true")
     )
-    return reader.parquet(resolve_root(path))
-
-_CURRENT = "_current"
-
-
-def resolve_root(path: str) -> str:
-    """Physical data root of a store. Normally ``path`` itself (the
-    flat layout every store starts with); after a :func:`rebucket`
-    migration, ``path/_current`` — written in ONE atomic ``os.replace``,
-    the manifest-flip commit of the versioned.commit discipline — names
-    the live generation directory (``path/_gen_N``, underscore-prefixed
-    so a flat-layout reader never saw it while it was staging) and this
-    resolves to it. Every root-taking function in this module (and the
-    door operators built on it) resolves first, so a reader either sees
-    the complete old generation or the complete new one — never a
-    half-swapped directory, on POSIX or an object store. Stores that
-    never migrated have no pointer and resolve to themselves.
-
-    Every store read and door resolves through here, so this is where a
-    crashed swap of the store is finished first
-    (``maintenance.recover_swap``)."""
     recover_swap(path)
-    try:
-        with open(os.path.join(path, _CURRENT)) as fh:
-            gen = fh.read().strip()
-    except OSError:
-        return path
-    if not gen:
-        return path
-    root = os.path.join(path, gen)
-    recover_swap(root)
-    return root
+    return reader.parquet(path)
 
 
 def store_exists(path: str) -> bool:
@@ -105,7 +76,8 @@ def store_exists(path: str) -> bool:
     listener registered in the session it lands an ERROR line in every
     clean-environment sweep log — triage noise that reads as a
     failure. One stat call, no Spark job."""
-    return os.path.isdir(resolve_root(path))
+    recover_swap(path)
+    return os.path.isdir(path)
 
 
 MAX_BROADCAST_ROWS = 1_000_000
@@ -131,7 +103,8 @@ def read_nb(root: str) -> int:
     once at init): the layout's true bucket count, which every pruned
     delta must hash with (a wrong modulus prunes to directories the
     keys don't live in and silently misses them)."""
-    with open(os.path.join(resolve_root(root), "_nb")) as fh:
+    recover_swap(root)
+    with open(os.path.join(root, "_nb")) as fh:
         return int(fh.read().strip())
 
 
@@ -154,7 +127,7 @@ def resolve_nb(root: str, nb: int | None, default: int) -> int:
     the caller's ``nb``/``default``."""
     persisted = try_read_nb(root)
     if persisted is None:
-        mp = os.path.join(resolve_root(root), "_checksums", "_meta.json")
+        mp = os.path.join(root, "_checksums", "_meta.json")
         if os.path.isfile(mp):
             try:
                 with open(mp) as fh:
@@ -181,14 +154,15 @@ def write_schema(root: str, schema) -> None:
     missing newer columns surface them as NULL — the read discipline
     this module exists for, made durable so door code never has to
     guess a schema or footer-merge."""
-    root = resolve_root(root)
+    recover_swap(root)
     os.makedirs(root, exist_ok=True)
     write_durable(os.path.join(root, _SCHEMA_FILE), schema.json())
 
 
 def read_pinned_schema(root: str):
     """The pinned StructType, or None for legacy stores without one."""
-    p = os.path.join(resolve_root(root), _SCHEMA_FILE)
+    recover_swap(root)
+    p = os.path.join(root, _SCHEMA_FILE)
     if not os.path.isfile(p):
         return None
     from pyspark.sql.types import StructType
@@ -203,14 +177,13 @@ def read_store_pinned(spark: SparkSession, path: str) -> DataFrame:
     (legacy stores keep their historic behavior — one arbitrary
     footer, never an eager full-store merge)."""
     pinned = read_pinned_schema(path)
-    path = resolve_root(path)
     if pinned is not None:
         return spark.read.schema(pinned).parquet(path)
     return spark.read.parquet(path)
 
 
 def write_nb(root: str, nb: int) -> None:
-    root = resolve_root(root)
+    recover_swap(root)
     os.makedirs(root, exist_ok=True)
     write_durable(os.path.join(root, "_nb"), str(nb))
 
@@ -220,15 +193,17 @@ def applied_batch(root: str) -> int | None:
     last micro-batch a non-idempotent door absorbed (scd2/golden/IVM
     streaming twins), or None when absent/garbled — at-least-once
     foreachBatch redelivery skips a batch whose id matches."""
+    recover_swap(root)
     try:
-        with open(os.path.join(resolve_root(root), "_applied_batch")) as fh:
+        with open(os.path.join(root, "_applied_batch")) as fh:
             return int(fh.read().strip())
     except (OSError, ValueError):
         return None
 
 
 def mark_applied(root: str, batch_id: int) -> None:
-    write_durable(os.path.join(resolve_root(root), "_applied_batch"), str(batch_id))
+    recover_swap(root)
+    write_durable(os.path.join(root, "_applied_batch"), str(batch_id))
 
 
 def bucket_values(df: DataFrame, col: str, nb: int):
@@ -261,12 +236,11 @@ def pruned_read(
     # catching a JVM PATH_NOT_FOUND — see store_exists for why
     if schema is not None and not store_exists(path):
         df = spark.createDataFrame([], schema)
+    elif schema:
+        df = read_store(spark, path, schema)
     else:
-        df = (
-            read_store(spark, path, schema)
-            if schema
-            else spark.read.parquet(resolve_root(path))
-        )
+        recover_swap(path)
+        df = spark.read.parquet(path)
     return (
         df.filter(F.col(part_col).isin(buckets))
         if buckets
@@ -279,9 +253,10 @@ def write_table_bucketed(df: DataFrame, path: str, part_col: str) -> None:
     file per bucket (repartition on the partition column), so a pruned
     read schedules |touched buckets| tasks, not |buckets| x |write
     tasks| tiny files."""
+    recover_swap(path)
     df.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
         part_col
-    ).parquet(resolve_root(path))
+    ).parquet(path)
 
 
 def partition_filter(cols: list[str], keys: list[tuple]):
@@ -331,7 +306,6 @@ def overwrite_buckets(
         stage_checksums,
     )
 
-    path = resolve_root(path)
     with swap_in(path, part_cols, affected) as tmp:
         new_content.hint("rebalance", *part_cols).write.partitionBy(
             *part_cols
@@ -348,7 +322,7 @@ def bucket_file_counts(root: str, part_col: str) -> dict[int, int]:
     layout's bucket count (on a cluster store this is one FileSystem
     listing per bucket directory, the same metadata compaction must
     touch anyway)."""
-    root = resolve_root(root)
+    recover_swap(root)
     out: dict[int, int] = {}
     try:
         entries = os.listdir(root)
@@ -407,34 +381,6 @@ def compact_buckets(
     return len(todo)
 
 
-def _sweep_stale_generations(path: str) -> None:
-    """Remove data a completed manifest flip superseded: with a
-    ``_current`` pointer live, any root-level ``kb=`` dirs / layout
-    sidecars (the pre-migration flat layout) and any ``_gen_*`` dir
-    other than the current one are unreachable — resolution never
-    looks at them — so a crash between the flip and its cleanup costs
-    only disk, reclaimed here (every rebucket sweeps on entry)."""
-    cur = resolve_root(path)
-    if cur == path:
-        return
-    keep = os.path.basename(cur)
-    for e in os.listdir(path):
-        full = os.path.join(path, e)
-        if e.startswith("_gen_") and e != keep and os.path.isdir(full):
-            shutil.rmtree(full, ignore_errors=True)
-        elif e.startswith("kb=") and os.path.isdir(full):
-            shutil.rmtree(full, ignore_errors=True)
-        elif e in ("_nb", _SCHEMA_FILE, _STATS_FILE, "_applied_batch") or (
-            e == "_checksums" and os.path.isdir(full)
-        ):
-            # stale flat-layout sidecars (the live ones are inside the
-            # generation dir)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.remove(full)
-
-
 def advise_compaction(
     path: str, part_col: str = "kb", max_files: int = 4
 ) -> dict:
@@ -465,75 +411,36 @@ def advise_compaction(
     }
 
 
-def rebucket(
-    spark: SparkSession,
-    path: str,
-    key: str,
-    nb_new: int,
-    sweep: bool = True,
-) -> None:
+def rebucket(spark: SparkSession, path: str, key: str, nb_new: int) -> None:
     """Migrate a kb=-bucketed store to a NEW bucket modulus — the one
     physical-design knob of this family (nb bounds every door's blast
     radius: the same change set reads 7/16 vs 10/256 of the table), made
-    changeable after creation. Bounded passes, counted honestly: one
-    read+write to stage (the store read with its pinned schema,
-    re-hashed to ``kb`` mod ``nb_new``, staged as a NEW GENERATION
-    directory ``path/_gen_N`` inside the store root — underscore-
-    prefixed, so no reader of the live layout ever lists it), plus two
-    fingerprint scans for the equality gate (row count +
-    order-insensitive full-table hash sum, live vs staged, asserted
-    BEFORE the flip — a migration that corrupts content never goes
-    live), plus one summary re-seed scan when the store carries a
-    ``_checksums/`` sidecar. The staged generation is fully seeded —
-    ``_nb``, pinned schema, summary at the new modulus, carried
-    telemetry — BEFORE going live, so the commit is ONE atomic
-    ``os.replace`` of the ``_current`` pointer (the versioned.commit
-    manifest-flip discipline; put-if-absent/atomic-put on an object
-    store): a reader resolves either the complete old generation or
-    the complete new one, never a half-swapped directory. A crash
-    before the flip leaves the live store untouched (the stage dir is
-    invisible and swept on the next migration); a crash after the flip
-    leaves only unreachable stale data, swept on entry here.
-
-    ``sweep=True`` (default) reclaims the superseded generation right
-    after the flip — correct under this family's single-writer,
-    maintenance-window discipline. A deployment with LONG in-flight
-    readers (a scan that resolved the pointer pre-flip still opens the
-    old generation's files task-by-task) passes ``sweep=False``: the
-    superseded generation stays on disk — unreachable through
-    resolution, so no new reader ever sees it — until the next
-    migration's entry sweep or an explicit
-    :func:`vacuum_generations`."""
+    changeable after creation. The whole table commits through
+    ``maintenance.swap_in``: the store, read with its pinned schema and
+    re-hashed to ``kb`` mod ``nb_new``, is written into the door's
+    staging directory beside every sidecar the store carries — ``_nb``,
+    the pinned schema, the ``_checksums/`` summary re-derived at the new
+    modulus, the door telemetry and the replay marker. Bounded passes,
+    counted honestly: one read+write to stage, two fingerprint scans
+    for the equality gate (row count + order-insensitive full-table
+    hash sum, live vs staged) and one summary scan when the store
+    carries a summary. The gate runs inside the block, so a migration
+    that corrupts content raises, its staging tree is deleted and the
+    live store is untouched. A crash after the block is rolled forward
+    by the next read of the store. As with every whole-table commit, a
+    scan still reading the old files during the renames loses them."""
+    from etl_8million_data__spark.operators.diff import stage_checksums
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
-    _sweep_stale_generations(path)
-    live = resolve_root(path)
-    nb_old = try_read_nb(path)
-    if nb_new == nb_old:
+    if nb_new == try_read_nb(path):
         return
     df = read_store_pinned(spark, path)
     if "kb" not in df.columns:
         raise ValueError(f"{path}: not a kb=-bucketed store")
-    staged = (
-        df.drop("kb")
-        .withColumn("kb", id_bucket(F.col(key), nb_new))
-        .localCheckpoint(eager=False)
-    )
-    if live == path:
-        gen_idx = 1
-    else:
-        gen_idx = int(os.path.basename(live).rsplit("_", 1)[1]) + 1
-    gen = f"_gen_{gen_idx}"
-    tmp = os.path.join(path, gen)
-    shutil.rmtree(tmp, ignore_errors=True)
-    staged.repartition(F.col("kb")).write.mode("overwrite").partitionBy(
-        "kb"
-    ).parquet(tmp)
-    write_nb(tmp, nb_new)
-    write_schema(tmp, staged.schema)
+    staged = df.drop("kb").withColumn("kb", id_bucket(F.col(key), nb_new))
 
-    # equality gate before the flip: count + order-insensitive content
-    # hash over every non-bucket column, live layout vs staged
+    # equality gate: count + order-insensitive content hash over every
+    # non-bucket column, live layout vs staged
     cols = sorted(c for c in df.columns if c != "kb")
     def _fingerprint(frame):
         h = F.xxhash64(
@@ -548,66 +455,25 @@ def rebucket(
         ).first()
         return (r["n"], r["cs"])
 
-    before = _fingerprint(df)
-    after = _fingerprint(spark.read.schema(staged.schema).parquet(tmp))
-    if before != after:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise ValueError(
-            f"rebucket {path}: staged content mismatch (old {before} vs "
-            f"new {after}) — store left untouched"
-        )
-
-    # summary re-seed at the new modulus (same keys/cols pin)
-    from etl_8million_data__spark.operators.diff import (
-        checksums_init,
-        read_checksums,
-    )
-
-    meta, _ = read_checksums(spark, live)
-    if meta is not None:
-        checksums_init(spark, tmp, meta["keys"], meta["cols"], nb_new)
-
-    # carry the layout-independent sidecars into the staged generation:
-    # churn telemetry (workload property, still valid at the new
-    # modulus) and the streaming replay marker
-    for side in (_STATS_FILE, "_applied_batch"):
-        src = os.path.join(live, side)
-        if os.path.isfile(src):
-            shutil.copy(src, os.path.join(tmp, side))
-
-    # MANIFEST FLIP: the staged generation is complete — one atomic
-    # pointer replace commits it
-    write_durable(os.path.join(path, _CURRENT), gen)
-
-    # cleanup of the superseded generation (best-effort: a crash here
-    # leaves only unreachable data, swept on the next migration);
-    # sweep=False leaves it as a grace copy for in-flight readers
-    if sweep:
-        _sweep_stale_generations(path)
+    with swap_in(path) as tmp:
+        staged.repartition(F.col("kb")).write.partitionBy("kb").parquet(tmp)
+        write_nb(tmp, nb_new)
+        write_schema(tmp, staged.schema)
+        written = spark.read.schema(staged.schema).parquet(tmp)
+        before, after = _fingerprint(df), _fingerprint(written)
+        if before != after:
+            raise ValueError(
+                f"rebucket {path}: staged content mismatch (old {before} vs "
+                f"new {after}) — store left untouched"
+            )
+        stage_checksums(spark, path, tmp, written, nb=nb_new)
+        # churn telemetry (a workload property, still valid at the new
+        # modulus) and the streaming replay marker carry over
+        for side in (_STATS_FILE, "_applied_batch"):
+            src = os.path.join(path, side)
+            if os.path.isfile(src):
+                shutil.copy(src, os.path.join(tmp, side))
     spark.catalog.refreshByPath(path)
-    spark.catalog.refreshByPath(tmp)
-
-
-def vacuum_generations(path: str) -> int:
-    """Reclaim every superseded generation / stale flat layout of a
-    migrated store — the deferred half of ``rebucket(sweep=False)``:
-    run it once in-flight readers of the pre-flip generation have
-    drained. A store that never migrated (no ``_current`` pointer) is
-    a no-op. Returns the number of stale generation dirs removed
-    (the pre-migration flat layout counts as one)."""
-    cur = resolve_root(path)
-    if cur == path:
-        return 0
-    before = {
-        e
-        for e in os.listdir(path)
-        if (e.startswith("_gen_") and e != os.path.basename(cur))
-        or e.startswith("kb=")
-    }
-    had_flat = any(e.startswith("kb=") for e in before)
-    gens = {e for e in before if e.startswith("_gen_")}
-    _sweep_stale_generations(path)
-    return len(gens) + (1 if had_flat else 0)
 
 
 def evolve_add_columns(
@@ -632,7 +498,6 @@ def evolve_add_columns(
             f"{path}: no pinned schema to evolve — write the store "
             "through write_bucketed first"
         )
-    path = resolve_root(path)
     add = StructType.fromDDL(cols_ddl)
     clash = {f.name for f in add.fields} & {f.name for f in pinned.fields}
     if clash:
@@ -752,8 +617,9 @@ def store_bytes(root: str) -> int:
     the measured input for :func:`recommend_nb`'s byte arm. Driver-side
     walk bounded by the layout's bucket/file count (the same listing a
     compaction census pays)."""
+    recover_swap(root)
     total = 0
-    for dirpath, _dirs, files in os.walk(resolve_root(root)):
+    for dirpath, _dirs, files in os.walk(root):
         for f in files:
             if f.endswith(".parquet"):
                 try:
@@ -777,7 +643,8 @@ def record_door_stats(root: str, op: str, n_keys: int, n_buckets: int) -> None:
     the advice tracks RECENT churn — drifting workloads age out, the
     advisor_layout_drift discipline). Best-effort: telemetry never
     fails a door."""
-    p = os.path.join(resolve_root(root), _STATS_FILE)
+    recover_swap(root)
+    p = os.path.join(root, _STATS_FILE)
     with contextlib.suppress(OSError):
         with open(p, "a") as fh:
             fh.write(
@@ -794,9 +661,10 @@ def record_door_stats(root: str, op: str, n_keys: int, n_buckets: int) -> None:
 
 
 def read_door_stats(root: str) -> list[dict]:
+    recover_swap(root)
     out = []
     try:
-        with open(os.path.join(resolve_root(root), _STATS_FILE)) as fh:
+        with open(os.path.join(root, _STATS_FILE)) as fh:
             for line in fh:
                 try:
                     out.append(json.loads(line))

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from etl_8million_data__spark.operators.maintenance import (
     append_in,
+    recover_swap,
     swap_in,
     write_durable,
 )
@@ -134,12 +135,9 @@ def _commit_summary(
 ) -> None:
     """Commit a summary-only change through the door: ``stage(tmp)``
     writes the new ``_checksums/`` into the staging directory."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    root = resolve_root(path)
-    with swap_in(root, ["kb"]) as tmp:
+    with swap_in(path, ["kb"]) as tmp:
         stage(tmp)
-    spark.catalog.refreshByPath(os.path.join(root, CK_DIR))
+    spark.catalog.refreshByPath(os.path.join(path, CK_DIR))
 
 
 def checksums_init(
@@ -160,9 +158,8 @@ def checksums_init(
 
 
 def _ck_dir(path: str) -> str:
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    return os.path.join(resolve_root(path), CK_DIR)
+    recover_swap(path)
+    return os.path.join(path, CK_DIR)
 
 
 def has_checksums(path: str) -> bool:
@@ -187,6 +184,7 @@ def stage_checksums(
     staging: str,
     fresh: DataFrame,
     replace: Sequence[int] = (),
+    nb: int | None = None,
 ) -> None:
     """Stage ``path``'s summary, updated for one commit, in that
     commit's ``staging`` directory: the rows of the ``replace`` buckets
@@ -194,14 +192,19 @@ def stage_checksums(
     of row hashes, so an append passes only its new rows (never a
     re-read of the table), and a rewrite passes its buckets' full new
     rows with ``replace``; a bucket left empty loses its row, matching
-    a fresh full-scan summary. A table without a summary is a no-op."""
+    a fresh full-scan summary. With ``nb`` the summary is re-pinned at
+    that modulus and ``fresh`` holds the whole re-bucketed table, so no
+    current row is kept. A table without a summary is a no-op."""
     meta, cur = read_checksums(spark, path)
     if meta is None:
         return
     keys, cols = meta["keys"], meta["cols"]
-    rows = {
-        r["kb"]: (r["cs"], r["n"]) for r in cur.collect() if r["kb"] not in replace
-    }
+    if nb is None:
+        rows = {
+            r["kb"]: (r["cs"], r["n"]) for r in cur.collect() if r["kb"] not in replace
+        }
+    else:
+        rows, meta = {}, {**meta, "nb": nb}
     for r in _bucket_sums(fresh.select(*keys, *cols, "kb"), keys, cols).collect():
         cs, n = rows.get(r["kb"], (0, 0))
         rows[r["kb"]] = (cs + r["cs"], n + r["n"])
@@ -478,13 +481,10 @@ def _append_commit(spark: SparkSession, path: str, rows: DataFrame) -> None:
     to the store at ``path`` through ``maintenance.append_in``, with the
     store's summary, when it has one, added to from the rows alone and
     committed under the same record."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    root = resolve_root(path)
-    with append_in(root, ["kb"]) as tmp:
+    with append_in(path, ["kb"]) as tmp:
         rows.write.partitionBy("kb").parquet(tmp)
-        stage_checksums(spark, root, tmp, rows)
-    spark.catalog.refreshByPath(root)
+        stage_checksums(spark, path, tmp, rows)
+    spark.catalog.refreshByPath(path)
 
 
 def append_bucketed(
@@ -500,10 +500,8 @@ def append_bucketed(
     raises). With :func:`write_bucketed`, :func:`delete_keys_bucketed`,
     and the overwrite doors, every write path keeps the summary honest,
     so the flat-cost replica audit never needs a rescan."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
-
-    droot = resolve_root(path)
-    if os.path.isdir(droot) and not is_hive_partitioned(path, "kb"):
+    recover_swap(path)
+    if os.path.isdir(path) and not is_hive_partitioned(path, "kb"):
         # appending kb= partition dirs into a flat root breaks partition
         # discovery for every reader (the _bucketed_append hazard)
         raise ValueError(
@@ -664,13 +662,10 @@ def stream_append_bucketed(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from etl_8million_data__spark.operators.bucket_store import (
-            resolve_root,
-        )
-
         spark = batch_df.sparkSession
-        droot = resolve_root(path)
-        nb_eff = _store_nb(path, nb) if os.path.isdir(droot) else (nb or DIFF_NB)
+        recover_swap(path)
+        exists = os.path.isdir(path)
+        nb_eff = _store_nb(path, nb) if exists else (nb or DIFF_NB)
         b = batch_df.withColumn(
             "kb", id_bucket(F.col(key), nb_eff)
         ).localCheckpoint(eager=False)
@@ -679,7 +674,7 @@ def stream_append_bucketed(
         ]
         if not kbs:
             return
-        if os.path.isdir(droot):
+        if exists:
             existing = (
                 read_store_pinned(spark, path)
                 .filter(F.col("kb").isin(kbs))

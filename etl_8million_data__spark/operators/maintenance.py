@@ -13,8 +13,9 @@ disjoint slice of the clustering key (the poor man's Z-order for a
 single key prefix).
 
 Every table write in the package commits through one commit record:
-:func:`swap_in` replaces the whole table or a subset of its partition
-directories (``bucket_store.overwrite_buckets``), and :func:`append_in`
+:func:`swap_in` replaces the whole table (``bucket_store.rebucket``'s
+modulus migration included) or a subset of its partition directories
+(``bucket_store.overwrite_buckets``), and :func:`append_in`
 moves an append's new files into their partitions. Either one also
 swaps in, whole, any sidecar directory staged at the table root (the
 ``_checksums/`` summary of the ``kb`` stores), so a table and its
@@ -39,7 +40,7 @@ from contextlib import AbstractContextManager, contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 # staging trees of this process's open swaps: recovery runs inside a
-# swap block too (any store read resolves its root) and must not take
+# swap block too (every store read runs it first) and must not take
 # the block's own staging tree for an unfinished write
 _ACTIVE: set[str] = set()
 
@@ -110,9 +111,9 @@ def recover_swap(path: str) -> None:
     commit record is rolled forward: its staging tree was complete
     before the first rename. A staging or swapped-out tree without a
     record is an unfinished write and is deleted. More than one record
-    raises rather than guess their order. Run it before listing a table
-    that is about to be rewritten; ``swap_in`` and
-    ``bucket_store.resolve_root`` do."""
+    raises rather than guess their order. Run it before reading or
+    listing a table; ``swap_in``, ``append_in`` and every
+    ``bucket_store`` read do."""
     left = [p for p in glob.glob(f"{glob.escape(path)}.__*") if p not in _ACTIVE]
     records = [p for p in left if p.endswith(".json") and ".__commit__" in p]
     if len(records) > 1:

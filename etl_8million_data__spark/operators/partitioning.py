@@ -79,12 +79,11 @@ def is_hive_partitioned(path: str, col: str) -> bool:
     bucketed appends."""
     import os
 
-    from etl_8million_data__spark.operators.bucket_store import resolve_root
+    from etl_8million_data__spark.operators.maintenance import recover_swap
 
+    recover_swap(path)
     try:
-        return any(
-            e.startswith(f"{col}=") for e in os.listdir(resolve_root(path))
-        )
+        return any(e.startswith(f"{col}=") for e in os.listdir(path))
     except OSError:
         return False
 

@@ -1913,9 +1913,10 @@ def ops_rebucket_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the surviving bucket census with md5 % 64.
 
     Scale shape: one read+write of the table (unavoidable — every row
-    can change buckets) staged NEXT TO the live store, readers keep
-    their snapshot until the atomic swap; on an object store the same
-    protocol is a manifest flip."""
+    can change buckets) staged NEXT TO the live store and committed
+    through the whole-table commit door (``maintenance.swap_in``), the
+    same rename protocol every other table uses; the store stays one
+    flat Parquet directory at its path."""
     import shutil
 
     from etl_8million_data__spark.operators.bucket_store import (
@@ -1944,8 +1945,7 @@ def ops_rebucket_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fsck = checksums_fsck(spark, root).select("n_mismatched")
     n_buckets = len(bucket_file_counts(root, "kb"))
-    # post-migration reads go through the store door (the _current
-    # manifest resolves to the live generation directory)
+    # the migrated store is a plain Parquet directory at the same path
     totals = read_store_pinned(spark, root).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum("price_c").cast("bigint").alias("price_c_total"),

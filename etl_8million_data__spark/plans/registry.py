@@ -79,30 +79,38 @@ def _load() -> None:
 # registration order after the prioritized block; stale names in the
 # list are ignored.
 _PRIORITY: tuple[str, ...] = (
-    # builds reach the commit door or the checksum summary, both
-    # changed when the summary began committing under its rows'
-    # record (re-verify first)
-    "advisor_compaction",
-    "ops_cdc_retention",
-    "ops_cdc_stream_evolution",
-    "ops_replica_repair",
-    "advisor_bucket_count",
+    # builds reach bucket_store.rebucket, a store read or door that now
+    # runs maintenance.recover_swap on the store's own path, or
+    # recover_swap itself: changed when rebucket began committing
+    # through swap_in (re-verify first)
     "ops_rebucket_migration",
-    "ops_cdc_producer_stream",
-    "ops_cdc_apply_versioned",
-    "ops_retention_sweep",
-    "advisor_rebucket_telemetry",
     "ops_store_compaction_audit",
+    "advisor_compaction",
+    "advisor_rebucket_telemetry",
     "ops_schema_evolution",
-    "ops_replica_audit",
     "ops_store_lifecycle_audit",
+    "ops_cdc_stream_evolution",
     "ops_cdc_apply",
-    "linkage_golden_records_increment",
-    "linkage_forget_golden",
-    "events_scd2_incremental",
+    "ops_cdc_apply_versioned",
+    "ops_cdc_producer_stream",
+    "ops_cdc_retention",
+    "ops_replica_repair",
+    "ops_replica_audit",
+    "ops_retention_sweep",
     "ops_table_diff",
+    "linkage_forget_golden",
     "linkage_golden_fsck",
+    "linkage_golden_records_increment",
+    "events_scd2_incremental",
+    "corpus_incremental_curation",
     "ivm_join_view_retract",
+    "similarity_knn_ivf_kmeans_persisted",
+    "similarity_knn_ivf_pq_persisted",
+    "search_bm25_persisted",
+    "search_phrase_persisted",
+    # builds reached the commit door or the checksum summary when the
+    # summary began committing under its rows' record
+    "advisor_bucket_count",
     # NEW/changed in round 14 (first external evidence / oracle
     # changed): the compaction advisor arm; the bucket-count advisor's
     # byte-budget third arm (+100TB projection row); the queries whose
@@ -116,7 +124,6 @@ _PRIORITY: tuple[str, ...] = (
     # NEW in round 11 (first external evidence)
     "advisor_salted_join_exec",
     "advisor_layout_zonemap",
-    "corpus_incremental_curation",
     # NEW in round 10 (first external evidence)
     "linkage_e2e_golden_records",
     "advisor_join_strategy",
@@ -140,15 +147,11 @@ _PRIORITY: tuple[str, ...] = (
     "embedding_pca_two_components",
     "ivm_agg_view_upsert",
     "search_eval_map_recall",
-    "search_bm25_persisted",
-    "search_phrase_persisted",
     "privacy_l_diversity",
     "linkage_agreement_patterns",
     "linkage_threshold_quality",
     "dedup_multi_evidence_components",
     # NEW in round 8 (first external evidence)
-    "similarity_knn_ivf_kmeans_persisted",
-    "similarity_knn_ivf_pq_persisted",
     "search_mmr_diversified",
     "sketch_bottomk_quantiles",
     "corpus_weighted_sample_tickets",

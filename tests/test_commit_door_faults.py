@@ -23,8 +23,10 @@ from pyspark.errors import StreamingQueryException
 from etl_8million_data__spark.operators.bucket_store import (
     bucket_file_counts,
     compact_buckets,
+    read_nb,
     read_store,
     read_store_pinned,
+    rebucket,
     store_exists,
 )
 from etl_8million_data__spark.operators.diff import (
@@ -386,6 +388,48 @@ def test_bucket_compaction_survives_a_crash_at_every_step(spark, tmp_path, monke
     assert clean[:2] == before[:2] and clean[1] == 0
     assert max(n for _, n in clean[2]) == 1
     assert all(s in (before, clean) for s in seen)
+
+
+def test_rebucket_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    template, _ = _template(spark, tmp_path, BASE)
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    def read(d):
+        t = str(d / "t")
+        return *_audited(spark, t), read_nb(t)
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: rebucket(spark, str(d / "t"), "k", 64),
+        read,
+    )
+    assert before == (sorted(BASE.items()), 0, 16)
+    assert clean == (sorted(BASE.items()), 0, 64)
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_rebucket_content_mismatch_leaves_the_store_untouched(spark, tmp_path, monkeypatch):
+    """The equality gate runs inside the commit block: a staged write
+    that lost a row raises, and neither the store nor its summary
+    changes."""
+    t = str(tmp_path / "t")
+    write_bucketed(_kv(spark, BASE), t, "k", checksums=True)
+    frame = type(spark.range(1))
+    real = frame.repartition
+
+    def lossy(self, *args, **kwargs):
+        return real(self, *args, **kwargs).filter(F.col("k") != 0)
+
+    with monkeypatch.context() as m:
+        m.setattr(frame, "repartition", lossy)
+        with pytest.raises(ValueError, match="content mismatch"):
+            rebucket(spark, t, "k", 64)
+    assert (*_audited(spark, t), read_nb(t)) == (sorted(BASE.items()), 0, 16)
+    assert not _leftovers(tmp_path)
 
 
 def test_first_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):

@@ -225,7 +225,9 @@ def test_swap_in_is_the_only_commit_door():
     ``os.replace`` call is the durable writer's. The checksum summary
     commits with its rows: no module names a ``_pending`` marker, and
     ``operators/diff.py`` never overwrites a directory in place, so its
-    summary writes land only in staging directories."""
+    summary writes land only in staging directories. No second physical
+    root: neither the package nor ``tools/`` names a ``"_current"``
+    pointer, a ``_gen_`` generation directory or ``resolve_root``."""
     writer = next(
         n
         for n in ast.parse((PKG / "operators/maintenance.py").read_text()).body
@@ -258,4 +260,9 @@ def test_swap_in_is_the_only_commit_door():
                 )
             ):
                 offenders.append(f"{rel}:{node.lineno} calls os.replace")
+    for f in sorted([*PKG.rglob("*.py"), *(PKG.parent / "tools").rglob("*.py")]):
+        rel = f.relative_to(PKG.parent).as_posix()
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if any(t in line for t in ('"_current"', "'_current'", "_gen_", "resolve_root")):
+                offenders.append(f"{rel}:{i} names a generation root")
     assert not offenders

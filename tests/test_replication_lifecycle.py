@@ -3,10 +3,10 @@
 the CDC log's pinned change-frame schema carries a source schema
 evolution THROUGH the stream (no silent column drop); log retention
 bounds the file count and gives vacuum_tombstones a validated replay
-horizon instead of a docstring promise; the rebucket migration commits
-via an atomic manifest flip (a crash on either side of the flip leaves
-a fully-consistent store); and the log fsck/repair pair finds
-planted faults without touching data."""
+horizon instead of a docstring promise; the rebucket migration leaves
+one plain Parquet store at its path that every door keeps working on;
+and the log fsck/repair pair finds planted faults without touching
+data."""
 
 from __future__ import annotations
 
@@ -17,11 +17,9 @@ from pyspark.sql import functions as F
 
 from etl_8million_data__spark.operators.bucket_store import (
     advise_compaction,
-    bucket_file_counts,
     compact_buckets,
     read_store_pinned,
     rebucket,
-    resolve_root,
     store_bytes,
 )
 from etl_8million_data__spark.operators.diff import (
@@ -267,73 +265,29 @@ def test_truncate_published_bounds_log_and_gates_vacuum(spark, tmp_path):
     assert checksums_fsck(spark, replica).first()["n_mismatched"] == 0
 
 
-# ------------------------------------------------------ manifest-flip
+# ------------------------------------------------------------ rebucket
 
 
-def test_rebucket_crash_before_flip_leaves_live_store_untouched(
-    spark, tmp_path
-):
-    """Crash injection between staging and the pointer flip: the live
-    store must answer every read/door identically (the stage dir is an
-    underscore-prefixed sibling no reader lists), and the next rebucket
-    sweeps the orphan and completes."""
-    ref = {k: k * 10 for k in range(50)}
-    pa = str(tmp_path / "t")
-    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
-
-    # inject: fail exactly at the manifest flip (os.replace of _current)
-    import etl_8million_data__spark.operators.bucket_store as BS
-
-    real_replace = os.replace
-
-    def exploding_replace(src, dst):
-        if os.path.basename(dst) == "_current":
-            raise OSError("injected crash at the manifest flip")
-        return real_replace(src, dst)
-
-    os.replace = exploding_replace
-    try:
-        with pytest.raises(OSError, match="injected crash"):
-            rebucket(spark, pa, "k", 64)
-    finally:
-        os.replace = real_replace
-
-    # live store untouched: still the original modulus, full content,
-    # honest summary; the orphaned stage dir is invisible to resolution
-    assert resolve_root(pa) == pa
-    assert BS.read_nb(pa) == 16
-    assert {
-        r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
-    } == ref
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-    orphans = [e for e in os.listdir(pa) if e.startswith("_gen_")]
-    assert orphans, "the staged generation should have been left behind"
-
-    # the next migration sweeps the orphan and completes atomically
-    rebucket(spark, pa, "k", 64)
-    assert resolve_root(pa) != pa
-    assert BS.read_nb(pa) == 64
-    assert len(bucket_file_counts(pa, "kb")) <= 64
-    assert {
-        r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
-    } == ref
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-    # exactly one generation remains under the root
-    gens = [e for e in os.listdir(pa) if e.startswith("_gen_")]
-    assert len(gens) == 1
-
-
-def test_rebucket_flip_then_doors_and_second_migration(spark, tmp_path):
-    """After a completed flip every door — append, CDC apply, fsck,
-    compaction census, advisor — must operate on the live generation
-    through the unchanged public path, and a SECOND migration (gen_1 ->
-    gen_2) must sweep the superseded generation."""
+def test_rebucket_store_reads_as_plain_parquet(spark, tmp_path):
+    """A migrated store is a plain Parquet directory at its path: a
+    reader that knows nothing of the store's doors gets every row."""
     ref = {k: k * 10 for k in range(50)}
     pa = str(tmp_path / "t")
     write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
     rebucket(spark, pa, "k", 32)
-    live1 = resolve_root(pa)
-    assert os.path.basename(live1) == "_gen_1"
+    got = spark.read.parquet(pa).select("k", "v").collect()
+    assert sorted(tuple(r) for r in got) == sorted(ref.items())
+
+
+def test_rebucket_flip_then_doors_and_second_migration(spark, tmp_path):
+    """After a migration every door — append, CDC apply, fsck,
+    compaction census, advisor — must operate on the store through the
+    unchanged public path, and a SECOND migration must keep its
+    content and summary."""
+    ref = {k: k * 10 for k in range(50)}
+    pa = str(tmp_path / "t")
+    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
+    rebucket(spark, pa, "k", 32)
 
     # doors through the public path
     batch = {100: 1000, 101: 1010}
@@ -351,11 +305,8 @@ def test_rebucket_flip_then_doors_and_second_migration(spark, tmp_path):
     ]
     assert advise_compaction(pa, max_files=1)["action"] == "keep"
 
-    # second migration: supersedes gen_1, sweeps it
+    # second migration
     rebucket(spark, pa, "k", 64)
-    live2 = resolve_root(pa)
-    assert os.path.basename(live2) == "_gen_2"
-    assert not os.path.isdir(live1)
     assert {
         r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
     } == ref
@@ -587,45 +538,6 @@ def test_publish_retain_last_folds_retention_into_the_producer(
 
     with pytest.raises(ValueError, match="retain_last"):
         publish_changes(spark, src, log, ["k"], retain_last=0)
-
-
-def test_rebucket_grace_sweep_for_inflight_readers(spark, tmp_path):
-    """rebucket(sweep=False) leaves the superseded generation on disk
-    as a grace copy: a reader that resolved the OLD generation before
-    the flip can still finish its scan, no reader resolving after the
-    flip ever sees it, and vacuum_generations reclaims it once in-
-    flight readers have drained."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_nb,
-        vacuum_generations,
-    )
-
-    ref = {k: k * 10 for k in range(40)}
-    pa = str(tmp_path / "t")
-    write_bucketed(_frame(spark, ref), pa, "k", checksums=True)
-    old_root = resolve_root(pa)  # the pre-flip resolution (= pa)
-    old_reader = spark.read.schema("k long, v long, kb int").parquet(old_root)
-
-    rebucket(spark, pa, "k", 64, sweep=False)
-    # new readers resolve the new generation...
-    assert os.path.basename(resolve_root(pa)) == "_gen_1"
-    assert read_nb(pa) == 64
-    # ...while the pre-flip reader still drains its scan of the old
-    # layout (the grace copy is intact)
-    assert {r["k"]: r["v"] for r in old_reader.collect()} == ref
-    assert any(e.startswith("kb=") for e in os.listdir(pa))
-
-    # after the drain, explicit vacuum reclaims the flat layout
-    assert vacuum_generations(pa) == 1
-    assert not any(e.startswith("kb=") for e in os.listdir(pa))
-    assert {
-        r["k"]: r["v"] for r in read_store_pinned(spark, pa).collect()
-    } == ref
-    assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-    # a never-migrated store is a no-op
-    pb = str(tmp_path / "plain")
-    write_bucketed(_frame(spark, {1: 10}), pb, "k")
-    assert vacuum_generations(pb) == 0
 
 
 def test_one_log_fans_out_to_independent_replicas(spark, tmp_path):

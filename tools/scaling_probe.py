@@ -2370,7 +2370,6 @@ def rebucket_probe() -> list[str]:
     from etl_8million_data__spark.operators.bucket_store import (
         rebucket,
         recommend_nb,
-        resolve_root,
     )
     from etl_8million_data__spark.operators.diff import (
         checksums_fsck,
@@ -2398,9 +2397,7 @@ def rebucket_probe() -> list[str]:
                     id_bucket(F.col("k"), nb).alias("_b")
                 ).distinct().collect()
             ]
-            # resolve_root: after the manifest-flip migration the live
-            # generation is a subdir of pa (identity before it)
-            probe = spark.read.parquet(resolve_root(pa)).filter(
+            probe = spark.read.parquet(pa).filter(
                 F.col("kb").isin(kbs)
             )
             ms = scan_partition_metrics(probe, pa)
@@ -2415,7 +2412,7 @@ def rebucket_probe() -> list[str]:
         rebucket(spark, pa, "k", advice)
         radv, badv = rows_read(advice)
         assert checksums_fsck(spark, pa).first()["n_mismatched"] == 0
-        got = spark.read.parquet(resolve_root(pa)).agg(
+        got = spark.read.parquet(pa).agg(
             F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
         ).first()
         want = table.agg(
