@@ -1,29 +1,31 @@
 """Shared plumbing for the persisted bucket/cell-partitioned stores
 (ANN indexes, dedup band/fingerprint indexes, SCD2/golden/IVM/diff
-state tables): the read discipline, the layout markers, and
-:func:`overwrite_buckets`, the partition-subset form of the package's
-one commit door (``maintenance.swap_in``), which commits a ``kb``
-store's checksum summary under the same record as the rows it
-fingerprints. :func:`rebucket` commits through the whole-table form of
-the same door, so a store always has one flat layout at its path.
-Every read first finishes any commit of the store that crashed
-(``maintenance.recover_swap``).
+state tables): the read discipline, the layout markers, and the
+writers that commit through the package's one commit door
+(``maintenance.swap_in`` and its append form ``append_in``).
+
+A bucketed store is created by one whole-table commit: the rows
+(:func:`write_table_bucketed`, one file per bucket), the ``_nb``
+modulus marker and the ``_schema.json`` pin are staged in the same
+tree and land together, so no committed store lacks its modulus or
+its schema. :func:`overwrite_buckets` is the partition-subset form
+of the door and commits a ``kb`` store's checksum summary under the
+same record as the rows it fingerprints; :func:`rebucket` stages the
+whole re-hashed table with its sidecars, so a store always has one
+flat layout at its path. Every read first finishes any commit of the
+store that crashed (``maintenance.recover_swap``).
 
 READ DISCIPLINE (the 100 TB reason this module exists): every store
-has a DECLARED schema — reading it back with
-``option("mergeSchema", "true")`` launches an eager footer-merge job
-over EVERY file in the store *before* any partition filter prunes
-anything, so a probe that will touch 3 of 4096 cell directories still
-pays a full-store metadata pass. At toy scale that is invisible; at a
-100 TB cell-partitioned index it defeats the listing-time pruning the
-probe layouts are built around. :func:`read_store` with the declared
-schema plans with ZERO schema-inference reads — and still covers the
-legacy-mixed-files case the footer-merge existed for: parquet files
-written before a column existed (e.g. pre-batch-tagging index files
-without ``_batch``) surface the declared column as NULL, which is
-exactly what the merged schema produced. ``mergeSchema`` remains only
-for callers that genuinely cannot declare a schema (fsck auditing
-unknown layouts, generic compaction of arbitrary stores).
+has a DECLARED schema. Letting Spark infer it by merging footers
+launches an eager job over EVERY file in the store *before* any
+partition filter prunes anything, so a probe that will touch 3 of
+4096 cell directories still pays a full-store metadata pass. At toy
+scale that is invisible; at a 100 TB cell-partitioned index it
+defeats the listing-time pruning the probe layouts are built around.
+:func:`read_store` plans with the declared (or pinned) schema and
+ZERO schema-inference reads, and still covers legacy mixed files:
+parquet files written before a column existed (e.g. pre-batch-tagging
+index files without ``_batch``) surface the declared column as NULL.
 """
 
 from __future__ import annotations
@@ -46,24 +48,23 @@ from etl_8million_data__spark.operators.maintenance import (
 def read_store(
     spark: SparkSession, path: str, schema: str | None = None
 ) -> DataFrame:
-    """Read a persisted store: with ``schema`` (the layout's FULL
+    """Read a persisted store with ``schema`` (the layout's FULL
     declared schema — an omitted column would vanish from any rewrite
-    fed by this read), no footer is opened for schema inference and
-    missing columns in legacy files read as NULL; without it, fall
-    back to the eager ``mergeSchema`` footer-merge (legacy/unknown
-    layouts only — never on a pruned probe path). Callers that treat a
-    missing store as empty check :func:`store_exists` FIRST (driver-
-    side stat) and substitute an empty frame of the declared schema —
-    never by catching the JVM's AnalysisException (see store_exists
-    for why)."""
-    reader = spark.read
-    reader = (
-        reader.schema(schema)
-        if schema
-        else reader.option("mergeSchema", "true")
-    )
+    fed by this read) or, without it, the store's pinned schema: no
+    footer is opened for schema inference and missing columns in
+    legacy files read as NULL. A store with neither raises a
+    ``ValueError`` naming the path. Callers that treat a missing store
+    as empty check :func:`store_exists` FIRST (driver-side stat) and
+    substitute an empty frame of the declared schema — never by
+    catching the JVM's AnalysisException (see store_exists for why)."""
     recover_swap(path)
-    return reader.parquet(path)
+    schema = schema or read_pinned_schema(path)
+    if schema is None:
+        raise ValueError(
+            f"{path}: no declared or pinned schema — bucketed stores are "
+            "created with their pin (write_bucketed, scd2_init, golden_init)"
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 def store_exists(path: str) -> bool:
@@ -249,14 +250,14 @@ def pruned_read(
 
 
 def write_table_bucketed(df: DataFrame, path: str, part_col: str) -> None:
-    """Overwrite-write a state table in the bucketed layout with one
-    file per bucket (repartition on the partition column), so a pruned
-    read schedules |touched buckets| tasks, not |buckets| x |write
-    tasks| tiny files."""
-    recover_swap(path)
-    df.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(path)
+    """Write a state table in the bucketed layout into ``path``, a
+    directory inside a commit's staging tree that does not exist yet:
+    one file per bucket (repartition on the partition column), so a
+    pruned read schedules |touched buckets| tasks, not |buckets| x
+    |write tasks| tiny files, and the FULL schema pinned beside the
+    rows."""
+    df.repartition(F.col(part_col)).write.partitionBy(part_col).parquet(path)
+    write_schema(path, df.schema)
 
 
 def partition_filter(cols: list[str], keys: list[tuple]):
@@ -456,9 +457,8 @@ def rebucket(spark: SparkSession, path: str, key: str, nb_new: int) -> None:
         return (r["n"], r["cs"])
 
     with swap_in(path) as tmp:
-        staged.repartition(F.col("kb")).write.partitionBy("kb").parquet(tmp)
+        write_table_bucketed(staged, tmp, "kb")
         write_nb(tmp, nb_new)
-        write_schema(tmp, staged.schema)
         written = spark.read.schema(staged.schema).parquet(tmp)
         before, after = _fingerprint(df), _fingerprint(written)
         if before != after:

@@ -39,6 +39,17 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.bucket_store import (
+    bounded_broadcast,
+    overwrite_buckets,
+    read_pinned_schema,
+    read_store_pinned,
+    record_door_stats,
+    resolve_nb,
+    write_nb,
+    write_schema,
+    write_table_bucketed,
+)
 from etl_8million_data__spark.operators.maintenance import (
     append_in,
     recover_swap,
@@ -73,10 +84,6 @@ CK_SCHEMA = "kb int, cs decimal(38,0), n bigint"
 def _prep(
     spark: SparkSession, path: str, keys: list[str], cols: list[str], nb: int
 ) -> DataFrame:
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
-
     # pinned-schema read when the store carries one (zero footer
     # inference; a legacy mixed-schema store surfaces missing columns
     # as declared NULLs instead of a footer-order-dependent schema)
@@ -92,8 +99,6 @@ def _store_nb(path: str, nb: int | None, default: int = DIFF_NB) -> int:
     """The modulus a door must hash with: the store's persisted marker
     when present (explicit contradiction raises — bucket_store.resolve_nb),
     else the caller's value."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_nb
-
     return resolve_nb(path, nb, default)
 
 
@@ -140,6 +145,22 @@ def _commit_summary(
     spark.catalog.refreshByPath(os.path.join(path, CK_DIR))
 
 
+def _seed_summary(
+    spark: SparkSession,
+    src: str,
+    staging: str,
+    keys: list[str],
+    cols: list[str],
+    nb: int,
+) -> None:
+    """Seed a summary by one full pass over the table at ``src`` and
+    write it into ``staging``, the staging directory of the commit that
+    carries it."""
+    meta = {"keys": list(keys), "cols": sorted(cols), "nb": nb}
+    rows = _bucket_sums(_prep(spark, src, keys, cols, nb), keys, cols).collect()
+    _write_summary(spark, rows, staging, meta)
+
+
 def checksums_init(
     spark: SparkSession,
     path: str,
@@ -152,9 +173,9 @@ def checksums_init(
     touched buckets' rows (rewrites re-derive them, appends add to
     them) under the same record as its rows, so the routine replica
     audit reads 2 x nb summary rows instead of two full tables."""
-    meta = {"keys": list(keys), "cols": sorted(cols), "nb": nb}
-    rows = _bucket_sums(_prep(spark, path, keys, cols, nb), keys, cols).collect()
-    _commit_summary(spark, path, lambda tmp: _write_summary(spark, rows, tmp, meta))
+    _commit_summary(
+        spark, path, lambda tmp: _seed_summary(spark, path, tmp, keys, cols, nb)
+    )
 
 
 def _ck_dir(path: str) -> str:
@@ -308,8 +329,6 @@ def diff_tables(
     moduli cover different key sets — comparing them bucket-by-bucket
     would be meaningless), and the persisted value overrides the
     parameter."""
-    from etl_8million_data__spark.operators.bucket_store import resolve_nb
-
     na = resolve_nb(path_a, None, nb)
     nbb = resolve_nb(path_b, None, nb)
     if na != nbb:
@@ -403,10 +422,6 @@ def sync_tables(
     # outside the diffed set (rewriting from the keys+cols projection
     # would silently drop them — unrecoverable data loss in exactly
     # the buckets the sync touched)
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
-
     a = read_store_pinned(spark, path_a).filter(F.col("kb").isin(kbs))
     b = read_store_pinned(spark, path_b)
     if "kb" not in b.columns:
@@ -422,10 +437,6 @@ def sync_tables(
             f"{sorted(set(a.columns) - set(b.columns))}, B-only: "
             f"{sorted(set(b.columns) - set(a.columns))})"
         )
-    from etl_8million_data__spark.operators.bucket_store import (
-        bounded_broadcast,
-    )
-
     dk = d.select(*keys)
     take_from_b = b.join(
         bounded_broadcast(
@@ -436,8 +447,6 @@ def sync_tables(
     )
     keep = a.join(bounded_broadcast(dk, n), keys, "left_anti")
     content = keep.unionByName(take_from_b)
-    from etl_8million_data__spark.operators.bucket_store import overwrite_buckets
-
     overwrite_buckets(spark, path_a, ["kb"], content, [(k,) for k in kbs])
     return n
 
@@ -445,45 +454,41 @@ def sync_tables(
 def write_bucketed(
     df: DataFrame, path: str, key: str, nb: int = DIFF_NB, checksums: bool = False
 ) -> None:
-    """Persist a table in the diffable layout: `kb=` key-bucket
-    partitions, one file per bucket (the write_clean_store small-files
-    discipline), with the bucket modulus pinned in an ``_nb`` sidecar
-    (every later door validates against it — a wrong modulus prunes
-    deletes into the wrong buckets) and the FULL schema pinned in
-    ``_schema.json`` (every later read plans with zero footer
-    inference). ``checksums=True`` additionally seeds the persisted
-    bucket-checksum summary over all non-key columns — from then on
-    rewrites through bucket_store.overwrite_buckets maintain it
-    incrementally and :func:`diff_tables` audits this table without
+    """Create (or replace) a table in the diffable layout in ONE
+    whole-table ``maintenance.swap_in`` commit, which stages: `kb=`
+    key-bucket partitions, one file per bucket (the write_clean_store
+    small-files discipline); the ``_nb`` modulus marker (every later
+    door validates against it — a wrong modulus prunes deletes into the
+    wrong buckets); the FULL schema pinned in ``_schema.json`` (every
+    later read plans with zero footer inference); and, with
+    ``checksums=True``, the bucket-checksum summary over all non-key
+    columns, seeded from the staged rows — from then on every door
+    maintains it and :func:`diff_tables` audits this table without
     scanning it."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        write_nb,
-        write_schema,
-        write_table_bucketed,
-    )
-
-    staged = df.withColumn("kb", id_bucket(F.col(key), nb))
-    write_table_bucketed(staged, path, "kb")
-    write_nb(path, nb)
-    write_schema(path, staged.schema)
-    if checksums:
-        checksums_init(
-            df.sparkSession,
-            path,
-            [key],
-            [c for c in df.columns if c != key],
-            nb,
-        )
+    spark = df.sparkSession
+    with swap_in(path) as tmp:
+        staged = df.withColumn("kb", id_bucket(F.col(key), nb))
+        write_table_bucketed(staged, tmp, "kb")
+        write_nb(tmp, nb)
+        if checksums:
+            cols = [c for c in df.columns if c != key]
+            _seed_summary(spark, tmp, tmp, [key], cols, nb)
+    spark.catalog.refreshByPath(path)
 
 
-def _append_commit(spark: SparkSession, path: str, rows: DataFrame) -> None:
+def _append_commit(spark: SparkSession, path: str, rows: DataFrame, nb: int) -> None:
     """Commit ``rows`` (``kb``-tagged, clustered by ``kb``) as an append
     to the store at ``path`` through ``maintenance.append_in``, with the
     store's summary, when it has one, added to from the rows alone and
-    committed under the same record."""
+    committed under the same record; an append that creates the store
+    stages its ``_nb`` and schema pin instead."""
     with append_in(path, ["kb"]) as tmp:
         rows.write.partitionBy("kb").parquet(tmp)
-        stage_checksums(spark, path, tmp, rows)
+        if os.path.isdir(path):
+            stage_checksums(spark, path, tmp, rows)
+        else:
+            write_nb(tmp, nb)
+            write_schema(tmp, rows.schema)
     spark.catalog.refreshByPath(path)
 
 
@@ -497,9 +502,11 @@ def append_bucketed(
     summary commit under one record (``maintenance.append_in``), so a
     crash leaves both old or both new. The modulus comes from the
     store's persisted ``_nb`` marker (an explicit contradicting ``nb``
-    raises). With :func:`write_bucketed`, :func:`delete_keys_bucketed`,
-    and the overwrite doors, every write path keeps the summary honest,
-    so the flat-cost replica audit never needs a rescan."""
+    raises). An append that creates the store commits its ``_nb``
+    (``nb``, else 16) and schema pin with the first rows. With
+    :func:`write_bucketed`, :func:`delete_keys_bucketed`, and the
+    overwrite doors, every write path keeps the summary honest, so the
+    flat-cost replica audit never needs a rescan."""
     recover_swap(path)
     if os.path.isdir(path) and not is_hive_partitioned(path, "kb"):
         # appending kb= partition dirs into a flat root breaks partition
@@ -510,10 +517,6 @@ def append_bucketed(
         )
     spark = df.sparkSession
     nb = _store_nb(path, nb)
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_pinned_schema,
-    )
-
     pinned = read_pinned_schema(path)
     if pinned is not None:
         want = {f.name for f in pinned.fields} - {"kb"}
@@ -535,11 +538,7 @@ def append_bucketed(
     per_kb = staged.groupBy("kb").agg(F.count(F.lit(1)).alias("n")).collect()
     kbs = [r["kb"] for r in per_kb]
     n_rows = sum(r["n"] for r in per_kb)
-    _append_commit(spark, path, staged)
-    from etl_8million_data__spark.operators.bucket_store import (
-        record_door_stats,
-    )
-
+    _append_commit(spark, path, staged, nb)
     record_door_stats(path, "append", n_rows, len(kbs))
 
 
@@ -559,11 +558,6 @@ def delete_keys_bucketed(
     through bucket_store.overwrite_buckets — which keeps the summary
     honest automatically. Returns rows removed; a miss never
     rewrites."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        overwrite_buckets,
-        read_store_pinned,
-    )
-
     nb = _store_nb(path, nb)
     v = victims.select(F.col(victims.columns[0]).alias(key)).distinct()
     kbs = [
@@ -580,10 +574,6 @@ def delete_keys_bucketed(
     if not n_deleted:
         return 0
     overwrite_buckets(spark, path, ["kb"], kept, [(k,) for k in kbs])
-    from etl_8million_data__spark.operators.bucket_store import (
-        record_door_stats,
-    )
-
     record_door_stats(path, "delete", n_deleted, len(kbs))
     return n_deleted
 
@@ -604,11 +594,6 @@ def delete_where_bucketed(
     buckets byte-identical). Rows where the predicate evaluates NULL
     are KEPT (SQL DELETE semantics, the versioned.delete_where
     contract). Returns rows removed; zero matches rewrites nothing."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        overwrite_buckets,
-        read_store_pinned,
-    )
-
     _store_nb(path, nb)  # modulus validation only; buckets come from data
     hit = F.coalesce(predicate, F.lit(False))
     kbs = [
@@ -627,10 +612,6 @@ def delete_where_bucketed(
     victims = old.filter(hit).count()
     keep = old.filter(~hit)
     overwrite_buckets(spark, path, ["kb"], keep, [(k,) for k in kbs])
-    from etl_8million_data__spark.operators.bucket_store import (
-        record_door_stats,
-    )
-
     record_door_stats(path, "delete_where", victims, len(kbs))
     return victims
 
@@ -653,13 +634,11 @@ def stream_append_bucketed(
     summary commit under one record (``maintenance.append_in``), so a
     batch that crashed left both old (its redelivery appends them) or
     both new (its redelivery finds the rows and adds nothing): the
-    replay never meets rows whose summary delta is missing. Keys are
-    assumed append-once (the dedup-upstream contract every
-    skip-existing door carries); updates to existing keys are the
-    delete+append or sync paths."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
+    replay never meets rows whose summary delta is missing. A first
+    batch creates the store with its ``_nb`` and pin, as
+    :func:`append_bucketed` does. Keys are assumed append-once (the
+    dedup-upstream contract every skip-existing door carries); updates
+    to existing keys are the delete+append or sync paths."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -691,27 +670,10 @@ def stream_append_bucketed(
         ).collect()
         if not per_kb:
             return
-        _append_commit(spark, path, fresh)
-        from etl_8million_data__spark.operators.bucket_store import (
-            record_door_stats,
-        )
-
+        _append_commit(spark, path, fresh, nb_eff)
         record_door_stats(
             path, "stream_append", sum(r["n"] for r in per_kb), len(per_kb)
         )
-        from etl_8million_data__spark.operators.bucket_store import (
-            read_pinned_schema,
-            try_read_nb,
-            write_nb,
-            write_schema,
-        )
-
-        # a store this stream itself created: pin the modulus + schema
-        # so every later door validates/plans against them
-        if try_read_nb(path) is None:
-            write_nb(path, nb_eff)
-        if read_pinned_schema(path) is None:
-            write_schema(path, fresh.schema)
 
     return foreach_batch_available_now(updates, apply_batch, checkpoint_dir)
 
@@ -747,11 +709,6 @@ def apply_changes(
     :func:`apply_changes_versioned`, which is safe under BOTH."""
     if "_commit_version" in changes.columns:
         return apply_changes_versioned(spark, path, changes, key, nb)
-    from etl_8million_data__spark.operators.bucket_store import (
-        overwrite_buckets,
-        read_store_pinned,
-    )
-
     nb = _store_nb(path, nb)
     ch = changes.localCheckpoint(eager=False)
     n = ch.count()
@@ -763,10 +720,6 @@ def apply_changes(
         .distinct()
         .collect()
     ]
-    from etl_8million_data__spark.operators.bucket_store import (
-        bounded_broadcast,
-    )
-
     old = read_store_pinned(spark, path).filter(F.col("kb").isin(kbs))
     keep = old.join(bounded_broadcast(ch.select(key), n), key, "left_anti")
     post = (
@@ -775,10 +728,6 @@ def apply_changes(
         .withColumn("kb", id_bucket(F.col(key), nb))
     )
     overwrite_buckets(spark, path, ["kb"], keep.unionByName(post), [(k,) for k in kbs])
-    from etl_8million_data__spark.operators.bucket_store import (
-        record_door_stats,
-    )
-
     record_door_stats(path, "apply_changes", n, len(kbs))
     return n
 
@@ -801,10 +750,6 @@ def write_replica(
 def read_replica(spark: SparkSession, path: str) -> DataFrame:
     """Visible rows of a versioned replica: tombstones filtered, the
     bookkeeping columns (`_v`, `_gone`, `kb`) dropped."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
-
     df = read_store_pinned(spark, path)
     if "_gone" in df.columns:
         df = df.filter(F.col("_gone") == 0)
@@ -862,11 +807,6 @@ def apply_changes_versioned(
     discipline); :func:`read_replica` hides them from readers."""
     from pyspark.sql import Window
 
-    from etl_8million_data__spark.operators.bucket_store import (
-        overwrite_buckets,
-        read_store_pinned,
-    )
-
     nb = _store_nb(path, nb)
     # within the batch: one row per key, the newest version
     # (deterministic tiebreak on change type for pathological frames
@@ -921,18 +861,10 @@ def apply_changes_versioned(
         .drop("_change_type", "_commit_version")
         .withColumn("kb", id_bucket(F.col(key), nb))
     )
-    from etl_8million_data__spark.operators.bucket_store import (
-        bounded_broadcast,
-    )
-
     keep = old.join(bounded_broadcast(elig.select(key), n), key, "left_anti")
     overwrite_buckets(
         spark, path, ["kb"], keep.unionByName(winners), [(k,) for k in kbs]
     )
-    from etl_8million_data__spark.operators.bucket_store import (
-        record_door_stats,
-    )
-
     record_door_stats(path, "apply_changes_versioned", n, len(kbs))
     return n
 
@@ -971,11 +903,6 @@ def repair_replica(
     Returns rows repaired (0 = no drift — and phase 2 never ran).
     Both sides must share the bucket modulus (``rebucket`` one first
     otherwise, same contract as diff_tables)."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-        resolve_nb,
-    )
-
     nb = _store_nb(path, nb)
     nbe = resolve_nb(expected_path, None, nb)
     if nbe != nb:
@@ -1063,11 +990,6 @@ def vacuum_tombstones(
     qualifying tombstones; ONLY those buckets rewrite through the
     overwrite door (summary stays honest). Returns tombstones
     reclaimed."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        overwrite_buckets,
-        read_store_pinned,
-    )
-
     if log_dir is not None:
         from etl_8million_data__spark.operators.cdc_log import replay_horizon
 

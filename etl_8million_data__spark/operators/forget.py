@@ -50,8 +50,19 @@ from etl_8million_data__spark.operators.bucket_store import (
     partition_filter,
     read_store,
 )
-from etl_8million_data__spark.operators.maintenance import swap_in
+from etl_8million_data__spark.operators.maintenance import recover_swap, swap_in
 from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
+
+
+def _read(spark: SparkSession, path: str, schema: str | None) -> DataFrame:
+    """The index at ``path`` with its declared ``schema``; without one
+    (an index of unknown layout) one footer-merge read, so a legacy
+    file missing a newer column never drops that column from the
+    rewrite this read feeds."""
+    if schema:
+        return read_store(spark, path, schema)
+    recover_swap(path)
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def _ids_frame(ids: DataFrame, id_col: str) -> DataFrame:
@@ -76,7 +87,7 @@ def forget_partitioned(
     partitioned upsert): ANN ``cell=`` indexes, the financials fact's
     (statement_type, stock_bucket), …"""
     victims = _ids_frame(ids, id_col)
-    _rd = lambda: read_store(spark, path, schema)  # noqa: E731
+    _rd = lambda: _read(spark, path, schema)  # noqa: E731
     located = _rd().select(id_col, *partition_by).join(victims, id_col)
     touched = located.groupBy(*partition_by).count().collect()
     if not touched:
@@ -158,7 +169,7 @@ def forget_bucketed(
     touched = [r["bucket"] for r in vb.select("bucket").distinct().collect()]
     if not touched:
         return 0
-    relevant = read_store(spark, index_path, schema).filter(
+    relevant = _read(spark, index_path, schema).filter(
         F.col("bucket").isin(touched)
     )
     n_deleted = relevant.select(id_col).join(victims, id_col).count()
@@ -206,7 +217,7 @@ def forget_unpartitioned(
     swap (``maintenance.swap_in``, as the unpartitioned upsert). Returns
     rows removed; a miss is a no-op that never rewrites."""
     victims = _ids_frame(ids, id_col)
-    idx = read_store(spark, index_path, schema)
+    idx = _read(spark, index_path, schema)
     n_hit = idx.select(id_col).join(victims, id_col).count()
     if not n_hit:
         return 0
@@ -296,7 +307,7 @@ def compact_partitions(
     before = _count_files()
     # every populated partition receives its own rows back, so none is
     # emptied and the affected list is empty
-    full = read_store(spark, index_path, schema)
+    full = _read(spark, index_path, schema)
     overwrite_buckets(spark, index_path, [partition_col], full, [])
     return before, _count_files()
 

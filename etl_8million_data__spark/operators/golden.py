@@ -48,7 +48,6 @@ way operators/ivm.py extends the rollup family.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +64,7 @@ from etl_8million_data__spark.operators.bucket_store import (
 )
 from etl_8million_data__spark.operators.graph import connected_components
 from etl_8million_data__spark.operators.ivm import MAX_LITERAL_KEYS
+from etl_8million_data__spark.operators.maintenance import recover_swap, swap_in
 from etl_8million_data__spark.operators.partitioning import id_bucket, id_bucket_py
 from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
@@ -170,41 +170,40 @@ def golden_init(
     over all accepted edges, survive, and persist the four bucketed
     tables. ``records``: (rid, orig_key, name, bal, seg, src) with rid
     unique; ``edges``: accepted match pairs (a_key, b_key), endpoints
-    within the record set."""
-    write_nb(root, nb)
+    within the record set. The root's ``_nb`` and the four tables with
+    their schema pins land in ONE whole-root ``maintenance.swap_in``
+    commit; the next read of the root finishes a crashed one."""
     members = _cluster(
         records.select(*_MEMBER_COLS), edges
     ).localCheckpoint(eager=True)
-    _write_table(
-        members.withColumn("cb", id_bucket(F.col("component"), nb)),
-        os.path.join(root, "members"),
-        "cb",
-    )
     lab = members.select(F.col("rid").alias("a_key"), "component")
-    _write_table(
-        edges.select("a_key", "b_key").join(lab, "a_key")
-        .withColumn("cb", id_bucket(F.col("component"), nb)),
-        os.path.join(root, "edges"),
-        "cb",
-    )
-    _write_table(
-        survivorship(members).withColumn("cb", id_bucket(F.col("component"), nb)),
-        os.path.join(root, "golden"),
-        "cb",
-    )
-    _write_table(
-        members.select("rid", "component").withColumn(
-            "rb", id_bucket(F.col("rid"), nb)
-        ),
-        os.path.join(root, "ridmap"),
-        "rb",
-    )
+    by_component = {
+        "members": members,
+        "edges": edges.select("a_key", "b_key").join(lab, "a_key"),
+        "golden": survivorship(members),
+    }
+    with swap_in(root) as tmp:
+        write_nb(tmp, nb)
+        for name, df in by_component.items():
+            _write_table(
+                df.withColumn("cb", id_bucket(F.col("component"), nb)),
+                os.path.join(tmp, name),
+                "cb",
+            )
+        _write_table(
+            members.select("rid", "component").withColumn(
+                "rb", id_bucket(F.col("rid"), nb)
+            ),
+            os.path.join(tmp, "ridmap"),
+            "rb",
+        )
 
 
 def read_golden(spark: SparkSession, root: str) -> DataFrame:
     from etl_8million_data__spark.operators.bucket_store import store_exists
 
     p = os.path.join(root, "golden")
+    recover_swap(root)  # a crashed init commits the whole root
     # missing/emptied state decided driver-side + declared schema (an
     # emptied table has zero parquet files) — never a caught JVM
     # PATH_NOT_FOUND (bucket_store.store_exists)

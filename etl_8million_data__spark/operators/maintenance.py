@@ -12,18 +12,29 @@ plus sorting within partitions so every file/row-group covers a tight,
 disjoint slice of the clustering key (the poor man's Z-order for a
 single key prefix).
 
-Every table write in the package commits through one commit record:
-:func:`swap_in` replaces the whole table (``bucket_store.rebucket``'s
-modulus migration included) or a subset of its partition directories
-(``bucket_store.overwrite_buckets``), and :func:`append_in`
-moves an append's new files into their partitions. Either one also
-swaps in, whole, any sidecar directory staged at the table root (the
-``_checksums/`` summary of the ``kb`` stores), so a table and its
-summary commit together. The new content is staged in full in a
-sibling directory, a durable commit record names what to move, and
-only then do the renames start, so a crash at any step is rolled
-forward by :func:`recover_swap` on the next entry. Every small record
-or marker file is replaced through :func:`write_durable`.
+The commit door: :func:`swap_in` replaces a whole table or a subset
+of its partition directories, and :func:`append_in` moves an append's
+new files into their partitions. Either one also swaps in, whole, any
+sidecar directory staged at the table root (the ``_checksums/``
+summary of the ``kb`` stores), so a table and its summary commit
+together. The new content is staged in full in a sibling directory, a
+durable commit record names what to move, and only then do the
+renames start, so a crash at any step is rolled forward by
+:func:`recover_swap` on the next entry. Every small record or marker
+file is replaced through :func:`write_durable`.
+
+Through the door commit: upsert (both forms), compaction, forget, ivm,
+search_index, the streaming quantile sketch, ``run_all``'s quote
+snapshot, and every ``kb``/``cb``/``rb`` bucketed store of
+``bucket_store``, ``diff``, ``scd2`` and ``golden`` — created with its
+``_nb`` marker and schema pin in one commit, rewritten by
+``overwrite_buckets``, appended by ``append_in``, migrated by
+``rebucket``. Writers that still go around it with Spark's own job
+commit: the ingest bronze append, the index builds and appends of
+``incremental_ann``, ``incremental_dedup``, ``linkage`` and
+``search_index``, ``ivm``'s flat-view append, ``streaming/jobs.py``'s
+overwrites, and the ``versioned`` snapshots (committed by their
+manifest flip instead).
 """
 
 from __future__ import annotations

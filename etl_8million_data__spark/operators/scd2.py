@@ -52,12 +52,20 @@ from pyspark.sql import functions as F
 from etl_8million_data__spark.operators.bucket_store import (
     applied_batch,
     bounded_broadcast,
+    compact_buckets,
     mark_applied,
     overwrite_buckets as _overwrite_buckets,
     read_nb as _nb,
     read_pinned_schema,
+    read_store,
+    read_store_pinned,
     write_nb,
-    write_schema,
+    write_table_bucketed,
+)
+from etl_8million_data__spark.operators.maintenance import (
+    append_in,
+    recover_swap,
+    swap_in,
 )
 from etl_8million_data__spark.operators.partitioning import id_bucket
 from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
@@ -66,28 +74,16 @@ SCD2_NB = 16
 
 
 def _read_intervals(spark: SparkSession, root: str) -> DataFrame:
-    """The ONE read path for the persisted interval table, closing the
-    mixed-schema hazard: with the pinned schema (written at init, or
-    self-healed below) the read plans with zero footer inference and
-    legacy pre-``last_ts`` files surface the column as declared NULLs;
-    a store written before the pin existed falls back to ONE
-    ``mergeSchema`` footer-merge (so newer files' last_ts is never
-    dropped by single-footer inference) and pins the merged schema so
-    every later read is static. Either way the watermark NEVER
-    evaluates NULL: ``last_ts`` coalesces to ``valid_from`` per row —
-    the weaker-but-safe pre-last_ts watermark — instead of NULL rows
-    silently passing the late-data check as not-a-violation."""
-    path = os.path.join(root, "intervals")
-    pinned = read_pinned_schema(path)
-    if pinned is not None:
-        df = spark.read.schema(pinned).parquet(path)
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        if "last_ts" not in df.columns:
-            df = df.withColumn(
-                "last_ts", F.lit(None).cast(df.schema["valid_from"].dataType)
-            )
-        write_schema(path, df.schema)
+    """The ONE read path for the persisted interval table. It plans with
+    the schema pinned at :func:`scd2_init` (zero footer inference), so
+    files written before a column existed surface it as declared NULLs;
+    a store without the pin raises a ``ValueError`` naming its path.
+    The watermark NEVER evaluates NULL: ``last_ts`` coalesces to
+    ``valid_from`` per row — the weaker-but-safe pre-last_ts watermark —
+    instead of NULL rows silently passing the late-data check as
+    not-a-violation."""
+    recover_swap(root)  # a crashed init commits the whole root
+    df = read_store(spark, os.path.join(root, "intervals"))
     return df.withColumn(
         "last_ts", F.coalesce(F.col("last_ts"), F.col("valid_from"))
     )
@@ -158,28 +154,21 @@ def scd2_init(
     ``keep_log=True`` also persists the raw change log (same bucketing)
     — the prerequisite for the late-data door
     (:func:`scd2_apply_late`); sources guaranteed in-order can skip the
-    log and live on the cheap seam merge alone."""
-    write_nb(root, nb)
+    log and live on the cheap seam merge alone. The root's ``_nb`` and
+    every table with its schema pin land in ONE whole-root
+    ``maintenance.swap_in`` commit; the next read of the root finishes
+    a crashed one."""
     changes = changes.select("key", "seq", "ts", "attr")
-    iv = build_intervals(changes).withColumn("kb", id_bucket(F.col("key"), nb))
-    (
-        iv.repartition(F.col("kb"))
-        .write.mode("overwrite")
-        .partitionBy("kb")
-        .parquet(os.path.join(root, "intervals"))
-    )
-    # pin the FULL schema so every later read is static (zero footer
-    # inference; legacy files missing a later column read as NULL)
-    write_schema(os.path.join(root, "intervals"), iv.schema)
-    if keep_log:
-        log = changes.withColumn("kb", id_bucket(F.col("key"), nb))
-        (
-            log.repartition(F.col("kb"))
-            .write.mode("overwrite")
-            .partitionBy("kb")
-            .parquet(os.path.join(root, "log"))
-        )
-        write_schema(os.path.join(root, "log"), log.schema)
+
+    def stage(df: DataFrame, tmp: str, name: str) -> None:
+        bucketed = df.withColumn("kb", id_bucket(F.col("key"), nb))
+        write_table_bucketed(bucketed, os.path.join(tmp, name), "kb")
+
+    with swap_in(root) as tmp:
+        write_nb(tmp, nb)
+        stage(build_intervals(changes), tmp, "intervals")
+        if keep_log:
+            stage(changes, tmp, "log")
 
 
 def read_intervals(spark: SparkSession, root: str) -> DataFrame:
@@ -190,13 +179,10 @@ def _append_log(
     spark: SparkSession, root: str, b: DataFrame, kbs: list[int], nb: int
 ) -> None:
     """Skip-existing append of a change batch into the retained log (no
-    log -> no-op): the existence read is pruned to the batch's buckets
-    and column-pruned to (key, seq), so a replayed batch appends
-    nothing — the append_clean_store discipline."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
-
+    log -> no-op), committed through ``maintenance.append_in``: the
+    existence read is pruned to the batch's buckets and column-pruned
+    to (key, seq), so a replayed batch appends nothing — the
+    append_clean_store discipline."""
     log_path = os.path.join(root, "log")
     if not os.path.isdir(log_path):
         return
@@ -210,13 +196,10 @@ def _append_log(
         eager=False
     )
     if fresh.count():
-        (
-            fresh.withColumn("kb", id_bucket(F.col("key"), nb))
-            .repartition(F.col("kb"))
-            .write.mode("append")
-            .partitionBy("kb")
-            .parquet(log_path)
-        )
+        with append_in(log_path, ["kb"]) as tmp:
+            fresh.withColumn("kb", id_bucket(F.col("key"), nb)).repartition(
+                F.col("kb")
+            ).write.partitionBy("kb").parquet(tmp)
         spark.catalog.refreshByPath(log_path)
 
 
@@ -226,25 +209,17 @@ def compact_log(spark: SparkSession, root: str) -> int:
     per touched bucket (the skip-existing discipline), so after N
     batches a hot key's bucket holds N files and every late-door
     rebuild pays the listing history. Routes through
-    bucket_store.compact_buckets — pinned-schema read (self-healed for
-    legacy logs via one mergeSchema pass), only >1-file buckets read
-    and rewritten, rebuild results unchanged (the log is a pure input:
-    a byte-level merge cannot change build_intervals' output, asserted
+    bucket_store.compact_buckets — the read plans with the log's
+    schema pinned at :func:`scd2_init` (a log without the pin raises a
+    ``ValueError`` naming its path), only >1-file buckets are read and
+    rewritten, rebuild results unchanged (the log is a pure input: a
+    byte-level merge cannot change build_intervals' output, asserted
     in tests). Returns buckets compacted."""
-    from etl_8million_data__spark.operators.bucket_store import (
-        compact_buckets,
-        read_pinned_schema,
-    )
-
     log_path = os.path.join(root, "log")
     if not os.path.isdir(log_path):
         return 0
     if read_pinned_schema(log_path) is None:
-        # legacy log without the pin: one deliberate footer-merge read
-        # (the log's files never dropped columns, but single-footer
-        # inference is the hazard the pin exists to close), then pin
-        df = spark.read.option("mergeSchema", "true").parquet(log_path)
-        write_schema(log_path, df.schema)
+        raise ValueError(f"{log_path}: change log has no pinned schema")
     return compact_buckets(spark, log_path, "kb")
 
 
@@ -283,10 +258,6 @@ def scd2_apply_late(spark: SparkSession, root: str, batch: DataFrame) -> None:
     kbs = [r["_b"] for r in per_kb]
     n_keys = sum(r["n"] for r in per_kb)
     _append_log(spark, root, b, kbs, nb)
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store_pinned,
-    )
-
     log_touched = (
         read_store_pinned(spark, log_path)
         .filter(F.col("kb").isin(kbs) if kbs else F.lit(False))
@@ -333,13 +304,13 @@ def scd2_apply(spark: SparkSession, root: str, batch: DataFrame) -> None:
     # keep the retained log (when present) in sync, so a later
     # scd2_apply_late sees the full per-key history
     _append_log(spark, root, b, kbs, nb)
-    # _read_intervals: pinned/merged schema, and per-row
-    # coalesce(last_ts, valid_from) — on a legacy store whose FIRST
-    # post-upgrade apply rewrote only some buckets, the untouched
-    # buckets' files lack last_ts and the declared-schema read surfaces
-    # NULL; a NULL watermark would evaluate the violation filter to
-    # not-a-violation and silently splice late data, so it degrades to
-    # valid_from (the original, weaker-but-safe check) instead
+    # _read_intervals: pinned schema, and per-row
+    # coalesce(last_ts, valid_from) — on an evolved store whose FIRST
+    # apply after the pin gained last_ts rewrote only some buckets, the
+    # untouched buckets' files lack last_ts and the pinned-schema read
+    # surfaces NULL; a NULL watermark would evaluate the violation
+    # filter to not-a-violation and silently splice late data, so it
+    # degrades to valid_from (the original, weaker-but-safe check)
     old = _read_intervals(spark, root)
     old = old.filter(F.col("kb").isin(kbs)) if kbs else old.filter(F.lit(False))
     # lazy checkpoint fused with the order check: the violation count

@@ -229,12 +229,14 @@ def commit_bucketed(
     buckets' rows, so CDC between adjacent versions of a 100 TB table
     with 0.1% churn reads ~0.1% of it (bucket granularity).
 
-    The summary is one map-side aggregate over the bucketed frame the
-    write just materialized (lazy checkpoint: the write is the
-    materializer, the aggregate reuses it — never a re-read of the
-    source), stored as [[kb, checksum_str, n], ...] with the
-    fingerprinted (keys, cols, nb) pin; a pin mismatch between two
-    versions (schema change) falls back to the full-join CDC."""
+    The summary is one map-side aggregate over the bucketed frame
+    (lazy checkpoint: the aggregate is the materializer, the write
+    reuses it — never a re-read of the source), stored as
+    [[kb, checksum_str, n], ...] with the fingerprinted (keys, cols,
+    nb) pin; a pin mismatch between two versions (schema change) falls
+    back to the full-join CDC. The summary and the schema enter the
+    version's manifest entry in the same manifest write that makes the
+    version current, so no current version lacks its summary."""
     from etl_8million_data__spark.operators.diff import _bucket_sums
     from etl_8million_data__spark.operators.partitioning import id_bucket
 
@@ -242,7 +244,8 @@ def commit_bucketed(
     staged = df.withColumn("kb", id_bucket(F.col(key), nb)).repartition(
         F.col("kb")
     ).localCheckpoint(eager=False)
-    version = commit(
+    summ = _bucket_sums(staged, [key], cols).collect()
+    return commit(
         spark,
         staged,
         path,
@@ -250,21 +253,20 @@ def commit_bucketed(
         partition_by=["kb"],
         batch_id=batch_id,
         query_id=query_id,
+        extra_entry={
+            "checksums": {
+                "keys": [key],
+                "cols": cols,
+                "nb": nb,
+                "rows": [[r["kb"], str(r["cs"]), r["n"]] for r in summ],
+            },
+            # the declared schema rides along so pruned readers plan
+            # with ZERO footer inference (the bucket_store.read_store
+            # discipline — plain inference was measured reading EVERY
+            # file's footer in parallel)
+            "schema_json": staged.schema.json(),
+        },
     )
-    summ = _bucket_sums(staged, [key], cols).collect()
-    m = _load_manifest(path)
-    m["versions"][str(version)]["checksums"] = {
-        "keys": [key],
-        "cols": cols,
-        "nb": nb,
-        "rows": [[r["kb"], str(r["cs"]), r["n"]] for r in summ],
-    }
-    # the declared schema rides along so pruned readers plan with ZERO
-    # footer inference (the bucket_store.read_store discipline — plain
-    # inference was measured reading EVERY file's footer in parallel)
-    m["versions"][str(version)]["schema_json"] = staged.schema.json()
-    _store_manifest(path, m)
-    return version
 
 
 def table_changes_pruned(

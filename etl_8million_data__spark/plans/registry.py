@@ -79,10 +79,12 @@ def _load() -> None:
 # registration order after the prioritized block; stale names in the
 # list are ignored.
 _PRIORITY: tuple[str, ...] = (
-    # builds reach bucket_store.rebucket, a store read or door that now
-    # runs maintenance.recover_swap on the store's own path, or
-    # recover_swap itself: changed when rebucket began committing
-    # through swap_in (re-verify first)
+    # builds reach a store-creating writer (write_bucketed,
+    # write_table_bucketed, the first-append commit, scd2_init,
+    # golden_init, versioned.commit_bucketed), the scd2 log append or
+    # interval read, or a read whose schema fallback moved
+    # (bucket_store.read_store, forget's schema-less read): changed when
+    # store creation became one commit (re-verify first)
     "ops_rebucket_migration",
     "ops_store_compaction_audit",
     "advisor_compaction",
@@ -106,20 +108,18 @@ _PRIORITY: tuple[str, ...] = (
     "ivm_join_view_retract",
     "similarity_knn_ivf_kmeans_persisted",
     "similarity_knn_ivf_pq_persisted",
+    "ops_cdc_log_fsck",
+    "ops_version_cdc",
+    # builds reached bucket_store.rebucket or a store read that runs
+    # maintenance.recover_swap when rebucket began committing through
+    # swap_in
     "search_bm25_persisted",
     "search_phrase_persisted",
     # builds reached the commit door or the checksum summary when the
     # summary began committing under its rows' record
     "advisor_bucket_count",
-    # NEW/changed in round 14 (first external evidence / oracle
-    # changed): the compaction advisor arm; the bucket-count advisor's
-    # byte-budget third arm (+100TB projection row); the queries whose
-    # doors changed shape (manifest-flip rebucket, pinned/retained CDC
-    # log, un-forced eligibility broadcast)
-    "ops_cdc_log_fsck",
     # NEW in round 12 (first external evidence)
     "advisor_layout_exec",
-    "ops_version_cdc",
     "advisor_layout_drift",
     # NEW in round 11 (first external evidence)
     "advisor_salted_join_exec",

@@ -8,7 +8,8 @@ operation must give the clean run's rows and leave no staging,
 swapped-out or commit-record tree behind. For the ``kb`` stores the
 checksum summary must commit with its rows: right after the crash the
 summarized diff agrees with the full scan, and the summary audits
-clean before and after the rerun."""
+clean before and after the rerun. A store is created in one commit:
+its ``_nb`` marker and schema pin land with its first rows."""
 
 from __future__ import annotations
 
@@ -24,10 +25,12 @@ from etl_8million_data__spark.operators.bucket_store import (
     bucket_file_counts,
     compact_buckets,
     read_nb,
+    read_pinned_schema,
     read_store,
     read_store_pinned,
     rebucket,
     store_exists,
+    try_read_nb,
 )
 from etl_8million_data__spark.operators.diff import (
     append_bucketed,
@@ -39,7 +42,9 @@ from etl_8million_data__spark.operators.diff import (
     write_bucketed,
 )
 from etl_8million_data__spark.operators.forget import forget_partitioned
+from etl_8million_data__spark.operators.golden import golden_init, read_golden
 from etl_8million_data__spark.operators.partitioning import id_bucket_py
+from etl_8million_data__spark.operators.scd2 import read_intervals, scd2_init
 from etl_8million_data__spark.operators.upsert import upsert_parquet
 from etl_8million_data__spark.pipelines import run as run_mod
 from etl_8million_data__spark.pipelines.run import run_all
@@ -432,6 +437,114 @@ def test_rebucket_content_mismatch_leaves_the_store_untouched(spark, tmp_path, m
     assert not _leftovers(tmp_path)
 
 
+def _pins(t: str) -> tuple[int | None, list[str] | None]:
+    """The store's ``_nb`` marker and pinned column names."""
+    pinned = read_pinned_schema(t)
+    return try_read_nb(t), pinned and pinned.fieldNames()
+
+
+def test_seed_over_a_store_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """``write_bucketed(..., checksums=True)`` replaces a summarized
+    store with new rows at a new modulus: rows, ``_nb``, pin and
+    summary commit together."""
+    template = str(tmp_path / "template")
+    write_bucketed(_kv(spark, BASE), template, "k", checksums=True)
+    new = {k: k * 7 for k in range(20, 50)}
+
+    def setup(d):
+        shutil.copytree(template, d / "t")
+
+    def read(d):
+        t = str(d / "t")
+        return *_audited(spark, t), *_pins(t)
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: write_bucketed(_kv(spark, new), str(d / "t"), "k", 32, checksums=True),
+        read,
+    )
+    assert before == (sorted(BASE.items()), 0, 16, ["k", "v", "kb"])
+    assert clean == (sorted(new.items()), 0, 32, ["k", "v", "kb"])
+    assert all(s in (before, clean) for s in seen)
+
+
+HIST = "key long, seq long, ts long, attr string"
+
+
+def test_scd2_init_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """``scd2_init(keep_log=True)`` over an existing state: the root's
+    ``_nb``, both tables and their pins land in one commit."""
+    hist = [(k, s, 100 * s + k, "AB"[k * s % 2]) for k in range(12) for s in range(3)]
+    template = str(tmp_path / "template")
+    scd2_init(spark.createDataFrame(hist[::3], HIST), template, keep_log=True)
+
+    def setup(d):
+        shutil.copytree(template, d / "s")
+
+    def read(d):
+        root = str(d / "s")
+        log = os.path.join(root, "log")
+        return (
+            _rows(read_intervals(spark, root)),
+            _rows(read_store_pinned(spark, log).drop("kb")),
+            read_nb(root),
+            _pins(os.path.join(root, "intervals"))[1],
+            _pins(log)[1],
+        )
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: scd2_init(spark.createDataFrame(hist, HIST), str(d / "s"), 32, keep_log=True),
+        read,
+    )
+    assert clean[1] == sorted(hist) and clean[2] == 32 and before[2] == 16
+    assert clean[3][-1] == clean[4][-1] == "kb"
+    assert all(s in (before, clean) for s in seen)
+
+
+def test_golden_init_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """``golden_init`` over an existing state: the root's ``_nb`` and
+    the four tables with their pins land in one commit."""
+    records = spark.createDataFrame(
+        [(r, r, f"n{r}", r * 10, "s", r % 2) for r in range(8)],
+        "rid bigint, orig_key bigint, name string, bal bigint, seg string, src int",
+    )
+
+    def edges(pairs):
+        return spark.createDataFrame(pairs, "a_key bigint, b_key bigint")
+
+    template = str(tmp_path / "template")
+    golden_init(spark, template, records, edges([(0, 1)]))
+    tables = ("members", "edges", "golden", "ridmap")
+
+    def setup(d):
+        shutil.copytree(template, d / "g")
+
+    def read(d):
+        root = str(d / "g")
+        return (
+            _rows(read_golden(spark, root)),
+            _rows(read_store_pinned(spark, os.path.join(root, "edges"))),
+            read_nb(root),
+            [_pins(os.path.join(root, t))[1] for t in tables],
+        )
+
+    clean, before, seen = _sweep(
+        monkeypatch,
+        tmp_path,
+        setup,
+        lambda d: golden_init(spark, str(d / "g"), records, edges([(2, 3), (3, 4)]), 32),
+        read,
+    )
+    assert len(before[0]) == 7 and len(clean[0]) == 6
+    assert clean[2] == 32 and all(p[-1] in ("cb", "rb") for p in clean[3])
+    assert all(s in (before, clean) for s in seen)
+
+
 def test_first_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
     def setup(d):
         d.mkdir()
@@ -451,10 +564,12 @@ def test_first_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatc
         tmp_path,
         setup,
         lambda d: _append_once(spark, str(d / "t"), BATCH),
-        lambda d: _kv_rows(spark, str(d / "t")),
+        lambda d: (_kv_rows(spark, str(d / "t")), *_pins(str(d / "t"))),
         check=check,
     )
-    assert before == [] and clean == sorted(BATCH.items())
+    # the store lands with its modulus and schema pin, never without
+    assert before == ([], None, None)
+    assert clean == (sorted(BATCH.items()), 16, ["k", "v", "kb"])
     assert all(s in (before, clean) for s in seen)
     # the store each crash left behind takes the next append
     for d in sorted(tmp_path.glob("k*")):

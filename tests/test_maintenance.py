@@ -217,15 +217,25 @@ def test_failed_record_write_keeps_the_previous_record(tmp_path, monkeypatch):
     assert applied_batch(root) == 5
 
 
+DOOR_ONLY = {
+    "operators/bucket_store.py",
+    "operators/diff.py",
+    "operators/scd2.py",
+    "operators/golden.py",
+}
+
+
 def test_swap_in_is_the_only_commit_door():
     """Every table rewrite commits through ``maintenance.swap_in`` and
     every small record through ``maintenance.write_durable``: no module
     names Spark's partition overwrite mode, only ``maintenance.py``
     names a staging, swapped-out or commit-record tree, and the only
     ``os.replace`` call is the durable writer's. The checksum summary
-    commits with its rows: no module names a ``_pending`` marker, and
-    ``operators/diff.py`` never overwrites a directory in place, so its
-    summary writes land only in staging directories. No second physical
+    commits with its rows: no module names a ``_pending`` marker. The
+    bucketed-store modules (``DOOR_ONLY``) never overwrite or append to
+    a directory in place and never merge footers, so their stores are
+    created with their ``_nb`` and schema pin in one commit and read
+    only with a declared or pinned schema. No second physical
     root: neither the package nor ``tools/`` names a ``"_current"``
     pointer, a ``_gen_`` generation directory or ``resolve_root``."""
     writer = next(
@@ -246,8 +256,10 @@ def test_swap_in_is_the_only_commit_door():
                 offenders.append(f"{rel}:{i} names a commit door's tree")
             if "_pending" in line:
                 offenders.append(f"{rel}:{i} names a pending marker")
-            if rel == "operators/diff.py" and 'mode("overwrite")' in line:
-                offenders.append(f"{rel}:{i} overwrites a directory in place")
+            if rel in DOOR_ONLY and any(
+                t in line for t in ('mode("overwrite")', 'mode("append")', "mergeSchema")
+            ):
+                offenders.append(f"{rel}:{i} writes or infers around the door")
         for node in ast.walk(ast.parse(text)):
             if (
                 isinstance(node, ast.Attribute)

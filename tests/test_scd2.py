@@ -5,6 +5,7 @@ blast-radius bucket rewrites, and the replay-safe streaming twin."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -283,18 +284,18 @@ def test_late_change_inside_open_span_raises_not_splices(
 
 
 def test_legacy_mixed_schema_store_keeps_the_watermark(spark, tmp_path):
-    """A store created BEFORE last_ts existed, whose first post-upgrade
-    apply rewrote only SOME buckets, is mixed-schema: single-footer
-    inference could drop last_ts entirely (watermark regresses to
-    valid_from — late data inside the open span splices silently) or
-    surface it as NULL on legacy files (NULL >= x is not-a-violation —
-    same silent splice). The pinned/merged-schema read plus per-row
-    coalesce(last_ts, valid_from) must close both holes: the rewritten
-    key's true watermark survives (inside-span change raises) and the
-    legacy key degrades to the valid_from check, never to NULL."""
+    """A store created BEFORE last_ts existed, whose pin was widened to
+    carry it (as an evolved store has it) and whose first apply after
+    that rewrote only SOME buckets, is mixed-schema: its legacy files
+    surface last_ts as NULL (NULL >= x is not-a-violation — late data
+    inside the open span would splice silently). The pinned-schema read
+    plus per-row coalesce(last_ts, valid_from) must close the hole: the
+    rewritten key's true watermark survives (inside-span change raises)
+    and the legacy key degrades to the valid_from check, never to
+    NULL."""
     from etl_8million_data__spark.operators.bucket_store import (
-        read_pinned_schema,
         write_nb,
+        write_schema,
     )
     from etl_8million_data__spark.operators.partitioning import id_bucket
     from etl_8million_data__spark.operators.scd2 import scd2_apply_late
@@ -309,17 +310,18 @@ def test_legacy_mixed_schema_store_keeps_the_watermark(spark, tmp_path):
         "key long, seq long, ts long, attr string",
     )
     root = str(tmp_path / "scd2")
-    # legacy layout: intervals WITHOUT last_ts, no pinned schema
+    # legacy layout: intervals files WITHOUT last_ts, under the widened
+    # pin that carries it
     write_nb(root, 16)
+    iv = build_intervals(hist).withColumn("kb", id_bucket(F.col("key"), 16))
     (
-        build_intervals(hist)
-        .drop("last_ts")
-        .withColumn("kb", id_bucket(F.col("key"), 16))
+        iv.drop("last_ts")
         .repartition(F.col("kb"))
         .write.mode("overwrite")
         .partitionBy("kb")
         .parquet(os.path.join(root, "intervals"))
     )
+    write_schema(os.path.join(root, "intervals"), iv.schema)
     (
         hist.withColumn("kb", id_bucket(F.col("key"), 16))
         .repartition(F.col("kb"))
@@ -327,11 +329,9 @@ def test_legacy_mixed_schema_store_keeps_the_watermark(spark, tmp_path):
         .partitionBy("kb")
         .parquet(os.path.join(root, "log"))
     )
-    assert read_pinned_schema(os.path.join(root, "intervals")) is None
 
     # on-time apply for key 1 only: rewrites ONLY bucket 8 -> the store
     # is now mixed (bucket 8 files carry last_ts, bucket 13 files don't)
-    # and the first read self-heals a pinned schema
     scd2_apply(
         spark,
         root,
@@ -340,7 +340,6 @@ def test_legacy_mixed_schema_store_keeps_the_watermark(spark, tmp_path):
             "key long, seq long, ts long, attr string",
         ),
     )
-    assert read_pinned_schema(os.path.join(root, "intervals")) is not None
 
     # key 1's open interval is C with valid_from=300, last_ts=400: a
     # change at ts=350 passes a valid_from-only check — the persisted
@@ -391,12 +390,9 @@ def test_legacy_mixed_schema_store_keeps_the_watermark(spark, tmp_path):
 def test_compact_log_pays_off_append_debt(spark, sf_dir, tmp_path):
     """Every apply appends one file per touched bucket to the retained
     log; compact_log must merge the debt back to one file per bucket
-    with the late door's rebuild results unchanged — including for a
-    LEGACY log without a pinned schema (self-healed via one
-    footer-merge pass)."""
+    with the late door's rebuild results unchanged."""
     from etl_8million_data__spark.operators.bucket_store import (
         bucket_file_counts,
-        read_pinned_schema,
     )
     from etl_8million_data__spark.operators.scd2 import (
         compact_log,
@@ -435,10 +431,24 @@ def test_compact_log_pays_off_append_debt(spark, sf_dir, tmp_path):
     assert _as_set(read_intervals(spark, root)) == want
     assert _as_set(read_intervals(spark, root)) == _as_set(build_intervals(e))
 
-    # legacy log: drop the pin, compaction self-heals it
-    os.remove(os.path.join(log_path, "_schema.json"))
-    scd2_apply_late(spark, root, e.limit(50))  # re-create some debt
-    assert read_pinned_schema(log_path) is None
-    compact_log(spark, root)
-    assert read_pinned_schema(log_path) is not None
-    assert _as_set(read_intervals(spark, root)) == want
+
+def test_unpinned_state_raises_naming_the_path(spark, tmp_path):
+    """scd2_init pins both tables in the commit that creates them, so a
+    table without its pin is damage: reading the intervals or
+    compacting the log raises with the table's path instead of
+    guessing a schema from the footers."""
+    from etl_8million_data__spark.operators.scd2 import compact_log
+
+    root = str(tmp_path / "scd2")
+    hist = spark.createDataFrame(
+        [(1, 10, 100, "A"), (2, 20, 100, "B")], "key long, seq long, ts long, attr string"
+    )
+    scd2_init(hist, root, keep_log=True)
+    for table, call in (
+        ("log", lambda: compact_log(spark, root)),
+        ("intervals", lambda: read_intervals(spark, root)),
+    ):
+        path = os.path.join(root, table)
+        os.remove(os.path.join(path, "_schema.json"))
+        with pytest.raises(ValueError, match=re.escape(path)):
+            call()

@@ -117,6 +117,22 @@ def test_wrong_bucket_modulus_raises_loudly(spark, tmp_path):
         diff_tables(spark, pa, pb, ["k"], ["v"])
 
 
+def test_append_created_store_keeps_its_modulus(spark, tmp_path):
+    """A store created by its first append carries the modulus it was
+    written at: a delete that omits nb hashes with 32, not the default
+    16, and removes every row instead of the ones whose buckets happen
+    to agree."""
+    from etl_8million_data__spark.operators.bucket_store import read_nb
+    from etl_8million_data__spark.operators.diff import delete_keys_bucketed
+
+    pa = str(tmp_path / "t")
+    append_bucketed(_frame(spark, {k: k for k in range(200)}), pa, "k", nb=32)
+    assert read_nb(pa) == 32
+    victims = spark.createDataFrame([(k,) for k in range(200)], "k long")
+    assert delete_keys_bucketed(spark, pa, victims, "k") == 200
+    assert read_store_pinned(spark, pa).count() == 0
+
+
 def _cdc_frames(spark):
     """Three adjacent-version change frames over a 20-key table:
     v2 updates evens and deletes k=5; v3 re-inserts k=5, updates
