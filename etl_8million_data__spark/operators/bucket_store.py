@@ -34,11 +34,14 @@ import contextlib
 import json
 import os
 import shutil
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.operators.maintenance import (
+    append_in,
+    parquet_data_files,
     recover_swap,
     swap_in,
     write_durable,
@@ -79,6 +82,61 @@ def store_exists(path: str) -> bool:
     failure. One stat call, no Spark job."""
     recover_swap(path)
     return os.path.isdir(path)
+
+
+def read_index(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Read a persisted index or append-only store with its declared
+    ``schema``, or an empty frame of that schema while none exists yet
+    (decided by :func:`store_exists`). Any failure of the real read
+    (corrupt files, permissions) propagates: a broken index silently
+    read as empty would re-admit everything it holds."""
+    if not store_exists(path):
+        return spark.createDataFrame([], schema)
+    return read_store(spark, path, schema)
+
+
+def append_new(
+    rows: DataFrame,
+    path: str,
+    key: str | None = None,
+    part_cols: Sequence[str] = (),
+    schema=None,
+    prune: bool = False,
+) -> int:
+    """The skip-existing append: rows whose ``key`` the store at
+    ``path`` already holds are dropped by an anti-join against its
+    ``key`` column (read with ``schema``, by default the rows' own), and
+    the rest append through ``maintenance.append_in`` into their
+    ``part_cols`` partitions, one file per touched partition. Without
+    ``key`` every row appends. With ``prune`` the existence read is
+    restricted to the rows' own values of ``part_cols[0]`` (a literal
+    partition filter), for stores whose partition the key determines.
+    An existing root that holds flat data files and no ``part_cols[0]``
+    partition is a legacy unpartitioned layout and takes flat files
+    (partition directories mixed into a flat root break partition
+    discovery). Returns the number of rows appended."""
+    from etl_8million_data__spark.operators.partitioning import is_hive_partitioned
+
+    spark = rows.sparkSession
+    if key is not None:
+        existing = read_index(spark, path, schema or rows.schema)
+        if prune:
+            rows = rows.localCheckpoint(eager=True)
+            at = [r[0] for r in rows.select(part_cols[0]).distinct().collect()]
+            existing = existing.filter(F.col(part_cols[0]).isin(at) if at else F.lit(False))
+        rows = rows.join(existing.select(key), key, "left_anti")
+    fresh = rows.localCheckpoint(eager=True)
+    n = fresh.count()
+    if n:
+        flat = part_cols and not is_hive_partitioned(path, part_cols[0])
+        if flat and parquet_data_files(path):
+            fresh, part_cols = fresh.drop(*part_cols), []
+        with append_in(path, part_cols) as tmp:
+            if part_cols:
+                fresh = fresh.repartition(*part_cols)
+            fresh.write.partitionBy(*part_cols).parquet(tmp)
+        spark.catalog.refreshByPath(path)
+    return n
 
 
 MAX_BROADCAST_ROWS = 1_000_000

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,16 +135,6 @@ def _write_summary(
     write_durable(os.path.join(d, "_meta.json"), json.dumps(meta))
 
 
-def _commit_summary(
-    spark: SparkSession, path: str, stage: Callable[[str], None]
-) -> None:
-    """Commit a summary-only change through the door: ``stage(tmp)``
-    writes the new ``_checksums/`` into the staging directory."""
-    with swap_in(path, ["kb"]) as tmp:
-        stage(tmp)
-    spark.catalog.refreshByPath(os.path.join(path, CK_DIR))
-
-
 def _seed_summary(
     spark: SparkSession,
     src: str,
@@ -173,9 +163,9 @@ def checksums_init(
     touched buckets' rows (rewrites re-derive them, appends add to
     them) under the same record as its rows, so the routine replica
     audit reads 2 x nb summary rows instead of two full tables."""
-    _commit_summary(
-        spark, path, lambda tmp: _seed_summary(spark, path, tmp, keys, cols, nb)
-    )
+    with swap_in(path, ["kb"]) as tmp:
+        _seed_summary(spark, path, tmp, keys, cols, nb)
+    spark.catalog.refreshByPath(os.path.join(path, CK_DIR))
 
 
 def _ck_dir(path: str) -> str:
@@ -231,26 +221,6 @@ def stage_checksums(
         rows[r["kb"]] = (cs + r["cs"], n + r["n"])
     _write_summary(
         spark, [(kb, cs, n) for kb, (cs, n) in rows.items()], staging, meta
-    )
-
-
-def update_checksums(
-    spark: SparkSession,
-    path: str,
-    affected: list[int],
-) -> None:
-    """Re-derive ONLY the ``affected`` buckets' summary rows from a
-    literal-pruned re-read of the table and commit them through the
-    door. A table without a summary is a no-op."""
-    meta, _ = read_checksums(spark, path)
-    if meta is None:
-        return
-    keys, cols, nb = meta["keys"], meta["cols"], meta["nb"]
-    src = _prep(spark, path, keys, cols, nb).filter(
-        F.col("kb").isin(affected) if affected else F.lit(False)
-    )
-    _commit_summary(
-        spark, path, lambda tmp: stage_checksums(spark, path, tmp, src, affected)
     )
 
 

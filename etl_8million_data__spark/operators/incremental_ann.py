@@ -21,11 +21,11 @@ at index time so the scoring join does no per-row norm work.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.bucket_store import append_new, read_index
+from etl_8million_data__spark.operators.maintenance import swap_in
 from etl_8million_data__spark.operators.similarity import (
     dot,
     norm2,
@@ -66,32 +66,12 @@ def build_index(
 ) -> None:
     """Materialize the inverted file: one narrow map assigns every
     vector its SRP cell (no shuffle), then a cell-partitioned parquet
-    write. Overwrites any existing index."""
-    _cell_frame(emb, weights, n_bits, id_col, vec_col, batch_tag).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(index_path)
-
-
-def _read_index(
-    spark: SparkSession, index_path: str, schema: str | None = None
-) -> DataFrame:
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store,
-        store_exists,
-    )
-
-    # first batch decided driver-side — never a caught JVM
-    # PATH_NOT_FOUND (bucket_store.store_exists); any failure of the
-    # real read (corrupt files, permissions) propagates.
-    if not store_exists(index_path):
-        return spark.createDataFrame([], schema or INDEX_SCHEMA)
-    # STATIC declared schema: zero footer reads at plan time, so a
-    # literal-pruned probe touches only the probed partitions'
-    # files (a mergeSchema read launched a footer-merge over EVERY
-    # cell before the filter pruned anything — asserted by the
-    # corrupt-unprobed-cell test); legacy pre-batch-tagging files
-    # surface _batch as NULL exactly as the merged schema did.
-    return read_store(spark, index_path, schema or INDEX_SCHEMA)
+    write. Replaces any existing index in one commit
+    (``maintenance.swap_in``): a build that fails leaves the old one."""
+    with swap_in(index_path) as tmp:
+        _cell_frame(emb, weights, n_bits, id_col, vec_col, batch_tag).write.partitionBy(
+            "cell"
+        ).parquet(tmp)
 
 
 def append_vectors(
@@ -108,17 +88,10 @@ def append_vectors(
     vec_id column only — parquet reads nothing else); the rest get cell
     assignments (narrow map) and append into their cell partitions.
     Returns the number of vectors appended."""
-    spark = new_emb.sparkSession
-    existing = _read_index(spark, index_path).select("vec_id")
-    fresh = (
-        _cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag)
-        .join(existing, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
+    return append_new(
+        _cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag),
+        index_path, "vec_id", ["cell"], INDEX_SCHEMA,
     )
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("cell").parquet(index_path)
-    return n
 
 
 def _literal_cell_prune(idx: DataFrame, cell_rows: DataFrame) -> DataFrame:
@@ -173,7 +146,9 @@ def probe_index(
     the persisted index returns exactly what a fresh in-memory build
     would (asserted in tests), so index persistence is a pure I/O
     optimization, not a semantic fork."""
-    idx = _read_index(spark, index_path)
+    # STATIC declared schema: zero footer reads at plan time, so the
+    # literal-pruned probe touches only the probed cells' files
+    idx = read_index(spark, index_path, INDEX_SCHEMA)
     # the routed query frame is consumed TWICE — the literal-prune
     # collect and the scoring join — so it is materialized once
     # (|Q|*nprobe rows) instead of re-running the routing math per
@@ -266,10 +241,12 @@ def build_index_int8(
     batch_tag: str | None = "seed",
 ) -> None:
     """Materialize the int8-coded inverted file (cell-partitioned).
-    Zero-scale (all-zero) vectors are excluded — they have no cosine."""
-    _int8_cell_frame(emb, weights, n_bits, id_col, vec_col, batch_tag).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(index_path)
+    Zero-scale (all-zero) vectors are excluded — they have no cosine.
+    Replaces any existing index in one commit."""
+    with swap_in(index_path) as tmp:
+        _int8_cell_frame(
+            emb, weights, n_bits, id_col, vec_col, batch_tag
+        ).write.partitionBy("cell").parquet(tmp)
 
 
 def append_vectors_int8(
@@ -283,17 +260,10 @@ def append_vectors_int8(
 ) -> int:
     """Skip-existing append of int8 codes (same contract as
     :func:`append_vectors`)."""
-    spark = new_emb.sparkSession
-    existing = _read_index(spark, index_path, INT8_INDEX_SCHEMA).select("vec_id")
-    fresh = (
-        _int8_cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag)
-        .join(existing, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
+    return append_new(
+        _int8_cell_frame(new_emb, weights, n_bits, id_col, vec_col, batch_tag),
+        index_path, "vec_id", ["cell"], INT8_INDEX_SCHEMA,
     )
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("cell").parquet(index_path)
-    return n
 
 
 def score_int8(index: DataFrame, probes: DataFrame, k: int) -> DataFrame:
@@ -331,7 +301,7 @@ def probe_index_int8(
     quantized with their own scale (which cancels in the ranking),
     routed by their FLOAT projections to ``nprobe`` cells, and scored
     with pure integer dots inside the DPP-pruned cell partitions."""
-    idx = _read_index(spark, index_path, INT8_INDEX_SCHEMA)
+    idx = read_index(spark, index_path, INT8_INDEX_SCHEMA)
     xd = F.transform(F.col(query_vec_col), lambda v: v.cast("double"))
     scale = F.array_max(F.transform(xd, lambda v: F.abs(v)))
     s = queries.select(
@@ -476,9 +446,11 @@ def build_index_ivfpq(
     materialize three artifacts under ``index_path``: ``centroids/``
     (k_cells rows), ``codebook/`` (m*ksub rows) — the frozen model —
     and ``codes/`` partitioned BY CELL (vec_id, codes_packed: ONE
-    bigint per vector). At 100 TB you train on a key-hash sample and
-    this same encode pass streams the full corpus; the index holds 8
-    bytes + a partition key per vector."""
+    bigint per vector). The three commit together
+    (``maintenance.swap_in`` of the whole index), so a failed build
+    leaves the old model with its own codes. At 100 TB you train on a
+    key-hash sample and this same encode pass streams the full corpus;
+    the index holds 8 bytes + a partition key per vector."""
     if m * 4 > 64 or ksub > 16:
         raise ValueError("packed layout needs m <= 16 subspaces and ksub <= 16")
     from etl_8million_data__spark.operators.similarity import kmeans_fit, pq_fit
@@ -498,11 +470,12 @@ def build_index_ivfpq(
         .select("vec_id", F.zip_with("x", "c", lambda a, b: a - b).alias("r"))
     )
     _, codebook = pq_fit(res, m, ksub, pq_iters, id_col="vec_id", vec_col="r", dim=dim)
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    codebook.write.mode("overwrite").parquet(f"{index_path}/codebook")
-    _encode_ivfpq(x, cents, codebook, m, sub_dim, batch_tag).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{index_path}/codes")
+    with swap_in(index_path) as tmp:
+        cents.write.parquet(f"{tmp}/centroids")
+        codebook.write.parquet(f"{tmp}/codebook")
+        _encode_ivfpq(x, cents, codebook, m, sub_dim, batch_tag).write.partitionBy(
+            "cell"
+        ).parquet(f"{tmp}/codes")
 
 
 def append_vectors_ivfpq(
@@ -521,25 +494,12 @@ def append_vectors_ivfpq(
     spark = new_emb.sparkSession
     cents = spark.read.parquet(f"{index_path}/centroids")
     codebook = spark.read.parquet(f"{index_path}/codebook")
-    existing = _read_index(spark, f"{index_path}/codes", IVFPQ_CODES_SCHEMA).select(
-        "vec_id"
-    )
-    fresh = (
+    return append_new(
         _encode_ivfpq(
-            _unit_frame(new_emb, id_col, vec_col),
-            cents,
-            codebook,
-            m,
-            dim // m,
-            batch_tag,
-        )
-        .join(existing, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
+            _unit_frame(new_emb, id_col, vec_col), cents, codebook, m, dim // m, batch_tag
+        ),
+        f"{index_path}/codes", "vec_id", ["cell"], IVFPQ_CODES_SCHEMA,
     )
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("cell").parquet(f"{index_path}/codes")
-    return n
 
 
 def probe_index_ivfpq(
@@ -563,7 +523,7 @@ def probe_index_ivfpq(
     composition at the same parameters."""
     sub_dim = dim // m
     cents = spark.read.parquet(f"{index_path}/centroids")
-    codes = _read_index(spark, f"{index_path}/codes", IVFPQ_CODES_SCHEMA)
+    codes = read_index(spark, f"{index_path}/codes", IVFPQ_CODES_SCHEMA)
     codebook = spark.read.parquet(f"{index_path}/codebook")
     c = cents.select(
         F.col("j").alias("cell"),
@@ -711,7 +671,8 @@ def build_index_kmeans(
     micro-int means — the frozen model) and ``vectors/`` partitioned BY
     CELL (vec_id, embedding, _n2). The stored assignment IS the training
     assignment (kmeans_fit returns it), not a re-encode, so there is no
-    train/encode drift window even in principle. At 100 TB you train on
+    train/encode drift window even in principle. Both commit together
+    (``maintenance.swap_in`` of the whole index). At 100 TB you train on
     a key-hash sample, then stream the corpus through
     :func:`append_vectors_kmeans` against the frozen centroids."""
     from etl_8million_data__spark.operators.similarity import kmeans_fit
@@ -719,14 +680,15 @@ def build_index_kmeans(
     assign, cents = kmeans_fit(
         emb, k_cells, iters, id_col=id_col, vec_col=vec_col, dim=dim
     )
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    assign.select(
-        "vec_id",
-        F.col("x").alias("embedding"),
-        norm2(F.col("x")).alias("_n2"),
-        F.lit(batch_tag).cast("string").alias("_batch"),
-        F.col("j").cast("int").alias("cell"),
-    ).write.mode("overwrite").partitionBy("cell").parquet(f"{index_path}/vectors")
+    with swap_in(index_path) as tmp:
+        cents.write.parquet(f"{tmp}/centroids")
+        assign.select(
+            "vec_id",
+            F.col("x").alias("embedding"),
+            norm2(F.col("x")).alias("_n2"),
+            F.lit(batch_tag).cast("string").alias("_batch"),
+            F.col("j").cast("int").alias("cell"),
+        ).write.partitionBy("cell").parquet(f"{tmp}/vectors")
 
 
 def append_vectors_kmeans(
@@ -740,20 +702,11 @@ def append_vectors_kmeans(
     retraining — centroid drift would silently re-cell every stored
     vector). Same contract as :func:`append_vectors`: already-indexed
     vec_ids drop via a column-pruned anti-join; returns rows added."""
-    spark = new_emb.sparkSession
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    existing = _read_index(spark, f"{index_path}/vectors", KMEANS_VECTORS_SCHEMA).select(
-        "vec_id"
+    cents = new_emb.sparkSession.read.parquet(f"{index_path}/centroids")
+    return append_new(
+        _assign_cells_kmeans(new_emb, cents, id_col, vec_col, batch_tag),
+        f"{index_path}/vectors", "vec_id", ["cell"], KMEANS_VECTORS_SCHEMA,
     )
-    fresh = (
-        _assign_cells_kmeans(new_emb, cents, id_col, vec_col, batch_tag)
-        .join(existing, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").partitionBy("cell").parquet(f"{index_path}/vectors")
-    return n
 
 
 def probe_index_kmeans(
@@ -773,7 +726,7 @@ def probe_index_kmeans(
     exact cosine ranks the survivors. Identical output to the in-memory
     knn_ivf_kmeans at the same parameters."""
     cents = spark.read.parquet(f"{index_path}/centroids")
-    idx = _read_index(spark, f"{index_path}/vectors", KMEANS_VECTORS_SCHEMA)
+    idx = read_index(spark, f"{index_path}/vectors", KMEANS_VECTORS_SCHEMA)
     c = cents.select(
         F.col("j").cast("int").alias("cell"),
         F.transform("cm", lambda m: m / 1_000_000).alias("c"),
@@ -866,10 +819,12 @@ def build_index_sign(
 ) -> None:
     """Materialize the signature index: one narrow map computes the two
     32-bit sign words per vector (no shuffle) and writes them into the
-    16-way id-bucketed layout. Overwrites any existing index."""
-    _sign_frame(emb, id_col, vec_col, batch_tag, dim).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(index_path)
+    16-way id-bucketed layout. Replaces any existing index in one
+    commit."""
+    with swap_in(index_path) as tmp:
+        _sign_frame(emb, id_col, vec_col, batch_tag, dim).write.partitionBy(
+            "bucket"
+        ).parquet(tmp)
 
 
 def append_vectors_sign(
@@ -886,25 +841,10 @@ def append_vectors_sign(
     batch only (the stored corpus is never re-encoded). Appends follow
     the existing layout: bucketed into ``bucket=`` partitions, or flat
     for a legacy unpartitioned index."""
-    from etl_8million_data__spark.operators.partitioning import is_hive_partitioned
-
-    spark = new_emb.sparkSession
-    existing = _read_index(spark, index_path, SIGN_INDEX_SCHEMA).select("vec_id")
-    fresh = (
-        _sign_frame(new_emb, id_col, vec_col, batch_tag, dim)
-        .join(existing, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
+    return append_new(
+        _sign_frame(new_emb, id_col, vec_col, batch_tag, dim),
+        index_path, "vec_id", ["bucket"], SIGN_INDEX_SCHEMA,
     )
-    n = fresh.count()
-    if n:
-        legacy = os.path.isdir(index_path) and not is_hive_partitioned(
-            index_path, "bucket"
-        )
-        if legacy:
-            fresh.drop("bucket").write.mode("append").parquet(index_path)
-        else:
-            fresh.write.mode("append").partitionBy("bucket").parquet(index_path)
-    return n
 
 
 def probe_index_sign(
@@ -938,7 +878,7 @@ def probe_index_sign(
     drop a valid nearest neighbor from the shortlist."""
     from etl_8million_data__spark.operators.similarity import sign_words
 
-    idx = _read_index(spark, index_path, SIGN_INDEX_SCHEMA)
+    idx = read_index(spark, index_path, SIGN_INDEX_SCHEMA)
     sig = idx.select("vec_id", "sig0", "sig1")
     qs0, qs1 = sign_words(F.col(query_vec_col), dim)
     qsig = queries.select(

@@ -27,34 +27,28 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.bucket_store import append_new, read_index
 from etl_8million_data__spark.operators.dedup import (
     doc_shingle_frame,
     lsh_band_frame,
     minhash_min_frame,
 )
+from etl_8million_data__spark.operators.maintenance import swap_in
 
 INDEX_SCHEMA = "doc_id long, band int, band_key string, _batch string, bucket int"
 N_ID_BUCKETS = 16
 
 
 def _bucketed_append(df: DataFrame, index_path: str, id_col: str) -> None:
-    """Append index rows following the existing layout: 16-way md5
-    id-bucket partitions for fresh/bucketed indexes, flat files for a
-    legacy unpartitioned index (appending partition dirs into a flat
-    root would break partition discovery)."""
-    from etl_8million_data__spark.operators.partitioning import (
-        id_bucket,
-        is_hive_partitioned,
-    )
+    """Append index rows into 16-way md5 id-bucket partitions (flat
+    files for a legacy unpartitioned index — ``bucket_store.append_new``)."""
+    from etl_8million_data__spark.operators.partitioning import id_bucket
 
     staged = df.withColumn("bucket", id_bucket(F.col(id_col), N_ID_BUCKETS))
-    if os.path.isdir(index_path) and not is_hive_partitioned(index_path, "bucket"):
-        staged.drop("bucket").write.mode("append").parquet(index_path)
-    else:
-        staged.write.mode("append").partitionBy("bucket").parquet(index_path)
+    append_new(staged, index_path, part_cols=["bucket"])
 
 
 def _batch_bands(
@@ -69,33 +63,6 @@ def _batch_bands(
     return lsh_band_frame(
         minhash_min_frame(sh, id_col, num_hashes), id_col, bands, num_hashes // bands
     )
-
-
-def _read_index(
-    spark: SparkSession, index_path: str, schema: str = INDEX_SCHEMA
-) -> DataFrame:
-    from etl_8million_data__spark.operators.bucket_store import (
-        read_store,
-        store_exists,
-    )
-
-    # first batch (index doesn't exist yet) decided DRIVER-SIDE — a
-    # caught JVM PATH_NOT_FOUND would still land an ERROR on the
-    # execution-listener bus (bucket_store.store_exists). Any failure
-    # of the real read (corrupt files, permissions) propagates —
-    # silently treating a broken index as empty would re-admit
-    # duplicates.
-    if not store_exists(index_path):
-        return spark.createDataFrame([], schema)
-    # DECLARED schema, not mergeSchema: the probe must not pay a
-    # footer-merge job over every accumulated append before its
-    # filters apply. The legacy concern the footer-merge used to
-    # cover — pre-batch-tagging files without _batch, where an
-    # arbitrary-footer inference would silently drop the column and
-    # turn the same-tag probe exclusion into a no-op — is covered
-    # by the declared schema itself: files missing _batch surface
-    # it as NULL.
-    return read_store(spark, index_path, schema)
 
 
 def dedup_increment(
@@ -134,7 +101,9 @@ def dedup_increment(
         new_docs, text_col, id_col, k, num_hashes, bands
     ).localCheckpoint(eager=True)
 
-    idx = _read_index(spark, index_path)
+    # DECLARED schema: pre-batch-tagging files without _batch surface
+    # it as NULL, so the same-tag probe exclusion keeps working
+    idx = read_index(spark, index_path, INDEX_SCHEMA)
     if batch_tag is not None:
         idx = idx.filter(~F.col("_batch").eqNullSafe(F.lit(batch_tag)))
     vs_corpus = (
@@ -223,7 +192,7 @@ def media_dedup_increment(
     )
     bands_new = band_rows.localCheckpoint(eager=True)
 
-    idx = _read_index(spark, index_path, MEDIA_INDEX_SCHEMA)
+    idx = read_index(spark, index_path, MEDIA_INDEX_SCHEMA)
     if batch_tag is not None:
         idx = idx.filter(~F.col("_batch").eqNullSafe(F.lit(batch_tag)))
 
@@ -316,7 +285,7 @@ def winnowing_increment(
         .localCheckpoint(eager=True)
     )
 
-    idx = _read_index(spark, index_path, WINNOW_INDEX_SCHEMA)
+    idx = read_index(spark, index_path, WINNOW_INDEX_SCHEMA)
     if batch_tag is not None:
         idx = idx.filter(~F.col("_batch").eqNullSafe(F.lit(batch_tag)))
     idx = idx.select("doc_id", "fp").distinct()
@@ -372,7 +341,8 @@ def build_benchmark_index(
     extend it (benchmarks don't grow with the train stream), which is
     what makes the streaming guard's replay story trivial compared to
     the dedup index (no batch-tag machinery: the probe side has no
-    state to collide with)."""
+    state to collide with). ``grams/`` and ``sizes/`` replace any
+    existing index in one commit."""
     from etl_8million_data__spark.operators.dedup import doc_shingle_frame
 
     sh = doc_shingle_frame(bench_docs, text_col, id_col, k)
@@ -382,8 +352,9 @@ def build_benchmark_index(
     sz = sh.select(
         F.col(id_col).alias("bench_doc"), F.size("shingles").alias("n_bench")
     )
-    ex.write.mode("overwrite").parquet(os.path.join(index_path, "grams"))
-    sz.write.mode("overwrite").parquet(os.path.join(index_path, "sizes"))
+    with swap_in(index_path) as tmp:
+        ex.write.parquet(os.path.join(tmp, "grams"))
+        sz.write.parquet(os.path.join(tmp, "sizes"))
 
 
 def contamination_filter(

@@ -26,12 +26,15 @@ ops as every other layout here (operators/maintenance.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_8million_data__spark.operators.bucket_store import partition_filter
+from etl_8million_data__spark.operators.bucket_store import (
+    append_new,
+    partition_filter,
+    store_exists,
+)
+from etl_8million_data__spark.operators.maintenance import swap_in
 from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
 
 # Above this many distinct delta keys, skip the collect and bound the
@@ -91,20 +94,13 @@ def refresh_join_view(
     on: list[str],
 ) -> int:
     """Append the delta rows to the materialized view at ``view_path``
-    (creating it from ``a_old ⋈ b_old`` when absent). Returns rows
-    appended. Existing view files are never read or rewritten — the
-    refresh cost is delta-sized by construction."""
-    import os
-
-    if not os.path.isdir(view_path):
-        a_old.join(b_old, on).write.parquet(view_path)
-    delta = join_view_delta(a_old, b_old, a_delta, b_delta, on).localCheckpoint(
-        eager=True
-    )
-    n = delta.count()
-    if n:
-        delta.write.mode("append").parquet(view_path)
-    return n
+    (creating it from ``a_old ⋈ b_old`` in one commit when absent).
+    Returns rows appended. Existing view files are never read or
+    rewritten — the refresh cost is delta-sized by construction."""
+    if not store_exists(view_path):
+        with swap_in(view_path) as tmp:
+            a_old.join(b_old, on).write.parquet(tmp)
+    return append_new(join_view_delta(a_old, b_old, a_delta, b_delta, on), view_path)
 
 
 def retract_join_view(
@@ -288,7 +284,6 @@ def stream_agg_view_upserts(
 
     Note the ORDER of (2) before (4): deltas must see the pre-upsert
     base, the same discipline as agg_view_delta's contract."""
-    from etl_8million_data__spark.operators.maintenance import swap_in
     from etl_8million_data__spark.operators.upsert import (
         last_writer_wins,
         upsert_parquet,
@@ -312,7 +307,7 @@ def stream_agg_view_upserts(
             with swap_in(view_path) as tmp:
                 view = spark.read.parquet(view_path)
                 merged = apply_agg_delta(view, delta, group_cols, sum_cols)
-                merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+                merged.coalesce(1).write.parquet(tmp)
                 mark_applied(tmp, batch_id)
         upsert_parquet(spark, b, base_path, keys=[pk], order_col=order_col)
 
@@ -340,17 +335,8 @@ def stream_join_view_increment(
     batches only (standard streaming dim-join semantics); dimension
     UPDATES that must rewrite existing view rows are the upsert path
     on the view, not this append door."""
-    from etl_8million_data__spark.operators.bucket_store import store_exists
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df
-        # first batch decided driver-side (bucket_store.store_exists)
-        if store_exists(view_path):
-            seen = spark.read.parquet(view_path).select(a_pk).distinct()
-            fresh = batch_df.join(seen, a_pk, "left_anti")
-        delta = fresh.join(b_static, on).localCheckpoint(eager=True)
-        if delta.count():
-            delta.write.mode("append").parquet(view_path)
+        append_new(batch_df.join(b_static, on), view_path, a_pk)
 
     return foreach_batch_available_now(a_stream, apply_batch, checkpoint_dir)

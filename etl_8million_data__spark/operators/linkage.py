@@ -51,7 +51,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
+from etl_8million_data__spark.operators.bucket_store import append_new
+from etl_8million_data__spark.operators.maintenance import swap_in
+from etl_8million_data__spark.streaming.trigger import (
+    foreach_batch_available_now,
+    write_batch_output,
+)
 
 LINKAGE_PREFIX_LEN = 17
 
@@ -114,14 +119,12 @@ def write_clean_store(
     own blocks' files, independent of store size. Rows are repartitioned
     on the block key before the write so each block directory holds ONE
     file instead of one-per-write-task — the small-files discipline
-    that keeps a pruned probe at |batch blocks| scheduled tasks."""
-    (
-        store.withColumn("blk", F.substring("name", 1, prefix_len))
-        .repartition(F.col("blk"))
-        .write.mode("overwrite")
-        .partitionBy("blk")
-        .parquet(store_path)
-    )
+    that keeps a pruned probe at |batch blocks| scheduled tasks. Replaces
+    any existing store in one commit (``maintenance.swap_in``)."""
+    with swap_in(store_path) as tmp:
+        store.withColumn("blk", F.substring("name", 1, prefix_len)).repartition(
+            F.col("blk")
+        ).write.partitionBy("blk").parquet(tmp)
 
 
 def append_clean_store(
@@ -133,35 +136,12 @@ def append_clean_store(
     records whose rid already exists are dropped, and the existence
     read is PRUNED to the batch's own blocks (literal partition filter)
     and COLUMN-pruned to rid — a replayed batch appends nothing, at any
-    store size. Rows repartition on the block key before the write (one
-    new file per touched block). Returns rows appended."""
-    from etl_8million_data__spark.operators.bucket_store import store_exists
-
-    b = (
-        new_records.select("rid", "name", "bal", "seg")
-        .withColumn("blk", F.substring("name", 1, prefix_len))
-        .localCheckpoint(eager=True)
+    store size. One new file per touched block
+    (``bucket_store.append_new``). Returns rows appended."""
+    b = new_records.select("rid", "name", "bal", "seg").withColumn(
+        "blk", F.substring("name", 1, prefix_len)
     )
-    spark = new_records.sparkSession
-    blocks = [r["blk"] for r in b.select("blk").distinct().collect()]
-    # first batch decided driver-side (bucket_store.store_exists) —
-    # never a caught JVM PATH_NOT_FOUND
-    if store_exists(store_path):
-        existing = (
-            spark.read.parquet(store_path)
-            .filter(F.col("blk").isin(blocks) if blocks else F.lit(False))
-            .select("rid")
-        )
-        fresh = b.join(existing, "rid", "left_anti").localCheckpoint(eager=True)
-    else:
-        fresh = b
-    n = fresh.count()
-    if n:
-        fresh.repartition(F.col("blk")).write.mode("append").partitionBy(
-            "blk"
-        ).parquet(store_path)
-        spark.catalog.refreshByPath(store_path)
-    return n
+    return append_new(b, store_path, "rid", ["blk"], prune=True)
 
 
 def probe_store_candidates(
@@ -284,23 +264,16 @@ def linkage_ingest_batch(
     scope: str,
 ) -> None:
     """One micro-batch of streaming linkage, replay-idempotent: match
-    decisions land under a per-batch overwrite partition
-    ``ingest_batch=<tag>`` (a redelivered batch rewrites the same files
-    instead of appending duplicates — the dedup_ingest_batch
-    discipline). The candidate read is :func:`probe_store_candidates`:
-    on a block-partitioned store the batch's block set literal-prunes
-    the scan, so each micro-batch reads Σ |block(batch)| store rows,
-    never the store."""
-    import hashlib
-
-    spark = batch_df.sparkSession
-    pairs = probe_store_candidates(spark, store_path, batch_df)
+    decisions land under a per-batch partition ``ingest_batch=<tag>``
+    that each attempt replaces whole (``trigger.write_batch_output``: a
+    redelivered batch rewrites the same files instead of appending
+    duplicates — the dedup_ingest_batch discipline). The candidate read
+    is :func:`probe_store_candidates`: on a block-partitioned store the
+    batch's block set literal-prunes the scan, so each micro-batch
+    reads Σ |block(batch)| store rows, never the store."""
+    pairs = probe_store_candidates(batch_df.sparkSession, store_path, batch_df)
     matched = weigh_and_decide(pairs, *u, threshold)
-    scope_h = hashlib.md5(scope.encode()).hexdigest()[:8]
-    tag = f"{scope_h}-{batch_id}"
-    matched.write.mode("overwrite").parquet(
-        os.path.join(matches_path, f"ingest_batch={tag}")
-    )
+    write_batch_output(matched, matches_path, scope, batch_id)
 
 
 def stream_linkage_matches(

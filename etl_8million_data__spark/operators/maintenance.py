@@ -23,18 +23,24 @@ renames start, so a crash at any step is rolled forward by
 :func:`recover_swap` on the next entry. Every small record or marker
 file is replaced through :func:`write_durable`.
 
-Through the door commit: upsert (both forms), compaction, forget, ivm,
-search_index, the streaming quantile sketch, ``run_all``'s quote
-snapshot, and every ``kb``/``cb``/``rb`` bucketed store of
-``bucket_store``, ``diff``, ``scd2`` and ``golden`` — created with its
-``_nb`` marker and schema pin in one commit, rewritten by
-``overwrite_buckets``, appended by ``append_in``, migrated by
-``rebucket``. Writers that still go around it with Spark's own job
-commit: the ingest bronze append, the index builds and appends of
-``incremental_ann``, ``incremental_dedup``, ``linkage`` and
-``search_index``, ``ivm``'s flat-view append, ``streaming/jobs.py``'s
-overwrites, and the ``versioned`` snapshots (committed by their
-manifest flip instead).
+Through the door commit: upsert (both forms), compaction, forget, the
+streaming quantile sketch, ``run_all``'s quote snapshot, every
+``kb``/``cb``/``rb`` bucketed store of ``bucket_store``, ``diff``,
+``scd2`` and ``golden`` — created with its ``_nb`` marker and schema
+pin in one commit, rewritten by ``overwrite_buckets``, appended by
+``append_in``, migrated by ``rebucket`` — and every index store: the
+builds of ``incremental_ann``, ``incremental_dedup``, ``linkage``,
+``probe``, ``ivm`` and ``search_index`` (one whole-path swap, every
+artifact of a multi-part index staged in the same block), their
+skip-existing appends (``bucket_store.append_new``), and the per-batch
+outputs of the streaming ingests (``trigger.write_batch_output``).
+Writers that still go around it with Spark's own job commit: the
+ingest bronze append, ``search_index.append_documents`` (its postings
+and ``_doclen`` rows need one append record, and ``append_in``
+replaces a staged root sidecar whole), ``cdc_log``,
+:func:`clustered_write`, :func:`zorder_write`,
+``partitioning.apply_layout``, and the ``versioned`` snapshots
+(committed by their manifest flip instead).
 """
 
 from __future__ import annotations

@@ -182,8 +182,12 @@ def score_with_weights(xm: DataFrame, w: DataFrame) -> DataFrame:
 def save_probe(w: DataFrame, path: str) -> None:
     """Persist trained probe weights — the 64-row (i, wmu) frame — as
     the frozen-model contract every downstream scorer depends on (the
-    probe analogue of the IVF-PQ index's frozen codebooks)."""
-    w.write.mode("overwrite").parquet(path)
+    probe analogue of the IVF-PQ index's frozen codebooks). Replaces any
+    saved weights in one commit (``maintenance.swap_in``)."""
+    from etl_8million_data__spark.operators.maintenance import swap_in
+
+    with swap_in(path) as tmp:
+        w.write.parquet(tmp)
 
 
 def score_new_vectors(
@@ -201,29 +205,14 @@ def score_new_vectors(
     Returns the number of vectors scored. Replay-idempotent by the same
     argument as the index ingests: a redelivered batch's ids already
     have scores, so the re-append is a natural no-op."""
-    from etl_8million_data__spark.operators.bucket_store import store_exists
+    from etl_8million_data__spark.operators.bucket_store import append_new
 
-    spark = new_emb.sparkSession
-    w = spark.read.parquet(weights_path)
-    # first batch decided driver-side (bucket_store.store_exists)
-    if store_exists(out_path):
-        existing = spark.read.parquet(out_path).select("vec_id")
-    else:
-        existing = spark.createDataFrame([], "vec_id long")
+    w = new_emb.sparkSession.read.parquet(weights_path)
     xm = new_emb.select(
         F.col(id_col).alias("vec_id"),
         milli_components(F.col(vec_col)).alias("xm"),
-    ).join(existing, "vec_id", "left_anti")
-    scored = (
-        score_with_weights(xm, w)
-        .select(
-            "vec_id",
-            "score_micro",
-            F.lit(batch_tag).cast("string").alias("_batch"),
-        )
-        .localCheckpoint(eager=True)
     )
-    n = scored.count()
-    if n:
-        scored.write.mode("append").parquet(out_path)
-    return n
+    scored = score_with_weights(xm, w).select(
+        "vec_id", "score_micro", F.lit(batch_tag).cast("string").alias("_batch")
+    )
+    return append_new(scored, out_path, "vec_id")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_8million_data__spark.operators.bucket_store import append_new, read_index
+from etl_8million_data__spark.operators.maintenance import swap_in
 from etl_8million_data__spark.operators.text import tokens
 
 POSTINGS_SCHEMA = "doc_id long, pos bigint, token string, pfx string"
@@ -48,27 +50,12 @@ def build_postings(
     docs: DataFrame, index_path: str, text_col: str = "text", id_col: str = "doc_id"
 ) -> None:
     """Materialize the index: tokenize (narrow map + explode), then a
-    pfx-partitioned parquet write.  Overwrites any existing index."""
-    _postings_frame(docs, text_col, id_col).write.mode("overwrite").partitionBy(
-        "pfx"
-    ).parquet(index_path)
-    import shutil
-
-    for side in ("_doclen", "_tombstones"):
-        shutil.rmtree(f"{index_path}/{side}", ignore_errors=True)
-    _write_sidecars(docs, index_path, text_col, id_col)
-
-
-def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
-    from etl_8million_data__spark.operators.bucket_store import store_exists
-
-    # first batch decided driver-side — a caught JVM PATH_NOT_FOUND
-    # would still land an ERROR on the execution-listener bus
-    # (bucket_store.store_exists); any failure of the real read
-    # (corrupt files, permissions) propagates.
-    if not store_exists(index_path):
-        return spark.createDataFrame([], POSTINGS_SCHEMA)
-    return spark.read.parquet(index_path)
+    pfx-partitioned parquet write with its ``_doclen`` sidecar. Both
+    replace any existing index, tombstones included, in one commit
+    (``maintenance.swap_in``)."""
+    with swap_in(index_path) as tmp:
+        _postings_frame(docs, text_col, id_col).write.partitionBy("pfx").parquet(tmp)
+        _doclen_frame(docs, text_col, id_col).write.parquet(f"{tmp}/_doclen")
 
 
 def append_documents(
@@ -84,7 +71,9 @@ def append_documents(
     Idempotent under replay through skip-existing alone (same contract
     as the ANN index's append_vectors)."""
     spark = new_docs.sparkSession
-    existing = _read_index(spark, index_path).select("doc_id").distinct()
+    existing = (
+        read_index(spark, index_path, POSTINGS_SCHEMA).select("doc_id").distinct()
+    )
     fresh_docs = new_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
     ).join(existing, "doc_id", "left_anti").localCheckpoint(eager=True)
@@ -153,7 +142,9 @@ def phrase_candidates(
     any hot token the query does not mention, and the downstream anchor
     aggregate's key includes doc_id, so even a stopword's candidates
     spread across documents (no straggler key)."""
-    idx = _minus_tombstones(spark, index_path, _read_index(spark, index_path))
+    idx = _minus_tombstones(
+        spark, index_path, read_index(spark, index_path, POSTINGS_SCHEMA)
+    )
     return idx.join(F.broadcast(q), ["pfx", "token"]).select(
         "phrase", "n_words", "doc_id", (F.col("pos") - F.col("off")).alias("anchor"),
         "off",
@@ -169,7 +160,7 @@ def bm25_candidates(
         F.col(term_col).alias("token"),
         F.substring(F.md5(F.encode(F.col(term_col), "UTF-8")), 1, 1).alias("pfx"),
     ).distinct()
-    idx = _read_index(spark, index_path)
+    idx = read_index(spark, index_path, POSTINGS_SCHEMA)
     return _minus_tombstones(
         spark, index_path, idx.join(F.broadcast(q), ["pfx", "token"])
     )
@@ -223,19 +214,8 @@ def tombstone_documents(spark: SparkSession, index_path: str, ids: DataFrame) ->
     shrink accordingly) while the postings files stay byte-identical —
     deletion cost O(ids), not O(index). Returns ids newly tombstoned
     (re-tombstoning is a no-op append of nothing)."""
-    import os
-
     victims = ids.select(F.col(ids.columns[0]).alias("doc_id")).distinct()
-    t = f"{index_path}/_tombstones"
-    if os.path.isdir(t):
-        victims = victims.join(
-            spark.read.parquet(t).select("doc_id"), "doc_id", "left_anti"
-        )
-    victims = victims.localCheckpoint(eager=True)
-    n = victims.count()
-    if n:
-        victims.write.mode("append").parquet(t)
-    return n
+    return append_new(victims, f"{index_path}/_tombstones", "doc_id")
 
 
 def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
@@ -246,8 +226,6 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
     before and after (asserted in tests). Returns docs removed."""
     import os
     import shutil
-
-    from etl_8million_data__spark.operators.maintenance import swap_in
 
     t = f"{index_path}/_tombstones"
     if not os.path.isdir(t):
@@ -279,8 +257,8 @@ def vacuum_tombstones(spark: SparkSession, index_path: str) -> int:
     )
     # the old root takes the old postings, sidecar and applied _tombstones
     with swap_in(index_path) as tmp:
-        kept_postings.write.mode("overwrite").partitionBy("pfx").parquet(tmp)
-        kept_doclen.write.mode("overwrite").parquet(f"{tmp}/_doclen")
+        kept_postings.write.partitionBy("pfx").parquet(tmp)
+        kept_doclen.write.parquet(f"{tmp}/_doclen")
     return n
 
 

@@ -79,6 +79,18 @@ def _load() -> None:
 # registration order after the prioritized block; stale names in the
 # list are ignored.
 _PRIORITY: tuple[str, ...] = (
+    # builds reach an index store whose build or append now commits
+    # through the door (bucket_store.append_new / read_index, the ANN,
+    # dedup, search_index and ivm writers) or the inlined summary
+    # seeding of diff.checksums_init (re-verify first)
+    "similarity_knn_ivf_kmeans_persisted",
+    "similarity_knn_ivf_pq_persisted",
+    "search_bm25_persisted",
+    "search_phrase_persisted",
+    "corpus_incremental_curation",
+    "ivm_join_view_refresh",
+    "ops_schema_evolution",
+    "ops_cdc_stream_evolution",
     # builds reach a store-creating writer (write_bucketed,
     # write_table_bucketed, the first-append commit, scd2_init,
     # golden_init, versioned.commit_bucketed), the scd2 log append or
@@ -89,9 +101,7 @@ _PRIORITY: tuple[str, ...] = (
     "ops_store_compaction_audit",
     "advisor_compaction",
     "advisor_rebucket_telemetry",
-    "ops_schema_evolution",
     "ops_store_lifecycle_audit",
-    "ops_cdc_stream_evolution",
     "ops_cdc_apply",
     "ops_cdc_apply_versioned",
     "ops_cdc_producer_stream",
@@ -104,17 +114,12 @@ _PRIORITY: tuple[str, ...] = (
     "linkage_golden_fsck",
     "linkage_golden_records_increment",
     "events_scd2_incremental",
-    "corpus_incremental_curation",
     "ivm_join_view_retract",
-    "similarity_knn_ivf_kmeans_persisted",
-    "similarity_knn_ivf_pq_persisted",
     "ops_cdc_log_fsck",
     "ops_version_cdc",
     # builds reached bucket_store.rebucket or a store read that runs
     # maintenance.recover_swap when rebucket began committing through
     # swap_in
-    "search_bm25_persisted",
-    "search_phrase_persisted",
     # builds reached the commit door or the checksum summary when the
     # summary began committing under its rows' record
     "advisor_bucket_count",
@@ -143,7 +148,6 @@ _PRIORITY: tuple[str, ...] = (
     # NEW in round 9 (first external evidence)
     "search_eval_ndcg_mrr",
     "search_eval_ndcg_ann",
-    "ivm_join_view_refresh",
     "embedding_pca_two_components",
     "ivm_agg_view_upsert",
     "search_eval_map_recall",

@@ -2886,7 +2886,7 @@ def _persisted_index_root(sf_dir: str, family: str) -> str:
     """Deterministic per-process scratch root for a query-built index:
     keyed by pid (concurrent test/driver processes never collide) and by
     the scale directory (the threaded parity sweep runs both scales at
-    once). Rebuilt with mode=overwrite on every call — idempotent."""
+    once). Rebuilt whole on every call (one commit) — idempotent."""
     import os
     import tempfile
 

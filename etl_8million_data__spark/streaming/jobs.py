@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 
 from etl_8million_data__spark.functions.exact import cents
 from etl_8million_data__spark.operators.upsert import upsert_parquet
-from etl_8million_data__spark.streaming.trigger import foreach_batch_available_now
+from etl_8million_data__spark.streaming.trigger import (
+    foreach_batch_available_now,
+    write_batch_output,
+)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,23 +259,17 @@ def dedup_ingest_batch(
       replayed batch never collides with the bands its failed previous
       attempt appended (which would silently drop the whole batch);
     - the survivors land in a per-batch partition directory
-      ``out_path/ingest_batch=<tag>/`` written with mode=overwrite, so
-      a replay rewrites the same files instead of appending duplicates.
-      Readers see the union via normal partition discovery
-      (``spark.read.parquet(out_path)``).
+      ``out_path/ingest_batch=<tag>/`` that each attempt replaces
+      whole (``trigger.write_batch_output``), so a replay rewrites the
+      same files instead of appending duplicates. Readers see the union
+      via normal partition discovery (``spark.read.parquet(out_path)``).
 
     Exposed at module level (not a closure) so the redelivery path is
     directly testable."""
-    import hashlib
-
     from etl_8million_data__spark.operators.incremental_dedup import dedup_increment
 
-    scope_h = hashlib.md5(scope.encode()).hexdigest()[:8]
-    tag = f"{scope_h}-{batch_id}"
     kept = dedup_increment(batch_df, index_path, batch_tag=f"{scope}#{batch_id}")
-    kept.write.mode("overwrite").parquet(
-        os.path.join(out_path, f"ingest_batch={tag}")
-    )
+    write_batch_output(kept, out_path, scope, batch_id)
 
 
 def stream_dedup_increment(
@@ -362,20 +359,14 @@ def media_ingest_batch(
     twin of :func:`dedup_ingest_batch` with the identical idempotence
     contract: batch-tagged index append + same-tag probe exclusion,
     and per-batch overwrite partitions for the survivors."""
-    import hashlib
-
     from etl_8million_data__spark.operators.incremental_dedup import (
         media_dedup_increment,
     )
 
-    scope_h = hashlib.md5(scope.encode()).hexdigest()[:8]
-    tag = f"{scope_h}-{batch_id}"
     kept = media_dedup_increment(
         batch_df, index_path, batch_tag=f"{scope}#{batch_id}"
     )
-    kept.write.mode("overwrite").parquet(
-        os.path.join(out_path, f"ingest_batch={tag}")
-    )
+    write_batch_output(kept, out_path, scope, batch_id)
 
 
 def stream_media_dedup_increment(
@@ -412,18 +403,12 @@ def winnow_ingest_batch(
     exclusion on the fingerprint index, per-batch overwrite partition
     on the out path), with the winnowing index doing LOCAL-overlap
     filtering instead of whole-document band collision."""
-    import hashlib
-
     from etl_8million_data__spark.operators.incremental_dedup import (
         winnowing_increment,
     )
 
-    scope_h = hashlib.md5(scope.encode()).hexdigest()[:8]
-    tag = f"{scope_h}-{batch_id}"
     kept = winnowing_increment(batch_df, index_path, batch_tag=f"{scope}#{batch_id}")
-    kept.write.mode("overwrite").parquet(
-        os.path.join(out_path, f"ingest_batch={tag}")
-    )
+    write_batch_output(kept, out_path, scope, batch_id)
 
 
 def stream_winnowing_increment(
@@ -566,15 +551,11 @@ def contamination_ingest_batch(
     skip-existing contract as the index ingests), so even a replay
     under a FRESH checkpoint is a no-op instead of a duplicate
     ingest."""
-    import hashlib
-
     from etl_8million_data__spark.operators.bucket_store import store_exists
     from etl_8million_data__spark.operators.incremental_dedup import (
         contamination_filter,
     )
 
-    scope_h = hashlib.md5(scope.encode()).hexdigest()[:8]
-    tag = f"{scope_h}-{batch_id}"
     spark = batch_df.sparkSession
     # first batch decided driver-side (see bucket_store.store_exists):
     # a caught PATH_NOT_FOUND query would still land an ERROR on the
@@ -585,10 +566,10 @@ def contamination_ingest_batch(
     else:
         fresh = batch_df
     kept = contamination_filter(fresh, index_path).localCheckpoint(eager=True)
+    # no write without survivors: a redelivered batch whose documents
+    # all landed in its first attempt must keep that attempt's partition
     if kept.count():
-        kept.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"ingest_batch={tag}")
-        )
+        write_batch_output(kept, out_path, scope, batch_id)
 
 
 def stream_contamination_guard(
@@ -684,6 +665,6 @@ def stream_quantile_sketch_increment(
                 .orderBy("h", "key")
                 .limit(k)
             )
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+            merged.coalesce(1).write.parquet(tmp)
 
     return foreach_batch_available_now(rows, apply_batch, checkpoint_dir)

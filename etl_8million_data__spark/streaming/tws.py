@@ -240,14 +240,13 @@ def run_contamination_guard_tws(
     Output parquet is asserted EQUAL to the batch contamination filter
     over the same corpus in tests/test_stateful.py (skips without
     protobuf)."""
+    from etl_8million_data__spark.operators.bucket_store import append_new
     from etl_8million_data__spark.operators.incremental_dedup import (
         contamination_filter,
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kept = contamination_filter(batch_df, index_path).localCheckpoint(eager=True)
-        if kept.count():
-            kept.write.mode("append").parquet(out_path)
+        append_new(contamination_filter(batch_df, index_path), out_path)
 
     return foreach_batch_available_now(
         emit_once_tws_stream(docs_stream), apply_batch, checkpoint_dir

@@ -600,3 +600,43 @@ def test_crash_between_summary_rows_and_meta_keeps_the_summary(spark, tmp_path, 
     append_bucketed(_kv(spark, {200: 2000}), t, "k")
     assert _audited(spark, t) == (sorted({**BASE, **BATCH, 200: 2000}.items()), 0)
     _diff_agrees(spark, t, ref)
+
+
+def test_ann_append_survives_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """A skip-existing ANN append (``bucket_store.append_new``) over a
+    24-vector index: after each crash and its rerun the index holds
+    exactly one row per vec_id (the ``index_fsck`` ANN invariant), and
+    a reader right after the crash sees the old or the new index."""
+    from etl_8million_data__spark.operators.incremental_ann import (
+        INDEX_SCHEMA,
+        append_vectors,
+        build_index,
+    )
+    from etl_8million_data__spark.operators.index_fsck import fsck_ann_index
+    from etl_8million_data__spark.operators.similarity import hyperplane_weights
+
+    w = hyperplane_weights(2, 8)
+    emb = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1) + 1) for j in range(8)]).alias(
+            "embedding"
+        ),
+    )
+
+    def setup(d):
+        build_index(emb.filter(F.col("vec_id") < 24), str(d / "ann"), w, 2)
+
+    def op(d):
+        fresh = emb.filter(F.col("vec_id") >= 16)
+        append_vectors(fresh, str(d / "ann"), w, 2, batch_tag="b")
+
+    def read(d):
+        idx = read_store(spark, str(d / "ann"), INDEX_SCHEMA)
+        return _rows(idx.select("vec_id", "cell", "_batch"))
+
+    clean, before, seen = _sweep(monkeypatch, tmp_path, setup, op, read)
+    assert [r[0] for r in clean] == list(range(40))
+    assert all(s in (before, clean) for s in seen)
+    for k in range(1, len(seen) + 1):
+        audit = fsck_ann_index(spark, str(tmp_path / f"k{k}" / "ann")).first()
+        assert (audit.n_rows, audit.n_dup_ids) == (40, 0), k

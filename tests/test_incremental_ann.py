@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_8million_data__spark.catalog import load_table
@@ -746,3 +747,65 @@ def test_probe_plans_without_footer_pass_over_unprobed_cells(
     # the static-schema probe never opens the unprobed cell's footer
     got = _rows(probe_index(spark, idx, q, _W, n_bits, k=5, nprobe=3))
     assert got == want
+
+
+def _small_emb(spark, n=40):
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1) + 1) for j in range(_DIM)]).alias(
+            "embedding"
+        ),
+    )
+
+
+def _raises_on_7(frame):
+    """``frame`` with a Python UDF over vec_id that raises on id 7, so a
+    write of it fails mid-job."""
+    boom = F.udf(lambda i: i if i != 7 else 1 // 0, "long")
+    return frame.withColumn("vec_id", boom("vec_id"))
+
+
+def _tree(root):
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_failed_rebuild_keeps_the_old_index(spark, tmp_path):
+    """A rebuild whose write job fails leaves the old index whole: the
+    build commits through ``maintenance.swap_in``, so the failed job
+    never touches the live directory (Spark's own overwrite emptied it
+    first, and a skip-existing append then re-admitted every vector)."""
+    from etl_8million_data__spark.operators.incremental_ann import INDEX_SCHEMA
+
+    emb = _small_emb(spark)
+    idx = str(tmp_path / "ann")
+    build_index(emb, idx, _W, 3)
+    with pytest.raises(Exception):
+        build_index(_raises_on_7(emb), idx, _W, 3)
+    assert spark.read.schema(INDEX_SCHEMA).parquet(idx).count() == 40
+
+
+def test_failed_ivfpq_build_keeps_model_and_codes_together(
+    spark, tmp_path, monkeypatch
+):
+    """An IVF-PQ rebuild whose codes write fails leaves ``centroids/``,
+    ``codebook/`` and ``codes/`` byte-identical: the three artifacts
+    commit in one block, so a new codebook is never paired with old
+    codes."""
+    from etl_8million_data__spark.operators import incremental_ann as ann
+
+    emb = _small_emb(spark)
+    idx = str(tmp_path / "pq")
+    params = dict(k_cells=2, km_iters=1, m=4, ksub=4, pq_iters=1, dim=_DIM)
+    ann.build_index_ivfpq(emb, idx, **params)
+    before = _tree(idx)
+    assert {p.split(os.sep)[0] for p in before} == {"centroids", "codebook", "codes"}
+    encode = ann._encode_ivfpq
+    monkeypatch.setattr(ann, "_encode_ivfpq", lambda *a: _raises_on_7(encode(*a)))
+    with pytest.raises(Exception):
+        ann.build_index_ivfpq(emb, idx, **params)
+    assert _tree(idx) == before

@@ -54,7 +54,8 @@ def test_mixed_legacy_and_tagged_index_keeps_batch_column(spark, tmp_path):
     becomes a no-op and a redelivered batch self-collides."""
     from pyspark.sql import functions as F
 
-    from etl_8million_data__spark.operators.incremental_dedup import _read_index
+    from etl_8million_data__spark.operators.bucket_store import read_index
+    from etl_8million_data__spark.operators.incremental_dedup import INDEX_SCHEMA
 
     idx = str(tmp_path / "band_index")
     # legacy write: untagged schema (pre-_batch layout)
@@ -65,7 +66,7 @@ def test_mixed_legacy_and_tagged_index_keeps_batch_column(spark, tmp_path):
     # tagged append from a later deploy
     dedup_increment(_docs(spark, [(1, _LONG_A)]), idx, batch_tag="b0")
 
-    got = _read_index(spark, idx)
+    got = read_index(spark, idx, INDEX_SCHEMA)
     assert "_batch" in got.columns
     tags = {r["_batch"] for r in got.select("_batch").distinct().collect()}
     assert "b0" in tags and None in tags  # both file generations visible
