@@ -107,10 +107,11 @@ def append_new(
     ``path`` already holds are dropped by an anti-join against its
     ``key`` column (read with ``schema``, by default the rows' own), and
     the rest append through ``maintenance.append_in`` into their
-    ``part_cols`` partitions, one file per touched partition. Without
-    ``key`` every row appends. With ``prune`` the existence read is
-    restricted to the rows' own values of ``part_cols[0]`` (a literal
-    partition filter), for stores whose partition the key determines.
+    ``part_cols`` partitions. Without ``key`` every row appends. With
+    ``prune`` the existence read is restricted to the rows' own values
+    of ``part_cols[0]`` (a literal partition filter), for stores whose
+    partition the key determines, and the rows repartition on
+    ``part_cols`` before the write (one new file per touched partition).
     An existing root that holds flat data files and no ``part_cols[0]``
     partition is a legacy unpartitioned layout and takes flat files
     (partition directories mixed into a flat root break partition
@@ -132,7 +133,7 @@ def append_new(
         if flat and parquet_data_files(path):
             fresh, part_cols = fresh.drop(*part_cols), []
         with append_in(path, part_cols) as tmp:
-            if part_cols:
+            if prune and part_cols:
                 fresh = fresh.repartition(*part_cols)
             fresh.write.partitionBy(*part_cols).parquet(tmp)
         spark.catalog.refreshByPath(path)

@@ -760,9 +760,10 @@ def _small_emb(spark, n=40):
 
 def _raises_on_7(frame):
     """``frame`` with a Python UDF over vec_id that raises on id 7, so a
-    write of it fails mid-job."""
+    write of it fails mid-job. One partition, so the failure aborts the
+    job without killing sibling Python tasks mid-stream."""
     boom = F.udf(lambda i: i if i != 7 else 1 // 0, "long")
-    return frame.withColumn("vec_id", boom("vec_id"))
+    return frame.coalesce(1).withColumn("vec_id", boom("vec_id"))
 
 
 def _tree(root):
